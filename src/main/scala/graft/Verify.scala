@@ -15,8 +15,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=a,b restricts the dump (local iteration only;
-    // the driver always runs the full registry)
+    // SPARK_GRAFT_ONLY=a,b restricts the dump and its oracle file
+    // (local iteration only; the driver always runs the full registry)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -43,6 +43,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

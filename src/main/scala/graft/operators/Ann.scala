@@ -1,24 +1,23 @@
 package graft.operators
 
-import graft.Q
+import graft.{Par, Q}
 import graft.functions.Portable._
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
-  * (64-dim float vectors). Three tiers:
+  * (64-dim float vectors), plus the vector-side training-data
+  * operators (norm audit, int8 quantization, k-means clustering,
+  * semantic dedup, JL projection).
   *
-  *  - ann_bruteforce: exact top-k for a probe set. The probe side is
-  *    tiny and broadcast; cost is |probes| x n codegen'd fold cosines,
-  *    embarrassingly parallel over the base-table partitions. This is
-  *    the CORRECTNESS baseline, not the scale path.
-  *  - ann_lsh: random-hyperplane buckets bound the candidate set; at
-  *    100 TB the bucket join replaces the full scan per probe.
-  *  - ann_ivf: IVF-style coarse quantization — vectors are assigned to
-  *    their nearest of k centroids once (a partial-aggregatable argmax,
-  *    no window), probes search only their own cell.
+  * Every ann_* search row is one [[IndexSpec]] — coarse quantizer,
+  * nprobe, rotation, code and label pre-filter — run by ONE Spark
+  * path ([[search]]) and ONE DuckDB oracle generator ([[oracleSql]]);
+  * every recall row is one spec scored by ONE harness
+  * ([[recallVsExact]]). The two engines stay independent: the oracle
+  * is assembled from SQL fragments, never from the Spark builders.
   *
   * All cosines are strict left folds (Portable.cosine) so the DuckDB
   * oracles reproduce them bit-for-bit and ranking ties cannot diverge.
@@ -37,163 +36,977 @@ object Ann {
   private def cosWith(a: String, an2: String, b: String, bn2: String) =
     expr(s"${dot(a, b)} / sqrt($an2 * $bn2)")
 
-  private val K = 10
   /** deterministic probe set: vec_id < 5. */
   private val ProbeFilter = "vec_id < 5"
 
-  /** exact top-k cosine neighbors per probe (brute force baseline). */
-  val annBruteforce: Q = Q(
-    "ann_bruteforce",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val probes = broadcast(e.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("n2").as("pn2")))
-      val scored = e.join(probes, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"),
+  /** candidate budget for the int8 search: 4x the final K, the usual
+    * rerank headroom for int8 ANN. */
+  private val QCand = 40
+
+  /** ADC shortlist depth (candidates kept after the integer ADC pass,
+    * before exact rerank) for the PQ family. 80, not QCand's 40: the
+    * committed recall-cost curve (RECALL_CURVE.json) measured recall@5
+    * FLAT in nprobe but 92% vs 72% going 40 → 80 at every nprobe, at
+    * indistinguishable cost — shortlist truncation, not cell misses,
+    * was the dominant loss term. The int8 code keeps QCand: its codes
+    * approximate far better than 4-subspace PQ. */
+  private val AdcShortlist = 80
+
+  /** PQ geometry: M subspaces of SubDim dims over the 64-dim int8 code
+    * vectors, K=16 codewords per subspace (seeded from vec_id < 16).
+    * Distances are squared L2 between int8 code vectors — codes are
+    * x * 127/maxabs, L-inf-normalized coordinates — and EVERY distance
+    * is a sum of integer-valued doubles (exact far below 2^53). */
+  private[graft] val PqM = 4
+  private[graft] val PqSubDim = 16 // 64 dims / 4 subspaces
+
+  /** Lloyd rounds for the residual codebook (mirrored in the oracle's
+    * generated CTE rounds — [[resCbTrainCtes]]). */
+  private val ResTrainRounds = 2
+
+  // ---- the index specification ------------------------------------
+
+  /** Coarse quantizer: which vectors a probe is compared with. */
+  sealed trait Coarse
+  /** every other vector (brute force) */
+  case object Flat extends Coarse
+  /** vectors sharing any of the probe's 4 random-hyperplane buckets */
+  case object Lsh extends Coarse
+  /** IVF over the 16 seed vectors (vec_id < 16) as cells, raw-float
+    * cosine; the probe searches its `nprobe` nearest cells */
+  case object SeedIvf extends Coarse
+  /** IVF over one-Lloyd-stage k-means cells at [[ivfK]](N), int8-code
+    * cosine; nprobe co-scales as max(nprobe, k/8), so the probed
+    * fraction of the index stays fixed as the corpus grows */
+  case object TrainedIvf extends Coarse
+
+  /** Coordinate permutation applied before the PQ subspace split. */
+  sealed trait Rotation
+  case object NoRotation extends Rotation
+  /** OPQ-lite: dims ranked by raw-code variance, dealt round-robin */
+  case object Opq extends Rotation
+  /** rvOPQ: the same dealing over RESIDUAL variance (needs cells) */
+  case object RvOpq extends Rotation
+
+  /** How candidates are scored before the exact cosine rerank. */
+  sealed trait Code
+  /** exact cosine over every candidate, no shortlist */
+  case object Raw extends Code
+  /** int8 code dot → [[QCand]] shortlist */
+  case object Int8 extends Code
+  /** PQ asymmetric distance → [[AdcShortlist]] shortlist */
+  case object Pq extends Code
+  /** PQ asymmetric distance IS the answer: no rerank, output `adist` */
+  case object PqAdc extends Code
+  /** residual PQ (trained codebook on v − cell centroid) → ADC
+    * shortlist; needs IVF cells */
+  case object ResPq extends Code
+
+  /** One index configuration; `k` is the result depth per probe. */
+  final case class IndexSpec(coarse: Coarse = Flat, nprobe: Int = 1,
+      rotation: Rotation = NoRotation, code: Code = Raw,
+      labelFilter: Boolean = false, k: Int = 5) {
+    private def ivf = coarse == SeedIvf || coarse == TrainedIvf
+    require(code != ResPq || ivf, "residual PQ needs IVF cells")
+    require(rotation != RvOpq || ivf, "the residual census needs IVF cells")
+    require(rotation == NoRotation || Set[Code](Pq, PqAdc, ResPq)(code),
+      "a rotation only reorders PQ subspaces")
+    require(!labelFilter || (coarse != TrainedIvf && code != ResPq),
+      "the label pre-filter rides the raw-vector index")
+  }
+
+  private def searchQ(name: String, spec: IndexSpec): Q =
+    Q(name, (s, dir) => search(s, dir, spec), Some(oracleSql(spec)))
+
+  private def recallQ(name: String, spec: IndexSpec): Q =
+    Q(name, (s, dir) => recallVsExact(s, dir, spec), Some(recallOracleSql(spec)))
+
+  // ---- the ladder: every search row is a spec ----------------------
+  //
+  // RESIDUAL_GAIN.json prices the rungs on one harness: the OPQ
+  // permutation and the trained residual codebook each help alone
+  // (sf1j recall@5 52 → 72 / 64) but do NOT stack — opq∘res 48, and
+  // the residual-variance census rvopq∘res 56 — because any variance
+  // census breaks the subspace coherence residual training exploits.
+
+  /** The search ladder: every ann_* search row is one spec. */
+  private[graft] val ladder: Seq[(String, IndexSpec)] = Seq(
+    "ann_bruteforce" -> IndexSpec(k = 10),
+    "ann_lsh" -> IndexSpec(Lsh, k = 10),
+    "ann_ivf" -> IndexSpec(SeedIvf),
+    "ann_ivf_nprobe" -> IndexSpec(SeedIvf, 2),
+    "ann_quantized" -> IndexSpec(code = Int8, k = 10),
+    "ann_pq" -> IndexSpec(code = PqAdc),
+    "ann_ivf_pq" -> IndexSpec(SeedIvf, 2, code = Pq),
+    "ann_ivfpq_opq" -> IndexSpec(SeedIvf, 2, Opq, Pq),
+    "ann_ivf_pq_res" -> IndexSpec(SeedIvf, 2, code = ResPq),
+    "ann_ivfpq_opq_res" -> IndexSpec(SeedIvf, 2, Opq, ResPq),
+    "ann_ivfpq_rvopq_res" -> IndexSpec(SeedIvf, 2, RvOpq, ResPq),
+    "ann_ivfadc" -> IndexSpec(TrainedIvf, 2, code = ResPq),
+    "ann_filtered" -> IndexSpec(SeedIvf, labelFilter = true),
+    "ann_filtered_nprobe" -> IndexSpec(SeedIvf, 2, labelFilter = true),
+    "ann_filtered_pq" -> IndexSpec(SeedIvf, 2, code = Pq, labelFilter = true))
+  private val specOf = ladder.toMap
+
+  /** Recall rows: (row, the ladder spec it scores). The truth side
+    * follows from the spec ([[exactTopK]]). */
+  private[graft] val recallLadder: Seq[(String, IndexSpec)] = Seq(
+    "ann_recall" -> specOf("ann_lsh"),
+    "ann_recall_ivf" -> specOf("ann_ivf"),
+    "ann_recall_nprobe" -> specOf("ann_ivf_nprobe"),
+    "ann_recall_quantized" -> specOf("ann_quantized").copy(k = 5),
+    "ann_recall_pq" -> specOf("ann_pq"),
+    "ann_recall_ivfpq" -> specOf("ann_ivf_pq"),
+    "ann_recall_ivfpq_opq" -> specOf("ann_ivfpq_opq"),
+    "ann_recall_ivfpq_res" -> specOf("ann_ivf_pq_res"),
+    "ann_recall_ivfpq_opq_res" -> specOf("ann_ivfpq_opq_res"),
+    "ann_recall_ivfpq_rvopq_res" -> specOf("ann_ivfpq_rvopq_res"),
+    "ann_recall_ivfadc" -> specOf("ann_ivfadc"),
+    "ann_recall_filtered" -> specOf("ann_filtered"),
+    "ann_recall_filtered_nprobe" -> specOf("ann_filtered_nprobe"),
+    "ann_recall_filtered_pq" -> specOf("ann_filtered_pq"))
+
+  private val ladderRows: Seq[Q] =
+    ladder.map { case (n, spec) => searchQ(n, spec) } ++
+      recallLadder.map { case (n, spec) => recallQ(n, spec) }
+  private def row(name: String): Q = ladderRows.find(_.name == name).get
+
+  val annBruteforce: Q = row("ann_bruteforce")
+  val annLsh: Q = row("ann_lsh")
+  val annIvf: Q = row("ann_ivf")
+  val annIvfNprobe: Q = row("ann_ivf_nprobe")
+  val annPq: Q = row("ann_pq")
+  val annIvfPq: Q = row("ann_ivf_pq")
+  val annIvfPqOpq: Q = row("ann_ivfpq_opq")
+  val annIvfPqRvOpqRes: Q = row("ann_ivfpq_rvopq_res")
+  val annIvfAdc: Q = row("ann_ivfadc")
+  val annFiltered: Q = row("ann_filtered")
+  val annFilteredPq: Q = row("ann_filtered_pq")
+  val annRecallIvfAdc: Q = row("ann_recall_ivfadc")
+  val annRecallFiltered: Q = row("ann_recall_filtered")
+  val annRecallFilteredPq: Q = row("ann_recall_filtered_pq")
+
+  // ---- the Spark search path ----------------------------------------
+
+  /** Rank per probe by `order` (ties to the smaller n_id), keep the
+    * top `k` — the one ranking every shortlist and result uses. */
+  private def ranked(df: DataFrame, order: Column, k: Int,
+      as: String = "rank"): DataFrame =
+    df.withColumn(as, row_number().over(
+        Window.partitionBy("probe_id").orderBy(order, col("n_id"))))
+      .filter(col(as) <= k)
+
+  /** The shared result tail: top-k by exact cosine, rounded. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    ranked(scored, col("cos").desc, k)
+      .select(col("probe_id"), col("n_id"), col("rank"),
+        round(col("cos"), 6).as("cos_sim"))
+
+  /** Exact cosine of shortlisted (probe_id, n_id) pairs, raw vectors
+    * fetched by key — a compressed index reads a full-precision vector
+    * only for the pairs that survived its shortlist. */
+  private def exactCos(e: DataFrame, pairs: DataFrame): DataFrame =
+    pairs
+      .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
+        col("probe_id") === col("vec_id")).drop("vec_id")
+      .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
+        col("n_id") === col("vec_id"))
+      .select(col("probe_id"), col("n_id"),
+        cosWith("pv", "pn2", "nv", "nn2").as("cos"))
+
+  /** Search under `spec`: assign → probe cells → candidates (cell ∩
+    * predicate) → score (raw: the exact cosine) or shortlist → exact
+    * rerank → top-k.
+    *
+    * Every stage is small-side-broadcast: centroids, probe cells,
+    * codebooks and per-probe lookup tables join the corpus map-side;
+    * the corpus-sized exchanges are the partial-aggregated argmax
+    * assignments/encodes (codegen graft_argmax) and the ADC sums. The
+    * label predicate lands on the index slice, below every distance
+    * computation and ranking window. */
+  private[graft] def search(s: SparkSession, dir: String,
+      spec: IndexSpec): DataFrame = {
+    val e = emb(s, dir)
+    val lab = if (spec.labelFilter) Seq("label") else Nil
+    val (assigned, probeCells) = coarse(s, dir, e, spec, lab)
+    val cell = if (spec.coarse == Flat) Nil else Seq("cell")
+    // attach per-vector / per-probe code payloads to the cell frames;
+    // a flat unfiltered index has nothing to attach
+    def onIndex(payload: DataFrame) =
+      if (cell.isEmpty && lab.isEmpty) payload else payload.join(assigned, "vec_id")
+    def onProbes(payload: DataFrame) =
+      if (cell.isEmpty && lab.isEmpty) payload else payload.join(probeCells, "probe_id")
+    val (index, probeSide, keys) = spec.code match {
+      case Raw =>
+        (onIndex(e.select("vec_id", "v", "n2")),
+          onProbes(e.filter(expr(ProbeFilter)).select(col("vec_id").as("probe_id"),
+            col("v").as("pv"), col("n2").as("pn2"))),
+          cell)
+      case Int8 =>
+        val q = quantized(e)
+        (onIndex(q.select("vec_id", "qd", "maxabs", "n2")),
+          onProbes(q.filter(expr(ProbeFilter)).select(col("vec_id").as("probe_id"),
+            col("qd").as("pqd"), col("maxabs").as("pmax"), col("n2").as("pn2"))),
+          cell)
+      case Pq | PqAdc =>
+        val (enc, lut) = pqIndex(subvectors(s, dir, spec.rotation, assigned))
+        (onIndex(enc), onProbes(lut), cell ++ Seq("m", "c_id"))
+      case ResPq =>
+        val (enc, lut) = residualIndex(
+          subvectors(s, dir, spec.rotation, assigned), assigned, probeCells)
+        (enc, lut, Seq("cell", "m", "c_id"))
+    }
+    val joined =
+      if (keys.isEmpty) index.crossJoin(broadcast(probeSide))
+      else index.join(broadcast(probeSide), keys)
+    val cand = joined.filter(lab.foldLeft(col("vec_id") =!= col("probe_id"))(
+      (c, l) => c && col(l) === col("p_label")))
+      .withColumnRenamed("vec_id", "n_id")
+    def adc = cand.groupBy("probe_id", "n_id")
+      .agg(sum(col("d")).cast("long").as("adist"))
+    def shortlist(scored: DataFrame, order: Column, depth: Int) =
+      ranked(scored, order, depth, "rq").select("probe_id", "n_id")
+    spec.code match {
+      case Raw =>
+        // raw vectors ride the candidate join: the score IS the exact
+        // cosine, nothing to rerank
+        val scored = cand.select(col("probe_id"), col("n_id"),
           cosWith("pv", "pn2", "v", "n2").as("cos"))
-      scored
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= K)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), p AS (
-            |  SELECT vec_id AS probe_id, v AS pv FROM e WHERE $ProbeFilter
-            |), scored AS (
-            |  SELECT probe_id, e.vec_id AS n_id, ${duckCosine("pv", "e.v")} AS cos
-            |  FROM e JOIN p ON e.vec_id <> p.probe_id
-            |), ranked AS (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM scored
-            |)
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM ranked WHERE rank <= $K""".stripMargin))
+        // a neighbor sharing several bucket keys is one candidate
+        topK(if (spec.coarse == Lsh) scored.distinct() else scored, spec.k)
+      case Int8 =>
+        topK(exactCos(e, shortlist(cand.select(col("probe_id"), col("n_id"),
+          expr(s"${dot("pqd", "qd")} * pmax * maxabs / (16129.0 * sqrt(pn2 * n2))")
+            .as("score")), col("score").desc, QCand)), spec.k)
+      case PqAdc =>
+        ranked(adc, col("adist"), spec.k)
+          .select(col("probe_id"), col("n_id"), col("rank"), col("adist"))
+      case _ => topK(exactCos(e, shortlist(adc, col("adist"), AdcShortlist)), spec.k)
+    }
+  }
 
-  /** hyperplane-LSH ANN: candidates = vectors sharing any of the
-    * probe's 4 bucket keys; exact rerank inside the candidate set. */
-  val annLsh: Q = Q(
-    "ann_lsh",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val keys = e.select(col("vec_id"), explode(expr(hyperplaneKeys("v"))).as("bk"))
-      val probeKeys = broadcast(keys.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("bk")))
-      val cand = keys.join(probeKeys, "bk")
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"))
-        .distinct()
-      val scored = cand
-        .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
-          col("probe_id") === col("vec_id"))
-        .drop("vec_id")
-        .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
-          col("n_id") === col("vec_id"))
-        .select(col("probe_id"), col("n_id"),
-          cosWith("pv", "pn2", "nv", "nn2").as("cos"))
-      scored
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= K)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), keys AS (
-            |  SELECT vec_id, unnest(${duckHyperplaneKeys("v")}) AS bk FROM e
-            |), pk AS (
-            |  SELECT vec_id AS probe_id, bk FROM keys WHERE $ProbeFilter
-            |), cand AS (
-            |  SELECT DISTINCT pk.probe_id, k.vec_id AS n_id
-            |  FROM keys k JOIN pk ON k.bk = pk.bk AND k.vec_id <> pk.probe_id
-            |), scored AS (
-            |  SELECT c.probe_id, c.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand c
-            |  JOIN e ep ON c.probe_id = ep.vec_id
-            |  JOIN e en ON c.n_id = en.vec_id
-            |), ranked AS (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM scored
-            |)
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM ranked WHERE rank <= $K""".stripMargin))
+  /** The coarse stage: (assigned: vec_id [, label] [, cell] per index
+    * row; probeCells: probe_id [, p_label] [, cell] per probed cell).
+    * LSH rows are (vector, bucket key) — a vector sits in 4 "cells".
+    * IVF assigns every vector its argmax cell (the partial-aggregatable
+    * codegen argmax — one exchange on vec_id, no window) and gives each
+    * probe its `nprobe` nearest cells (a window over |probes| x k rows). */
+  private def coarse(s: SparkSession, dir: String, e: DataFrame,
+      spec: IndexSpec, lab: Seq[String]): (DataFrame, DataFrame) = {
+    val ids = ("vec_id" +: lab).map(col)
+    def probeRows(probes: DataFrame, cell: Column*) =
+      probes.select((col("vec_id").as("probe_id") +:
+        lab.map(c => col(c).as("p_label"))) ++ cell: _*)
+    def ivf(scores: DataFrame, nprobe: Int) = (
+      scores.groupBy(ids: _*).agg(expr("graft_argmax(c_id, c_cos)").as("cell")),
+      probeRows(scores.filter(expr(ProbeFilter))
+        .withColumn("crn", row_number().over(
+          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
+        .filter(col("crn") <= nprobe), col("c_id").as("cell")))
+    spec.coarse match {
+      case Flat => (e.select(ids: _*), probeRows(e.filter(expr(ProbeFilter))))
+      case Lsh =>
+        val keys = e.select(ids :+ explode(expr(hyperplaneKeys("v"))).as("cell"): _*)
+        (keys, probeRows(keys.filter(expr(ProbeFilter)), col("cell")))
+      case SeedIvf =>
+        val cents = e.filter(col("vec_id") < 16)
+          .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2"))
+        ivf(e.crossJoin(broadcast(cents)).select(ids ++ Seq(col("c_id"),
+          cosWith("v", "n2", "cv", "cn2").as("c_cos")): _*), spec.nprobe)
+      case TrainedIvf =>
+        val k = ivfK(Tables(s, dir).embeddingsCount)
+        val (codes, _, c1) = kmeansStage(s, dir, k)
+        ivf(codes.crossJoin(broadcast(c1.select("c_id", "cd", "cn2")))
+          .select(col("vec_id"), col("c_id"),
+            expr(s"${dot("qd", "cd")} / sqrt(qn2 * cn2)").as("c_cos")),
+          math.max(spec.nprobe, k / 8))
+    }
+  }
 
-  /** The IVF top-5 search oracle (assign all vectors to nearest of the
-    * 16 fixed centroids, probe searches its own cell, exact rerank) —
-    * shared by ann_ivf (one batch plan) and ann_incremental (the same
-    * result assembled through a streamed, persisted index). */
-  private val ivfTopkOracleSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), c AS (
+  /** vectors + their int8 codes (same quantization as vec_quantize:
+    * floor-half-up against the per-vector maxabs, seeded 1e-12).
+    * Codes are carried as doubles — every product |code| <= 127 is
+    * integer-exact in a double, so the quantized dot is deterministic
+    * across engines. One native eval per vector (graft_int8_codes,
+    * pinned bit-identical to the SQL HOF formulation in
+    * NativeVsSqlSpec). The int8 score rescales the integer code dot by
+    * (maxabs_a/127)(maxabs_b/127)/sqrt(n2a*n2b). */
+  private def quantized(e: DataFrame): DataFrame =
+    e.withColumn("qz", expr("graft_int8_codes(v)"))
+      .withColumn("maxabs", col("qz.max_abs"))
+      .withColumn("qd", col("qz.codes"))
+      .drop("qz")
+
+  /** The PQ subvectors under `rotation` (the residual census needs the
+    * cell assignment). */
+  private def subvectors(s: SparkSession, dir: String, rotation: Rotation,
+      assigned: DataFrame): DataFrame = rotation match {
+    case NoRotation => pqSubvectors(s, dir)
+    case Opq => permutedSubvectors(s, dir, opqPermutation(s, dir))
+    case RvOpq => permutedSubvectors(s, dir, opqResidualPermutation(s, dir, assigned))
+  }
+
+  /** PQ index over a subvector frame: (enc: vec_id, m, c_id — the
+    * per-(vector, subspace) argmin codeword, ann_ivf's one-exchange
+    * partial-agg assignment shape; lut: probe_id, m, c_id, d — each
+    * probe's |M| x K asymmetric distance table, broadcast at search). */
+  private def pqIndex(sub0: DataFrame): (DataFrame, DataFrame) = {
+    val sub = sub0.localCheckpoint()
+    val cb = pqCodebook(sub)
+    val enc = sub.join(broadcast(cb), "m")
+      .select(col("vec_id"), col("m"), col("c_id"),
+        sqDist("sn2", "cn2", "sv", "cd").as("d"))
+      .groupBy("vec_id", "m")
+      .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
+    val lut = sub.filter(expr(ProbeFilter))
+      .select(col("vec_id").as("probe_id"), col("m").as("pm"),
+        col("sv").as("psv"), col("sn2").as("psn2"))
+      .join(cb, col("pm") === col("m"))
+      .select(col("probe_id"), col("m"), col("c_id"),
+        sqDist("psn2", "cn2", "psv", "cd").as("d"))
+    (enc, lut)
+  }
+
+  /** Residual PQ index — what production IVF-PQ quantizes (FAISS
+    * `IndexIVFPQ`, Jégou's IVFADC): each vector's codes describe
+    * (v − centroid of its cell). Per-(cell, subspace) integer cell
+    * centroids, residual subvectors, the TRAINED residual codebook
+    * ([[trainResCodebook]]), argmin encode. The ADC table is per
+    * (probe, PROBED CELL) — the probe's residual depends on the cell it
+    * probes — so it is |probes| × nprobe × M × K rows, and one
+    * broadcast join on (cell, m, c_id) does both the cell prune and
+    * the table lookup. Everything stays integer-exact (floor-of-
+    * double-div integer means, kmeansUpdate's arithmetic). Returns
+    * (enc: vec_id, cell, m, c_id; lut: probe_id, cell, m, c_id, d). */
+  private def residualIndex(sub0: DataFrame, assigned: DataFrame,
+      probeCells: DataFrame): (DataFrame, DataFrame) = {
+    val sub = sub0.join(assigned.select("vec_id", "cell"), "vec_id").localCheckpoint()
+    // per-(cell, subspace) integer centroid of the member subvectors
+    val cellCent = sub.select(col("cell"), col("m"), posexplode(col("sv")))
+      .groupBy("cell", "m", "pos")
+      .agg(sum(col("col").cast("long")).as("sm"), count(lit(1)).as("n"))
+      .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("double"))
+      .groupBy("cell", "m")
+      .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), x -> x.cm)")
+        .as("ccd"))
+    // residual subvectors: rv = sv − centroid(cell, m), exact ints
+    val res = sub.join(broadcast(cellCent), Seq("cell", "m"))
+      .select(col("vec_id"), col("cell"), col("m"),
+        expr("zip_with(sv, ccd, (a, b) -> a - b)").as("rv"))
+      .withColumn("rn2", expr(dot("rv", "rv")))
+      .localCheckpoint()
+    val rcb = trainResCodebook(res)
+    val enc = res.join(broadcast(rcb), "m")
+      .select(col("vec_id"), col("cell"), col("m"), col("c_id"),
+        sqDist("rn2", "cn2", "rv", "cd").as("d"))
+      .groupBy("vec_id", "cell", "m")
+      .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
+    val lut = sub.filter(expr(ProbeFilter))
+      .select(col("vec_id").as("probe_id"), col("m"), col("sv"))
+      .join(broadcast(probeCells.select("probe_id", "cell")), "probe_id")
+      .join(broadcast(cellCent), Seq("cell", "m"))
+      .select(col("probe_id"), col("cell"), col("m"),
+        expr("zip_with(sv, ccd, (a, b) -> a - b)").as("prv"))
+      .withColumn("prn2", expr(dot("prv", "prv")))
+      .join(broadcast(rcb), "m")
+      .select(col("probe_id"), col("cell"), col("m"), col("c_id"),
+        sqDist("prn2", "cn2", "prv", "cd").as("d"))
+    (enc, lut)
+  }
+
+  /** TRAIN the shared residual codebook: seed with the 16 seed
+    * vectors' own residuals, then run [[ResTrainRounds]] deterministic
+    * Lloyd rounds over the FULL residual distribution (argmin-sqdist
+    * assignment, per-(subspace, codeword, dim) INTEGER sums,
+    * floor-of-double-div means — kmeansUpdate's exact arithmetic; a
+    * codeword that attracts no members keeps its previous value via
+    * left-join-coalesce, so the round is total and deterministic in
+    * both engines). Training is what FAISS does for IVFADC codebooks,
+    * and round 9's committed measurement (RESIDUAL_GAIN.json) is why:
+    * the UNtrained seed codebook underfits as the corpus grows — the
+    * 16 seed residuals stop spanning the residual distribution — and
+    * recall@5 fell 72→52 at 10× while the trained path tracks the
+    * distribution at any size. Each round reads the checkpointed
+    * residual frame once (broadcast codebook, partial-agg argmin — one
+    * exchange — then k×M×dim-group integer sums: ann_pq's encode shape,
+    * corpus-size-independent update state). Returns the 64-row
+    * (m, c_id, cd, cn2) frame, localCheckpoint-ed so every consumer —
+    * encode, LUT, and the plan audit — sees a tiny leaf, not the
+    * training lineage. */
+  private def trainResCodebook(res: DataFrame): DataFrame = {
+    var cb = res.filter(col("vec_id") < 16)
+      .select(col("m"), col("vec_id").as("c_id"), col("rv").as("cd"),
+        col("rn2").as("cn2"))
+      .localCheckpoint()
+    (1 to ResTrainRounds).foreach { _ =>
+      // slim pair stream into the codegen HashAggregate argmin; rv is
+      // re-attached by a (vec_id, m) join against the checkpointed
+      // residual frame instead of riding every pair row as first()
+      val assign = res.join(broadcast(cb), "m")
+        .select(col("vec_id"), col("m"), col("c_id"),
+          sqDist("rn2", "cn2", "rv", "cd").as("d"))
+        .groupBy("vec_id", "m")
+        .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
+        .join(res.select(col("vec_id"), col("m"), col("rv")), Seq("vec_id", "m"))
+      val upd = assign.select(col("m"), col("c_id"), posexplode(col("rv")))
+        .groupBy("m", "c_id", "pos")
+        .agg(sum(col("col").cast("long")).as("sm"), count(lit(1)).as("n"))
+        .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("double"))
+        .groupBy("m", "c_id")
+        .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), x -> x.cm)")
+          .as("ucd"))
+      cb = cb.join(upd, Seq("m", "c_id"), "left")
+        .select(col("m"), col("c_id"), coalesce(col("ucd"), col("cd")).as("cd"))
+        .withColumn("cn2", expr(dot("cd", "cd")))
+        .localCheckpoint()
+    }
+    cb
+  }
+
+  // ---- recall ---------------------------------------------------------
+
+  /** The exact top-k a recall row scores `spec` against: code-space L2
+    * for PqAdc (full 64-dim integer distances, no codebook — isolates
+    * pure codebook loss), else cosine brute force, label-filtered when
+    * the spec pre-filters. */
+  private[graft] def exactTopK(s: SparkSession, dir: String,
+      spec: IndexSpec): DataFrame = spec.code match {
+    case PqAdc =>
+      val codes = kmeansCodes(s, dir).localCheckpoint()
+      val probes = broadcast(codes.filter(expr(ProbeFilter))
+        .select(col("vec_id").as("probe_id"), col("qd").as("pqd"),
+          col("qn2").as("pqn2")))
+      ranked(codes.join(probes, col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id").as("n_id"),
+          sqDist("pqn2", "qn2", "pqd", "qd").cast("long").as("ed")),
+        col("ed"), spec.k).select("probe_id", "n_id")
+    case _ =>
+      search(s, dir, IndexSpec(labelFilter = spec.labelFilter, k = spec.k))
+        .select("probe_id", "n_id")
+  }
+
+  /** Recall@k of `spec` against [[exactTopK]], one row per probe:
+    * k = exact neighbors (0 for a probe whose label has no other
+    * member — recall 100, nothing to find), hits = how many the search
+    * recovered, recall_pct = hits * 100 div k (integer, no float
+    * boundary). Both sides are bounded search output (|probes| x k
+    * rows), collected on overlapped driver threads ([[graft.Par]]) so
+    * the brute-force scan back-fills cores the search's small serial
+    * training jobs leave idle; the per-probe left join from the probe
+    * set is then driver arithmetic over those few rows. */
+  private def recallVsExact(s: SparkSession, dir: String,
+      spec: IndexSpec): DataFrame = {
+    def byProbe(df: DataFrame): Map[Long, Set[Long]] =
+      df.select("probe_id", "n_id").collect().groupBy(_.getLong(0))
+        .map { case (p, rs) => p -> rs.map(_.getLong(1)).toSet }
+    val ((probes, exact), approx) = Par.pair(s)(
+      (Tables(s, dir).embeddings.filter(expr(ProbeFilter)).select("vec_id")
+        .collect().map(_.getLong(0)).sorted, byProbe(exactTopK(s, dir, spec))),
+      byProbe(search(s, dir, spec)))
+    val rows = probes.toSeq.map { p =>
+      val truth = exact.getOrElse(p, Set.empty[Long])
+      val k = truth.size.toLong
+      val hits = truth.count(approx.getOrElse(p, Set.empty[Long])).toLong
+      (p, k, hits, if (k == 0) 100L else hits * 100 / k)
+    }
+    s.createDataFrame(rows).toDF("probe_id", "k", "hits", "recall_pct")
+  }
+
+  // ---- the DuckDB oracle generator ------------------------------------
+
+  /** The oracle for a search row: [[searchCtes]] plus the top-k. */
+  private[graft] def oracleSql(spec: IndexSpec): String = {
+    val out = if (spec.code == PqAdc) "adist" else "round(cos, 6) AS cos_sim"
+    s"""WITH ${searchCtes(spec)}
+       |SELECT probe_id, n_id, rank, $out FROM ranked WHERE rank <= ${spec.k}""".stripMargin
+  }
+
+  /** The oracle for a recall row: the search chain, the exact top-k
+    * (`truth`), and the per-probe left join from the probe set. */
+  private def recallOracleSql(spec: IndexSpec): String = {
+    val (src, order) =
+      if (spec.code == PqAdc)
+        ("q", duckSqDist("p.qd", "x.qd", duckDot("p.qd", "p.qd"), duckDot("x.qd", "x.qd")))
+      else ("e", s"${duckCosine("p.v", "x.v")} DESC")
+    val label = if (spec.labelFilter) " AND x.label = p.label" else ""
+    s"""WITH ${searchCtes(spec)}, approx AS (
+       |  SELECT probe_id, n_id FROM ranked WHERE rank <= ${spec.k}
+       |), truth AS (
+       |  SELECT probe_id, n_id FROM (
+       |    SELECT p.vec_id AS probe_id, x.vec_id AS n_id,
+       |      row_number() OVER (PARTITION BY p.vec_id ORDER BY $order, x.vec_id) AS rank
+       |    FROM $src x JOIN $src p ON x.vec_id <> p.vec_id$label
+       |    WHERE p.$ProbeFilter
+       |  ) WHERE rank <= ${spec.k}
+       |), per AS (
+       |  SELECT t.probe_id, count(*) AS k, count(a.n_id) AS hits
+       |  FROM truth t LEFT JOIN approx a
+       |    ON t.probe_id = a.probe_id AND t.n_id = a.n_id
+       |  GROUP BY 1
+       |)
+       |SELECT p.vec_id AS probe_id, coalesce(per.k, 0) AS k,
+       |  coalesce(per.hits, 0) AS hits,
+       |  CASE WHEN coalesce(per.k, 0) = 0 THEN 100
+       |       ELSE per.hits * 100 // per.k END AS recall_pct
+       |FROM embeddings p LEFT JOIN per ON p.vec_id = per.probe_id
+       |WHERE p.$ProbeFilter
+       |ORDER BY 1""".stripMargin
+  }
+
+  /** The CTE chain for `spec`, stage for stage with [[search]]: `e`
+    * (+ int8 codes `q`), cells (`assigned`, `pc`), candidates `cand`
+    * (cell ∩ predicate), the spec's scoring and shortlist `short`, and
+    * `ranked` — the exact cosine rerank, or for PqAdc the ADC ranking
+    * itself. */
+  private def searchCtes(spec: IndexSpec): String = {
+    val base = spec.coarse match {
+      case TrainedIvf => trainedCellCtes(spec.nprobe)
+      case _ => if (spec.code == Raw) eCte else s"$eCte, $duckQuantizeCte"
+    }
+    val ivfCand =
+      """cand0 AS (
+        |  SELECT pc.probe_id, a.vec_id AS n_id
+        |  FROM assigned a JOIN pc ON a.cell = pc.cell AND a.vec_id <> pc.probe_id
+        |)""".stripMargin
+    val cells = spec.coarse match {
+      case Flat =>
+        s"""cand0 AS (
+           |  SELECT p.vec_id AS probe_id, x.vec_id AS n_id
+           |  FROM e x JOIN e p ON x.vec_id <> p.vec_id WHERE p.$ProbeFilter
+           |)""".stripMargin
+      case Lsh =>
+        s"""keys AS (
+           |  SELECT vec_id, unnest(${duckHyperplaneKeys("v")}) AS bk FROM e
+           |), cand0 AS (
+           |  SELECT DISTINCT p.vec_id AS probe_id, x.vec_id AS n_id
+           |  FROM keys x JOIN keys p ON x.bk = p.bk AND x.vec_id <> p.vec_id
+           |  WHERE p.$ProbeFilter
+           |)""".stripMargin
+      case SeedIvf => s"${coarseCellCtes(spec.nprobe)}, $ivfCand"
+      case TrainedIvf => ivfCand
+    }
+    val cand =
+      if (spec.labelFilter)
+        """cand AS (
+          |  SELECT c.probe_id, c.n_id FROM cand0 c
+          |  JOIN e x ON x.vec_id = c.n_id JOIN e p ON p.vec_id = c.probe_id
+          |  WHERE x.label = p.label
+          |)""".stripMargin
+      else "cand AS (SELECT probe_id, n_id FROM cand0)"
+    val sub = spec.rotation match {
+      case NoRotation => pqSplitCteFrom("q")
+      case Opq => s"$opqCensusCtes, ${pqSplitCteFrom("qp")}"
+      case RvOpq => s"$rvCensusCtes, ${pqSplitCteFrom("qprv")}"
+    }
+    def short(src: String, order: String, depth: Int) =
+      s"""short AS (
+         |  SELECT probe_id, n_id FROM (
+         |    SELECT probe_id, n_id,
+         |      row_number() OVER (PARTITION BY probe_id ORDER BY $order, n_id) AS rq
+         |    FROM $src
+         |  ) WHERE rq <= $depth
+         |)""".stripMargin
+    def adc(cellCond: String) =
+      s"""adc AS (
+         |  SELECT c.probe_id, c.n_id, CAST(sum(lut.dist) AS BIGINT) AS adist
+         |  FROM cand c JOIN enc ON enc.vec_id = c.n_id
+         |  JOIN lut ON lut.probe_id = c.probe_id AND lut.m = enc.m
+         |    AND lut.c_id = enc.code$cellCond
+         |  GROUP BY 1, 2
+         |)""".stripMargin
+    val score = spec.code match {
+      case Raw => "short AS (SELECT probe_id, n_id FROM cand)"
+      case Int8 =>
+        s"""scored AS (
+           |  SELECT c.probe_id, c.n_id,
+           |    ${duckDot("qp.qd", "qn.qd")} * qp.maxabs * qn.maxabs
+           |      / (16129.0 * sqrt(${duckDot("ep.v", "ep.v")} * ${duckDot("en.v", "en.v")})) AS score
+           |  FROM cand c
+           |  JOIN q qp ON qp.vec_id = c.probe_id JOIN q qn ON qn.vec_id = c.n_id
+           |  JOIN e ep ON ep.vec_id = c.probe_id JOIN e en ON en.vec_id = c.n_id
+           |), ${short("scored", "score DESC", QCand)}""".stripMargin
+      case Pq => s"$sub, $pqCoreCtes, ${adc("")}, ${short("adc", "adist", AdcShortlist)}"
+      case PqAdc =>
+        s"""$sub, $pqCoreCtes, ${adc("")}, ranked AS (
+           |  SELECT probe_id, n_id, adist,
+           |    row_number() OVER (PARTITION BY probe_id ORDER BY adist, n_id) AS rank
+           |  FROM adc
+           |)""".stripMargin
+      case ResPq =>
+        s"""$sub, $residualTailCtes, ${adc(" AND lut.cell = enc.cell")},
+           |${short("adc", "adist", AdcShortlist)}""".stripMargin
+    }
+    val rerank =
+      if (spec.code == PqAdc) Nil
+      else Seq(
+        s"""ranked AS (
+           |  SELECT probe_id, n_id, cos,
+           |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
+           |  FROM (
+           |    SELECT s.probe_id, s.n_id, ${duckCosine("ep.v", "en.v")} AS cos
+           |    FROM short s
+           |    JOIN e ep ON s.probe_id = ep.vec_id
+           |    JOIN e en ON s.n_id = en.vec_id)
+           |)""".stripMargin)
+    (Seq(base, cells, cand, score) ++ rerank).mkString(",\n")
+  }
+
+  // ---- DuckDB fragments (each expects the CTEs it names in scope) -----
+
+  /** The raw-vector load every chain starts from. */
+  private def eCte: String =
+    """e AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
+      |)""".stripMargin
+
+  /** The int8 quantization (`q`: vec_id, maxabs, qd) — the single home
+    * of the floor(x*127/maxabs+0.5) formula; expects `e`. */
+  private def duckQuantizeCte: String =
+    s"""q AS (
+       |  SELECT vec_id, maxabs,
+       |    list_transform(v, x -> CAST(CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT) AS DOUBLE)) AS qd
+       |  FROM (
+       |    SELECT vec_id, v,
+       |      list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
+       |        list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
+       |    FROM e)
+       |)""".stripMargin
+
+  /** Seed-vector cells (`c`, all-pairs cell cosines `cs`, corpus
+    * assignment `assigned`, each probe's `nprobe` nearest cells `pc`);
+    * expects `e`. */
+  private def coarseCellCtes(nprobe: Int): String =
+    s"""c AS (
        |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
+       |), cs AS (
+       |  SELECT e.vec_id, c_id, ${duckCosine("e.v", "cv")} AS c_cos
+       |  FROM e CROSS JOIN c
        |), assigned AS (
        |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT e.vec_id, c_id,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${duckCosine("e.v", "cv")} DESC, c_id) AS rn
-       |    FROM e CROSS JOIN c
+       |    SELECT vec_id, c_id,
+       |      row_number() OVER (PARTITION BY vec_id
+       |        ORDER BY c_cos DESC, c_id) AS rn
+       |    FROM cs
        |  ) WHERE rn = 1
-       |), p AS (
-       |  SELECT vec_id AS probe_id, cell FROM assigned WHERE $ProbeFilter
-       |), cand AS (
-       |  SELECT p.probe_id, a.vec_id AS n_id
-       |  FROM assigned a JOIN p ON a.cell = p.cell AND a.vec_id <> p.probe_id
-       |), scored AS (
-       |  SELECT cand.probe_id, cand.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-       |  FROM cand
-       |  JOIN e ep ON cand.probe_id = ep.vec_id
-       |  JOIN e en ON cand.n_id = en.vec_id
-       |), ranked AS (
-       |  SELECT probe_id, n_id, cos,
-       |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-       |  FROM scored
-       |)
-       |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-       |FROM ranked WHERE rank <= 5""".stripMargin
+       |), pc AS (
+       |  SELECT vec_id AS probe_id, c_id AS cell FROM (
+       |    SELECT vec_id, c_id,
+       |      row_number() OVER (PARTITION BY vec_id
+       |        ORDER BY c_cos DESC, c_id) AS crn
+       |    FROM cs WHERE $ProbeFilter
+       |  ) WHERE crn <= $nprobe
+       |)""".stripMargin
 
-  /** IVF: the 16 vectors with vec_id < 16 act as coarse centroids;
-    * every vector is assigned to its nearest centroid via the
-    * partial-aggregatable codegen argmax ([[graft.functions.ArgMaxBy]]
-    * — no window, one shuffle on vec_id, whole-stage HashAggregate);
-    * probes then search only their own cell. */
-  val annIvf: Q = Q(
-    "ann_ivf",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val assigned = e.crossJoin(cents)
-        .select(col("vec_id"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-        .groupBy("vec_id")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      val probes = assigned.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("cell"))
-      val cand = assigned.join(broadcast(probes), "cell")
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"))
-      val scored = cand
-        .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
-          col("probe_id") === col("vec_id"))
-        .drop("vec_id")
-        .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
-          col("n_id") === col("vec_id"))
-        .select(col("probe_id"), col("n_id"),
-          cosWith("pv", "pn2", "nv", "nn2").as("cos"))
-      scored
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-    },
-    Some(ivfTopkOracleSql))
+  /** Trained cells: [[kmeansOracleCtes]] (which also loads `e` and `q`)
+    * at the corpus-scaled k (`pk` — [[ivfK]] over the counted corpus),
+    * a1 renamed to `assigned`, and each probe's max(nprobe, k/8)
+    * nearest UPDATED centroids as `pc`. */
+  private def trainedCellCtes(nprobe: Int): String =
+    s"""pk AS (
+       |  SELECT ${duckIvfK("count(*)")} AS kk FROM embeddings
+       |), ${kmeansOracleCtes("SELECT kk FROM pk")}, assigned AS (
+       |  SELECT vec_id, cid AS cell FROM a1
+       |), pc AS (
+       |  SELECT vec_id AS probe_id, c_id AS cell FROM (
+       |    SELECT qn.vec_id, c_id,
+       |      row_number() OVER (PARTITION BY qn.vec_id
+       |        ORDER BY ${duckDot("qd", "cd")} / sqrt(qn2 * cn2) DESC, c_id) AS crn
+       |    FROM qn CROSS JOIN c1n WHERE qn.$ProbeFilter
+       |  ) WHERE crn <= (SELECT greatest($nprobe, kk // 8) FROM pk)
+       |)""".stripMargin
+
+  /** The subspace-split CTE (`sub`) over any (vec_id, qd) source. */
+  private def pqSplitCteFrom(src: String): String =
+    s"""sub AS (
+       |  SELECT vec_id, t.m,
+       |    list_slice(qd, t.m * $PqSubDim + 1, t.m * $PqSubDim + $PqSubDim) AS sv
+       |  FROM $src, unnest([i FOR i IN range(0, $PqM)]) AS t(m)
+       |)""".stripMargin
+
+  /** The OPQ-lite permutation census (expects `q`; yields `qp`):
+    * exact-integer variance N·Σx² − (Σx)² per dim, ranked varn DESC /
+    * d ASC, rank r dealt to position (r mod M)·SubDim + r div M. */
+  private def opqCensusCtes: String =
+    s"""opqstats AS (
+       |  SELECT t.d AS d,
+       |    count(*) * sum(CAST(qd[t.d + 1] AS BIGINT) * CAST(qd[t.d + 1] AS BIGINT))
+       |      - sum(CAST(qd[t.d + 1] AS BIGINT)) * sum(CAST(qd[t.d + 1] AS BIGINT)) AS varn
+       |  FROM q, unnest([i FOR i IN range(0, 64)]) AS t(d)
+       |  GROUP BY 1
+       |), permt AS (
+       |  SELECT ((r % $PqM) * $PqSubDim + r // $PqM) AS pos, d FROM (
+       |    SELECT d, row_number() OVER (ORDER BY varn DESC, d) - 1 AS r
+       |    FROM opqstats)
+       |), qp AS (
+       |  SELECT vec_id, list(x ORDER BY pos) AS qd FROM (
+       |    SELECT q.vec_id, p.pos, q.qd[p.d + 1] AS x FROM q, permt p
+       |  ) GROUP BY 1
+       |)""".stripMargin
+
+  /** The residual-variance census (expects `q`, `assigned`; yields
+    * `qprv`): per-cell floor-mean residuals, HUGEINT variance numerator
+    * (mirrors the Spark decimal(38,0)), the same round-robin dealing. */
+  private def rvCensusCtes: String =
+    s"""rexp AS (
+       |  SELECT cell, t.x['pos'] AS pos, CAST(t.x['v'] AS BIGINT) AS x
+       |  FROM (SELECT a.cell, q.qd FROM q JOIN assigned a ON q.vec_id = a.vec_id) j,
+       |    unnest([{'pos': i, 'v': qd[i]} FOR i IN range(1, len(qd) + 1)]) AS t(x)
+       |), rcent AS (
+       |  SELECT cell, pos,
+       |    CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT) AS cm
+       |  FROM rexp GROUP BY 1, 2
+       |), rvstats AS (
+       |  SELECT pos - 1 AS d, count(*) * sum(r * r) - sum(r) * sum(r) AS varn
+       |  FROM (SELECT rexp.pos, rexp.x - rc.cm AS r
+       |        FROM rexp JOIN rcent rc
+       |          ON rexp.cell = rc.cell AND rexp.pos = rc.pos)
+       |  GROUP BY 1
+       |), permrv AS (
+       |  SELECT ((r % $PqM) * $PqSubDim + r // $PqM) AS pos, d FROM (
+       |    SELECT d, row_number() OVER (ORDER BY varn DESC, d) - 1 AS r
+       |    FROM rvstats)
+       |), qprv AS (
+       |  SELECT vec_id, list(x ORDER BY pos) AS qd FROM (
+       |    SELECT q.vec_id, p.pos, q.qd[p.d + 1] AS x FROM q, permrv p
+       |  ) GROUP BY 1
+       |)""".stripMargin
+
+  /** Squared L2 distance via precomputed squared norms. */
+  private def duckSqDist(a: String, b: String, an2: String, bn2: String) =
+    s"$an2 + $bn2 - 2 * ${duckDot(a, b)}"
+
+  /** The PQ index/LUT chain over `sub`: subvector norms `sn`, seed
+    * codebook `cb`, argmin encode `enc` (vec_id, m, code), probe table
+    * `lut` (probe_id, m, c_id, dist). */
+  private def pqCoreCtes: String = {
+    val d = duckSqDist _
+    s"""sn AS (
+       |  SELECT vec_id, m, sv, ${duckDot("sv", "sv")} AS sn2 FROM sub
+       |), cb AS (
+       |  SELECT m, vec_id AS c_id, sv AS cd, sn2 AS cn2 FROM sn WHERE vec_id < 16
+       |), enc AS (
+       |  SELECT vec_id, m, c_id AS code FROM (
+       |    SELECT sn.vec_id, sn.m, cb.c_id,
+       |      row_number() OVER (PARTITION BY sn.vec_id, sn.m
+       |        ORDER BY ${d("sv", "cd", "sn2", "cn2")}, cb.c_id) AS rn
+       |    FROM sn JOIN cb ON sn.m = cb.m
+       |  ) WHERE rn = 1
+       |), lut AS (
+       |  SELECT p.vec_id AS probe_id, cb.m, cb.c_id,
+       |    ${d("p.sv", "cd", "p.sn2", "cn2")} AS dist
+       |  FROM sn p JOIN cb ON p.m = cb.m WHERE p.$ProbeFilter
+       |)""".stripMargin
+  }
+
+  /** The residual-codebook training CTE rounds, generated to match
+    * [[trainResCodebook]] CTE-for-CTE: `rcb0` = the 16 seed vectors'
+    * residuals; each round t = argmin assignment (`rasn$t`, ties to
+    * the smaller codeword id exactly like the Spark max_by), per-dim
+    * BIGINT sums (`rsum$t`), floor-of-double-div means (`rupd$t`),
+    * and the left-join-coalesce update (`rcb$t` — empty codewords
+    * keep their previous value). The final round is aliased `rcb`,
+    * the name the encode/LUT CTEs consume. Expects `resn` in scope. */
+  private def resCbTrainCtes: String = {
+    val d = duckSqDist _
+    val rounds = (1 to ResTrainRounds).map { t =>
+      val prev = s"rcb${t - 1}"
+      s"""rasn$t AS (
+         |  SELECT m, c_id, rv FROM (
+         |    SELECT r.vec_id, r.m, r.rv, p.c_id,
+         |      row_number() OVER (PARTITION BY r.vec_id, r.m
+         |        ORDER BY ${d("rv", "cd", "rn2", "cn2")}, p.c_id) AS rn
+         |    FROM resn r JOIN $prev p ON r.m = p.m
+         |  ) WHERE rn = 1
+         |), rsum$t AS (
+         |  SELECT m, c_id, t.x['pos'] AS pos,
+         |    CAST(sum(t.x['v']) AS BIGINT) AS sm, count(*) AS n
+         |  FROM rasn$t, unnest([{'pos': i, 'v': CAST(rv[i] AS BIGINT)}
+         |    FOR i IN range(1, len(rv) + 1)]) AS t(x)
+         |  GROUP BY 1, 2, 3
+         |), rupd$t AS (
+         |  SELECT m, c_id,
+         |    list(floor(CAST(sm AS DOUBLE) / n) ORDER BY pos) AS ucd
+         |  FROM rsum$t GROUP BY 1, 2
+         |), rcb$t AS (
+         |  SELECT m, c_id, cd, ${duckDot("cd", "cd")} AS cn2 FROM (
+         |    SELECT p.m, p.c_id, coalesce(u.ucd, p.cd) AS cd
+         |    FROM $prev p LEFT JOIN rupd$t u
+         |      ON p.m = u.m AND p.c_id = u.c_id)
+         |)""".stripMargin
+    }
+    s"""rcb0 AS (
+       |  SELECT m, vec_id AS c_id, rv AS cd, rn2 AS cn2
+       |  FROM resn WHERE vec_id < 16
+       |), ${rounds.mkString(", ")}, rcb AS (
+       |  SELECT * FROM rcb$ResTrainRounds
+       |)""".stripMargin
+  }
+
+  /** The residual tail (cell centroids `ccent` -> residuals `resn`
+    * -> codebook training -> encode `enc` (vec_id, cell, m, code) ->
+    * per-(probe, probed cell) table `lut` (probe_id, cell, m, c_id,
+    * dist)) — the oracle twin of [[residualIndex]]. Expects `e`, `sub`,
+    * `assigned` (vec_id, cell) and `pc` (probe_id, cell). */
+  private def residualTailCtes: String = {
+    val d = duckSqDist _
+    s"""suba AS (
+       |  SELECT sub.vec_id, sub.m, sub.sv, a.cell
+       |  FROM sub JOIN assigned a ON sub.vec_id = a.vec_id
+       |), csums AS (
+       |  SELECT cell, m, t.x['pos'] AS pos,
+       |    CAST(sum(t.x['v']) AS BIGINT) AS sm, count(*) AS n
+       |  FROM suba, unnest([{'pos': i, 'v': CAST(sv[i] AS BIGINT)}
+       |    FOR i IN range(1, len(sv) + 1)]) AS t(x)
+       |  GROUP BY 1, 2, 3
+       |), ccent AS (
+       |  SELECT cell, m,
+       |    list(floor(CAST(sm AS DOUBLE) / n) ORDER BY pos) AS ccd
+       |  FROM csums GROUP BY 1, 2
+       |), resn AS (
+       |  SELECT vec_id, cell, m, rv, ${duckDot("rv", "rv")} AS rn2 FROM (
+       |    SELECT s.vec_id, s.cell, s.m,
+       |      [s.sv[i] - ct.ccd[i] FOR i IN range(1, len(s.sv) + 1)] AS rv
+       |    FROM suba s JOIN ccent ct ON s.cell = ct.cell AND s.m = ct.m)
+       |), $resCbTrainCtes, enc AS (
+       |  SELECT vec_id, cell, m, c_id AS code FROM (
+       |    SELECT r.vec_id, r.cell, r.m, rcb.c_id,
+       |      row_number() OVER (PARTITION BY r.vec_id, r.m
+       |        ORDER BY ${d("rv", "cd", "rn2", "cn2")}, rcb.c_id) AS rn
+       |    FROM resn r JOIN rcb ON r.m = rcb.m
+       |  ) WHERE rn = 1
+       |), presn AS (
+       |  SELECT probe_id, cell, m, prv, ${duckDot("prv", "prv")} AS prn2 FROM (
+       |    SELECT pc.probe_id, pc.cell, s.m,
+       |      [s.sv[i] - ct.ccd[i] FOR i IN range(1, len(s.sv) + 1)] AS prv
+       |    FROM sub s JOIN pc ON s.vec_id = pc.probe_id
+       |    JOIN ccent ct ON ct.cell = pc.cell AND ct.m = s.m)
+       |), lut AS (
+       |  SELECT p.probe_id, p.cell, p.m, rcb.c_id,
+       |    ${d("prv", "cd", "prn2", "cn2")} AS dist
+       |  FROM presn p JOIN rcb ON p.m = rcb.m
+       |)""".stripMargin
+  }
+
+  // ---- PQ building blocks (Spark) ------------------------------------
+
+  /** (vec_id, m, sv, sn2): a (vec_id, qd) code-vector frame split into
+    * per-subspace code vectors; sn2 = <sv,sv> (exact integer-valued
+    * double). Shared by the natural-order and OPQ-permuted chains. */
+  private def subvectorsOf(codes: DataFrame): DataFrame =
+    codes
+      .select(col("vec_id"), explode(expr(
+        s"transform(sequence(0, ${PqM - 1}), " +
+          s"m -> struct(m AS m, slice(qd, m * $PqSubDim + 1, $PqSubDim) AS sv))"))
+        .as("x"))
+      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
+      .withColumn("sn2", expr(dot("sv", "sv")))
+
+  /** The corpus split into per-subspace code vectors (natural
+    * coordinate order). */
+  private def pqSubvectors(s: SparkSession, dir: String): DataFrame =
+    subvectorsOf(kmeansCodes(s, dir))
+
+  /** OPQ-lite: a balanced-variance coordinate PERMUTATION applied
+    * before the subspace split — the parameter-free baseline
+    * of OPQ (Ge et al., CVPR 2013: optimize the space rotation so
+    * subquantizers share the variance; their "OPQ-NP" ablation shows a
+    * permutation balancing per-subspace variance captures much of the
+    * gain without the float SVD, which would not oracle-verify).
+    * Dimensions are ranked by exact-integer corpus variance
+    * (N·Σx² − (Σx)² over the int8 codes, BIGINT arithmetic) and dealt
+    * round-robin across the M subspaces — each subspace receives every
+    * M-th variance rank, so no subquantizer is starved while another
+    * carries all the energy. The 64-row census is index-build
+    * metadata (collected like the probed-cell list; at extreme N a
+    * deployment computes it on a sample — the ranks, not the moments,
+    * are what matters). Identical census + tie-break (varn desc, dim
+    * asc) in the DuckDB oracle. Storage and search cost are IDENTICAL
+    * to ann_ivf_pq — the permutation is free at query time. Returns
+    * position → original dim (private[graft] so the spec can pin
+    * bijection + round-robin dealing against its own recompute). */
+  private[graft] def opqPermutation(s: SparkSession, dir: String): Seq[Int] = {
+    val stats = kmeansCodes(s, dir).select(explode(expr(
+        "transform(sequence(0, 63), d -> struct(d AS d, CAST(element_at(qd, d + 1) AS BIGINT) AS x))"))
+        .as("t"))
+      .select(col("t.d").as("d"), col("t.x").as("x"))
+      .groupBy("d")
+      .agg((count(lit(1)) * sum(expr("x * x")) - sum(col("x")) * sum(col("x")))
+        .as("varn"))
+      .collect().map(r => (r.getInt(0), r.getLong(1)))
+    val perm = new Array[Int](64)
+    stats.sortBy { case (d, v) => (-v, d) }.map(_._1).zipWithIndex
+      .foreach { case (d, r) => perm((r % PqM) * PqSubDim + r / PqM) = d }
+    perm.toSeq
+  }
+
+  /** The subspace split over the codes permuted by `perm`
+    * (position → original dim). */
+  private def permutedSubvectors(s: SparkSession, dir: String,
+      perm: Seq[Int]): DataFrame =
+    subvectorsOf(kmeansCodes(s, dir).withColumn("qd", expr(
+      s"transform(array(${perm.mkString(", ")}), i -> element_at(qd, i + 1))")))
+
+  /** 64-row codebook (m, c_id, cd, cn2): subspace slices of the 16
+    * seed vectors. Broadcast everywhere it is used. */
+  private def pqCodebook(sub: DataFrame): DataFrame =
+    sub.filter(col("vec_id") < 16)
+      .select(col("m"), col("vec_id").as("c_id"), col("sv").as("cd"),
+        col("sn2").as("cn2"))
+
+  /** squared L2 via the shared dot fold: |a|^2 + |b|^2 - 2<a,b> —
+    * three exact integers combined exactly. */
+  private def sqDist(an2: String, bn2: String, a: String, b: String) =
+    expr(s"$an2 + $bn2 - 2 * ${dot(a, b)}")
+
+  /** position → original dim under the RESIDUAL-variance census: the
+    * permutation [[opqPermutation]] computes from RAW-code variance,
+    * recomputed over r = code − floor-mean(assigned cell) instead —
+    * round 15's measured answer on the naive composition
+    * (ann_ivfpq_opq_res: 48 vs 52 baseline at sf1j) named the
+    * mechanism: subtracting the coarse centroid removes exactly the
+    * cell-level component that dominates the raw ranking, so the raw
+    * census's dealing is near-arbitrary FOR THE RESIDUAL
+    * distribution. This census ranks dimensions by what the residual
+    * codebook actually has to describe. Assignment must come first
+    * (the census depends on cells), so the build order is
+    * assign → census → permute → split → residual tail. Exactness:
+    * per-(cell, dim) centroids are the kmeansUpdate floor-of-double-
+    * div integer means; residuals are exact integers; the variance
+    * numerator N·Σr² − (Σr)² is computed in decimal(38,0) (Spark) /
+    * HUGEINT (DuckDB) so the RANKING cannot diverge by overflow at
+    * any bench SF. 64-row census = index-build metadata, the
+    * opqPermutation stance. */
+  private[graft] def opqResidualPermutation(s: SparkSession, dir: String,
+      assigned: DataFrame): Seq[Int] = {
+    val rexp = kmeansCodes(s, dir).join(assigned, "vec_id")
+      .select(col("cell"), posexplode(expr(
+        "transform(qd, x -> CAST(x AS BIGINT))")))
+      .select(col("cell"), col("pos").as("d"), col("col").as("x"))
+    val cent = rexp.groupBy("cell", "d")
+      .agg(sum("x").as("sm"), count(lit(1)).as("n"))
+      .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("long"))
+      .select(col("cell"), col("d"), col("cm"))
+    val stats = rexp.join(cent, Seq("cell", "d"))
+      .withColumn("r", col("x") - col("cm"))
+      .groupBy("d")
+      .agg((count(lit(1)).cast("decimal(38,0)") *
+            sum(expr("r * r")).cast("decimal(38,0)") -
+            sum(col("r")).cast("decimal(38,0)") *
+            sum(col("r")).cast("decimal(38,0)")).as("varn"))
+      .collect().map(r => (r.getInt(0), r.getDecimal(1)))
+    val dims = PqM * PqSubDim
+    require(stats.length == dims, s"census must cover $dims dims, got ${stats.length}")
+    val ordered = stats.sortWith { (a, b) =>
+      val c = a._2.compareTo(b._2)
+      if (c != 0) c > 0 else a._1 < b._1 // varn DESC, d ASC
+    }.map(_._1)
+    val perm = new Array[Int](dims)
+    ordered.zipWithIndex.foreach { case (d, r) =>
+      perm((r % PqM) * PqSubDim + r / PqM) = d }
+    perm.toSeq
+  }
+
+  // ---- vector audits --------------------------------------------------
 
   /** embedding norm/stats audit per label: a plain partial-agg pass. */
   val vecNorms: Q = Q(
@@ -214,204 +1027,6 @@ object Ann {
             |  round(min(norm), 6) AS min_norm,
             |  round(max(norm), 6) AS max_norm
             |FROM e GROUP BY label""".stripMargin))
-
-  /** Recall@K evaluation of the LSH index against exact ground truth —
-    * the quality harness any ANN deployment runs before trusting the
-    * approximate path. Per probe: how many of the exact top-K the LSH
-    * result recovered, as an integer percentage (no float boundary).
-    * Both inputs are the deterministic ann_bruteforce / ann_lsh
-    * results, so the oracle recomputes the same join of their CTEs. */
-  val annRecall: Q = Q(
-    "ann_recall",
-    (s, dir) => {
-      val exact = annBruteforce.run(s, dir).select(col("probe_id"), col("n_id"))
-      val approx = annLsh.run(s, dir)
-        .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-        .withColumn("recall_pct", expr("hits * 100 div k"))
-        .orderBy("probe_id")
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), p AS (
-            |  SELECT vec_id AS probe_id, v AS pv FROM e WHERE $ProbeFilter
-            |), bf_scored AS (
-            |  SELECT probe_id, e.vec_id AS n_id, ${duckCosine("pv", "e.v")} AS cos
-            |  FROM e JOIN p ON e.vec_id <> p.probe_id
-            |), bf_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM bf_scored
-            |), exact AS (
-            |  SELECT probe_id, n_id FROM bf_ranked WHERE rank <= $K
-            |), keys AS (
-            |  SELECT vec_id, unnest(${duckHyperplaneKeys("v")}) AS bk FROM e
-            |), pk AS (
-            |  SELECT vec_id AS probe_id, bk FROM keys WHERE $ProbeFilter
-            |), cand AS (
-            |  SELECT DISTINCT pk.probe_id, k.vec_id AS n_id
-            |  FROM keys k JOIN pk ON k.bk = pk.bk AND k.vec_id <> pk.probe_id
-            |), lsh_scored AS (
-            |  SELECT c.probe_id, c.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand c
-            |  JOIN e ep ON c.probe_id = ep.vec_id
-            |  JOIN e en ON c.n_id = en.vec_id
-            |), lsh_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM lsh_scored
-            |), approx AS (
-            |  SELECT probe_id, n_id FROM lsh_ranked WHERE rank <= $K
-            |)
-            |SELECT x.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM exact x LEFT JOIN approx a
-            |  ON x.probe_id = a.probe_id AND x.n_id = a.n_id
-            |GROUP BY 1 ORDER BY x.probe_id""".stripMargin))
-
-  /** Recall@5 of the IVF index vs exact ground truth — the cell-local
-    * search trades recall for touching one cell; this row quantifies
-    * that trade exactly (and shows why production IVF probes multiple
-    * cells). Same construction as [[annRecall]]. */
-  val annRecallIvf: Q = Q(
-    "ann_recall_ivf",
-    (s, dir) => {
-      val exact = annBruteforce.run(s, dir).filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"))
-      val approx = annIvf.run(s, dir)
-        .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-        .withColumn("recall_pct", expr("hits * 100 div k"))
-        .orderBy("probe_id")
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), p AS (
-            |  SELECT vec_id AS probe_id, v AS pv FROM e WHERE $ProbeFilter
-            |), bf_scored AS (
-            |  SELECT probe_id, e.vec_id AS n_id, ${duckCosine("pv", "e.v")} AS cos
-            |  FROM e JOIN p ON e.vec_id <> p.probe_id
-            |), bf_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM bf_scored
-            |), exact AS (
-            |  SELECT probe_id, n_id FROM bf_ranked WHERE rank <= 5
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), assigned AS (
-            |  SELECT vec_id, c_id AS cell FROM (
-            |    SELECT e.vec_id, c_id,
-            |      row_number() OVER (PARTITION BY e.vec_id
-            |        ORDER BY ${duckCosine("e.v", "cv")} DESC, c_id) AS rn
-            |    FROM e CROSS JOIN c
-            |  ) WHERE rn = 1
-            |), ip AS (
-            |  SELECT vec_id AS probe_id, cell FROM assigned WHERE $ProbeFilter
-            |), cand AS (
-            |  SELECT ip.probe_id, a.vec_id AS n_id
-            |  FROM assigned a JOIN ip ON a.cell = ip.cell AND a.vec_id <> ip.probe_id
-            |), ivf_scored AS (
-            |  SELECT cand.probe_id, cand.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand
-            |  JOIN e ep ON cand.probe_id = ep.vec_id
-            |  JOIN e en ON cand.n_id = en.vec_id
-            |), ivf_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM ivf_scored
-            |), approx AS (
-            |  SELECT probe_id, n_id FROM ivf_ranked WHERE rank <= 5
-            |)
-            |SELECT x.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM exact x LEFT JOIN approx a
-            |  ON x.probe_id = a.probe_id AND x.n_id = a.n_id
-            |GROUP BY 1 ORDER BY x.probe_id""".stripMargin))
-
-  /** IVF with nprobe=2: probes search their TWO nearest cells instead
-    * of one — the standard recall lever (ann_recall_ivf quantifies how
-    * much single-cell search loses). Base vectors are still assigned to
-    * exactly one cell, so the candidate sets of the two probed cells
-    * are disjoint and need no dedup; candidate cost is ~2x ann_ivf,
-    * still cell-bounded, never O(n). */
-  val annIvfNprobe: Q = Q(
-    "ann_ivf_nprobe",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val cellScores = e.crossJoin(cents)
-        .select(col("vec_id"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-      val assigned = cellScores.groupBy("vec_id")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      // per-probe top-2 cells: a window over only |probes| x 16 rows
-      val probeCells = cellScores.filter(expr(ProbeFilter))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
-        .filter(col("crn") <= 2)
-        .select(col("vec_id").as("probe_id"), col("c_id").as("cell"))
-      val cand = assigned.join(broadcast(probeCells), "cell")
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"))
-      val scored = cand
-        .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
-          col("probe_id") === col("vec_id"))
-        .drop("vec_id")
-        .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
-          col("n_id") === col("vec_id"))
-        .select(col("probe_id"), col("n_id"),
-          cosWith("pv", "pn2", "nv", "nn2").as("cos"))
-      scored
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), cs AS (
-            |  SELECT e.vec_id, c_id, ${duckCosine("e.v", "cv")} AS c_cos
-            |  FROM e CROSS JOIN c
-            |), assigned AS (
-            |  SELECT vec_id, c_id AS cell FROM (
-            |    SELECT vec_id, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS rn
-            |    FROM cs
-            |  ) WHERE rn = 1
-            |), pc AS (
-            |  SELECT vec_id AS probe_id, c_id AS cell FROM (
-            |    SELECT vec_id, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS crn
-            |    FROM cs WHERE $ProbeFilter
-            |  ) WHERE crn <= 2
-            |), cand AS (
-            |  SELECT pc.probe_id, a.vec_id AS n_id
-            |  FROM assigned a JOIN pc ON a.cell = pc.cell AND a.vec_id <> pc.probe_id
-            |), scored AS (
-            |  SELECT cand.probe_id, cand.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand
-            |  JOIN e ep ON cand.probe_id = ep.vec_id
-            |  JOIN e en ON cand.n_id = en.vec_id
-            |), ranked AS (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM scored
-            |)
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM ranked WHERE rank <= 5""".stripMargin))
 
   /** Per-vector symmetric int8 quantization — the compression step an
     * embedding store applies before indexing (4x smaller than float32,
@@ -454,261 +1069,90 @@ object Ann {
             |    (a, y) -> greatest(a, y)), 6) AS max_err
             |FROM q ORDER BY vec_id""".stripMargin))
 
-  /** Recall@5 of nprobe=2 IVF vs exact ground truth — paired with
-    * ann_recall_ivf this quantifies exactly what the second probed cell
-    * buys, the measurement that drives the nprobe knob in production.
-    * Same construction as [[annRecallIvf]]. */
-  val annRecallNprobe: Q = Q(
-    "ann_recall_nprobe",
-    (s, dir) => {
-      val exact = annBruteforce.run(s, dir).filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"))
-      val approx = annIvfNprobe.run(s, dir)
-        .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-        .withColumn("recall_pct", expr("hits * 100 div k"))
-        .orderBy("probe_id")
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), p AS (
-            |  SELECT vec_id AS probe_id, v AS pv FROM e WHERE $ProbeFilter
-            |), bf_scored AS (
-            |  SELECT probe_id, e.vec_id AS n_id, ${duckCosine("pv", "e.v")} AS cos
-            |  FROM e JOIN p ON e.vec_id <> p.probe_id
-            |), bf_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM bf_scored
-            |), exact AS (
-            |  SELECT probe_id, n_id FROM bf_ranked WHERE rank <= 5
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), cs AS (
-            |  SELECT e.vec_id, c_id, ${duckCosine("e.v", "cv")} AS c_cos
-            |  FROM e CROSS JOIN c
-            |), assigned AS (
-            |  SELECT vec_id, c_id AS cell FROM (
-            |    SELECT vec_id, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS rn
-            |    FROM cs
-            |  ) WHERE rn = 1
-            |), pc AS (
-            |  SELECT vec_id AS probe_id, c_id AS cell FROM (
-            |    SELECT vec_id, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS crn
-            |    FROM cs WHERE $ProbeFilter
-            |  ) WHERE crn <= 2
-            |), cand AS (
-            |  SELECT pc.probe_id, a.vec_id AS n_id
-            |  FROM assigned a JOIN pc ON a.cell = pc.cell AND a.vec_id <> pc.probe_id
-            |), np_scored AS (
-            |  SELECT cand.probe_id, cand.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand
-            |  JOIN e ep ON cand.probe_id = ep.vec_id
-            |  JOIN e en ON cand.n_id = en.vec_id
-            |), np_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM np_scored
-            |), approx AS (
-            |  SELECT probe_id, n_id FROM np_ranked WHERE rank <= 5
-            |)
-            |SELECT x.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM exact x LEFT JOIN approx a
-            |  ON x.probe_id = a.probe_id AND x.n_id = a.n_id
-            |GROUP BY 1 ORDER BY x.probe_id""".stripMargin))
-
-  /** candidate budget for the quantized search: 4x the final K, the
-    * usual rerank headroom for int8 ANN. */
-  private val QCand = 40
-
-  /** ADC shortlist depth (candidates kept after the integer ADC pass,
-    * before exact rerank) for the IVF-PQ/IVFADC family. 80, not
-    * QCand's 40: the committed recall-cost curve (RECALL_CURVE.json,
-    * round 11) measured recall@5 FLAT in nprobe but 92% vs 72% going
-    * 40 → 80 at every nprobe, at indistinguishable chain cost
-    * (4.9–5.8 s either way) — shortlist truncation, not cell misses,
-    * was the dominant loss term, so the default buys the recall where
-    * the curve says it lives. Cost shape at 100 TB: the rerank fetches
-    * raw vectors for 80 instead of 40 finalists per probe — still
-    * O(probes), unchanged index IO. The int8 row (ann_quantized) keeps
-    * QCand: its codes approximate far better than 4-subspace PQ, so
-    * the curve's finding does not transfer. */
-  private val AdcShortlist = 80
-
-  /** vectors + their int8 codes (same quantization as vec_quantize:
-    * floor-half-up against the per-vector maxabs, seeded 1e-12).
-    * Codes are carried as doubles — every product |code| <= 127 is
-    * integer-exact in a double, so the quantized dot is deterministic
-    * across engines while still using the codegen'd graft_dot. One
-    * native eval per vector (graft_int8_codes, pinned bit-identical to
-    * the SQL HOF formulation in NativeVsSqlSpec): this scan runs over
-    * the whole corpus, the hot path the interpreted-lambda rule
-    * exists for. */
-  private def quantized(s: SparkSession, dir: String): DataFrame =
-    emb(s, dir)
-      .withColumn("qz", expr("graft_int8_codes(v)"))
-      .withColumn("maxabs", col("qz.max_abs"))
-      .withColumn("qd", col("qz.codes"))
-      .drop("qz")
-
-  /** int8-quantized ANN: candidates scored on 4x-compressed codes,
-    * exact float rerank of the top [[QCand]] only — the memory-bound
-    * scale lever (candidate generation streams 1/4 the bytes; the
-    * full-precision column is only needed for <= QCand rows per
-    * probe). The approximate cosine rescales the integer code dot by
-    * (maxabs_a/127)(maxabs_b/127)/sqrt(n2a*n2b).
+  /** Johnson–Lindenstrauss random projection (Achlioptas ±1 variant):
+    * 64-dim embeddings down to 16 dims through a DETERMINISTIC sign
+    * matrix — sign(j,k) from an LCG on the flattened index, so the
+    * "random" matrix needs no stored state, no broadcast, and is
+    * identical in both engines. Input is the int8 code vector (the
+    * same quantization vec_quantize pins), so every projected
+    * coordinate is an exact BIGINT sum (|y_k| ≤ 64·127) — no float
+    * accumulation order to disagree on.
     *
-    * Here codes are derived inline from the float column (the test
-    * table stores no code column), so the single scan reads floats
-    * anyway; in the production layout the codes are a STORED column
-    * (written once by the vec_quantize step) and the candidate scan
-    * never touches the float column at all — the rerank fetches full
-    * vectors by key for the tiny candidate set. ann_recall_quantized
-    * measures exactly what the compression costs in recall. */
-  val annQuantized: Q = Q(
-    "ann_quantized",
-    (s, dir) => {
-      val q = quantized(s, dir)
-      val probes = broadcast(q.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-          col("n2").as("pn2"), col("maxabs").as("pmax"), col("qd").as("pqd")))
-      val scoredQ = q.join(probes, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"),
-          col("pv"), col("pn2"), col("v"), col("n2"),
-          expr(s"${dot("pqd", "qd")} * pmax * maxabs / (16129.0 * sqrt(pn2 * n2))")
-            .as("score_q"))
-      scoredQ
-        .withColumn("rank_q", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("score_q").desc, col("n_id"))))
-        .filter(col("rank_q") <= QCand)
-        .select(col("probe_id"), col("n_id"),
-          cosWith("pv", "pn2", "v", "n2").as("cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= K)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), n AS (
-            |  SELECT vec_id, v, ${duckDot("v", "v")} AS n2 FROM e
-            |), q AS (
-            |  SELECT vec_id, v, n2, maxabs,
-            |    list_transform(v, x -> CAST(CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT) AS DOUBLE)) AS qd
-            |  FROM (
-            |    SELECT vec_id, v, n2,
-            |      list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
-            |        list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
-            |    FROM n)
-            |), p AS (
-            |  SELECT vec_id AS probe_id, v AS pv, n2 AS pn2, maxabs AS pmax,
-            |    qd AS pqd
-            |  FROM q WHERE $ProbeFilter
-            |), scored_q AS (
-            |  SELECT probe_id, q.vec_id AS n_id, pv, pn2, v, n2,
-            |    ${duckDot("pqd", "qd")} * pmax * maxabs / (16129.0 * sqrt(pn2 * n2)) AS score_q
-            |  FROM q JOIN p ON q.vec_id <> p.probe_id
-            |), cand AS (
-            |  SELECT * FROM (
-            |    SELECT probe_id, n_id, pv, pn2, v, n2,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY score_q DESC, n_id) AS rank_q
-            |    FROM scored_q
-            |  ) WHERE rank_q <= $QCand
-            |), reranked AS (
-            |  SELECT probe_id, n_id,
-            |    ${duckDot("pv", "v")} / sqrt(pn2 * n2) AS cos
-            |  FROM cand
-            |)
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM reranked
-            |) WHERE rank <= $K""".stripMargin))
+    * Scale shape: map-only — a pure per-row fold that fuses into the
+    * parquet scan with ZERO shuffles at any corpus size; the array
+    * cells are surfaced as a scalar digest + L1/first-coordinate
+    * scalars (the driver comparator cannot hash array cells). This is
+    * the standard cheap front-end before pair-heavy stages: a 4×
+    * narrower vector makes every downstream distance pass (LSH
+    * bucketing, candidate verify) proportionally cheaper while JL
+    * preserves pairwise geometry to O(1/√16) distortion. */
+  /** The interpreted-HOF formulation of the projection fold over a
+    * BIGINT `codes` column — NativeVsSqlSpec pins graft_jl_project
+    * bit-identical to it; the hot path runs the native loop (the HOF
+    * form walks an expression tree per (j, k) cell — ~1024 interpreted
+    * evals per row, measured 13.5 s over 2k vectors). */
+  private[graft] val jlProjectSql: String = {
+    // y_k = Σ_j codes[j] · sign(j·16+k); sign(i) = high bit of TWO
+    // chained LCG rounds mod 2^31 (x2 = a·((a·i+c) mod m)+c mod m,
+    // sign = 1 − 2·(x2 div 2^30)). The low bit of a power-of-two-
+    // modulus LCG is parity(i) = parity(k), which collapses the sign
+    // matrix to rank 1, and one round's high bit is still affine
+    // enough to leave rank 9/16; two rounds measure full-rank
+    // (see JlProject16).
+    val sign =
+      "(1 - 2 * (((CAST(1103515245 AS BIGINT) * ((CAST(1103515245 AS BIGINT) * (j * 16 + k) + 12345) % 2147483648) + 12345) % 2147483648) div 1073741824))"
+    "transform(sequence(0, 15), k -> aggregate(sequence(0, 63), " +
+      s"CAST(0 AS BIGINT), (acc, j) -> acc + codes[j] * $sign))"
+  }
 
-  /** Recall@5 of the int8-quantized search vs exact ground truth — the
-    * number that justifies (or forbids) shipping the 4x compression.
-    * With a 4xK rerank budget the quantization error has to displace a
-    * true neighbor out of the top-40 candidates to cost recall at
-    * all. */
-  val annRecallQuantized: Q = Q(
-    "ann_recall_quantized",
-    (s, dir) => {
-      val exact = annBruteforce.run(s, dir).filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"))
-      val approx = annQuantized.run(s, dir).filter(col("rank") <= 5)
-        .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-        .withColumn("recall_pct", expr("hits * 100 div k"))
-        .orderBy("probe_id")
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), bf_p AS (
-            |  SELECT vec_id AS probe_id, v AS pv FROM e WHERE $ProbeFilter
-            |), bf_scored AS (
-            |  SELECT probe_id, e.vec_id AS n_id, ${duckCosine("pv", "e.v")} AS cos
-            |  FROM e JOIN bf_p ON e.vec_id <> bf_p.probe_id
-            |), bf_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM bf_scored
-            |), exact AS (
-            |  SELECT probe_id, n_id FROM bf_ranked WHERE rank <= 5
-            |), n AS (
-            |  SELECT vec_id, v, ${duckDot("v", "v")} AS n2 FROM e
-            |), q AS (
-            |  SELECT vec_id, v, n2, maxabs,
-            |    list_transform(v, x -> CAST(CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT) AS DOUBLE)) AS qd
-            |  FROM (
-            |    SELECT vec_id, v, n2,
-            |      list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
-            |        list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
-            |    FROM n)
-            |), p AS (
-            |  SELECT vec_id AS probe_id, v AS pv, n2 AS pn2, maxabs AS pmax,
-            |    qd AS pqd
-            |  FROM q WHERE $ProbeFilter
-            |), scored_q AS (
-            |  SELECT probe_id, q.vec_id AS n_id, pv, pn2, v, n2,
-            |    ${duckDot("pqd", "qd")} * pmax * maxabs / (16129.0 * sqrt(pn2 * n2)) AS score_q
-            |  FROM q JOIN p ON q.vec_id <> p.probe_id
-            |), cand AS (
-            |  SELECT * FROM (
-            |    SELECT probe_id, n_id, pv, pn2, v, n2,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY score_q DESC, n_id) AS rank_q
-            |    FROM scored_q
-            |  ) WHERE rank_q <= $QCand
-            |), reranked AS (
-            |  SELECT probe_id, n_id,
-            |    ${duckDot("pv", "v")} / sqrt(pn2 * n2) AS cos
-            |  FROM cand
-            |), approx AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |    FROM reranked
-            |  ) WHERE rank <= 5
-            |)
-            |SELECT x.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM exact x LEFT JOIN approx a
-            |  ON x.probe_id = a.probe_id AND x.n_id = a.n_id
-            |GROUP BY 1 ORDER BY x.probe_id""".stripMargin))
+  val vecProject: Q = {
+    // DuckDB mirror of JlProject16's two-round high-bit LCG sign
+    // (// = int div)
+    val sign =
+      "(1 - 2 * (((CAST(1103515245 AS BIGINT) * ((CAST(1103515245 AS BIGINT) * (j * 16 + k) + 12345) % 2147483648) + 12345) % 2147483648) // 1073741824))"
+    Q(
+      "vec_project",
+      // CAST(array<float> AS array<double>) instead of the HOF
+      // transform: elementwise-identical, but Cast supports codegen
+      // while a lambda transform is CodegenFallback — with it the
+      // whole quantize→project Project fuses into the scan's
+      // WholeStageCodegen span (pinned in PlanAuditSpec)
+      (s, dir) => Tables(s, dir).embeddings
+        .withColumn("y", expr(
+          "graft_jl_project(graft_int8_codes(CAST(embedding AS ARRAY<DOUBLE>)).codes)"))
+        .select(col("vec_id"),
+          expr(sigDigest("transform(y, v -> v + 8192)")).as("proj_digest"),
+          expr("aggregate(y, CAST(0 AS BIGINT), (acc, v) -> acc + abs(v))")
+            .as("proj_l1"),
+          expr("y[0]").as("proj_first"))
+        .orderBy("vec_id"),
+      Some(s"""WITH e AS (
+              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+              |), m AS (
+              |  SELECT vec_id, v,
+              |    list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
+              |      list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
+              |  FROM e
+              |), q AS (
+              |  SELECT vec_id,
+              |    list_transform(v, x -> CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)) AS codes
+              |  FROM m
+              |), p AS (
+              |  SELECT vec_id,
+              |    list_transform(range(0, 16), k ->
+              |      list_reduce(list_prepend(CAST(0 AS BIGINT),
+              |        list_transform(range(0, 64), j -> codes[j + 1] * $sign)),
+              |        (acc, t) -> acc + t)) AS y
+              |  FROM q)
+              |SELECT vec_id,
+              |  ${duckSigDigest("list_transform(y, v -> v + 8192)")} AS proj_digest,
+              |  list_reduce(list_prepend(CAST(0 AS BIGINT),
+              |    list_transform(y, v -> abs(v))), (acc, v) -> acc + v) AS proj_l1,
+              |  y[1] AS proj_first
+              |FROM p ORDER BY vec_id""".stripMargin))
+  }
+
+  // ---- k-means, semantic dedup -----------------------------------------
 
   /** Deterministic k-means over the int8-quantized vectors — the
     * clustering stage of cluster-balanced curation (group the corpus
@@ -751,11 +1195,11 @@ object Ann {
     * pair stream, so every one of the N×k rows dragged the ~550-byte
     * array through the hash-agg input — measured 57× slower per pair
     * at N=200k/k=1563 (68.5 s for the fat 2-pass training pipeline vs
-    * 0.6 s for a slim one-pass reassign, AssignTiming, quiet host).
+    * 0.6 s for a slim one-pass reassign, ASSIGN_TIMING.json).
     * At the 100 TB N×k this delta IS the operator. Results are
     * bit-identical: qd is constant per vec_id and max(c_cos) is the
     * winning cosine either way. */
-  private[graft] def kmeansAssign(codes: DataFrame, cents: DataFrame): DataFrame =
+  private def kmeansAssign(codes: DataFrame, cents: DataFrame): DataFrame =
     codes.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("c_id"),
         expr(s"${dot("qd", "cd")} / sqrt(qn2 * cn2)").as("c_cos"))
@@ -769,7 +1213,7 @@ object Ann {
     * dim) INTEGER sums (order-independent), floor-of-double-div means
     * (not BIGINT div, whose negative truncation differs between
     * engines), reassembled into array<double> centroids for graft_dot. */
-  private[graft] def kmeansUpdate(a: DataFrame): DataFrame =
+  private def kmeansUpdate(a: DataFrame): DataFrame =
     a.select(col("cid"), posexplode(col("qd")))
       .groupBy("cid", "pos")
       .agg(sum(col("col").cast("long")).as("s"), count(lit(1)).as("n"))
@@ -801,7 +1245,7 @@ object Ann {
     * assign is N×k = O(N²/128) pairs, the registry's last quadratic
     * (what dedup_semantic ran through round 11) — it survives only as
     * (a) the occupancy branch inside [[ivfK]]'s min and (b) the
-    * flat-linear arm of the AssignTiming A/B. Returns Long: the old
+    * flat-linear arm of the ASSIGN_TIMING.json A/B. Returns Long: the old
     * `.toInt` wrapped negative past N ≈ 2.7e11 (128·2^31), inside the
     * 100 TB regime (~4e11 vectors); [[ivfK]] already computed its min
     * in Long for exactly that reason. */
@@ -997,7 +1441,7 @@ object Ann {
     * machinery ann_ivfadc verifies), then [[kmeans2Local]] inside each
     * cell. Total assign work O(N^1.5); final clusters keyed
     * (cid, lcid) at ~128 expected occupancy. */
-  private[graft] def kmeans2Stage(s: SparkSession, dir: String)
+  private def kmeans2Stage(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
     kmeans2Local(kmeans2CoarseAssign(s, dir))
 
@@ -1005,7 +1449,7 @@ object Ann {
     * local stage partitions on (exposed so the convergence spec can
     * drive [[kmeans2LocalIterate]] at R > 1 on the real coarse
     * geometry). */
-  private[graft] def kmeans2CoarseAssign(s: SparkSession, dir: String)
+  private def kmeans2CoarseAssign(s: SparkSession, dir: String)
       : DataFrame = {
     val kc = ivfK(Tables(s, dir).embeddingsCount)
     val (codes, _, c1) = kmeansStage(s, dir, kc)
@@ -1018,17 +1462,7 @@ object Ann {
     * dedup_semantic / dedup_blocking_recall (corpus-scaled k via a
     * scalar-subquery kExpr). */
   private def kmeansOracleCtes(kExpr: String = "16"): String =
-    s"""e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), q AS (
-            |  SELECT vec_id,
-            |    list_transform(v, x -> CAST(CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT) AS DOUBLE)) AS qd
-            |  FROM (
-            |    SELECT vec_id, v,
-            |      list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
-            |        list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
-            |    FROM e)
-            |), qn AS (
+    s"""$eCte, $duckQuantizeCte, qn AS (
             |  SELECT vec_id, qd, greatest(${duckDot("qd", "qd")}, 1e-12) AS qn2 FROM q
             |), c0 AS (
             |  SELECT vec_id AS c_id, qd AS cd, qn2 AS cn2 FROM qn WHERE vec_id < ($kExpr)
@@ -1242,9 +1676,6 @@ object Ann {
   val dedupBlockingRecall: Q = Q(
     "dedup_blocking_recall",
     (s, dir) => {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val e = emb(s, dir).select(col("vec_id"), col("v"), col("n2"))
       val sMod = math.max(1L,
         (Tables(s, dir).embeddingsCount + AnchorCap - 1L) / AnchorCap)
@@ -1252,14 +1683,12 @@ object Ann {
       // hyperplane strategy's bucket machinery, the kmeans strategy's
       // two-level Lloyd training — are INDEPENDENT until the final
       // union, but each runs several eager driver actions
-      // (localCheckpoints, the truth count). Submitted sequentially
-      // they serialize; overlapped from driver threads (guide §2.6)
+      // (localCheckpoints, the truth count). Overlapped (graft.Par),
       // the truth scan and the hyperplane window back-fill the cores
       // the kmeans chain's small serial training jobs leave idle.
       // Results are unchanged: same frames, same final plan modulo
-      // which leaves are checkpoints; a failure on any thread
-      // propagates through Await.result and fails the row loudly.
-      val truthF = Future {
+      // which leaves are checkpoints.
+      val ((truth, nTrue), hp, km) = Par.triple(s)({
         val anchors = e.filter(col("vec_id") % sMod === 0L)
           .select(col("vec_id").as("a_id"), col("v").as("av"),
             col("n2").as("an2"))
@@ -1270,14 +1699,9 @@ object Ann {
           .select(col("a_id").as("va"), col("vec_id").as("vb"))
           .localCheckpoint()
         (t, t.count())
-      }
-      val hpF = Future {
-        Dedup.embeddingFoundPairs(s, dir, Some(sMod)).select("va", "vb")
-      }
-      val kmF = Future {
-        dedupSemantic.run(s, dir).select("va", "vb")
-      }
-      val (truth, nTrue) = Await.result(truthF, Duration.Inf)
+      },
+        Dedup.embeddingFoundPairs(s, dir, Some(sMod)).select("va", "vb"),
+        dedupSemantic.run(s, dir).select("va", "vb"))
       // guard the ratio at tiny SFs where the truth set can be empty
       // (0/0 would be null here but an error in the oracle dialect)
       val denom = math.max(nTrue, 1L)
@@ -1306,8 +1730,6 @@ object Ann {
             expr(s"n_found * 100 div $denom").as("recall_pct"))
       }
 
-      val hp = Await.result(hpF, Duration.Inf)
-      val km = Await.result(kmF, Duration.Inf)
       recallOf(hp, "hyperplane").unionByName(recallOf(km, "kmeans"))
         .orderBy("strategy")
     },
@@ -1366,6 +1788,8 @@ object Ann {
             |  (SELECT count(*) FROM truth JOIN km USING (va, vb)) * 100 // denom
             |FROM t
             |ORDER BY strategy""".stripMargin))
+
+  // ---- incremental index ------------------------------------------------
 
   /** One staged embeddings directory per (session, source dir) — TWO
     * parquet files so `maxFilesPerTrigger=1` forces two genuine
@@ -1442,18 +1866,14 @@ object Ann {
       // directory column as int, hence the Number bridge)
       val probeCells = probes.select("cell").distinct()
         .collect().map(_.get(0).asInstanceOf[Number].longValue).sorted
-      idx.filter(col("cell").isin(probeCells.map(Long.box): _*))
+      val cands = idx.filter(col("cell").isin(probeCells.map(Long.box): _*))
         .join(broadcast(probes), "cell")
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("n_id"),
           cosWith("v", "n2", "pv", "pn2").as("cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
+      topK(cands, specOf("ann_ivf").k)
     },
-    Some(ivfTopkOracleSql))
+    Some(oracleSql(specOf("ann_ivf"))))
 
   /** Small-file compaction for the cell-partitioned incremental index:
     * append-only ingest writes one file per (micro-batch x cell), so a
@@ -1511,2039 +1931,6 @@ object Ann {
     (fragmented.length, cellDirs.length)
   }
 
-  // ---- product quantization (PQ/ADC) -------------------------------
-
-  /** PQ geometry: M subspaces of SubDim dims over the 64-dim int8 code
-    * vectors, K=16 centroids per subspace (seeded from vec_id < 16 —
-    * codebook TRAINING is cluster_kmeans's already-demonstrated
-    * integer-Lloyd machinery, run per subspace; this row pins the
-    * ENCODE + ADC SEARCH path, the part that touches the whole corpus
-    * at query time). Distances are squared L2 between int8 code
-    * vectors — codes are x * 127/maxabs, i.e. L-inf-normalized
-    * coordinates, so code-space L2 is a consistent scale-free
-    * geometry — and EVERY distance is a sum of integer-valued doubles
-    * (exact far below 2^53): no float rounding exists anywhere in the
-    * operator, output distances are BIGINT. */
-  private[graft] val PqM = 4
-  private[graft] val PqSubDim = 16 // 64 dims / 4 subspaces
-
-  /** (vec_id, m, sv, sn2): a (vec_id, qd) code-vector frame split into
-    * per-subspace code vectors; sn2 = <sv,sv> (exact integer-valued
-    * double). Shared by the natural-order and OPQ-permuted chains. */
-  private def subvectorsOf(codes: DataFrame): DataFrame =
-    codes
-      .select(col("vec_id"), explode(expr(
-        s"transform(sequence(0, ${PqM - 1}), " +
-          s"m -> struct(m AS m, slice(qd, m * $PqSubDim + 1, $PqSubDim) AS sv))"))
-        .as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-      .withColumn("sn2", expr(dot("sv", "sv")))
-
-  /** The corpus split into per-subspace code vectors (natural
-    * coordinate order). */
-  private def pqSubvectors(s: SparkSession, dir: String): DataFrame =
-    subvectorsOf(kmeansCodes(s, dir))
-
-  /** OPQ-lite subvectors: a balanced-variance coordinate PERMUTATION
-    * applied before the subspace split — the parameter-free baseline
-    * of OPQ (Ge et al., CVPR 2013: optimize the space rotation so
-    * subquantizers share the variance; their "OPQ-NP" ablation shows a
-    * permutation balancing per-subspace variance captures much of the
-    * gain without the float SVD, which would not oracle-verify).
-    * Dimensions are ranked by exact-integer corpus variance
-    * (N·Σx² − (Σx)² over the int8 codes, BIGINT arithmetic) and dealt
-    * round-robin across the M subspaces — each subspace receives every
-    * M-th variance rank, so no subquantizer is starved while another
-    * carries all the energy. The 64-row census is index-build
-    * metadata (collected like the probed-cell list; at extreme N a
-    * deployment computes it on a sample — the ranks, not the moments,
-    * are what matters). Identical census + tie-break (varn desc, dim
-    * asc) in the DuckDB oracle. Storage and search cost are IDENTICAL
-    * to ann_ivf_pq — the permutation is free at query time. */
-  /** position → original dim, the permutation [[opqSubvectors]]
-    * applies (private[graft] so the spec can pin bijection +
-    * round-robin dealing against its own variance recompute). */
-  private[graft] def opqPermutation(s: SparkSession, dir: String): Seq[Int] = {
-    val stats = kmeansCodes(s, dir).select(explode(expr(
-        "transform(sequence(0, 63), d -> struct(d AS d, CAST(element_at(qd, d + 1) AS BIGINT) AS x))"))
-        .as("t"))
-      .select(col("t.d").as("d"), col("t.x").as("x"))
-      .groupBy("d")
-      .agg((count(lit(1)) * sum(expr("x * x")) - sum(col("x")) * sum(col("x")))
-        .as("varn"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val perm = new Array[Int](64)
-    stats.sortBy { case (d, v) => (-v, d) }.map(_._1).zipWithIndex
-      .foreach { case (d, r) => perm((r % PqM) * PqSubDim + r / PqM) = d }
-    perm.toSeq
-  }
-
-  private def opqSubvectors(s: SparkSession, dir: String): DataFrame = {
-    val perm = opqPermutation(s, dir)
-    subvectorsOf(kmeansCodes(s, dir).withColumn("qd", expr(
-      s"transform(array(${perm.mkString(", ")}), i -> element_at(qd, i + 1))")))
-  }
-
-  /** 64-row codebook (m, c_id, cd, cn2): subspace slices of the 16
-    * seed vectors. Broadcast everywhere it is used. */
-  private def pqCodebook(sub: DataFrame): DataFrame =
-    sub.filter(col("vec_id") < 16)
-      .select(col("m"), col("vec_id").as("c_id"), col("sv").as("cd"),
-        col("sn2").as("cn2"))
-
-  /** squared L2 via the shared dot fold: |a|^2 + |b|^2 - 2<a,b> —
-    * three exact integers combined exactly. */
-  private def sqDist(an2: String, bn2: String, a: String, b: String) =
-    expr(s"$an2 + $bn2 - 2 * ${dot(a, b)}")
-
-  /** PQ search with asymmetric distance computation — the 100 TB ANN
-    * workhorse (IVF-PQ's scoring half): the corpus is stored as M
-    * small integer codes per vector (here 4 bytes vs 64 floats, a 64x
-    * read shrink), probes stay UNquantized, and scoring a vector is M
-    * lookups into a per-probe distance table + a sum — no raw vector
-    * is ever read at query time.
-    *
-    *  - encode (once, offline): per (vector, subspace) argmin over the
-    *    broadcast 64-row codebook — the partial-aggregated codegen
-    *    argmax (`graft_argmax(c_id, -d)`), one
-    *    exchange on vec_id, exactly ann_ivf's assignment shape. At
-    *    100 TB this is the index build; its output is 4 small ints
-    *    per vector.
-    *  - search: the probe LUT (|probes| x M x K = 320 rows here) is
-    *    built from the probes' own subvectors and broadcast; each
-    *    encoded row joins its M LUT entries map-side, and the ADC
-    *    distance is a partial-aggregated SUM over m — the exchange
-    *    moves one (probe, vec) row per vector, carrying only integer
-    *    partial sums. Top-5 per probe by (distance, id).
-    *
-    * Ties cannot diverge: every distance is an exact integer, ordering
-    * breaks on (adist, n_id) in both engines. */
-  val annPq: Q = Q(
-    "ann_pq",
-    (s, dir) => {
-      val sub = pqSubvectors(s, dir).localCheckpoint()
-      val cb = pqCodebook(sub)
-      val enc = sub.join(broadcast(cb), "m")
-        .select(col("vec_id"), col("m"), col("c_id"),
-          sqDist("sn2", "cn2", "sv", "cd").as("d"))
-        .groupBy("vec_id", "m")
-        .agg(expr("graft_argmax(c_id, -d)").as("code"))
-      val lut = sub.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("m").as("pm"),
-          col("sv").as("psv"), col("sn2").as("psn2"))
-        .join(cb, col("pm") === col("m"))
-        .select(col("probe_id"), col("m"), col("c_id"),
-          sqDist("psn2", "cn2", "psv", "cd").as("d"))
-      enc.join(broadcast(lut),
-          enc("m") === lut("m") && enc("code") === lut("c_id") &&
-            enc("vec_id") =!= lut("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"), col("d"))
-        .groupBy("probe_id", "n_id")
-        .agg(sum(col("d")).cast("long").as("adist"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("adist"), col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"), col("rank"), col("adist"))
-    },
-    Some(pqOracle(
-      s"""SELECT probe_id, n_id, rank, adist FROM adc_ranked WHERE rank <= 5""")))
-
-  /** Recall@5 of PQ/ADC against the EXACT top-5 in the same code-space
-    * L2 geometry (full 64-dim integer distances, no codebook) — so the
-    * number isolates pure codebook-quantization loss, the metric that
-    * sizes M and K in production. Both sides are exact integer
-    * arithmetic; ties break on id in both engines. */
-  val annRecallPq: Q = Q(
-    "ann_recall_pq",
-    (s, dir) => {
-      val codes = kmeansCodes(s, dir).localCheckpoint()
-      val probes = broadcast(codes.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("qd").as("pqd"),
-          col("qn2").as("pqn2")))
-      val exact = codes.join(probes, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"),
-          sqDist("pqn2", "qn2", "pqd", "qd").cast("long").as("ed"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("ed"), col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"))
-      val approx = annPq.run(s, dir)
-        .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-      exact.join(approx,
-          col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-        .withColumn("recall_pct", expr("hits * 100 div k"))
-        .orderBy("probe_id")
-    },
-    Some(pqOracle(
-      s"""exact AS (
-         |  SELECT probe_id, n_id FROM (
-         |    SELECT p.vec_id AS probe_id, q.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY p.vec_id ORDER BY
-         |        ${duckDot("p.qd", "p.qd")} + ${duckDot("q.qd", "q.qd")}
-         |          - 2 * ${duckDot("p.qd", "q.qd")}, q.vec_id) AS rank
-         |    FROM q JOIN q p ON q.vec_id <> p.vec_id
-         |    WHERE p.$ProbeFilter
-         |  ) WHERE rank <= 5
-         |), approx AS (
-         |  SELECT probe_id, n_id FROM adc_ranked WHERE rank <= 5
-         |)
-         |SELECT x.probe_id, count(*) AS k, count(a.n_id) AS hits,
-         |  count(a.n_id) * 100 // count(*) AS recall_pct
-         |FROM exact x LEFT JOIN approx a
-         |  ON x.probe_id = a.probe_id AND x.n_id = a.n_id
-         |GROUP BY 1 ORDER BY x.probe_id""".stripMargin, extraCte = true)))
-
-  /** Squared L2 distance via precomputed squared norms — the ADC/encode
-    * distance every PQ oracle interpolates. */
-  private def duckSqDist(a: String, b: String, an2: String, bn2: String) =
-    s"$an2 + $bn2 - 2 * ${duckDot(a, b)}"
-
-  /** The int8 quantization (`q`) + subspace split (`sub`) CTEs — the
-    * single home of the floor(x*127/maxabs+0.5) formula; expects an
-    * `e` CTE in scope. Shared by [[pqCoreCtes]] and
-    * [[ivfPqResOracleCtes]] so the engines' quantization can never
-    * silently diverge between the residual and non-residual chains. */
-  // lazy: referenced from other lazy-val initializers whose first use
-  // happens during the PQ rows' val initializers above
-  /** The int8-quantization CTE alone (`q`: vec_id, qd) — factored so
-    * chains can split either the raw or the OPQ-permuted codes. */
-  private lazy val duckQuantizeCte: String =
-    s"""q AS (
-       |  SELECT vec_id,
-       |    list_transform(v, x -> CAST(CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT) AS DOUBLE)) AS qd
-       |  FROM (
-       |    SELECT vec_id, v,
-       |      list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
-       |        list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
-       |    FROM e)
-       |)""".stripMargin
-
-  private lazy val pqSubCtes: String = s"$duckQuantizeCte, $pqSplitCte"
-
-  /** The subspace-split CTE over any (vec_id, qd) source — for chains
-    * whose `q` already exists under another name's formula (the
-    * trained-cell chain reuses kmeansOracleCtes' identical `q`; the
-    * OPQ∘residual chain splits the permuted `qp`). */
-  private def pqSplitCteFrom(src: String): String =
-    s"""sub AS (
-       |  SELECT vec_id, t.m,
-       |    list_slice(qd, t.m * $PqSubDim + 1, t.m * $PqSubDim + $PqSubDim) AS sv
-       |  FROM $src, unnest([i FOR i IN range(0, $PqM)]) AS t(m)
-       |)""".stripMargin
-
-  private lazy val pqSplitCte: String = pqSplitCteFrom("q")
-
-  /** The OPQ-lite permutation census CTEs (expects `q`; yields `qp` —
-    * the permuted (vec_id, qd)): exact-integer variance
-    * N·Σx² − (Σx)² per dim, ranked varn DESC / d ASC, dealt
-    * round-robin across the M subspaces. Shared by the plain OPQ
-    * chain and the OPQ∘residual composition. */
-  private lazy val opqCensusCtes: String =
-    s"""opqstats AS (
-       |  SELECT t.d AS d,
-       |    count(*) * sum(CAST(qd[t.d + 1] AS BIGINT) * CAST(qd[t.d + 1] AS BIGINT))
-       |      - sum(CAST(qd[t.d + 1] AS BIGINT)) * sum(CAST(qd[t.d + 1] AS BIGINT)) AS varn
-       |  FROM q, unnest([i FOR i IN range(0, 64)]) AS t(d)
-       |  GROUP BY 1
-       |), permt AS (
-       |  SELECT ((r % $PqM) * $PqSubDim + r // $PqM) AS pos, d FROM (
-       |    SELECT d, row_number() OVER (ORDER BY varn DESC, d) - 1 AS r
-       |    FROM opqstats)
-       |), qp AS (
-       |  SELECT vec_id, list(x ORDER BY pos) AS qd FROM (
-       |    SELECT q.vec_id, p.pos, q.qd[p.d + 1] AS x FROM q, permt p
-       |  ) GROUP BY 1
-       |)""".stripMargin
-
-  /** The PQ index/LUT oracle CTE chain (int8 codes -> subspace split
-    * -> seed codebook -> argmin encode -> probe LUT), shared verbatim
-    * by the three PQ rows; expects an `e` CTE in scope. */
-  // lazy: referenced from pqOracle during the PQ rows' val initializers
-  // above, which run before this declaration in object init order
-  private lazy val pqCoreCtes: String = {
-    val d = duckSqDist _
-    s"""$pqSubCtes, sn AS (
-       |  SELECT vec_id, m, sv, ${duckDot("sv", "sv")} AS sn2 FROM sub
-       |), cb AS (
-       |  SELECT m, vec_id AS c_id, sv AS cd, sn2 AS cn2 FROM sn WHERE vec_id < 16
-       |), enc AS (
-       |  SELECT vec_id, m, c_id AS code FROM (
-       |    SELECT sn.vec_id, sn.m, cb.c_id,
-       |      row_number() OVER (PARTITION BY sn.vec_id, sn.m
-       |        ORDER BY ${d("sv", "cd", "sn2", "cn2")}, cb.c_id) AS rn
-       |    FROM sn JOIN cb ON sn.m = cb.m
-       |  ) WHERE rn = 1
-       |), lut AS (
-       |  SELECT p.vec_id AS probe_id, cb.m, cb.c_id,
-       |    ${d("p.sv", "cd", "p.sn2", "cn2")} AS dist
-       |  FROM sn p JOIN cb ON p.m = cb.m WHERE p.$ProbeFilter
-       |)""".stripMargin
-  }
-
-  /** Oracle for the flat PQ rows: the core chain + whole-corpus ADC +
-    * per-probe ranking. `extraCte` appends the tail as further CTEs
-    * (the recall harness) instead of a final SELECT. */
-  private def pqOracle(tail: String, extraCte: Boolean = false): String = {
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), $pqCoreCtes, adc AS (
-       |  SELECT probe_id, enc.vec_id AS n_id,
-       |    CAST(sum(dist) AS BIGINT) AS adist
-       |  FROM enc JOIN lut ON enc.m = lut.m AND enc.code = lut.c_id
-       |    AND enc.vec_id <> lut.probe_id
-       |  GROUP BY 1, 2
-       |), adc_ranked AS (
-       |  SELECT probe_id, n_id, adist,
-       |    row_number() OVER (PARTITION BY probe_id
-       |      ORDER BY adist, n_id) AS rank
-       |  FROM adc
-       |)${if (extraCte) "," else ""}
-       |$tail""".stripMargin
-  }
-
-  /** IVF-PQ — the two halves composed into the production ANN
-    * architecture (what FAISS/SCaNN-class systems deploy at billion
-    * scale): the OFFLINE index stores, per vector, one coarse cell id
-    * (ann_ivf's broadcast-argmax assignment) plus M=4 PQ codes
-    * (ann_pq's broadcast-argmin encode) — a handful of small ints,
-    * never the raw vector. The ONLINE search (a) partition-prunes to
-    * the probe's nprobe=2 nearest cells, (b) scores ONLY those cells'
-    * candidates by ADC table lookups (integer sums — no vector math,
-    * no raw-vector reads), (c) exact-reranks the [[AdcShortlist]]-deep
-    * ADC shortlist with true cosines. At 100 TB each query touches
-    * 2/k of the index rows, reads 4 ints per candidate, and fetches
-    * raw vectors for only AdcShortlist finalists — the IO shape that makes
-    * vector search affordable. Every stage is the already-verified
-    * arithmetic of its parent row, so the composition hash-matches the
-    * composed oracle. */
-  /** The composed IVF-PQ search given the PQ half's subvector frame —
-    * shared by ann_ivf_pq (natural order) and ann_ivfpq_opq (permuted)
-    * so the two variants can never drift anywhere except the input
-    * coordinate order. */
-  private def ivfPqSearchWith(s: SparkSession, dir: String,
-                              sub0: DataFrame): DataFrame = {
-      val e = emb(s, dir)
-      // offline: coarse cells + PQ codes
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val cellScores = e.crossJoin(cents)
-        .select(col("vec_id"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-      val assigned = cellScores.groupBy("vec_id")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      val sub = sub0.localCheckpoint()
-      val cb = pqCodebook(sub)
-      val enc = sub.join(broadcast(cb), "m")
-        .select(col("vec_id"), col("m"), col("c_id"),
-          sqDist("sn2", "cn2", "sv", "cd").as("d"))
-        .groupBy("vec_id", "m")
-        .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
-      val indexed = enc.join(assigned, "vec_id")
-      // online: probed cells -> ADC shortlist -> exact rerank
-      val probeCells = cellScores.filter(expr(ProbeFilter))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
-        .filter(col("crn") <= 2)
-        .select(col("vec_id").as("probe_id"), col("c_id").as("cell"))
-      val lut = sub.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("m").as("pm"),
-          col("sv").as("psv"), col("sn2").as("psn2"))
-        .join(cb, col("pm") === col("m"))
-        .select(col("probe_id"), col("m"), col("c_id"),
-          sqDist("psn2", "cn2", "psv", "cd").as("d"))
-      val shortlist = indexed.join(broadcast(probeCells), "cell")
-        .filter(col("vec_id") =!= col("probe_id"))
-        .join(broadcast(lut), Seq("probe_id", "m", "c_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"), col("d"))
-        .groupBy("probe_id", "n_id")
-        .agg(sum(col("d")).cast("long").as("adist"))
-        .withColumn("rq", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("adist"), col("n_id"))))
-        .filter(col("rq") <= AdcShortlist)
-      shortlist
-        .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
-          col("probe_id") === col("vec_id")).drop("vec_id")
-        .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
-          col("n_id") === col("vec_id"))
-        .select(col("probe_id"), col("n_id"),
-          cosWith("pv", "pn2", "nv", "nn2").as("cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-  }
-
-  val annIvfPq: Q = Q(
-    "ann_ivf_pq",
-    (s, dir) => ivfPqSearchWith(s, dir, pqSubvectors(s, dir)),
-    Some(s"""WITH $ivfPqOracleCtes
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id
-            |      ORDER BY cos DESC, n_id) AS rank
-            |  FROM reranked
-            |) WHERE rank <= 5""".stripMargin))
-
-  /** The coarse-cell oracle chain (`e` load -> seed centroids `c` ->
-    * all-pairs cell cosines `cs` -> corpus assignment `assigned` ->
-    * nprobe=2 probed cells `pc`) — shared verbatim by the residual and
-    * non-residual IVF-PQ chains so a future nprobe/seed edit cannot
-    * diverge them. */
-  private lazy val coarseCellCtes: String =
-    s"""e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-       |), c AS (
-       |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-       |), cs AS (
-       |  SELECT e.vec_id, c_id, ${duckCosine("e.v", "cv")} AS c_cos
-       |  FROM e CROSS JOIN c
-       |), assigned AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT vec_id, c_id,
-       |      row_number() OVER (PARTITION BY vec_id
-       |        ORDER BY c_cos DESC, c_id) AS rn
-       |    FROM cs
-       |  ) WHERE rn = 1
-       |), pc AS (
-       |  SELECT vec_id AS probe_id, c_id AS cell FROM (
-       |    SELECT vec_id, c_id,
-       |      row_number() OVER (PARTITION BY vec_id
-       |        ORDER BY c_cos DESC, c_id) AS crn
-       |    FROM cs WHERE $ProbeFilter
-       |  ) WHERE crn <= 2
-       |)""".stripMargin
-
-  /** The IVF-PQ oracle chain through `reranked` (coarse cells + probed
-    * cells + PQ core + ADC shortlist + exact rerank), shared with the
-    * recall harness. Lazy: referenced from val initializers above. */
-  private lazy val ivfPqOracleCtes: String =
-    s"""$coarseCellCtes, $pqCoreCtes, adcp AS (
-       |  SELECT pc.probe_id, a.vec_id AS n_id,
-       |    CAST(sum(lut.dist) AS BIGINT) AS adist
-       |  FROM assigned a
-       |  JOIN pc ON a.cell = pc.cell AND a.vec_id <> pc.probe_id
-       |  JOIN enc ON enc.vec_id = a.vec_id
-       |  JOIN lut ON lut.probe_id = pc.probe_id AND lut.m = enc.m
-       |    AND lut.c_id = enc.code
-       |  GROUP BY 1, 2
-       |), short AS (
-       |  SELECT probe_id, n_id FROM (
-       |    SELECT probe_id, n_id,
-       |      row_number() OVER (PARTITION BY probe_id
-       |        ORDER BY adist, n_id) AS rq
-       |    FROM adcp
-       |  ) WHERE rq <= $AdcShortlist
-       |), reranked AS (
-       |  SELECT s.probe_id, s.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-       |  FROM short s
-       |  JOIN e ep ON s.probe_id = ep.vec_id
-       |  JOIN e en ON s.n_id = en.vec_id
-       |)""".stripMargin
-
-  /** The exact-vs-approx recall comparison shared by every
-    * materialized-approx recall row (the trained-path ladder). The
-    * exact brute-force truth is materialized (localCheckpoint) on a
-    * SEPARATE driver thread, kicked off BEFORE the approx side's eager
-    * training actions run, so the two independent chains OVERLAP
-    * (guide §2.6: actions are only sequential because the driver calls
-    * them sequentially): the brute-force scan back-fills cores the
-    * approx chain's small serial training jobs leave idle, instead of
-    * running serially inside the final comparison job after the whole
-    * training chain has finished. Rows are identical by construction —
-    * both sides are the same deterministic frames; materializing the
-    * truth changes the comparison plan's LEAF (checkpoint scan instead
-    * of inline brute-force lineage), never its rows — and every
-    * consumer row stays oracle-hash-verified. A failure on the truth
-    * thread propagates through Await.result and fails the row loudly. */
-  private def recallVsExact(s: SparkSession, dir: String)
-      (approxSide: => DataFrame): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val exactF = Future {
-      annBruteforce.run(s, dir).filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id")).localCheckpoint()
-    }(scala.concurrent.ExecutionContext.global)
-    val approx = approxSide
-      .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-      .localCheckpoint()
-    // both sides are now stat-less checkpoint leaves, so the planner
-    // would fall back to a sort-merge join (2 exchanges + sorts) for
-    // two |probes|x5-row frames; the approx side is bounded search
-    // output (5 rows per probe of a fixed eval probe set), hint it
-    // broadcast to keep the comparison map-side at any corpus size
-    Await.result(exactF, Duration.Inf)
-      .join(broadcast(approx),
-        col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-      .groupBy("probe_id")
-      .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-      .withColumn("recall_pct", expr("hits * 100 div k"))
-      .orderBy("probe_id")
-  }
-
-  /** Recall@5 of the composed IVF-PQ vs exact brute force — the
-    * end-to-end number a deployment actually watches (coarse-cell
-    * misses + codebook loss + shortlist truncation, measured together
-    * against ground truth). Same harness construction as every other
-    * recall row, with one eval-harness property made explicit: the
-    * approx side is MATERIALIZED (localCheckpoint — |probes| x 5 rows)
-    * before the comparison, exactly as a deployment scores stored
-    * search output against ground truth. The comparison plan therefore
-    * contains one broadcast join + one aggregation over two
-    * materialized sides — it never replans the composed IVF-PQ
-    * pipeline (whose plan shape is audited on its own row). */
-  val annRecallIvfPq: Q = Q(
-    "ann_recall_ivfpq",
-    (s, dir) => recallVsExact(s, dir)(annIvfPq.run(s, dir)),
-    Some(s"""WITH $ivfPqOracleCtes, approx AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY cos DESC, n_id) AS rank
-            |    FROM reranked
-            |  ) WHERE rank <= 5
-            |), bf AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT p.vec_id AS probe_id, x.vec_id AS n_id,
-            |      row_number() OVER (PARTITION BY p.vec_id
-            |        ORDER BY ${duckCosine("p.v", "x.v")} DESC, x.vec_id) AS rank
-            |    FROM e x JOIN e p ON x.vec_id <> p.vec_id
-            |    WHERE p.$ProbeFilter
-            |  ) WHERE rank <= 5
-            |)
-            |SELECT b.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM bf b LEFT JOIN approx a
-            |  ON b.probe_id = a.probe_id AND b.n_id = a.n_id
-            |GROUP BY 1 ORDER BY b.probe_id""".stripMargin))
-
-  /** The OPQ-permuted IVF-PQ oracle chain through `rerankedp`: the
-    * same coarse-cell CTEs, then the permutation census (exact-integer
-    * variance N·Σx² − (Σx)², ranked varn DESC, d ASC, dealt
-    * round-robin: rank r → position (r mod M)·SubDim + r div M), the
-    * permuted split, and the p-suffixed PQ/ADC/rerank chain — textually
-    * parallel to [[ivfPqOracleCtes]] with `q` → `qp`. (`$pqSubCtes`
-    * also declares the natural-order `sub`; it is unreferenced here
-    * and DuckDB never evaluates unreferenced CTEs.) */
-  private lazy val ivfPqOpqOracleCtes: String = {
-    val d = duckSqDist _
-    s"""$coarseCellCtes, $pqSubCtes, $opqCensusCtes, subp AS (
-       |  SELECT vec_id, t.m,
-       |    list_slice(qd, t.m * $PqSubDim + 1, t.m * $PqSubDim + $PqSubDim) AS sv
-       |  FROM qp, unnest([i FOR i IN range(0, $PqM)]) AS t(m)
-       |), snp AS (
-       |  SELECT vec_id, m, sv, ${duckDot("sv", "sv")} AS sn2 FROM subp
-       |), cbp AS (
-       |  SELECT m, vec_id AS c_id, sv AS cd, sn2 AS cn2 FROM snp WHERE vec_id < 16
-       |), encp AS (
-       |  SELECT vec_id, m, c_id AS code FROM (
-       |    SELECT snp.vec_id, snp.m, cbp.c_id,
-       |      row_number() OVER (PARTITION BY snp.vec_id, snp.m
-       |        ORDER BY ${d("sv", "cd", "sn2", "cn2")}, cbp.c_id) AS rn
-       |    FROM snp JOIN cbp ON snp.m = cbp.m
-       |  ) WHERE rn = 1
-       |), lutp AS (
-       |  SELECT p.vec_id AS probe_id, cbp.m, cbp.c_id,
-       |    ${d("p.sv", "cd", "p.sn2", "cn2")} AS dist
-       |  FROM snp p JOIN cbp ON p.m = cbp.m WHERE p.$ProbeFilter
-       |), adcpp AS (
-       |  SELECT pc.probe_id, a.vec_id AS n_id,
-       |    CAST(sum(lutp.dist) AS BIGINT) AS adist
-       |  FROM assigned a
-       |  JOIN pc ON a.cell = pc.cell AND a.vec_id <> pc.probe_id
-       |  JOIN encp ON encp.vec_id = a.vec_id
-       |  JOIN lutp ON lutp.probe_id = pc.probe_id AND lutp.m = encp.m
-       |    AND lutp.c_id = encp.code
-       |  GROUP BY 1, 2
-       |), shortp AS (
-       |  SELECT probe_id, n_id FROM (
-       |    SELECT probe_id, n_id,
-       |      row_number() OVER (PARTITION BY probe_id
-       |        ORDER BY adist, n_id) AS rq
-       |    FROM adcpp
-       |  ) WHERE rq <= $AdcShortlist
-       |), rerankedp AS (
-       |  SELECT s.probe_id, s.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-       |  FROM shortp s
-       |  JOIN e ep ON s.probe_id = ep.vec_id
-       |  JOIN e en ON s.n_id = en.vec_id
-       |)""".stripMargin
-  }
-
-  /** IVF-PQ with the OPQ-lite permutation — identical index bytes,
-    * identical search cost, the coordinate order the codebook
-    * quantizes just balanced across subquantizers (see
-    * [[opqSubvectors]]). Every stage downstream of the permuted split
-    * is [[ivfPqSearchWith]] verbatim. */
-  val annIvfPqOpq: Q = Q(
-    "ann_ivfpq_opq",
-    (s, dir) => ivfPqSearchWith(s, dir, opqSubvectors(s, dir)),
-    Some(s"""WITH $ivfPqOpqOracleCtes
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id
-            |      ORDER BY cos DESC, n_id) AS rank
-            |  FROM rerankedp
-            |) WHERE rank <= 5""".stripMargin))
-
-  /** Recall@5 of the OPQ-permuted IVF-PQ vs exact brute force — the
-    * ladder point that prices the permutation: same harness as
-    * ann_recall_ivfpq (approx side materialized before comparison). */
-  val annRecallIvfPqOpq: Q = Q(
-    "ann_recall_ivfpq_opq",
-    (s, dir) => recallVsExact(s, dir)(annIvfPqOpq.run(s, dir)),
-    Some(s"""WITH $ivfPqOpqOracleCtes, approx AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY cos DESC, n_id) AS rank
-            |    FROM rerankedp
-            |  ) WHERE rank <= 5
-            |), bf AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT p.vec_id AS probe_id, x.vec_id AS n_id,
-            |      row_number() OVER (PARTITION BY p.vec_id
-            |        ORDER BY ${duckCosine("p.v", "x.v")} DESC, x.vec_id) AS rank
-            |    FROM e x JOIN e p ON x.vec_id <> p.vec_id
-            |    WHERE p.$ProbeFilter
-            |  ) WHERE rank <= 5
-            |)
-            |SELECT b.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM bf b LEFT JOIN approx a
-            |  ON b.probe_id = a.probe_id AND b.n_id = a.n_id
-            |GROUP BY 1 ORDER BY b.probe_id""".stripMargin))
-
-  /** Lloyd rounds for the residual codebook (mirrored verbatim in the
-    * oracle's generated CTE rounds — [[resCbTrainCtes]]). */
-  private val ResTrainRounds = 2
-
-  /** TRAIN the shared residual codebook: seed with the 16 seed
-    * vectors' own residuals, then run [[ResTrainRounds]] deterministic
-    * Lloyd rounds over the FULL residual distribution (argmin-sqdist
-    * assignment, per-(subspace, codeword, dim) INTEGER sums,
-    * floor-of-double-div means — kmeansUpdate's exact arithmetic; a
-    * codeword that attracts no members keeps its previous value via
-    * left-join-coalesce, so the round is total and deterministic in
-    * both engines). Training is what FAISS does for IVFADC codebooks,
-    * and round 9's committed measurement (RESIDUAL_GAIN.json) is why:
-    * the UNtrained seed codebook underfits as the corpus grows — the
-    * 16 seed residuals stop spanning the residual distribution — and
-    * recall@5 fell 72→52 at 10× while the trained path tracks the
-    * distribution at any size. Each round reads the checkpointed
-    * residual frame once (broadcast codebook, partial-agg argmin — one
-    * exchange — then k×M×dim-group integer sums: ann_pq's encode shape,
-    * corpus-size-independent update state). Returns the 64-row
-    * (m, c_id, cd, cn2) frame, localCheckpoint-ed so every consumer —
-    * encode, LUT, and the plan audit — sees a tiny leaf, not the
-    * training lineage. */
-  private def trainResCodebook(res: DataFrame): DataFrame = {
-    var cb = res.filter(col("vec_id") < 16)
-      .select(col("m"), col("vec_id").as("c_id"), col("rv").as("cd"),
-        col("rn2").as("cn2"))
-      .localCheckpoint()
-    (1 to ResTrainRounds).foreach { _ =>
-      // slim pair stream into the codegen HashAggregate argmin; rv is
-      // re-attached by a (vec_id, m) join against the checkpointed
-      // residual frame instead of riding every pair row as first()
-      val assign = res.join(broadcast(cb), "m")
-        .select(col("vec_id"), col("m"), col("c_id"),
-          sqDist("rn2", "cn2", "rv", "cd").as("d"))
-        .groupBy("vec_id", "m")
-        .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
-        .join(res.select(col("vec_id"), col("m"), col("rv")), Seq("vec_id", "m"))
-      val upd = assign.select(col("m"), col("c_id"), posexplode(col("rv")))
-        .groupBy("m", "c_id", "pos")
-        .agg(sum(col("col").cast("long")).as("sm"), count(lit(1)).as("n"))
-        .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("double"))
-        .groupBy("m", "c_id")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), x -> x.cm)")
-          .as("ucd"))
-      cb = cb.join(upd, Seq("m", "c_id"), "left")
-        .select(col("m"), col("c_id"), coalesce(col("ucd"), col("cd")).as("cd"))
-        .withColumn("cn2", expr(dot("cd", "cd")))
-        .localCheckpoint()
-    }
-    cb
-  }
-
-  /** The residual-ADC search half, shared by ann_ivf_pq_res (seed
-    * coarse cells) and ann_ivfadc (trained coarse cells): takes the
-    * coarse half as inputs — `assigned` (vec_id, cell: every vector's
-    * coarse cell) and `probeCells` (probe_id, cell: each probe's
-    * nprobe=2 cells) — and runs the identical offline/online residual
-    * pipeline on top: per-(cell, subspace) integer cell centroids,
-    * residual subvectors, the TRAINED residual codebook
-    * ([[trainResCodebook]]), argmin encode, per-(probe, probed-cell)
-    * ADC table, broadcast prune+lookup join, integer partial-agg
-    * shortlist, exact rerank. Mirrored by the oracle's
-    * [[residualTailCtes]] so the two callers cannot diverge. */
-  private def residualAdcSearch(s: SparkSession, dir: String,
-      assigned: DataFrame, probeCells: DataFrame,
-      qcand: Int = AdcShortlist,
-      subvectors: Option[DataFrame] = None): DataFrame = {
-    val e = emb(s, dir)
-    // `subvectors` lets a caller swap the subspace split (the
-    // OPQ∘residual composition hands the PERMUTED split) — everything
-    // downstream is coordinate-order agnostic
-    val sub = subvectors.getOrElse(pqSubvectors(s, dir))
-      .join(assigned, "vec_id").localCheckpoint()
-    // per-(cell, subspace) integer centroid of the member subvectors:
-    // per-dim INTEGER sums (order-independent), floor-of-double-div
-    // means — kmeansUpdate's exact arithmetic, k x M tiny rows
-    val cellCent = sub.select(col("cell"), col("m"), posexplode(col("sv")))
-      .groupBy("cell", "m", "pos")
-      .agg(sum(col("col").cast("long")).as("sm"), count(lit(1)).as("n"))
-      .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("double"))
-      .groupBy("cell", "m")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), x -> x.cm)")
-        .as("ccd"))
-    // residual subvectors: rv = sv − centroid(cell, m), exact ints
-    val res = sub.join(broadcast(cellCent), Seq("cell", "m"))
-      .select(col("vec_id"), col("cell"), col("m"),
-        expr("zip_with(sv, ccd, (a, b) -> a - b)").as("rv"))
-      .withColumn("rn2", expr(dot("rv", "rv")))
-      .localCheckpoint()
-    // residual codebook: seeded by the 16 seed vectors' residuals,
-    // trained by ResTrainRounds Lloyd rounds over the residual
-    // distribution (shared across cells — the standard
-    // shared-codebook-on-residuals shape)
-    val rcb = trainResCodebook(res)
-    // encode: per (vector, subspace) argmin over the broadcast
-    // residual codebook — ann_pq's one-exchange partial-agg shape
-    val enc = res.join(broadcast(rcb), "m")
-      .select(col("vec_id"), col("cell"), col("m"), col("c_id"),
-        sqDist("rn2", "cn2", "rv", "cd").as("d"))
-      .groupBy("vec_id", "cell", "m")
-      .agg(expr("graft_argmax(c_id, -d)").as("code"))
-    // online: the ADC table is built from the probe's residual
-    // AGAINST EACH PROBED CELL's centroid
-    val lut = sub.filter(expr(ProbeFilter))
-      .select(col("vec_id").as("probe_id"), col("m"), col("sv"))
-      .join(broadcast(probeCells), "probe_id")
-      .join(broadcast(cellCent), Seq("cell", "m"))
-      .select(col("probe_id"), col("cell"), col("m"),
-        expr("zip_with(sv, ccd, (a, b) -> a - b)").as("prv"))
-      .withColumn("prn2", expr(dot("prv", "prv")))
-      .join(broadcast(rcb), "m")
-      .select(col("probe_id"), col("cell"), col("m"), col("c_id"),
-        sqDist("prn2", "cn2", "prv", "cd").as("d"))
-    // one broadcast join does BOTH the cell prune and the table
-    // lookup: candidates outside probed cells have no LUT row and
-    // drop map-side; survivors carry only integer partial sums
-    val shortlist = enc.join(broadcast(lut),
-        enc("cell") === lut("cell") && enc("m") === lut("m") &&
-          enc("code") === lut("c_id") && enc("vec_id") =!= lut("probe_id"))
-      .select(col("probe_id"), enc("vec_id").as("n_id"), col("d"))
-      .groupBy("probe_id", "n_id")
-      .agg(sum(col("d")).cast("long").as("adist"))
-      .withColumn("rq", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("adist"), col("n_id"))))
-      .filter(col("rq") <= qcand)
-    shortlist
-      .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
-        col("probe_id") === col("vec_id")).drop("vec_id")
-      .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
-        col("n_id") === col("vec_id"))
-      .select(col("probe_id"), col("n_id"),
-        cosWith("pv", "pn2", "nv", "nn2").as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-      .filter(col("rank") <= 5)
-      .select(col("probe_id"), col("n_id"), col("rank"),
-        round(col("cos"), 6).as("cos_sim"))
-  }
-
-  /** IVF-PQ with RESIDUAL encoding — what production IVF-PQ actually
-    * quantizes (FAISS `IndexIVFPQ` default, the original Jégou PQ
-    * paper's IVFADC): each vector's PQ codes describe (v − centroid of
-    * its coarse cell), not v itself. Residuals concentrate near the
-    * origin, so a fixed-size codebook spends its 16 ids describing a
-    * much smaller ball — typically the single largest recall lever in
-    * the composition at the same storage cost (4 codes/vector,
-    * unchanged). The codebook is TRAINED on the residual distribution
-    * ([[trainResCodebook]] — FAISS trains IVFADC codebooks for the
-    * same reason). Everything stays integer-exact: subvectors are int8
-    * codes, cell centroids and trained codewords are
-    * floor-of-double-div integer means of member codes (kmeansUpdate's
-    * arithmetic — IEEE-deterministic in both engines), so residuals,
-    * the residual codebook, and every ADC distance are exact
-    * integers; ranking ties cannot diverge.
-    *
-    * The online half changes shape in one way worth noting for scale:
-    * the ADC table is per (probe, PROBED CELL) — the probe's residual
-    * depends on which cell it is probing — so the broadcast LUT is
-    * |probes| × nprobe × M × K rows (640 here) instead of
-    * |probes| × M × K (320). Still trivially broadcast at any real
-    * probe batch size, and the candidate-side cost is identical:
-    * 4 ints read per candidate, partial-aggregated integer sums.
-    * Shortlist depth, rerank, and output contract match ann_ivf_pq
-    * exactly, so the two rows' recall harnesses are directly
-    * comparable (ann_recall_ivfpq_res vs ann_recall_ivfpq measures
-    * the residual gain end-to-end). */
-  val annIvfPqRes: Q = Q(
-    "ann_ivf_pq_res",
-    (s, dir) => {
-      val e = emb(s, dir)
-      // offline: coarse cells (ann_ivf's broadcast argmax assignment)
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val cellScores = e.crossJoin(cents)
-        .select(col("vec_id"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-      val assigned = cellScores.groupBy("vec_id")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      // online: nprobe=2 cells per probe
-      val probeCells = cellScores.filter(expr(ProbeFilter))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
-        .filter(col("crn") <= 2)
-        .select(col("vec_id").as("probe_id"), col("c_id").as("cell"))
-      residualAdcSearch(s, dir, assigned, probeCells)
-    },
-    Some(s"""WITH $ivfPqResOracleCtes
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id
-            |      ORDER BY cos DESC, n_id) AS rank
-            |  FROM rerankedr
-            |) WHERE rank <= 5""".stripMargin))
-
-  /** The residual-codebook training CTE rounds, generated to match
-    * [[trainResCodebook]] CTE-for-CTE: `rcb0` = the 16 seed vectors'
-    * residuals; each round t = argmin assignment (`rasn$t`, ties to
-    * the smaller codeword id exactly like the Spark max_by), per-dim
-    * BIGINT sums (`rsum$t`), floor-of-double-div means (`rupd$t`),
-    * and the left-join-coalesce update (`rcb$t` — empty codewords
-    * keep their previous value). The final round is aliased `rcb`,
-    * the name the encode/LUT CTEs consume. Expects `resn` in scope. */
-  private lazy val resCbTrainCtes: String = {
-    val d = duckSqDist _
-    val rounds = (1 to ResTrainRounds).map { t =>
-      val prev = s"rcb${t - 1}"
-      s"""rasn$t AS (
-         |  SELECT m, c_id, rv FROM (
-         |    SELECT r.vec_id, r.m, r.rv, p.c_id,
-         |      row_number() OVER (PARTITION BY r.vec_id, r.m
-         |        ORDER BY ${d("rv", "cd", "rn2", "cn2")}, p.c_id) AS rn
-         |    FROM resn r JOIN $prev p ON r.m = p.m
-         |  ) WHERE rn = 1
-         |), rsum$t AS (
-         |  SELECT m, c_id, t.x['pos'] AS pos,
-         |    CAST(sum(t.x['v']) AS BIGINT) AS sm, count(*) AS n
-         |  FROM rasn$t, unnest([{'pos': i, 'v': CAST(rv[i] AS BIGINT)}
-         |    FOR i IN range(1, len(rv) + 1)]) AS t(x)
-         |  GROUP BY 1, 2, 3
-         |), rupd$t AS (
-         |  SELECT m, c_id,
-         |    list(floor(CAST(sm AS DOUBLE) / n) ORDER BY pos) AS ucd
-         |  FROM rsum$t GROUP BY 1, 2
-         |), rcb$t AS (
-         |  SELECT m, c_id, cd, ${duckDot("cd", "cd")} AS cn2 FROM (
-         |    SELECT p.m, p.c_id, coalesce(u.ucd, p.cd) AS cd
-         |    FROM $prev p LEFT JOIN rupd$t u
-         |      ON p.m = u.m AND p.c_id = u.c_id)
-         |)""".stripMargin
-    }
-    s"""rcb0 AS (
-       |  SELECT m, vec_id AS c_id, rv AS cd, rn2 AS cn2
-       |  FROM resn WHERE vec_id < 16
-       |), ${rounds.mkString(", ")}, rcb AS (
-       |  SELECT * FROM rcb$ResTrainRounds
-       |)""".stripMargin
-  }
-
-  /** The residual IVF-PQ oracle chain through `rerankedr` — the
-    * non-residual chain with four insertions: integer cell centroids
-    * (kmeansUpdate's floor-of-double-div means), residual subvectors
-    * on both the corpus and probe sides, the trained residual
-    * codebook ([[resCbTrainCtes]]), and a per-(probe, probed cell)
-    * ADC table. Lazy: referenced from val initializers above. */
-  private lazy val ivfPqResOracleCtes: String =
-    s"""$coarseCellCtes, $pqSubCtes, $residualTailCtes"""
-
-  /** The residual-ADC tail (cell centroids `ccent` -> residuals `resn`
-    * -> codebook training -> encode `renc` -> probe residual LUT
-    * `plut` -> ADC `adcr` -> shortlist -> exact rerank `rerankedr`) —
-    * the oracle twin of [[residualAdcSearch]], shared by the seed-cell
-    * (ann_ivf_pq_res) and trained-cell (ann_ivfadc) chains. Expects
-    * `e` (raw doubles), `sub` (subspace code vectors), `assigned`
-    * (vec_id, cell) and `pc` (probe_id, cell) in scope. */
-  private lazy val residualTailCtes: String = {
-    val d = duckSqDist _
-    s"""suba AS (
-       |  SELECT sub.vec_id, sub.m, sub.sv, a.cell
-       |  FROM sub JOIN assigned a ON sub.vec_id = a.vec_id
-       |), csums AS (
-       |  SELECT cell, m, t.x['pos'] AS pos,
-       |    CAST(sum(t.x['v']) AS BIGINT) AS sm, count(*) AS n
-       |  FROM suba, unnest([{'pos': i, 'v': CAST(sv[i] AS BIGINT)}
-       |    FOR i IN range(1, len(sv) + 1)]) AS t(x)
-       |  GROUP BY 1, 2, 3
-       |), ccent AS (
-       |  SELECT cell, m,
-       |    list(floor(CAST(sm AS DOUBLE) / n) ORDER BY pos) AS ccd
-       |  FROM csums GROUP BY 1, 2
-       |), resn AS (
-       |  SELECT vec_id, cell, m, rv, ${duckDot("rv", "rv")} AS rn2 FROM (
-       |    SELECT s.vec_id, s.cell, s.m,
-       |      [s.sv[i] - ct.ccd[i] FOR i IN range(1, len(s.sv) + 1)] AS rv
-       |    FROM suba s JOIN ccent ct ON s.cell = ct.cell AND s.m = ct.m)
-       |), $resCbTrainCtes, renc AS (
-       |  SELECT vec_id, cell, m, c_id AS code FROM (
-       |    SELECT r.vec_id, r.cell, r.m, rcb.c_id,
-       |      row_number() OVER (PARTITION BY r.vec_id, r.m
-       |        ORDER BY ${d("rv", "cd", "rn2", "cn2")}, rcb.c_id) AS rn
-       |    FROM resn r JOIN rcb ON r.m = rcb.m
-       |  ) WHERE rn = 1
-       |), presn AS (
-       |  SELECT probe_id, cell, m, prv, ${duckDot("prv", "prv")} AS prn2 FROM (
-       |    SELECT pc.probe_id, pc.cell, s.m,
-       |      [s.sv[i] - ct.ccd[i] FOR i IN range(1, len(s.sv) + 1)] AS prv
-       |    FROM sub s JOIN pc ON s.vec_id = pc.probe_id
-       |    JOIN ccent ct ON ct.cell = pc.cell AND ct.m = s.m)
-       |), plut AS (
-       |  SELECT p.probe_id, p.cell, p.m, rcb.c_id,
-       |    ${d("prv", "cd", "prn2", "cn2")} AS dist
-       |  FROM presn p JOIN rcb ON p.m = rcb.m
-       |), adcr AS (
-       |  SELECT plut.probe_id, renc.vec_id AS n_id,
-       |    CAST(sum(dist) AS BIGINT) AS adist
-       |  FROM renc JOIN plut ON renc.cell = plut.cell AND renc.m = plut.m
-       |    AND renc.code = plut.c_id AND renc.vec_id <> plut.probe_id
-       |  GROUP BY 1, 2
-       |), shortr AS (
-       |  SELECT probe_id, n_id FROM (
-       |    SELECT probe_id, n_id,
-       |      row_number() OVER (PARTITION BY probe_id
-       |        ORDER BY adist, n_id) AS rq
-       |    FROM adcr
-       |  ) WHERE rq <= $AdcShortlist
-       |), rerankedr AS (
-       |  SELECT s.probe_id, s.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-       |  FROM shortr s
-       |  JOIN e ep ON s.probe_id = ep.vec_id
-       |  JOIN e en ON s.n_id = en.vec_id
-       |)""".stripMargin
-  }
-
-  /** Recall@5 of residual IVF-PQ vs exact brute force — directly
-    * comparable to ann_recall_ivfpq (identical harness, identical
-    * nprobe/M/K/shortlist depth); the delta between the two rows IS
-    * the measured residual-encoding gain. Like ann_recall_ivfpq, the
-    * approx side is materialized before the comparison so the scoring
-    * plan consumes search OUTPUT (25 rows) rather than re-embedding
-    * the residual chain's exchanges. */
-  val annRecallIvfPqRes: Q = Q(
-    "ann_recall_ivfpq_res",
-    (s, dir) => recallVsExact(s, dir)(annIvfPqRes.run(s, dir)),
-    Some(s"""WITH $ivfPqResOracleCtes, approx AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY cos DESC, n_id) AS rank
-            |    FROM rerankedr
-            |  ) WHERE rank <= 5
-            |), bf AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT p.vec_id AS probe_id, x.vec_id AS n_id,
-            |      row_number() OVER (PARTITION BY p.vec_id
-            |        ORDER BY ${duckCosine("p.v", "x.v")} DESC, x.vec_id) AS rank
-            |    FROM e x JOIN e p ON x.vec_id <> p.vec_id
-            |    WHERE p.$ProbeFilter
-            |  ) WHERE rank <= 5
-            |)
-            |SELECT b.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM bf b LEFT JOIN approx a
-            |  ON b.probe_id = a.probe_id AND b.n_id = a.n_id
-            |GROUP BY 1 ORDER BY b.probe_id""".stripMargin))
-
-  /** The OPQ∘residual oracle chain through `rerankedr`: coarse cells,
-    * the quantize + permutation census CTEs, the subspace split over
-    * the PERMUTED codes (named `sub`, the residual tail's contract),
-    * then the residual tail verbatim — centroids, residuals, TRAINED
-    * codebook, encode, per-(probe, cell) LUT, ADC, rerank. */
-  private lazy val ivfPqOpqResOracleCtes: String =
-    s"""$coarseCellCtes, $duckQuantizeCte, $opqCensusCtes,
-       |${pqSplitCteFrom("qp")}, $residualTailCtes""".stripMargin
-
-  /** IVF-PQ with BOTH measured levers composed — the OPQ-lite
-    * balanced-variance permutation ([[opqSubvectors]]) feeding the
-    * TRAINED-residual-codebook pipeline ([[residualAdcSearch]]):
-    * residuals are taken in the permuted coordinate order, so the
-    * shared codebook trains on variance-balanced residual subspaces.
-    * RESIDUAL_GAIN.json prices whether the levers STACK — the ladder
-    * measured opq (52→72 at sf1j) and trained-residual (52→64/92)
-    * separately; this row is the composed arm on the same harness.
-    * Storage and search cost identical to ann_ivf_pq_res (the
-    * permutation is free at query time); identical seed cells, nprobe,
-    * M/K, shortlist, rerank.
-    *
-    * MEASURED ANSWER (round 15, artifact regenerated with this arm):
-    * they do NOT stack as composed here — sf1j mean recall@5 is 48 vs
-    * the 52 baseline (opq alone 72, trained-residual alone 64), and
-    * sf0.1 reads 84 vs 92. The census ranks dimensions by RAW-code
-    * variance, but subtracting the coarse centroid removes exactly the
-    * cell-level component that dominates that ranking, so the permuted
-    * dealing is near-arbitrary for the residual distribution and
-    * breaks the subspace coherence residual training exploits. The
-    * priced next step is a RESIDUAL-variance census (rank dims by the
-    * variance of v − centroid, which requires assignment before the
-    * permutation); this row stays as the measured "naive composition"
-    * arm the ladder needs either way. */
-  val annIvfPqOpqRes: Q = Q(
-    "ann_ivfpq_opq_res",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val cellScores = e.crossJoin(cents)
-        .select(col("vec_id"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-      val assigned = cellScores.groupBy("vec_id")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      val probeCells = cellScores.filter(expr(ProbeFilter))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
-        .filter(col("crn") <= 2)
-        .select(col("vec_id").as("probe_id"), col("c_id").as("cell"))
-      residualAdcSearch(s, dir, assigned, probeCells,
-        subvectors = Some(opqSubvectors(s, dir)))
-    },
-    Some(s"""WITH $ivfPqOpqResOracleCtes
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id
-            |      ORDER BY cos DESC, n_id) AS rank
-            |  FROM rerankedr
-            |) WHERE rank <= 5""".stripMargin))
-
-  /** Recall@5 of the composed OPQ∘residual IVF-PQ vs exact brute
-    * force — the fifth point on the measured training ladder, same
-    * harness and depths as every other recall row, so the deltas
-    * against ann_recall_ivfpq_opq and ann_recall_ivfpq_res read
-    * directly as "do the levers stack". */
-  val annRecallIvfPqOpqRes: Q = Q(
-    "ann_recall_ivfpq_opq_res",
-    (s, dir) => recallVsExact(s, dir)(annIvfPqOpqRes.run(s, dir)),
-    Some(s"""WITH $ivfPqOpqResOracleCtes, approx AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY cos DESC, n_id) AS rank
-            |    FROM rerankedr
-            |  ) WHERE rank <= 5
-            |), bf AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT p.vec_id AS probe_id, x.vec_id AS n_id,
-            |      row_number() OVER (PARTITION BY p.vec_id
-            |        ORDER BY ${duckCosine("p.v", "x.v")} DESC, x.vec_id) AS rank
-            |    FROM e x JOIN e p ON x.vec_id <> p.vec_id
-            |    WHERE p.$ProbeFilter
-            |  ) WHERE rank <= 5
-            |)
-            |SELECT b.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM bf b LEFT JOIN approx a
-            |  ON b.probe_id = a.probe_id AND b.n_id = a.n_id
-            |GROUP BY 1 ORDER BY b.probe_id""".stripMargin))
-
-  /** position → original dim under the RESIDUAL-variance census: the
-    * permutation [[opqSubvectors]] computes from RAW-code variance,
-    * recomputed over r = code − floor-mean(assigned cell) instead —
-    * round 15's measured answer on the naive composition
-    * (ann_ivfpq_opq_res: 48 vs 52 baseline at sf1j) named the
-    * mechanism: subtracting the coarse centroid removes exactly the
-    * cell-level component that dominates the raw ranking, so the raw
-    * census's dealing is near-arbitrary FOR THE RESIDUAL
-    * distribution. This census ranks dimensions by what the residual
-    * codebook actually has to describe. Assignment must come first
-    * (the census depends on cells), so the build order is
-    * assign → census → permute → split → residual tail. Exactness:
-    * per-(cell, dim) centroids are the kmeansUpdate floor-of-double-
-    * div integer means; residuals are exact integers; the variance
-    * numerator N·Σr² − (Σr)² is computed in decimal(38,0) (Spark) /
-    * HUGEINT (DuckDB) so the RANKING cannot diverge by overflow at
-    * any bench SF. 64-row census = index-build metadata, the
-    * opqPermutation stance. */
-  private[graft] def opqResidualPermutation(s: SparkSession, dir: String,
-      assigned: DataFrame): Seq[Int] = {
-    val rexp = kmeansCodes(s, dir).join(assigned, "vec_id")
-      .select(col("cell"), posexplode(expr(
-        "transform(qd, x -> CAST(x AS BIGINT))")))
-      .select(col("cell"), col("pos").as("d"), col("col").as("x"))
-    val cent = rexp.groupBy("cell", "d")
-      .agg(sum("x").as("sm"), count(lit(1)).as("n"))
-      .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("long"))
-      .select(col("cell"), col("d"), col("cm"))
-    val stats = rexp.join(cent, Seq("cell", "d"))
-      .withColumn("r", col("x") - col("cm"))
-      .groupBy("d")
-      .agg((count(lit(1)).cast("decimal(38,0)") *
-            sum(expr("r * r")).cast("decimal(38,0)") -
-            sum(col("r")).cast("decimal(38,0)") *
-            sum(col("r")).cast("decimal(38,0)")).as("varn"))
-      .collect().map(r => (r.getInt(0), r.getDecimal(1)))
-    val dims = PqM * PqSubDim
-    require(stats.length == dims, s"census must cover $dims dims, got ${stats.length}")
-    val ordered = stats.sortWith { (a, b) =>
-      val c = a._2.compareTo(b._2)
-      if (c != 0) c > 0 else a._1 < b._1 // varn DESC, d ASC
-    }.map(_._1)
-    val perm = new Array[Int](dims)
-    ordered.zipWithIndex.foreach { case (d, r) =>
-      perm((r % PqM) * PqSubDim + r / PqM) = d }
-    perm.toSeq
-  }
-
-  /** The residual-variance-census oracle chain through `rerankedr`:
-    * coarse cells, quantize, the per-cell floor-mean residual census
-    * (exact integers; HUGEINT variance numerator mirrors the Spark
-    * decimal(38,0)), the round-robin dealing, the split over the
-    * rv-permuted codes (named `sub`, the residual tail's contract),
-    * then [[residualTailCtes]] verbatim. */
-  private lazy val ivfPqRvOpqResOracleCtes: String =
-    s"""$coarseCellCtes, $duckQuantizeCte, rexp AS (
-       |  SELECT cell, t.x['pos'] AS pos, CAST(t.x['v'] AS BIGINT) AS x
-       |  FROM (SELECT a.cell, q.qd FROM q JOIN assigned a ON q.vec_id = a.vec_id) j,
-       |    unnest([{'pos': i, 'v': qd[i]} FOR i IN range(1, len(qd) + 1)]) AS t(x)
-       |), rcent AS (
-       |  SELECT cell, pos,
-       |    CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT) AS cm
-       |  FROM rexp GROUP BY 1, 2
-       |), rvstats AS (
-       |  SELECT pos - 1 AS d, count(*) * sum(r * r) - sum(r) * sum(r) AS varn
-       |  FROM (SELECT rexp.pos, rexp.x - rc.cm AS r
-       |        FROM rexp JOIN rcent rc
-       |          ON rexp.cell = rc.cell AND rexp.pos = rc.pos)
-       |  GROUP BY 1
-       |), permrv AS (
-       |  SELECT ((r % $PqM) * $PqSubDim + r // $PqM) AS pos, d FROM (
-       |    SELECT d, row_number() OVER (ORDER BY varn DESC, d) - 1 AS r
-       |    FROM rvstats)
-       |), qprv AS (
-       |  SELECT vec_id, list(x ORDER BY pos) AS qd FROM (
-       |    SELECT q.vec_id, p.pos, q.qd[p.d + 1] AS x FROM q, permrv p
-       |  ) GROUP BY 1
-       |), ${pqSplitCteFrom("qprv")}, $residualTailCtes""".stripMargin
-
-  /** IVF-PQ with the RESIDUAL-variance-census permutation feeding the
-    * trained residual codebook — round 15's priced next step, built:
-    * the naive OPQ∘residual composition measured a LOSS (48 vs 52 at
-    * sf1j) because the raw-code census ranks by cell-level energy the
-    * residual subtraction then removes; this arm computes the census
-    * on the residuals themselves (assignment before permutation), so
-    * the round-robin dealing balances what the shared residual
-    * codebook actually quantizes. Storage and search cost identical
-    * to ann_ivf_pq_res / ann_ivfpq_opq_res (a permutation is free at
-    * query time); identical seed cells, nprobe, M/K, shortlist,
-    * rerank — the recall delta against those two rows reads directly
-    * off the ladder (RESIDUAL_GAIN.json carries this as its sixth
-    * arm).
-    *
-    * MEASURED ANSWER (round 16, six-arm artifact): the residual-aware
-    * census recovers PART of the naive composition's loss at sf1j —
-    * 56 vs the naive 48, back above the 52 baseline — confirming the
-    * round-15 mechanism diagnosis (the raw census does misrank
-    * residual energy), but the levers STILL do not stack: both single
-    * levers stay ahead (opq 72, res 64). And at sf0.1 (N=2000, ~125
-    * codes per cell) it reads 68 vs base 92: per-cell floor-means are
-    * noisy at small occupancy, so the census ranks noise. Conclusion
-    * recorded for the ladder: any variance-census permutation breaks
-    * the subspace COHERENCE (adjacent correlated dims quantized
-    * together) that residual training exploits — the next real step
-    * up is a learned rotation (full OPQ SVD), which would not
-    * oracle-verify bit-exactly and is out of scope by design. */
-  val annIvfPqRvOpqRes: Q = Q(
-    "ann_ivfpq_rvopq_res",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val cellScores = e.crossJoin(cents)
-        .select(col("vec_id"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-      val assigned = cellScores.groupBy("vec_id")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      val probeCells = cellScores.filter(expr(ProbeFilter))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
-        .filter(col("crn") <= 2)
-        .select(col("vec_id").as("probe_id"), col("c_id").as("cell"))
-      val perm = opqResidualPermutation(s, dir, assigned)
-      val permSub = subvectorsOf(kmeansCodes(s, dir).withColumn("qd", expr(
-        s"transform(array(${perm.mkString(", ")}), i -> element_at(qd, i + 1))")))
-      residualAdcSearch(s, dir, assigned, probeCells,
-        subvectors = Some(permSub))
-    },
-    Some(s"""WITH $ivfPqRvOpqResOracleCtes
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id
-            |      ORDER BY cos DESC, n_id) AS rank
-            |  FROM rerankedr
-            |) WHERE rank <= 5""".stripMargin))
-
-  /** Recall@5 of the residual-variance-census composition vs exact
-    * brute force — the sixth point on the measured training ladder,
-    * same harness and depths as every other recall row; the question
-    * it answers is whether a residual-aware census makes the
-    * permutation and the trained codebook finally stack
-    * (beats max(opq, res)?). */
-  val annRecallIvfPqRvOpqRes: Q = Q(
-    "ann_recall_ivfpq_rvopq_res",
-    (s, dir) => recallVsExact(s, dir)(annIvfPqRvOpqRes.run(s, dir)),
-    Some(s"""WITH $ivfPqRvOpqResOracleCtes, approx AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY cos DESC, n_id) AS rank
-            |    FROM rerankedr
-            |  ) WHERE rank <= 5
-            |), bf AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT p.vec_id AS probe_id, x.vec_id AS n_id,
-            |      row_number() OVER (PARTITION BY p.vec_id
-            |        ORDER BY ${duckCosine("p.v", "x.v")} DESC, x.vec_id) AS rank
-            |    FROM e x JOIN e p ON x.vec_id <> p.vec_id
-            |    WHERE p.$ProbeFilter
-            |  ) WHERE rank <= 5
-            |)
-            |SELECT b.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM bf b LEFT JOIN approx a
-            |  ON b.probe_id = a.probe_id AND b.n_id = a.n_id
-            |GROUP BY 1 ORDER BY b.probe_id""".stripMargin))
-
-  /** The trained-cell CTE block for the IVFADC oracle: reuses
-    * [[kmeansOracleCtes]] verbatim for the one-Lloyd-stage coarse
-    * quantizer (codes -> seed centroids -> assign -> integer-mean
-    * update -> reassignment `a1`) at the corpus-scaled k (`pk` —
-    * [[ivfK]] over the counted corpus, the dedup_semantic scalar-
-    * subquery construction with the √N cap), then renames a1 to the residual-tail
-    * contract (`assigned`) and ranks each probe's nprobe trained cells
-    * (`pc` — the same cosine the assignment used, over the UPDATED
-    * centroids c1n; nprobe = max(2, k/8), co-scaled with k). */
-  private lazy val ivfAdcCoarseCtes: String =
-    s"""pk AS (
-       |  SELECT ${duckIvfK("count(*)")} AS kk FROM embeddings
-       |), ${kmeansOracleCtes("SELECT kk FROM pk")}, assigned AS (
-       |  SELECT vec_id, cid AS cell FROM a1
-       |), pc AS (
-       |  SELECT vec_id AS probe_id, c_id AS cell FROM (
-       |    SELECT qn.vec_id, c_id,
-       |      row_number() OVER (PARTITION BY qn.vec_id
-       |        ORDER BY ${duckDot("qd", "cd")} / sqrt(qn2 * cn2) DESC, c_id) AS crn
-       |    FROM qn CROSS JOIN c1n WHERE qn.$ProbeFilter
-       |  ) WHERE crn <= (SELECT greatest(2, kk // 8) FROM pk)
-       |)""".stripMargin
-
-  /** Full trained IVFADC — the composition FAISS ships as
-    * `IndexIVFPQ` with a trained coarse quantizer: BOTH halves of the
-    * index are now learned from the corpus. The coarse quantizer is
-    * the one-Lloyd-stage k-means the registry already verifies on its
-    * own (cluster_kmeans's codes-domain assignment — seed centroids,
-    * assign, integer-mean update, REassign to the updated centroids),
-    * replacing ann_ivf_pq_res's raw seed-vector cells; the PQ half is
-    * the trained residual codebook ([[trainResCodebook]]). Everything
-    * downstream of the coarse half is [[residualAdcSearch]], shared
-    * verbatim with ann_ivf_pq_res, so the recall delta between the
-    * two rows isolates exactly what TRAINING THE COARSE QUANTIZER
-    * buys (fewer cell misses at the same nprobe — the dominant loss
-    * term once the codebook is trained).
-    *
-    * Scale shape: cell count is corpus-scaled — k = [[ivfK]](N):
-    * ~128-member occupancy below the 2^18 crossover, FAISS's
-    * nlist ≈ 4·√N above it (so the unavoidable N×k assign pass stays
-    * N^1.5 instead of quadratic) — and nprobe co-scales as
-    * max(2, k/8), so the probed fraction of the index stays fixed
-    * (the verify/bench SFs floor at the historical k=16 /
-    * nprobe=2). Training is one assign + one update over the corpus
-    * (broadcast centroids, partial-agg argmax, k x dims integer update
-    * state), done ONCE offline; the online search is identical to
-    * ann_ivf_pq_res. Arithmetic is the k-means rows' int8-code cosine
-    * (exact integer dots, IEEE double division) for the coarse half
-    * and the residual chain's exact integers for the rest —
-    * oracle-hash-deterministic end to end. */
-  /** The full trained-IVFADC chain, with the two ONLINE depth knobs a
-    * deployment tunes exposed for the recall/cost-curve harness
-    * (graft.tools.RecallCurve): nprobe (probed trained cells per
-    * probe; default the registry's corpus-co-scaled max(2, k/8)) and
-    * qcand (ADC shortlist depth before exact rerank; default
-    * [[AdcShortlist]] = 80, adopted from the round-11 recall-cost
-    * curve — see AdcShortlist's doc).
-    * Neither override touches the OFFLINE index — same trained cells,
-    * same codes — which is the point of the curve: one index, many
-    * operating points. The registry row runs the defaults. */
-  private[graft] def ivfAdcChain(s: SparkSession, dir: String,
-      nprobeOverride: Option[Int] = None,
-      qcand: Int = AdcShortlist): DataFrame = {
-    // offline: trained coarse quantizer (one Lloyd stage). Cell
-    // count scales with the corpus — k = ivfK(N): ~128-member
-    // occupancy in the small regime, 4·√N past the crossover. A
-    // fixed k would make every cell N/16 vectors and each query a
-    // near-full scan at 100 TB. nprobe scales with k (probed
-    // fraction ~nprobe/k stays ~1/8 of the index's cells' worth of
-    // recall opportunity, FAISS's usual co-scaling) — both formulas
-    // exactly mirrored in the oracle's pk CTE; at the verify/bench
-    // SFs (N <= 2048) they floor at the historical k=16 / nprobe=2.
-    // ivfK (not kmeansK): k ∝ N would make the N×k assign pass
-    // quadratic — the sf3 run measured it (291 s at 60k vectors) —
-    // so past N = 2^18 the cell count follows FAISS's nlist ≈ 4·√N.
-    val k = ivfK(Tables(s, dir).embeddingsCount)
-    val nprobe = nprobeOverride.getOrElse(math.max(2, k / 8))
-    val (codes, _, c1) = kmeansStage(s, dir, k)
-    val cents = broadcast(c1.select(col("c_id"), col("cd"), col("cn2")))
-    val cellScores = codes.crossJoin(cents)
-      .select(col("vec_id"), col("c_id"),
-        expr(s"${dot("qd", "cd")} / sqrt(qn2 * cn2)").as("c_cos"))
-    val assigned = cellScores.groupBy("vec_id")
-      .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-    // online: nprobe trained cells per probe
-    val probeCells = cellScores.filter(expr(ProbeFilter))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("probe_id"), col("c_id").as("cell"))
-    residualAdcSearch(s, dir, assigned, probeCells, qcand)
-  }
-
-  val annIvfAdc: Q = Q(
-    "ann_ivfadc",
-    (s, dir) => ivfAdcChain(s, dir),
-    Some(s"""WITH $ivfAdcCoarseCtes, $pqSplitCte, $residualTailCtes
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id
-            |      ORDER BY cos DESC, n_id) AS rank
-            |  FROM rerankedr
-            |) WHERE rank <= 5""".stripMargin))
-
-  /** Recall@5 of trained IVFADC vs exact brute force — the third
-    * point on the measured ladder (ann_recall_ivfpq: seed cells + raw
-    * codebook; ann_recall_ivfpq_res: seed cells + trained residual
-    * codebook; this row: trained cells + trained residual codebook).
-    * Same harness, same materialized-approx construction. */
-  val annRecallIvfAdc: Q = Q(
-    "ann_recall_ivfadc",
-    (s, dir) => recallVsExact(s, dir)(annIvfAdc.run(s, dir)),
-    Some(s"""WITH $ivfAdcCoarseCtes, $pqSplitCte, $residualTailCtes, approx AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY cos DESC, n_id) AS rank
-            |    FROM rerankedr
-            |  ) WHERE rank <= 5
-            |), bf AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT p.vec_id AS probe_id, x.vec_id AS n_id,
-            |      row_number() OVER (PARTITION BY p.vec_id
-            |        ORDER BY ${duckCosine("p.v", "x.v")} DESC, x.vec_id) AS rank
-            |    FROM e x JOIN e p ON x.vec_id <> p.vec_id
-            |    WHERE p.$ProbeFilter
-            |  ) WHERE rank <= 5
-            |)
-            |SELECT b.probe_id, count(*) AS k, count(a.n_id) AS hits,
-            |  count(a.n_id) * 100 // count(*) AS recall_pct
-            |FROM bf b LEFT JOIN approx a
-            |  ON b.probe_id = a.probe_id AND b.n_id = a.n_id
-            |GROUP BY 1 ORDER BY b.probe_id""".stripMargin))
-
-  /** Johnson–Lindenstrauss random projection (Achlioptas ±1 variant):
-    * 64-dim embeddings down to 16 dims through a DETERMINISTIC sign
-    * matrix — sign(j,k) from an LCG on the flattened index, so the
-    * "random" matrix needs no stored state, no broadcast, and is
-    * identical in both engines. Input is the int8 code vector (the
-    * same quantization vec_quantize pins), so every projected
-    * coordinate is an exact BIGINT sum (|y_k| ≤ 64·127) — no float
-    * accumulation order to disagree on.
-    *
-    * Scale shape: map-only — a pure per-row fold that fuses into the
-    * parquet scan with ZERO shuffles at any corpus size; the array
-    * cells are surfaced as a scalar digest + L1/first-coordinate
-    * scalars (the driver comparator cannot hash array cells). This is
-    * the standard cheap front-end before pair-heavy stages: a 4×
-    * narrower vector makes every downstream distance pass (LSH
-    * bucketing, candidate verify) proportionally cheaper while JL
-    * preserves pairwise geometry to O(1/√16) distortion. */
-  /** The interpreted-HOF formulation of the projection fold over a
-    * BIGINT `codes` column — NativeVsSqlSpec pins graft_jl_project
-    * bit-identical to it; the hot path runs the native loop (the HOF
-    * form walks an expression tree per (j, k) cell — ~1024 interpreted
-    * evals per row, measured 13.5 s over 2k vectors). */
-  private[graft] val jlProjectSql: String = {
-    // y_k = Σ_j codes[j] · sign(j·16+k); sign(i) = high bit of TWO
-    // chained LCG rounds mod 2^31 (x2 = a·((a·i+c) mod m)+c mod m,
-    // sign = 1 − 2·(x2 div 2^30)). The low bit of a power-of-two-
-    // modulus LCG is parity(i) = parity(k), which collapses the sign
-    // matrix to rank 1, and one round's high bit is still affine
-    // enough to leave rank 9/16; two rounds measure full-rank
-    // (see JlProject16).
-    val sign =
-      "(1 - 2 * (((CAST(1103515245 AS BIGINT) * ((CAST(1103515245 AS BIGINT) * (j * 16 + k) + 12345) % 2147483648) + 12345) % 2147483648) div 1073741824))"
-    "transform(sequence(0, 15), k -> aggregate(sequence(0, 63), " +
-      s"CAST(0 AS BIGINT), (acc, j) -> acc + codes[j] * $sign))"
-  }
-
-  val vecProject: Q = {
-    // DuckDB mirror of JlProject16's two-round high-bit LCG sign
-    // (// = int div)
-    val sign =
-      "(1 - 2 * (((CAST(1103515245 AS BIGINT) * ((CAST(1103515245 AS BIGINT) * (j * 16 + k) + 12345) % 2147483648) + 12345) % 2147483648) // 1073741824))"
-    Q(
-      "vec_project",
-      // CAST(array<float> AS array<double>) instead of the HOF
-      // transform: elementwise-identical, but Cast supports codegen
-      // while a lambda transform is CodegenFallback — with it the
-      // whole quantize→project Project fuses into the scan's
-      // WholeStageCodegen span (pinned in PlanAuditSpec)
-      (s, dir) => Tables(s, dir).embeddings
-        .withColumn("y", expr(
-          "graft_jl_project(graft_int8_codes(CAST(embedding AS ARRAY<DOUBLE>)).codes)"))
-        .select(col("vec_id"),
-          expr(sigDigest("transform(y, v -> v + 8192)")).as("proj_digest"),
-          expr("aggregate(y, CAST(0 AS BIGINT), (acc, v) -> acc + abs(v))")
-            .as("proj_l1"),
-          expr("y[0]").as("proj_first"))
-        .orderBy("vec_id"),
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-              |), m AS (
-              |  SELECT vec_id, v,
-              |    list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
-              |      list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
-              |  FROM e
-              |), q AS (
-              |  SELECT vec_id,
-              |    list_transform(v, x -> CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)) AS codes
-              |  FROM m
-              |), p AS (
-              |  SELECT vec_id,
-              |    list_transform(range(0, 16), k ->
-              |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-              |        list_transform(range(0, 64), j -> codes[j + 1] * $sign)),
-              |        (acc, t) -> acc + t)) AS y
-              |  FROM q)
-              |SELECT vec_id,
-              |  ${duckSigDigest("list_transform(y, v -> v + 8192)")} AS proj_digest,
-              |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-              |    list_transform(y, v -> abs(v))), (acc, v) -> acc + v) AS proj_l1,
-              |  y[1] AS proj_first
-              |FROM p ORDER BY vec_id""".stripMargin))
-  }
-
-  /** FILTERED vector search — the production shape every vector store
-    * serves ("nearest neighbors WHERE metadata predicate"): each probe
-    * searches its own IVF cell restricted to candidates sharing the
-    * probe's `label`. The predicate is applied to the index slice
-    * BEFORE any rerank join, so at 100 TB an index laid out as
-    * parquet partitioned by cell gets partition pruning on the cell
-    * AND row-group predicate pushdown on the label column — the
-    * filter never rides through the distance computation. This is
-    * pre-filtering (candidate set = cell ∩ predicate), the variant
-    * that keeps cost cell-bounded; post-filtering (search first,
-    * filter the top-k after) returns < k rows whenever the cell's
-    * top-k is predicate-poor, which ann_recall_filtered quantifies.
-    * Plan: same one-exchange argmax assign as [[annIvf]], candidates
-    * label-filtered map-side under the broadcast probe join, exact
-    * rerank only on survivors. */
-  val annFiltered: Q = Q(
-    "ann_filtered",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val assigned = e.crossJoin(cents)
-        .select(col("vec_id"), col("label"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-        .groupBy("vec_id", "label")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      val probes = assigned.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-          col("cell"))
-      // the metadata predicate lands HERE — on the index slice, before
-      // the rerank joins ever see a candidate
-      val cand = assigned.join(broadcast(probes), "cell")
-        .filter(col("vec_id") =!= col("probe_id") &&
-          col("label") === col("p_label"))
-        .select(col("probe_id"), col("vec_id").as("n_id"))
-      val scored = cand
-        .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
-          col("probe_id") === col("vec_id"))
-        .drop("vec_id")
-        .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
-          col("n_id") === col("vec_id"))
-        .select(col("probe_id"), col("n_id"),
-          cosWith("pv", "pn2", "nv", "nn2").as("cos"))
-      scored
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), assigned AS (
-            |  SELECT vec_id, label, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.label, c_id,
-            |      row_number() OVER (PARTITION BY e.vec_id
-            |        ORDER BY ${duckCosine("e.v", "cv")} DESC, c_id) AS rn
-            |    FROM e CROSS JOIN c
-            |  ) WHERE rn = 1
-            |), p AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, cell
-            |  FROM assigned WHERE $ProbeFilter
-            |), cand AS (
-            |  SELECT p.probe_id, a.vec_id AS n_id
-            |  FROM assigned a JOIN p ON a.cell = p.cell
-            |    AND a.vec_id <> p.probe_id AND a.label = p.p_label
-            |), scored AS (
-            |  SELECT cand.probe_id, cand.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand
-            |  JOIN e ep ON cand.probe_id = ep.vec_id
-            |  JOIN e en ON cand.n_id = en.vec_id
-            |), ranked AS (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM scored
-            |)
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM ranked WHERE rank <= 5""".stripMargin))
-
-  /** Recall@5 of filtered IVF search vs filtered EXACT ground truth
-    * (brute-force top-5 among all same-label vectors, cells ignored).
-    * Filtered search loses recall two ways at once — the cell boundary
-    * (as ann_recall_ivf) plus predicate starvation (a cell may hold
-    * few same-label candidates; k_found < 5 shows as a smaller k on
-    * the exact side only, so hits/k exposes it) — and this row
-    * measures the compound effect. Production systems size nprobe UP
-    * under selective filters for exactly this reason. */
-  val annRecallFiltered: Q = Q(
-    "ann_recall_filtered",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val probes = broadcast(e.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-          col("v").as("pv"), col("n2").as("pn2")))
-      val exact = e.join(probes,
-          col("vec_id") =!= col("probe_id") && col("label") === col("p_label"))
-        .select(col("probe_id"), col("vec_id").as("n_id"),
-          cosWith("pv", "pn2", "v", "n2").as("cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"))
-      val approx = annFiltered.run(s, dir)
-        .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-      val per = exact.join(approx,
-          col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-      // LEFT join from the PROBE set: a probe whose label has zero
-      // same-label neighbors must appear with k=0 — a starved probe
-      // silently vanishing from the starvation metric would defeat
-      // the row (its recall is vacuously 100: nothing to find)
-      e.filter(expr(ProbeFilter)).select(col("vec_id").as("probe_id"))
-        .join(per, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          coalesce(col("k"), lit(0L)).as("k"),
-          coalesce(col("hits"), lit(0L)).as("hits"))
-        .withColumn("recall_pct",
-          when(col("k") === 0, lit(100L)).otherwise(expr("hits * 100 div k")))
-        .orderBy("probe_id")
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-            |), p AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, v AS pv
-            |  FROM e WHERE $ProbeFilter
-            |), bf_scored AS (
-            |  SELECT probe_id, e.vec_id AS n_id, ${duckCosine("pv", "e.v")} AS cos
-            |  FROM e JOIN p ON e.vec_id <> p.probe_id AND e.label = p.p_label
-            |), bf_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM bf_scored
-            |), exact AS (
-            |  SELECT probe_id, n_id FROM bf_ranked WHERE rank <= 5
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), assigned AS (
-            |  SELECT vec_id, label, c_id AS cell FROM (
-            |    SELECT e.vec_id, e.label, c_id,
-            |      row_number() OVER (PARTITION BY e.vec_id
-            |        ORDER BY ${duckCosine("e.v", "cv")} DESC, c_id) AS rn
-            |    FROM e CROSS JOIN c
-            |  ) WHERE rn = 1
-            |), ip AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, cell
-            |  FROM assigned WHERE $ProbeFilter
-            |), cand AS (
-            |  SELECT ip.probe_id, a.vec_id AS n_id
-            |  FROM assigned a JOIN ip ON a.cell = ip.cell
-            |    AND a.vec_id <> ip.probe_id AND a.label = ip.p_label
-            |), f_scored AS (
-            |  SELECT cand.probe_id, cand.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand
-            |  JOIN e ep ON cand.probe_id = ep.vec_id
-            |  JOIN e en ON cand.n_id = en.vec_id
-            |), f_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM f_scored
-            |), approx AS (
-            |  SELECT probe_id, n_id FROM f_ranked WHERE rank <= 5
-            |), per AS (
-            |  SELECT x.probe_id, count(*) AS k, count(a.n_id) AS hits
-            |  FROM exact x LEFT JOIN approx a
-            |    ON x.probe_id = a.probe_id AND x.n_id = a.n_id
-            |  GROUP BY 1
-            |)
-            |SELECT p.probe_id, coalesce(per.k, 0) AS k,
-            |  coalesce(per.hits, 0) AS hits,
-            |  CASE WHEN coalesce(per.k, 0) = 0 THEN 100
-            |       ELSE per.hits * 100 // per.k END AS recall_pct
-            |FROM p LEFT JOIN per ON p.probe_id = per.probe_id
-            |ORDER BY p.probe_id""".stripMargin))
-
-  /** [[annFiltered]] with nprobe=2 — the lever a production store
-    * pulls under SELECTIVE predicates: ann_recall_filtered measures
-    * predicate starvation (a probe's single cell may hold fewer than
-    * k same-label candidates), and probing the probe's TWO nearest
-    * cells refills the candidate pool the predicate drained. Shape is
-    * ann_ivf_nprobe's: base vectors keep their single argmax cell, so
-    * the two probed cells' candidate sets are disjoint (no dedup);
-    * the label predicate still lands on the index slice BELOW the
-    * rerank joins and Window (plan-pinned) — candidate cost is
-    * ~2x ann_filtered, cell-bounded, never O(n). */
-  val annFilteredNprobe: Q = Q(
-    "ann_filtered_nprobe",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val cellScores = e.crossJoin(cents)
-        .select(col("vec_id"), col("label"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-      val assigned = cellScores.groupBy("vec_id", "label")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      // per-probe top-2 cells: a window over only |probes| x 16 rows
-      val probeCells = cellScores.filter(expr(ProbeFilter))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
-        .filter(col("crn") <= 2)
-        .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-          col("c_id").as("cell"))
-      val cand = assigned.join(broadcast(probeCells), "cell")
-        .filter(col("vec_id") =!= col("probe_id") &&
-          col("label") === col("p_label"))
-        .select(col("probe_id"), col("vec_id").as("n_id"))
-      val scored = cand
-        .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
-          col("probe_id") === col("vec_id"))
-        .drop("vec_id")
-        .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
-          col("n_id") === col("vec_id"))
-        .select(col("probe_id"), col("n_id"),
-          cosWith("pv", "pn2", "nv", "nn2").as("cos"))
-      scored
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), cs AS (
-            |  SELECT e.vec_id, e.label, c_id, ${duckCosine("e.v", "cv")} AS c_cos
-            |  FROM e CROSS JOIN c
-            |), assigned AS (
-            |  SELECT vec_id, label, c_id AS cell FROM (
-            |    SELECT vec_id, label, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS rn
-            |    FROM cs
-            |  ) WHERE rn = 1
-            |), pc AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, c_id AS cell FROM (
-            |    SELECT vec_id, label, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS crn
-            |    FROM cs WHERE $ProbeFilter
-            |  ) WHERE crn <= 2
-            |), cand AS (
-            |  SELECT pc.probe_id, a.vec_id AS n_id
-            |  FROM assigned a JOIN pc ON a.cell = pc.cell
-            |    AND a.vec_id <> pc.probe_id AND a.label = pc.p_label
-            |), scored AS (
-            |  SELECT cand.probe_id, cand.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand
-            |  JOIN e ep ON cand.probe_id = ep.vec_id
-            |  JOIN e en ON cand.n_id = en.vec_id
-            |), ranked AS (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM scored
-            |)
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM ranked WHERE rank <= 5""".stripMargin))
-
-  /** Recall@5 of nprobe=2 filtered search vs the same filtered-exact
-    * ground truth as [[annRecallFiltered]] — the same harness, so the
-    * two recall rows are directly comparable and price exactly what
-    * the second probe buys back from predicate starvation. Starved
-    * probes (zero same-label neighbors anywhere) appear with k=0. */
-  val annRecallFilteredNprobe: Q = Q(
-    "ann_recall_filtered_nprobe",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val probes = broadcast(e.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-          col("v").as("pv"), col("n2").as("pn2")))
-      val exact = e.join(probes,
-          col("vec_id") =!= col("probe_id") && col("label") === col("p_label"))
-        .select(col("probe_id"), col("vec_id").as("n_id"),
-          cosWith("pv", "pn2", "v", "n2").as("cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"))
-      val approx = annFilteredNprobe.run(s, dir)
-        .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-      val per = exact.join(approx,
-          col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-      e.filter(expr(ProbeFilter)).select(col("vec_id").as("probe_id"))
-        .join(per, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          coalesce(col("k"), lit(0L)).as("k"),
-          coalesce(col("hits"), lit(0L)).as("hits"))
-        .withColumn("recall_pct",
-          when(col("k") === 0, lit(100L)).otherwise(expr("hits * 100 div k")))
-        .orderBy("probe_id")
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-            |), p AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, v AS pv
-            |  FROM e WHERE $ProbeFilter
-            |), bf_scored AS (
-            |  SELECT probe_id, e.vec_id AS n_id, ${duckCosine("pv", "e.v")} AS cos
-            |  FROM e JOIN p ON e.vec_id <> p.probe_id AND e.label = p.p_label
-            |), bf_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM bf_scored
-            |), exact AS (
-            |  SELECT probe_id, n_id FROM bf_ranked WHERE rank <= 5
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), cs AS (
-            |  SELECT e.vec_id, e.label, c_id, ${duckCosine("e.v", "cv")} AS c_cos
-            |  FROM e CROSS JOIN c
-            |), assigned AS (
-            |  SELECT vec_id, label, c_id AS cell FROM (
-            |    SELECT vec_id, label, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS rn
-            |    FROM cs
-            |  ) WHERE rn = 1
-            |), pc AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, c_id AS cell FROM (
-            |    SELECT vec_id, label, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS crn
-            |    FROM cs WHERE $ProbeFilter
-            |  ) WHERE crn <= 2
-            |), cand AS (
-            |  SELECT pc.probe_id, a.vec_id AS n_id
-            |  FROM assigned a JOIN pc ON a.cell = pc.cell
-            |    AND a.vec_id <> pc.probe_id AND a.label = pc.p_label
-            |), f_scored AS (
-            |  SELECT cand.probe_id, cand.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM cand
-            |  JOIN e ep ON cand.probe_id = ep.vec_id
-            |  JOIN e en ON cand.n_id = en.vec_id
-            |), f_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM f_scored
-            |), approx AS (
-            |  SELECT probe_id, n_id FROM f_ranked WHERE rank <= 5
-            |), per AS (
-            |  SELECT x.probe_id, count(*) AS k, count(a.n_id) AS hits
-            |  FROM exact x LEFT JOIN approx a
-            |    ON x.probe_id = a.probe_id AND x.n_id = a.n_id
-            |  GROUP BY 1
-            |)
-            |SELECT p.probe_id, coalesce(per.k, 0) AS k,
-            |  coalesce(per.hits, 0) AS hits,
-            |  CASE WHEN coalesce(per.k, 0) = 0 THEN 100
-            |       ELSE per.hits * 100 // per.k END AS recall_pct
-            |FROM p LEFT JOIN per ON p.probe_id = per.probe_id
-            |ORDER BY p.probe_id""".stripMargin))
-
-  /** Filtered search over the COMPRESSED index — ann_filtered_nprobe's
-    * metadata pre-filter composed with ann_ivf_pq's coded index: the
-    * query shape a production vector store actually serves (FAISS
-    * IDSelector / Milvus filtered search / Vespa filtered ANN). The
-    * label predicate lands on the (cell, label, codes) index slice —
-    * BELOW the ADC LUT join, so disqualified candidates never cost a
-    * table lookup, let alone a raw-vector read — then ADC-sums the
-    * survivors and exact-reranks the [[AdcShortlist]]-deep shortlist.
-    * At 100 TB each filtered query touches nprobe/k of the CODED
-    * index (4 ints + a label per row), and raw vectors are fetched
-    * for shortlist finalists only; nprobe=2 is carried over from
-    * ann_filtered_nprobe because a selective predicate starves
-    * single-cell candidate pools (measured on ann_recall_filtered).
-    * Every stage is the already-verified arithmetic of its parents,
-    * so the composition hash-matches the composed oracle. */
-  val annFilteredPq: Q = Q(
-    "ann_filtered_pq",
-    (s, dir) => {
-      val e = emb(s, dir)
-      // offline: labeled coarse cells + PQ codes
-      val cents = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2")))
-      val cellScores = e.crossJoin(cents)
-        .select(col("vec_id"), col("label"), col("c_id"),
-          cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-      val assigned = cellScores.groupBy("vec_id", "label")
-        .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-      val sub = pqSubvectors(s, dir).localCheckpoint()
-      val cb = pqCodebook(sub)
-      val enc = sub.join(broadcast(cb), "m")
-        .select(col("vec_id"), col("m"), col("c_id"),
-          sqDist("sn2", "cn2", "sv", "cd").as("d"))
-        .groupBy("vec_id", "m")
-        .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
-      val indexed = enc.join(assigned, "vec_id")
-      // online: probed cells -> label filter on the coded slice ->
-      // ADC -> exact rerank
-      val probeCells = cellScores.filter(expr(ProbeFilter))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
-        .filter(col("crn") <= 2)
-        .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-          col("c_id").as("cell"))
-      val lut = sub.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("m").as("pm"),
-          col("sv").as("psv"), col("sn2").as("psn2"))
-        .join(cb, col("pm") === col("m"))
-        .select(col("probe_id"), col("m"), col("c_id"),
-          sqDist("psn2", "cn2", "psv", "cd").as("d"))
-      val shortlist = indexed.join(broadcast(probeCells), "cell")
-        .filter(col("vec_id") =!= col("probe_id") &&
-          col("label") === col("p_label"))
-        .join(broadcast(lut), Seq("probe_id", "m", "c_id"))
-        .select(col("probe_id"), col("vec_id").as("n_id"), col("d"))
-        .groupBy("probe_id", "n_id")
-        .agg(sum(col("d")).cast("long").as("adist"))
-        .withColumn("rq", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("adist"), col("n_id"))))
-        .filter(col("rq") <= AdcShortlist)
-      shortlist
-        .join(e.select(col("vec_id"), col("v").as("pv"), col("n2").as("pn2")),
-          col("probe_id") === col("vec_id")).drop("vec_id")
-        .join(e.select(col("vec_id"), col("v").as("nv"), col("n2").as("nn2")),
-          col("n_id") === col("vec_id"))
-        .select(col("probe_id"), col("n_id"),
-          cosWith("pv", "pn2", "nv", "nn2").as("cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"), col("rank"),
-          round(col("cos"), 6).as("cos_sim"))
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), cs AS (
-            |  SELECT e.vec_id, e.label, c_id, ${duckCosine("e.v", "cv")} AS c_cos
-            |  FROM e CROSS JOIN c
-            |), assigned AS (
-            |  SELECT vec_id, label, c_id AS cell FROM (
-            |    SELECT vec_id, label, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS rn
-            |    FROM cs
-            |  ) WHERE rn = 1
-            |), pc AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, c_id AS cell FROM (
-            |    SELECT vec_id, label, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS crn
-            |    FROM cs WHERE $ProbeFilter
-            |  ) WHERE crn <= 2
-            |), $pqCoreCtes, adcf AS (
-            |  SELECT pc.probe_id, a.vec_id AS n_id,
-            |    CAST(sum(lut.dist) AS BIGINT) AS adist
-            |  FROM assigned a
-            |  JOIN pc ON a.cell = pc.cell AND a.vec_id <> pc.probe_id
-            |    AND a.label = pc.p_label
-            |  JOIN enc ON enc.vec_id = a.vec_id
-            |  JOIN lut ON lut.probe_id = pc.probe_id AND lut.m = enc.m
-            |    AND lut.c_id = enc.code
-            |  GROUP BY 1, 2
-            |), shortf AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY adist, n_id) AS rq
-            |    FROM adcf
-            |  ) WHERE rq <= $AdcShortlist
-            |), rerankedf AS (
-            |  SELECT s.probe_id, s.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM shortf s
-            |  JOIN e ep ON s.probe_id = ep.vec_id
-            |  JOIN e en ON s.n_id = en.vec_id
-            |)
-            |SELECT probe_id, n_id, rank, round(cos, 6) AS cos_sim
-            |FROM (
-            |  SELECT probe_id, n_id, cos,
-            |    row_number() OVER (PARTITION BY probe_id
-            |      ORDER BY cos DESC, n_id) AS rank
-            |  FROM rerankedf
-            |) WHERE rank <= 5""".stripMargin))
-
-  /** Recall@5 of filtered IVF-PQ vs the same filtered-exact ground
-    * truth as [[annRecallFiltered]] / [[annRecallFilteredNprobe]] —
-    * the three rows share one harness, so they price each lever
-    * separately: what the second probe buys back from predicate
-    * starvation, and what PQ compression then costs on top. Approx
-    * side materialized (localCheckpoint) before scoring, per the
-    * IVF-PQ recall discipline; starved probes surface with k=0. */
-  val annRecallFilteredPq: Q = Q(
-    "ann_recall_filtered_pq",
-    (s, dir) => {
-      val e = emb(s, dir)
-      val probes = broadcast(e.filter(expr(ProbeFilter))
-        .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-          col("v").as("pv"), col("n2").as("pn2")))
-      val exact = e.join(probes,
-          col("vec_id") =!= col("probe_id") && col("label") === col("p_label"))
-        .select(col("probe_id"), col("vec_id").as("n_id"),
-          cosWith("pv", "pn2", "v", "n2").as("cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("rank") <= 5)
-        .select(col("probe_id"), col("n_id"))
-      val approx = annFilteredPq.run(s, dir)
-        .select(col("probe_id").as("a_probe"), col("n_id").as("a_n"))
-        .localCheckpoint()
-      val per = exact.join(approx,
-          col("probe_id") === col("a_probe") && col("n_id") === col("a_n"), "left")
-        .groupBy("probe_id")
-        .agg(count(lit(1)).as("k"), count(col("a_n")).as("hits"))
-      e.filter(expr(ProbeFilter)).select(col("vec_id").as("probe_id"))
-        .join(per, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          coalesce(col("k"), lit(0L)).as("k"),
-          coalesce(col("hits"), lit(0L)).as("hits"))
-        .withColumn("recall_pct",
-          when(col("k") === 0, lit(100L)).otherwise(expr("hits * 100 div k")))
-        .orderBy("probe_id")
-    },
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-            |), p AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, v AS pv
-            |  FROM e WHERE $ProbeFilter
-            |), bf_scored AS (
-            |  SELECT probe_id, e.vec_id AS n_id, ${duckCosine("pv", "e.v")} AS cos
-            |  FROM e JOIN p ON e.vec_id <> p.probe_id AND e.label = p.p_label
-            |), bf_ranked AS (
-            |  SELECT probe_id, n_id,
-            |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, n_id) AS rank
-            |  FROM bf_scored
-            |), exact AS (
-            |  SELECT probe_id, n_id FROM bf_ranked WHERE rank <= 5
-            |), c AS (
-            |  SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16
-            |), cs AS (
-            |  SELECT e.vec_id, e.label, c_id, ${duckCosine("e.v", "cv")} AS c_cos
-            |  FROM e CROSS JOIN c
-            |), assigned AS (
-            |  SELECT vec_id, label, c_id AS cell FROM (
-            |    SELECT vec_id, label, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS rn
-            |    FROM cs
-            |  ) WHERE rn = 1
-            |), pc AS (
-            |  SELECT vec_id AS probe_id, label AS p_label, c_id AS cell FROM (
-            |    SELECT vec_id, label, c_id,
-            |      row_number() OVER (PARTITION BY vec_id
-            |        ORDER BY c_cos DESC, c_id) AS crn
-            |    FROM cs WHERE $ProbeFilter
-            |  ) WHERE crn <= 2
-            |), $pqCoreCtes, adcf AS (
-            |  SELECT pc.probe_id, a.vec_id AS n_id,
-            |    CAST(sum(lut.dist) AS BIGINT) AS adist
-            |  FROM assigned a
-            |  JOIN pc ON a.cell = pc.cell AND a.vec_id <> pc.probe_id
-            |    AND a.label = pc.p_label
-            |  JOIN enc ON enc.vec_id = a.vec_id
-            |  JOIN lut ON lut.probe_id = pc.probe_id AND lut.m = enc.m
-            |    AND lut.c_id = enc.code
-            |  GROUP BY 1, 2
-            |), shortf AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY adist, n_id) AS rq
-            |    FROM adcf
-            |  ) WHERE rq <= $AdcShortlist
-            |), rerankedf AS (
-            |  SELECT s.probe_id, s.n_id, ${duckCosine("ep.v", "en.v")} AS cos
-            |  FROM shortf s
-            |  JOIN e ep ON s.probe_id = ep.vec_id
-            |  JOIN e en ON s.n_id = en.vec_id
-            |), approx AS (
-            |  SELECT probe_id, n_id FROM (
-            |    SELECT probe_id, n_id,
-            |      row_number() OVER (PARTITION BY probe_id
-            |        ORDER BY cos DESC, n_id) AS rank
-            |    FROM rerankedf
-            |  ) WHERE rank <= 5
-            |), per AS (
-            |  SELECT x.probe_id, count(*) AS k, count(a.n_id) AS hits
-            |  FROM exact x LEFT JOIN approx a
-            |    ON x.probe_id = a.probe_id AND x.n_id = a.n_id
-            |  GROUP BY 1
-            |)
-            |SELECT p.probe_id, coalesce(per.k, 0) AS k,
-            |  coalesce(per.hits, 0) AS hits,
-            |  CASE WHEN coalesce(per.k, 0) = 0 THEN 100
-            |       ELSE per.hits * 100 // per.k END AS recall_pct
-            |FROM p LEFT JOIN per ON p.probe_id = per.probe_id
-            |ORDER BY p.probe_id""".stripMargin))
-
-  val all: Seq[Q] = Seq(annBruteforce, annLsh, annIvf, vecNorms, annRecall,
-    annRecallIvf, annIvfNprobe, vecQuantize, annRecallNprobe, annQuantized,
-    annRecallQuantized, clusterKmeans, dedupSemantic, dedupBlockingRecall,
-    annIncremental, annPq, annRecallPq, annIvfPq, annRecallIvfPq,
-    annIvfPqOpq, annRecallIvfPqOpq,
-    annIvfPqRes, annRecallIvfPqRes, annIvfPqOpqRes, annRecallIvfPqOpqRes,
-    annIvfPqRvOpqRes, annRecallIvfPqRvOpqRes,
-    annIvfAdc, annRecallIvfAdc, vecProject,
-    annFiltered, annRecallFiltered, annFilteredNprobe, annRecallFilteredNprobe,
-    annFilteredPq, annRecallFilteredPq)
+  val all: Seq[Q] = ladderRows ++ Seq(vecNorms, vecQuantize, vecProject,
+    clusterKmeans, dedupSemantic, dedupBlockingRecall, annIncremental)
 }

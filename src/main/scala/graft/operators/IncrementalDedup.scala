@@ -164,17 +164,6 @@ object IncrementalDedup {
       repSigs: DataFrame, indexRoot: String): Unit = {
     val sp = members.sparkSession
     graft.functions.Native.install(sp) // idempotent
-    // GRAFT_INC_TIMING=1: per-phase wall marks on stdout — the ops
-    // instrumentation the round-15 per-batch cost work was driven by
-    // (a real deployment hangs metrics on exactly these boundaries)
-    val t0 = System.nanoTime()
-    // Marks sit immediately AFTER a materializing action (the three
-    // collects and the two writes) and are named for the action they
-    // bracket — a mark after a lazy DataFrame definition would
-    // timestamp driver-side plan construction, not the phase.
-    def mark(s: String): Unit =
-      if (sys.env.contains("GRAFT_INC_TIMING"))
-        println(f"[inc] $s%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // batch-scoped persists, ALL released in the one finally: blocks
     // that linger past the batch (as localCheckpoint's would, until
     // GC) starve later queries' execution memory in a shared JVM —
@@ -213,7 +202,6 @@ object IncrementalDedup {
         .distinct().collect()
       val mbkts = pre.filter(_.getInt(1) == 0).map(_.getInt(0)).sorted
       val ibkts = pre.filter(_.getInt(1) == 1).map(_.getInt(0)).sorted
-      mark("kbkts") // reps materialized + combined pruning collect
       val oldMin = famsRead(mbkts)
         .groupBy("fpa", "fpb").agg(min("doc_id").as("omin"))
       // el: one row per eligible batch family with old/new min
@@ -254,7 +242,6 @@ object IncrementalDedup {
       val sbkts = cand
         .select(keyBkt(col("pfa"), col("pfb")).as("kbkt"))
         .distinct().collect().map(_.getInt(0)).sorted
-      mark("sbkts") // cand materialized + partner-kbkt distinct-collect
       val pFams = pst(famsRead(sbkts))
       locally {
         val partnerSigs = pFams.filter(col("sig").isNotNull)
@@ -292,15 +279,12 @@ object IncrementalDedup {
         // pruned READS cheap as batches accumulate (measured: without
         // it the next batches' index scans pay for thousands of shard
         // files).
-        val bandsAppend = scala.concurrent.Future {
+        graft.Par.pair(sp)(
           newBands.repartition(col("ibkt"))
             .write.mode("append").partitionBy("ibkt")
-            .parquet(s"$indexRoot/bands")
-        }(scala.concurrent.ExecutionContext.global)
-        try {
+            .parquet(s"$indexRoot/bands"), {
           intraRej.unionByName(crossRej).distinct()
             .write.mode("append").parquet(s"$indexRoot/rejected")
-          mark("rej-write")
           // ---- state append: fams — new texts once, a null-sig fams
           // row on min improvement
           ev.select(col("fpa"), col("fpb"), col("nmin").as("doc_id"),
@@ -308,14 +292,8 @@ object IncrementalDedup {
               keyBkt(col("fpa"), col("fpb")).as("kbkt"))
             .repartition(col("kbkt"))
             .write.mode("append").partitionBy("kbkt").parquet(s"$indexRoot/fams")
-        } finally {
-          // join the overlapped write before anything can unpersist
-          // its inputs; a bands failure must fail the batch loudly
-          scala.concurrent.Await.ready(bandsAppend,
-            scala.concurrent.duration.Duration.Inf); ()
-        }
-        bandsAppend.value.get.get
-        mark("state-write")
+        })
+        ()
       }
     } finally {
       persisted.foreach(_.unpersist()); ()

@@ -226,8 +226,6 @@ object Streams {
     } catch { case scala.util.control.NonFatal(_) => None }
     val sized = batchBytes.map(b =>
       ((b / (32L * 1024 * 1024)) + 1).toInt.max(1).min(prev.toInt))
-    if (sys.env.contains("GRAFT_INC_TIMING"))
-      println(s"[batch-shuffle] prev=$prev bytes=$batchBytes sized=$sized")
     sized match {
       case None => body
       case Some(n) =>

@@ -315,12 +315,29 @@ class AnnMultimodalSpec extends AnyFunSuite with SparkSpec {
       s"IVF-PQ returned pairs outside the probed cells' exact top-5: ${pqPairs -- nprobe}")
   }
 
-  test("PQ recall harness: k is 5 and recall is a valid percentage per probe") {
-    val rows = Ann.annRecallPq.run(spark, sfDir).collect()
-    assert(rows.map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L, 3L, 4L))
-    rows.foreach { r =>
-      val (k, hits, pct) = (r.getLong(1), r.getLong(2), r.getLong(3))
-      assert(k == 5 && hits <= k && pct == hits * 100 / k)
+  test("recall harness: every recall row's k, hits and recall match the driver") {
+    def byProbe(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+      df.select("probe_id", "n_id").collect()
+        .groupBy(_.getLong(0)).map { case (p, rs) => p -> rs.map(_.getLong(1)).toSet }
+    assert(Ann.recallLadder.size == 14)
+    for ((name, spec) <- Ann.recallLadder) {
+      val rows = SparkEntry.queries(name)(spark, sfDir).collect()
+      assert(rows.map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L, 3L, 4L), name)
+      // the harness's own inputs, collected and compared on the driver
+      val truth = byProbe(Ann.exactTopK(spark, sfDir, spec))
+      val found = byProbe(Ann.search(spark, sfDir, spec))
+      rows.foreach { r =>
+        val (probe, k, hits, pct) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        val exact = truth.getOrElse(probe, Set.empty[Long])
+        assert(k == exact.size, s"$name probe $probe")
+        // unfiltered truth always fills k; a label filter may starve it
+        if (spec.labelFilter) assert(k <= spec.k, name) else assert(k == spec.k, name)
+        assert(hits <= k, name)
+        assert(hits == (exact & found.getOrElse(probe, Set.empty[Long])).size,
+          s"$name probe $probe: hits $hits != driver-side overlap")
+        if (k == 0) assert(pct == 100L, name)
+        else assert(pct == hits * 100 / k, s"$name: recall must be the integer percentage")
+      }
     }
   }
 

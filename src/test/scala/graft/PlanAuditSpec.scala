@@ -258,8 +258,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // streaming face of q_approx_topk's shape 4).
     val allow = Set("q_stream_approx_topk")
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    for (n <- graft.tools.StreamingBnljCensus.streamingRows) {
-      val plans = graft.tools.StreamingBnljCensus.capturePlans(spark) {
+    for (n <- StreamingBnljCensus.streamingRows) {
+      val plans = StreamingBnljCensus.capturePlans(spark) {
         SparkEntry.queries(n)(spark, sfDir).collect(); ()
       }
       assert(plans.nonEmpty, s"$n captured no micro-batch plans")

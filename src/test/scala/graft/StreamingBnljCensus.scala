@@ -1,17 +1,13 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
-/** Measurement tool behind PlanAuditSpec's STREAMING product audit
-  * (round 15): every streaming registry row executes through
-  * foreachBatch (directly or via runBounded), so each micro-batch's
-  * real join topology surfaces as ordinary batch QueryExecutions —
-  * captured here with a QueryExecutionListener and censused for
-  * CartesianProduct / BroadcastNestedLoopJoin, the same discipline as
-  * the batch-side BnljCensus. Run after adding a streaming operator to
-  * refresh the committed allowlist.
-  * Usage: `runMain graft.tools.StreamingBnljCensus [sfDir]` */
+/** Plan capture behind PlanAuditSpec's STREAMING product audit:
+  * every streaming registry row executes through foreachBatch
+  * (directly or via runBounded), so each micro-batch's real join
+  * topology surfaces as ordinary batch QueryExecutions — captured here
+  * with a QueryExecutionListener. */
 object StreamingBnljCensus {
 
   /** Capture executed-plan strings of every batch action that runs
@@ -51,23 +47,4 @@ object StreamingBnljCensus {
   def streamingRows: Seq[String] =
     graft.streaming.Streams.all.map(_.name) ++
       Seq("dedup_incremental", "pipeline_curate_stream")
-
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    streamingRows.foreach { n =>
-      try {
-        val plans = capturePlans(spark) {
-          graft.SparkEntry.queries(n)(spark, dir).collect(); ()
-        }
-        val bnlj = plans.count(_.contains("BroadcastNestedLoopJoin"))
-        val cp = plans.count(_.contains("CartesianProduct"))
-        println(s"ROW $n plans=${plans.size} bnlj=$bnlj cp=$cp")
-      } catch { case e: Throwable => println(s"ERR $n ${e.getMessage.take(100)}") }
-    }
-    spark.stop()
-  }
 }

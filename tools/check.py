@@ -2,6 +2,8 @@
 """Local replica of the driver's correctness gate: for each query dumped
 by graft.Verify, run the oracle SQL in DuckDB over the same parquet
 tables, sort columns by name (and rows), and hash-compare values.
+Every key of oracle_sql.json must have a dump directory: a missing one
+(the row threw) is a failure.
 Usage: check.py <sfDir> <verifyOutDir>
 """
 import sys, os, json, math
@@ -39,10 +41,14 @@ def kinds(df: pd.DataFrame):
     return {c: df[c].dtype.kind for c in sorted(df.columns)}
 
 fails = 0
-for name in sorted(os.listdir(outdir)):
+dumped = {n for n in os.listdir(outdir) if os.path.isdir(os.path.join(outdir, n))}
+# Verify writes no directory for a row that threw: an oracle key with
+# no dump is a failure, not a skip
+for name in sorted(set(oracle) - dumped):
+    print(f"{name:24s} MISSING (no dump directory: the row threw or was not run)")
+    fails += 1
+for name in sorted(dumped):
     path = os.path.join(outdir, name)
-    if not os.path.isdir(path):
-        continue
     spark_df = con.sql(f"SELECT * FROM read_parquet('{path}/*.parquet')").df()
     if name not in oracle:
         print(f"{name:24s} rows-only: {len(spark_df)} rows " + ("OK" if len(spark_df) > 0 else "EMPTY!"))
