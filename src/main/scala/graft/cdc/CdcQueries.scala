@@ -5,80 +5,16 @@ import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** §A inventory rows. The change feed is synthesized deterministically
-  * from the `events` table by pure string concatenation of integer and
-  * string columns (no floats -> byte-identical JSON in Spark and in the
-  * DuckDB oracle): event_id becomes the scn, user_id the primary key,
-  * event_type maps onto op c/u/d exactly like the reference's
-  * insert/update/delete verification flow (reference: README.md
-  * "Verification" section).
+/** §A inventory rows over the synthetic change feed ([[Cdc.feedFrom]],
+  * built from the `events` table). Every row's Spark program and
+  * DuckDB oracle are assembled from the [[Cdc]] model and its oracle
+  * fragments.
   */
 object CdcQueries {
 
-  /** op mapping: signup->c (insert), error->d (delete), rest->u. */
-  private[cdc] val opSql =
-    "CASE event_type WHEN 'signup' THEN 'c' WHEN 'error' THEN 'd' ELSE 'u' END"
-
-  /** Build the OLR-style JSON feed column (Spark side).
-    *
-    * Invariant (spec-pinned in CdcSpec): scn = event_id is globally
-    * unique, so (key, scn) uniquely identifies an event and the (scn,
-    * xid) tiebreaks in the operators are deterministic. Redo-log SCNs
-    * are monotone per transaction in the reference too; consumers of a
-    * source that CAN emit duplicate (key, scn) must fold xid into every
-    * per-version collapse key (see cdcStreamScd2). */
+  /** The single-table feed over the `events` table (see [[Cdc.feedFrom]]). */
   def feed(s: SparkSession, dir: String): DataFrame =
-    feedFrom(Tables(s, dir).events)
-
-  /** Same, over an arbitrary events DataFrame — batch or streaming.
-    * `extra` columns (e.g. the event timestamp for a downstream
-    * watermark) ride along with the envelope untouched. */
-  def feedFrom(events: DataFrame, extra: org.apache.spark.sql.Column*): DataFrame = {
-    val e = events
-      .withColumn("op", expr(opSql))
-      .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
-      .withColumn("payload_name",
-        when(col("op") === "d", lit("before")).otherwise(lit("after")))
-    e.select(col("event_id") +: extra :+ concat(
-      lit("{\"scn\":"), col("event_id"),
-      lit(",\"tm\":"), unix_micros(col("ts")),
-      lit(",\"xid\":\""), col("user_id"), lit("."), col("event_id"),
-      lit("\",\"op\":\""), col("op"),
-      lit("\",\"key\":"), col("user_id"),
-      lit(",\""), col("payload_name"), lit("\":{\"id\":"), col("user_id"),
-      lit(",\"cents\":"), col("cents"),
-      lit(",\"type\":\""), col("event_type"), lit("\"}}")).as("json"): _*)
-  }
-
-  /** Same feed in DuckDB SQL (must concatenate identically). */
-  private[graft] val feedSql =
-    s"""SELECT event_id,
-       |  '{"scn":' || event_id ||
-       |  ',"tm":' || epoch_us(CAST(ts AS TIMESTAMP)) ||
-       |  ',"xid":"' || user_id || '.' || event_id ||
-       |  '","op":"' || ($opSql) ||
-       |  '","key":' || user_id ||
-       |  ',"' || (CASE WHEN ($opSql) = 'd' THEN 'before' ELSE 'after' END) ||
-       |  '":{"id":' || user_id ||
-       |  ',"cents":' || CAST(round(value * 100) AS BIGINT) ||
-       |  ',"type":"' || event_type || '"}}' AS json
-       |FROM events""".stripMargin
-
-  /** DuckDB equivalent of the typed parse (json_extract). */
-  private[graft] val parsedSql =
-    s"""SELECT
-       |  CAST(json_extract(json, '$$.scn') AS BIGINT) AS scn,
-       |  CAST(json_extract(json, '$$.tm') AS BIGINT) AS tm,
-       |  json_extract_string(json, '$$.xid') AS xid,
-       |  json_extract_string(json, '$$.op') AS op,
-       |  CAST(json_extract(json, '$$.key') AS BIGINT) AS key,
-       |  coalesce(CAST(json_extract(json, '$$.after.id') AS BIGINT), -1) AS after_id,
-       |  coalesce(CAST(json_extract(json, '$$.after.cents') AS BIGINT), -1) AS after_cents,
-       |  coalesce(json_extract_string(json, '$$.after.type'), '') AS after_type,
-       |  coalesce(CAST(json_extract(json, '$$.before.id') AS BIGINT), -1) AS before_id,
-       |  coalesce(CAST(json_extract(json, '$$.before.cents') AS BIGINT), -1) AS before_cents,
-       |  coalesce(json_extract_string(json, '$$.before.type'), '') AS before_type
-       |FROM feed""".stripMargin
+    Cdc.feedFrom(Tables(s, dir).events)
 
   private def parsed(s: SparkSession, dir: String): DataFrame =
     Cdc.parse(feed(s, dir), col("json"))
@@ -99,14 +35,12 @@ object CdcQueries {
   val cdcParse: Q = Q(
     "cdc_parse",
     (s, dir) => flatten(parsed(s, dir)).orderBy("scn"),
-    Some(s"""WITH feed AS ($feedSql)
-            |$parsedSql
-            |ORDER BY scn""".stripMargin))
+    Some(s"${Cdc.oracleFeed()}\nSELECT * FROM p ORDER BY scn"))
 
   val cdcUnwrap: Q = Q(
     "cdc_unwrap",
     (s, dir) => Cdc.unwrap(parsed(s, dir), rewrite = false).orderBy("scn"),
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql)
+    Some(s"""${Cdc.oracleFeed()}
             |SELECT scn, key, after_id AS id, after_cents AS cents,
             |  after_type AS type, 'false' AS __deleted
             |FROM p WHERE op <> 'd' ORDER BY scn""".stripMargin))
@@ -114,7 +48,7 @@ object CdcQueries {
   val cdcDeleteRewrite: Q = Q(
     "cdc_delete_rewrite",
     (s, dir) => Cdc.unwrap(parsed(s, dir), rewrite = true).orderBy("scn"),
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql)
+    Some(s"""${Cdc.oracleFeed()}
             |SELECT scn, key,
             |  CASE WHEN op='d' THEN before_id ELSE after_id END AS id,
             |  CASE WHEN op='d' THEN before_cents ELSE after_cents END AS cents,
@@ -132,41 +66,40 @@ object CdcQueries {
       typedLit(Seq(0, 1))).otherwise(typedLit(Seq(0)))))
     .drop("__copy")
 
+  /** [[redeliver]] then [[Cdc.dedup]] in DuckDB: CTEs `redelivered`
+    * and `deduped` over the parsed feed `p`. */
+  private val dedupedSql =
+    """redelivered AS (
+      |  SELECT * FROM p UNION ALL SELECT * FROM p WHERE scn % 10 = 0),
+      |deduped AS (
+      |  SELECT * EXCLUDE (rn) FROM (SELECT *, row_number() OVER
+      |      (PARTITION BY key, scn ORDER BY xid ASC) AS rn
+      |    FROM redelivered) WHERE rn = 1)""".stripMargin
+
   /** Redelivery simulation: every 10th event is delivered twice, then
     * deduped back to exactly-once. */
   val cdcDedupEvents: Q = Q(
     "cdc_dedup_events",
-    (s, dir) => {
-      val redelivered = redeliver(flatten(parsed(s, dir)))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("key", "scn").orderBy(col("xid").asc)
-      redelivered.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-        .groupBy("key").agg(count(lit(1)).as("n_events"), max("scn").as("max_scn"))
-        .orderBy("key")
-    },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
-            |redelivered AS (
-            |  SELECT * FROM p UNION ALL SELECT * FROM p WHERE scn % 10 = 0),
-            |deduped AS (
-            |  SELECT * FROM (SELECT *, row_number() OVER
-            |      (PARTITION BY key, scn ORDER BY xid ASC) AS rn
-            |    FROM redelivered) WHERE rn = 1)
+    (s, dir) => Cdc.dedup(redeliver(flatten(parsed(s, dir))))
+      .groupBy("key").agg(count(lit(1)).as("n_events"), max("scn").as("max_scn"))
+      .orderBy("key"),
+    Some(s"""${Cdc.oracleFeed()},
+            |$dedupedSql
             |SELECT key, count(*) AS n_events, max(scn) AS max_scn
             |FROM deduped GROUP BY key ORDER BY key""".stripMargin))
+
+  /** The materialized snapshot in DuckDB, restricted by `where`: the
+    * oracle of every row that must equal cdc_materialize. */
+  private def snapshotSql(where: String): String =
+    s"""${Cdc.liveSql()}
+       |SELECT key, after_id AS id, after_cents AS cents,
+       |  after_type AS type, scn AS last_scn
+       |FROM live WHERE $where ORDER BY key""".stripMargin
 
   val cdcMaterialize: Q = Q(
     "cdc_materialize",
     (s, dir) => Cdc.materialize(parsed(s, dir)).orderBy("key"),
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p)
-            |SELECT key, after_id AS id, after_cents AS cents,
-            |  after_type AS type, scn AS last_scn
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |ORDER BY key""".stripMargin))
+    Some(snapshotSql("TRUE")))
 
   /** ksqlDB-style stream-table enrichment: change feed joined to a
     * broadcast dimension (customer keyed by custkey = CDC key). */
@@ -181,16 +114,10 @@ object CdcQueries {
           col("c_nationkey"))
         .orderBy("key")
     },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p),
-            |snap AS (
-            |  SELECT key, after_cents AS cents, after_type AS type
-            |  FROM ranked WHERE rn = 1 AND op <> 'd')
-            |SELECT key, cents, type, c_name, c_nationkey
-            |FROM snap JOIN customer ON key = c_custkey
+    Some(s"""${Cdc.liveSql()}
+            |SELECT key, after_cents AS cents, after_type AS type,
+            |  c_name, c_nationkey
+            |FROM live JOIN customer ON key = c_custkey
             |ORDER BY key""".stripMargin))
 
   /** Kafka transport round-trip: feed -> Kafka wire records (key/value
@@ -207,7 +134,7 @@ object CdcQueries {
         col("topic"), col("partition"), col("offset"))
         .orderBy("scn")
     },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql)
+    Some(s"""${Cdc.oracleFeed()}
             |SELECT scn, tm, xid, op, key,
             |  after_id, after_cents, after_type,
             |  before_id, before_cents, before_type,
@@ -234,9 +161,7 @@ object CdcQueries {
       val framed = AvroWire.frame(AvroWire.encode(parsed(s, dir)), schemaId = id)
       flatten(AvroWire.decodeFramed(framed, registry.byId)).orderBy("scn")
     },
-    Some(s"""WITH feed AS ($feedSql)
-            |$parsedSql
-            |ORDER BY scn""".stripMargin))
+    cdcParse.oracle)
 
   /** Wire-schema evolution (the Schema Registry contract, consumer
     * side): the feed is ENCODED with the v1 writer schema and DECODED
@@ -250,7 +175,7 @@ object CdcQueries {
     (s, dir) => flatten(graft.sources.AvroWire.decodeEvolved(
       graft.sources.AvroWire.encode(parsed(s, dir))), col("origin"))
       .orderBy("scn"),
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql)
+    Some(s"""${Cdc.oracleFeed()}
             |SELECT *, 'olr' AS origin FROM p
             |ORDER BY scn""".stripMargin))
 
@@ -275,7 +200,7 @@ object CdcQueries {
           .as("before"))
       Cdc.materialize(parsed(s, dir).unionByName(seed)).orderBy("key")
     },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
+    Some(s"""${Cdc.oracleFeed()},
             |seed AS (
             |  SELECT CAST(-1 AS BIGINT) AS scn, '0.0' AS xid, 'c' AS op,
             |    c_custkey AS key, c_custkey AS after_id,
@@ -285,14 +210,10 @@ object CdcQueries {
             |allev AS (
             |  SELECT scn, xid, op, key, after_id, after_cents, after_type FROM p
             |  UNION ALL SELECT * FROM seed),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM allev)
+            |live AS (${Cdc.latestSql("allev")})
             |SELECT key, after_id AS id, after_cents AS cents,
             |  after_type AS type, scn AS last_scn
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |ORDER BY key""".stripMargin))
+            |FROM live ORDER BY key""".stripMargin))
 
   /** Transaction assembly: group the interleaved event stream back
     * into source transactions and emit per-transaction summaries in
@@ -314,7 +235,7 @@ object CdcQueries {
         countDistinct("key").as("n_keys"),
         min("scn").as("first_scn"), max("scn").as("commit_scn"))
       .orderBy("txn_id"),
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql)
+    Some(s"""${Cdc.oracleFeed()}
             |SELECT scn // 20 AS txn_id, count(*) AS n_ops,
             |  CAST(sum(CASE WHEN op = 'c' THEN 1 ELSE 0 END) AS BIGINT) AS n_inserts,
             |  CAST(sum(CASE WHEN op = 'u' THEN 1 ELSE 0 END) AS BIGINT) AS n_updates,
@@ -322,6 +243,22 @@ object CdcQueries {
             |  count(DISTINCT key) AS n_keys,
             |  min(scn) AS first_scn, max(scn) AS commit_scn
             |FROM p GROUP BY 1 ORDER BY txn_id""".stripMargin))
+
+  /** Every non-delete event of a flattened feed as a version, closed by
+    * the key's next event (`next_scn`, null while open): the core of the
+    * SCD2 history and the AS OF lookup. */
+  private def versions(p: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("key").orderBy(col("scn").asc, col("xid").asc)
+    p.withColumn("next_scn", lead("scn", 1).over(w)).filter(col("op") =!= "d")
+  }
+
+  /** [[versions]] in DuckDB: CTE `versions` over the parsed feed `p`. */
+  private val versionsSql =
+    """versions AS (
+      |  SELECT * FROM (SELECT *, lead(scn) OVER
+      |      (PARTITION BY key ORDER BY scn ASC, xid ASC) AS next_scn
+      |    FROM p) WHERE op <> 'd')""".stripMargin
 
   /** SCD2 history: the changelog as a versioned audit table — every
     * non-delete event is a version valid from its scn until the next
@@ -334,29 +271,20 @@ object CdcQueries {
     * isn't). */
   val cdcScd2History: Q = Q(
     "cdc_scd2_history",
-    (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("key").orderBy(col("scn").asc, col("xid").asc)
-      flatten(parsed(s, dir))
-        .withColumn("next_scn", lead("scn", 1).over(w))
-        .filter(col("op") =!= "d")
-        .select(col("key"), col("scn").as("valid_from"),
-          coalesce(col("next_scn"), lit(-1L)).as("valid_to"),
-          col("after_id").as("id"), col("after_cents").as("cents"),
-          col("after_type").as("type"),
-          col("next_scn").isNull.as("is_current"))
-        .orderBy("key", "valid_from")
-    },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
-            |v AS (
-            |  SELECT *, lead(scn) OVER
-            |    (PARTITION BY key ORDER BY scn ASC, xid ASC) AS next_scn
-            |  FROM p)
+    (s, dir) => versions(flatten(parsed(s, dir)))
+      .select(col("key"), col("scn").as("valid_from"),
+        coalesce(col("next_scn"), lit(-1L)).as("valid_to"),
+        col("after_id").as("id"), col("after_cents").as("cents"),
+        col("after_type").as("type"),
+        col("next_scn").isNull.as("is_current"))
+      .orderBy("key", "valid_from"),
+    Some(s"""${Cdc.oracleFeed()},
+            |$versionsSql
             |SELECT key, scn AS valid_from,
             |  coalesce(next_scn, -1) AS valid_to,
             |  after_id AS id, after_cents AS cents, after_type AS type,
             |  next_scn IS NULL AS is_current
-            |FROM v WHERE op <> 'd'
+            |FROM versions
             |ORDER BY key, valid_from""".stripMargin))
 
   /** Dead-letter routing: corrupt wire records (every 97th payload is
@@ -374,14 +302,14 @@ object CdcQueries {
         when(col("event_id") % 97 === 0,
           expr("substr(json, 1, length(json) - 2)"))
           .otherwise(col("json")))
-      wire.withColumn("e", from_json(col("wire"), Cdc.changeSchema))
+      Cdc.parse(wire, col("wire"), keep = Seq("event_id"))
         .select(col("event_id"),
-          col("e.scn").isNotNull.as("is_valid"),
-          coalesce(col("e.scn"), lit(-1L)).as("scn"),
-          coalesce(col("e.key"), lit(-1L)).as("key"))
+          col("scn").isNotNull.as("is_valid"),
+          coalesce(col("scn"), lit(-1L)).as("scn"),
+          coalesce(col("key"), lit(-1L)).as("key"))
         .orderBy("event_id")
     },
-    Some(s"""WITH feed AS ($feedSql),
+    Some(s"""WITH feed AS (${Cdc.feedSql()}),
             |wire AS (
             |  SELECT event_id,
             |    CASE WHEN event_id % 97 = 0
@@ -416,7 +344,7 @@ object CdcQueries {
           col("after_cents").as("cents"), col("version_rank"))
         .orderBy("key", "version_rank")
     },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
+    Some(s"""${Cdc.oracleFeed()},
             |ranked AS (
             |  SELECT *, row_number() OVER
             |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS version_rank
@@ -448,24 +376,13 @@ object CdcQueries {
           max("last_scn").as("max_scn"))
         .orderBy("c_nationkey")
     },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
-            |redelivered AS (
-            |  SELECT * FROM p UNION ALL SELECT * FROM p WHERE scn % 10 = 0),
-            |deduped AS (
-            |  SELECT * FROM (SELECT *, row_number() OVER
-            |      (PARTITION BY key, scn ORDER BY xid ASC) AS rn
-            |    FROM redelivered) WHERE rn = 1),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn2
-            |  FROM deduped),
-            |snap AS (
-            |  SELECT key, after_cents AS cents, scn AS last_scn
-            |  FROM ranked WHERE rn2 = 1 AND op <> 'd')
+    Some(s"""${Cdc.oracleFeed()},
+            |$dedupedSql,
+            |live AS (${Cdc.latestSql("deduped")})
             |SELECT c_nationkey, count(*) AS n_keys,
-            |  CAST(sum(cents) AS BIGINT) AS sum_cents,
-            |  max(last_scn) AS max_scn
-            |FROM snap JOIN customer ON key = c_custkey
+            |  CAST(sum(after_cents) AS BIGINT) AS sum_cents,
+            |  max(scn) AS max_scn
+            |FROM live JOIN customer ON key = c_custkey
             |GROUP BY 1 ORDER BY c_nationkey""".stripMargin))
 
   /** Point-in-time (AS OF) lookup against the SCD2 history — the
@@ -479,12 +396,8 @@ object CdcQueries {
   val cdcTimeTravel: Q = Q(
     "cdc_time_travel",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("key").orderBy(col("scn").asc, col("xid").asc)
       val p = flatten(parsed(s, dir))
-      val hist = p
-        .withColumn("next_scn", lead("scn", 1).over(w))
-        .filter(col("op") =!= "d")
+      val hist = versions(p)
         .select(col("key"), col("scn").as("valid_from"),
           coalesce(col("next_scn"), lit(Long.MaxValue)).as("valid_to_x"),
           col("after_id").as("id"), col("after_cents").as("cents"),
@@ -496,16 +409,13 @@ object CdcQueries {
         .select(col("key"), col("as_of"), col("id"), col("cents"), col("type"))
         .orderBy("key", "as_of")
     },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
-            |v AS (
-            |  SELECT *, lead(scn) OVER
-            |    (PARTITION BY key ORDER BY scn ASC, xid ASC) AS next_scn
-            |  FROM p),
+    Some(s"""${Cdc.oracleFeed()},
+            |$versionsSql,
             |hist AS (
             |  SELECT key, scn AS valid_from,
             |    coalesce(next_scn, 9223372036854775807) AS valid_to_x,
             |    after_id AS id, after_cents AS cents, after_type AS type
-            |  FROM v WHERE op <> 'd'),
+            |  FROM versions),
             |probes AS (
             |  SELECT key AS p_key, scn AS as_of FROM p WHERE scn % 50 = 0)
             |SELECT key, as_of, id, cents, type
@@ -524,15 +434,7 @@ object CdcQueries {
   private def lakeTable(s: SparkSession, dir: String): String =
     stagedLakes.computeIfAbsent((s.sparkContext.applicationId, dir), { _ =>
       val target = graft.sources.Formats.scratchDir("graft_pull") + "/tbl"
-      val batch = parsed(s, dir).select(
-        col("key"), col("scn"), col("xid"), col("op"),
-        when(col("op") === "d", col("before.id"))
-          .otherwise(col("after.id")).as("id"),
-        when(col("op") === "d", col("before.cents"))
-          .otherwise(col("after.cents")).as("cents"),
-        when(col("op") === "d", col("before.type"))
-          .otherwise(col("after.type")).as("typ"))
-      graft.sinks.ParquetUpsert.applyBatch(batch, target)
+      graft.sinks.ParquetUpsert.applyBatch(Cdc.changeRows(parsed(s, dir)), target)
       target
     })
 
@@ -567,16 +469,7 @@ object CdcQueries {
           col("scn").as("last_scn"))
         .orderBy("key")
     },
-    Some(s"""WITH feed AS ($feedSql), p AS ($parsedSql),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p)
-            |SELECT key, after_id AS id, after_cents AS cents,
-            |  after_type AS type, scn AS last_scn
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |  AND key IN (${PullKeys.mkString(", ")})
-            |ORDER BY key""".stripMargin))
+    Some(snapshotSql(s"key IN (${PullKeys.mkString(", ")})")))
 
   val all: Seq[Q] = Seq(cdcParse, cdcUnwrap, cdcDeleteRewrite,
     cdcDedupEvents, cdcMaterialize, cdcSnapshotJoin, cdcKafkaWire,

@@ -57,28 +57,20 @@ object ChangelogAgg {
   def fullImageFeedFrom(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("event_id")
     val e = events
-      .withColumn("op", expr(
-        "CASE event_type WHEN 'signup' THEN 'c' WHEN 'error' THEN 'd' ELSE 'u' END"))
+      .withColumn("op", expr(Cdc.opSql))
       .withColumn("a_cents", when(col("op") === "d", lit(null))
-        .otherwise(expr("CAST(round(value * 100) AS BIGINT)")))
+        .otherwise(expr(Cdc.centsSql)))
       .withColumn("a_type", when(col("op") === "d", lit(null))
         .otherwise(col("event_type")))
       .withColumn("b_cents", lag("a_cents", 1).over(w))
       .withColumn("b_type", lag("a_type", 1).over(w))
     def img(name: String, cents: String, typ: String) =
       when(col(cents).isNotNull, concat(
-        lit(s""","$name":{"id":"""), col("user_id"),
-        lit(",\"cents\":"), col(cents),
-        lit(",\"type\":\""), col(typ), lit("\"}"))).otherwise(lit(""))
-    e.select(col("event_id"), concat(
-      lit("{\"scn\":"), col("event_id"),
-      lit(",\"tm\":"), unix_micros(col("ts")),
-      lit(",\"xid\":\""), col("user_id"), lit("."), col("event_id"),
-      lit("\",\"op\":\""), col("op"),
-      lit("\",\"key\":"), col("user_id"),
+        Cdc.image(lit(name), col(cents), col(typ), "\"}"): _*)).otherwise(lit(""))
+    e.select(col("event_id"), concat(Cdc.head(routed = false) ++ Seq(
       img("after", "a_cents", "a_type"),
       img("before", "b_cents", "b_type"),
-      lit("}")).as("json"))
+      lit("}")): _*).as("json"))
   }
 
   /** One staged full-image wire directory per (session, source dir),
@@ -171,16 +163,11 @@ object ChangelogAgg {
     * the latest row per key, then group — so a hash match proves the
     * delta maintenance path equals the snapshot path exactly. */
   private[graft] val snapshotAggSql =
-    s"""WITH feed AS (${CdcQueries.feedSql}), p AS (${CdcQueries.parsedSql}),
-       |ranked AS (
-       |  SELECT *, row_number() OVER
-       |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn
-       |  FROM p)
+    s"""${Cdc.liveSql()}
        |SELECT after_type AS type,
        |  CAST(sum(after_cents) AS BIGINT) AS sum_cents,
        |  count(*) AS live_rows
-       |FROM ranked WHERE rn = 1 AND op <> 'd'
-       |GROUP BY 1 ORDER BY type""".stripMargin
+       |FROM live GROUP BY 1 ORDER BY type""".stripMargin
 
   val cdcChangelogAgg: Q = Q(
     "cdc_changelog_agg",

@@ -38,92 +38,36 @@ object Router {
 
   /** Routing rule of the synthetic feed: which source table an event
     * belongs to. Deliberately NOT a function of the key, so the same
-    * key appears in both tables as two independent entities. */
-  private[cdc] val tblSql =
-    "CASE WHEN event_id % 3 = 0 THEN 'CUSTOMERS' ELSE 'ORDERS' END"
+    * key appears in both tables as two independent entities. The
+    * envelope builders take it as their `table` argument. */
+  private[graft] val routing: Option[String] =
+    Some("CASE WHEN event_id % 3 = 0 THEN 'CUSTOMERS' ELSE 'ORDERS' END")
 
   /** The multiplexed OLR-style feed: single-table feed shape plus the
     * `owner`/`table` envelope fields OLR stamps on every event. */
   def routedFeed(s: SparkSession, dir: String): DataFrame =
-    routedFeedFrom(Tables(s, dir).events)
-
-  /** Same, over an arbitrary events DataFrame — batch or streaming. */
-  def routedFeedFrom(events: DataFrame): DataFrame = {
-    val e = events
-      .withColumn("op", expr(CdcQueries.opSql))
-      .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
-      .withColumn("tbl", expr(tblSql))
-      .withColumn("payload_name",
-        when(col("op") === "d", lit("before")).otherwise(lit("after")))
-    e.select(col("event_id"), concat(
-      lit("{\"scn\":"), col("event_id"),
-      lit(",\"tm\":"), unix_micros(col("ts")),
-      lit(",\"xid\":\""), col("user_id"), lit("."), col("event_id"),
-      lit("\",\"op\":\""), col("op"),
-      lit("\",\"owner\":\"GRAFT\",\"table\":\""), col("tbl"),
-      lit("\",\"key\":"), col("user_id"),
-      lit(",\""), col("payload_name"), lit("\":{\"id\":"), col("user_id"),
-      lit(",\"cents\":"), col("cents"),
-      lit(",\"type\":\""), col("event_type"), lit("\"}}")).as("json"))
-  }
-
-  /** Same feed in DuckDB SQL (must concatenate identically). */
-  private[graft] val routedFeedSql =
-    s"""SELECT event_id,
-       |  '{"scn":' || event_id ||
-       |  ',"tm":' || epoch_us(CAST(ts AS TIMESTAMP)) ||
-       |  ',"xid":"' || user_id || '.' || event_id ||
-       |  '","op":"' || (${CdcQueries.opSql}) ||
-       |  '","owner":"GRAFT","table":"' || ($tblSql) ||
-       |  '","key":' || user_id ||
-       |  ',"' || (CASE WHEN (${CdcQueries.opSql}) = 'd' THEN 'before' ELSE 'after' END) ||
-       |  '":{"id":' || user_id ||
-       |  ',"cents":' || CAST(round(value * 100) AS BIGINT) ||
-       |  ',"type":"' || event_type || '"}}' AS json
-       |FROM events""".stripMargin
+    Cdc.feedFrom(Tables(s, dir).events, routing)
 
   /** Wire schema of one multiplexed event: the single-table change
-    * schema plus the routing envelope. */
+    * schema with the routing envelope inserted ahead of the key. */
   val routedSchema: StructType = {
-    val payload = Cdc.changeSchema("after").dataType
-    StructType(Seq(
-      StructField("scn", LongType),
-      StructField("tm", LongType),
-      StructField("xid", StringType),
-      StructField("op", StringType),
-      StructField("owner", StringType),
-      StructField("table", StringType),
-      StructField("key", LongType),
-      StructField("after", payload),
-      StructField("before", payload)))
+    val (head, tail) = Cdc.changeSchema.fields.splitAt(
+      Cdc.changeSchema.fieldIndex("key"))
+    StructType(head ++ Seq(StructField("owner", StringType),
+      StructField("table", StringType)) ++ tail)
   }
 
-  /** The ONE parse of the multiplexed feed. Every downstream table
-    * consumes these columns; none re-runs from_json. */
+  /** The ONE parse of the multiplexed feed (the envelope's `table`
+    * surfaces as `tbl`). Every downstream table consumes these columns;
+    * none re-runs from_json. */
   def parseRouted(feed: DataFrame, jsonCol: Column): DataFrame =
-    feed.select(from_json(jsonCol, routedSchema).as("e"))
-      .select(
-        col("e.scn").as("scn"), col("e.tm").as("tm"), col("e.xid").as("xid"),
-        col("e.op").as("op"), col("e.owner").as("owner"),
-        col("e").getField("table").as("tbl"), col("e.key").as("key"),
-        col("e.after").as("after"), col("e.before").as("before"))
+    Cdc.parse(feed, jsonCol, routedSchema).withColumnRenamed("table", "tbl")
 
   /** Latest-per-key materialization of EVERY routed table in one
     * aggregate: group on (owner, tbl, key) — one shuffle total, however
-    * many tables the feed carries. Same skew-immune max_by shape as
-    * [[Cdc.materialize]]. */
+    * many tables the feed carries. */
   def materializeRouted(parsed: DataFrame): DataFrame =
-    parsed
-      .groupBy("owner", "tbl", "key")
-      .agg(max_by(
-        struct(col("op"), col("after"), col("scn")),
-        struct(col("scn"), col("xid"))).as("w"))
-      .filter(col("w.op") =!= "d")
-      .select(col("owner"), col("tbl"), col("key"),
-        col("w.after.id").as("id"),
-        col("w.after.cents").as("cents"),
-        col("w.after.type").as("type"),
-        col("w.scn").as("last_scn"))
+    Cdc.materialize(parsed, Seq("owner", "tbl", "key"))
 
   /** Per-table sink fan-out (the table.name.format analog): one write
     * lays every table's snapshot into its own `tbl=<NAME>/` directory.
@@ -201,26 +145,10 @@ object Router {
     (s, dir) => materializeRouted(
       parseRouted(routedFeed(s, dir), col("json")))
       .orderBy("tbl", "key"),
-    Some(s"""WITH feed AS ($routedFeedSql), p AS (
-            |  SELECT
-            |    CAST(json_extract(json, '$$.scn') AS BIGINT) AS scn,
-            |    json_extract_string(json, '$$.xid') AS xid,
-            |    json_extract_string(json, '$$.op') AS op,
-            |    json_extract_string(json, '$$.owner') AS owner,
-            |    json_extract_string(json, '$$.table') AS tbl,
-            |    CAST(json_extract(json, '$$.key') AS BIGINT) AS key,
-            |    CAST(json_extract(json, '$$.after.id') AS BIGINT) AS after_id,
-            |    CAST(json_extract(json, '$$.after.cents') AS BIGINT) AS after_cents,
-            |    json_extract_string(json, '$$.after.type') AS after_type
-            |  FROM feed),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY tbl, key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p)
+    Some(s"""${Cdc.liveSql(routing)}
             |SELECT owner, tbl, key, after_id AS id, after_cents AS cents,
             |  after_type AS type, scn AS last_scn
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |ORDER BY tbl, key""".stripMargin))
+            |FROM live ORDER BY tbl, key""".stripMargin))
 
   /** Feed-integrity audit — the monitoring query a CDC operator runs
     * against every replicated table (the reference's equivalent
@@ -266,18 +194,11 @@ object Router {
           min("scn").as("min_scn"), max("scn").as("max_scn"))
         .orderBy("owner", "tbl")
     },
-    Some(s"""WITH feed AS ($routedFeedSql), p AS (
-            |  SELECT
-            |    CAST(json_extract(json, '$$.scn') AS BIGINT) AS scn,
-            |    CAST(json_extract(json, '$$.tm') AS BIGINT)
-            |      - CASE WHEN CAST(json_extract(json, '$$.scn') AS BIGINT) % 13 = 0
-            |             THEN 3600000000 ELSE 0 END AS tm,
-            |    json_extract_string(json, '$$.xid') AS xid,
-            |    json_extract_string(json, '$$.owner') AS owner,
-            |    json_extract_string(json, '$$.table') AS tbl,
-            |    CAST(json_extract(json, '$$.key') AS BIGINT) AS key
-            |  FROM feed),
-            |r AS (SELECT * FROM p UNION ALL SELECT * FROM p WHERE scn % 10 = 0),
+    Some(s"""${Cdc.oracleFeed(routing)},
+            |skewed AS (
+            |  SELECT * REPLACE (tm - CASE WHEN scn % 13 = 0
+            |    THEN 3600000000 ELSE 0 END AS tm) FROM p),
+            |r AS (SELECT * FROM skewed UNION ALL SELECT * FROM skewed WHERE scn % 10 = 0),
             |x AS (
             |  SELECT *, lag(tm) OVER
             |    (PARTITION BY owner, tbl, key ORDER BY scn, xid) AS prev_tm

@@ -350,7 +350,7 @@ object Relational {
            |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))
 
   /** Argmax pattern: latest order per customer — the same latest-per-key
-    * primitive the CDC materializer uses (cdc/Changelog.scala). */
+    * primitive the CDC materializer uses ([[graft.cdc.Cdc.latest]]). */
   val qArgmax: Q = Q(
     "q_argmax",
     (s, dir) => {

@@ -1,8 +1,9 @@
 package graft.sinks
 
+import graft.cdc.Cdc
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, PreparedStatement}
 
 /** JDBC upsert/delete sink — the Spark re-expression of the reference
   * pipeline's terminal stage: a JDBC sink connector configured with
@@ -21,7 +22,12 @@ import java.sql.{Connection, DriverManager}
   * Conflict resolution is monotonic-scn: an UPDATE only wins when the
   * incoming scn >= the stored last_scn, which makes redelivered batches
   * idempotent (exactly the at-least-once -> effectively-once contract
-  * the reference sink provides via Kafka per-key ordering).
+  * the reference sink provides via Kafka per-key ordering). Deletes go
+  * through the SAME guarded upsert and leave a tombstone row
+  * (`deleted = true`) instead of removing the key, as ParquetUpsert
+  * does: a hard delete would forget the delete's scn, and an older
+  * event redelivered in a later micro-batch would re-insert the key.
+  * [[readBack]] hides tombstones.
   */
 object JdbcUpsert {
 
@@ -96,7 +102,7 @@ object JdbcUpsert {
       try st.executeUpdate(
         s"""CREATE TABLE $table (
            |  k BIGINT PRIMARY KEY, id BIGINT, cents BIGINT,
-           |  typ VARCHAR(64), last_scn BIGINT)""".stripMargin)
+           |  typ VARCHAR(64), last_scn BIGINT, deleted BOOLEAN DEFAULT FALSE)""".stripMargin)
       catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () } // exists
       finally st.close()
     } finally conn.close()
@@ -104,20 +110,27 @@ object JdbcUpsert {
 
   /** Apply one micro-batch of parsed change rows (columns key, scn,
     * xid, op, id, cents, typ) to the JDBC target. */
-  def applyBatch(batch: DataFrame, url: String, table: String): Unit = {
+  def applyBatch(batch: DataFrame, url: String, table: String): Unit =
+    upsertBatch(batch, url, table, noMerge = false)
+
+  /** The same micro-batch application forced through the MERGE-free
+    * update-then-insert loop — the code path the sf3 Derby-MERGE
+    * failure falls back to. Exposed so the spec can pin that both
+    * paths produce identical tables on the full insert/update/delete/
+    * redelivery matrix. */
+  private[graft] def applyBatchNoMerge(batch: DataFrame, url: String,
+                                       table: String): Unit =
+    upsertBatch(batch, url, table, noMerge = true)
+
+  private def upsertBatch(batch: DataFrame, url: String, table: String,
+                          noMerge: Boolean): Unit = {
     // reduce the batch to the winning event per key BEFORE touching the
-    // DB: max_by partial-aggregates map-side (its sort-based fallback
-    // is still a per-key combine), so a skewed key costs one combine,
-    // not a sorted window.
-    val latest = batch
-      .groupBy("key")
-      .agg(max_by(
-        struct(col("scn"), col("xid"), col("op"), col("id"), col("cents"), col("typ")),
-        struct(col("scn"), col("xid"))).as("w"))
-      .select(col("key"), col("w.scn"), col("w.op"), col("w.id"),
-        col("w.cents"), col("w.typ"))
+    // DB (Cdc.latest, tombstones kept): max_by partial-aggregates
+    // map-side, so a skewed key costs one combine, not a sorted window
+    val latest = Cdc.latest(batch, Seq("key"), Seq("scn", "op", "id", "cents", "typ"))
+      .select(col("key"), col("w.*"))
     writerPartitioned(latest, url).foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) applyRows(url, table, rows)
+      if (rows.nonEmpty) applyRows(url, table, rows, noMerge)
     }
   }
 
@@ -136,25 +149,6 @@ object JdbcUpsert {
     val n = sinkParallelism(url)
     if (n == 1) latest.coalesce(1).sortWithinPartitions("key")
     else latest.repartitionByRange(n, col("key")).sortWithinPartitions("key")
-  }
-
-  /** The same micro-batch application forced through the MERGE-free
-    * update-then-insert loop — the code path the sf3 Derby-MERGE
-    * failure falls back to. Exposed so the spec can pin that both
-    * paths produce identical tables on the full insert/update/delete/
-    * redelivery matrix. */
-  private[graft] def applyBatchNoMerge(batch: DataFrame, url: String,
-                                       table: String): Unit = {
-    val latest = batch
-      .groupBy("key")
-      .agg(max_by(
-        struct(col("scn"), col("xid"), col("op"), col("id"), col("cents"), col("typ")),
-        struct(col("scn"), col("xid"))).as("w"))
-      .select(col("key"), col("w.scn"), col("w.op"), col("w.id"),
-        col("w.cents"), col("w.typ"))
-    writerPartitioned(latest, url).foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) applyRows(url, table, rows, noMerge = true)
-    }
   }
 
   /** Rows batched per transaction: bounds executor memory for the
@@ -185,34 +179,32 @@ object JdbcUpsert {
       (e.getSQLState != null &&
         (e.getSQLState.startsWith("40") || e.getSQLState.startsWith("08")))
 
+  /** Rows arrive as (key, scn, op, id, cents, typ), one per key. */
   private def applyRows(url: String, table: String, rows: Iterator[Row],
-                        noMerge: Boolean = false): Unit = {
+                        noMerge: Boolean): Unit = {
     var conn: Connection = null
-    var merge: java.sql.PreparedStatement = null
-    var delete: java.sql.PreparedStatement = null
-    var update: java.sql.PreparedStatement = null
-    var insert: java.sql.PreparedStatement = null
-    var exists: java.sql.PreparedStatement = null
+    var merge: PreparedStatement = null
+    var update: PreparedStatement = null
+    var insert: PreparedStatement = null
+    var exists: PreparedStatement = null
 
     // Derby MERGE (SQL:2003): matched rows update only when the incoming
-    // scn wins; unmatched rows insert. Tombstones delete, guarded by the
-    // same monotonic-scn condition.
+    // scn wins; unmatched rows insert. A delete is the same upsert with
+    // deleted = true — the tombstone keeps fencing older events.
     def open(): Unit = {
       conn = getConn(url)
       conn.setAutoCommit(false)
       merge = conn.prepareStatement(
         s"""MERGE INTO $table t USING SYSIBM.SYSDUMMY1 s ON t.k = ?
            |WHEN MATCHED AND t.last_scn <= ? THEN UPDATE SET
-           |  id = ?, cents = ?, typ = ?, last_scn = ?
-           |WHEN NOT MATCHED THEN INSERT (k, id, cents, typ, last_scn)
-           |  VALUES (?, ?, ?, ?, ?)""".stripMargin)
-      delete = conn.prepareStatement(
-        s"DELETE FROM $table WHERE k = ? AND last_scn <= ?")
+           |  id = ?, cents = ?, typ = ?, last_scn = ?, deleted = ?
+           |WHEN NOT MATCHED THEN INSERT (k, id, cents, typ, last_scn, deleted)
+           |  VALUES (?, ?, ?, ?, ?, ?)""".stripMargin)
       update = conn.prepareStatement(
-        s"""UPDATE $table SET id = ?, cents = ?, typ = ?, last_scn = ?
+        s"""UPDATE $table SET id = ?, cents = ?, typ = ?, last_scn = ?, deleted = ?
            |WHERE k = ? AND last_scn <= ?""".stripMargin)
       insert = conn.prepareStatement(
-        s"INSERT INTO $table (k, id, cents, typ, last_scn) VALUES (?, ?, ?, ?, ?)")
+        s"INSERT INTO $table (k, id, cents, typ, last_scn, deleted) VALUES (?, ?, ?, ?, ?, ?)")
       exists = conn.prepareStatement(
         s"SELECT 1 FROM $table WHERE k = ?")
       // Liveness floor: no statement may block a writer task forever.
@@ -223,14 +215,14 @@ object JdbcUpsert {
       // unkillable hang (one sf10 run sat 37 min in a silent convoy
       // before being killed externally). 120 s is ~5000× the observed
       // per-statement cost, so it can only fire on a genuine stall.
-      Seq(merge, delete, update, insert, exists).foreach { st =>
+      Seq(merge, update, insert, exists).foreach { st =>
         try st.setQueryTimeout(120)
         catch { case _: java.sql.SQLException => () } // driver may not support it
       }
     }
 
     def closeAll(): Unit = {
-      Seq(merge, delete, update, insert, exists).foreach { st =>
+      Seq(merge, update, insert, exists).foreach { st =>
         if (st != null) try st.close() catch { case _: java.sql.SQLException => () }
       }
       if (conn != null)
@@ -244,18 +236,21 @@ object JdbcUpsert {
     def usable: Boolean =
       try conn.isValid(1) catch { case _: Throwable => false }
 
+    /** The row's stored values (id, cents, typ, last_scn, deleted) as
+      * parameters `at`..`at + 4` of `st`. */
+    def bindValues(st: PreparedStatement, at: Int, r: Row): Unit = {
+      st.setLong(at, if (r.isNullAt(3)) -1L else r.getLong(3))
+      st.setLong(at + 1, if (r.isNullAt(4)) -1L else r.getLong(4))
+      st.setString(at + 2, if (r.isNullAt(5)) "" else r.getString(5))
+      st.setLong(at + 3, r.getLong(1))
+      st.setBoolean(at + 4, r.getString(2) == "d")
+    }
+
     def bindMerge(r: Row): Unit = {
-      val (key, scn) = (r.getLong(0), r.getLong(1))
-      merge.setLong(1, key); merge.setLong(2, scn)
-      merge.setLong(3, if (r.isNullAt(3)) -1L else r.getLong(3))
-      merge.setLong(4, if (r.isNullAt(4)) -1L else r.getLong(4))
-      merge.setString(5, if (r.isNullAt(5)) "" else r.getString(5))
-      merge.setLong(6, scn)
-      merge.setLong(7, key)
-      merge.setLong(8, if (r.isNullAt(3)) -1L else r.getLong(3))
-      merge.setLong(9, if (r.isNullAt(4)) -1L else r.getLong(4))
-      merge.setString(10, if (r.isNullAt(5)) "" else r.getString(5))
-      merge.setLong(11, scn)
+      merge.setLong(1, r.getLong(0)); merge.setLong(2, r.getLong(1))
+      bindValues(merge, 3, r)
+      merge.setLong(8, r.getLong(0))
+      bindValues(merge, 9, r)
     }
 
     // One chunk = one transaction. The batch path is the fast path for
@@ -281,13 +276,9 @@ object JdbcUpsert {
     // a failure that survives a fresh connection is real.
     /** Scn-guarded UPDATE of an existing row (the matched branch MERGE
       * would have taken). */
-    def guardedUpdate(r: Row): Unit = {
-      val (key, scn) = (r.getLong(0), r.getLong(1))
-      update.setLong(1, if (r.isNullAt(3)) -1L else r.getLong(3))
-      update.setLong(2, if (r.isNullAt(4)) -1L else r.getLong(4))
-      update.setString(3, if (r.isNullAt(5)) "" else r.getString(5))
-      update.setLong(4, scn)
-      update.setLong(5, key); update.setLong(6, scn)
+    def guardedUpdate(r: Row): Int = {
+      bindValues(update, 1, r)
+      update.setLong(6, r.getLong(0)); update.setLong(7, r.getLong(1))
       update.executeUpdate()
     }
 
@@ -299,22 +290,13 @@ object JdbcUpsert {
       * time, so it can substitute for MERGE on any row where the
       * engine's MERGE implementation itself is the thing failing. */
     def upsertNoMerge(r: Row): Unit = {
-      val (key, scn) = (r.getLong(0), r.getLong(1))
-      update.setLong(1, if (r.isNullAt(3)) -1L else r.getLong(3))
-      update.setLong(2, if (r.isNullAt(4)) -1L else r.getLong(4))
-      update.setString(3, if (r.isNullAt(5)) "" else r.getString(5))
-      update.setLong(4, scn)
-      update.setLong(5, key); update.setLong(6, scn)
-      if (update.executeUpdate() == 0) {
-        exists.setLong(1, key)
+      if (guardedUpdate(r) == 0) {
+        exists.setLong(1, r.getLong(0))
         val rs = exists.executeQuery()
         val present = try rs.next() finally rs.close()
         if (!present) {
-          insert.setLong(1, key)
-          insert.setLong(2, if (r.isNullAt(3)) -1L else r.getLong(3))
-          insert.setLong(3, if (r.isNullAt(4)) -1L else r.getLong(4))
-          insert.setString(4, if (r.isNullAt(5)) "" else r.getString(5))
-          insert.setLong(5, scn)
+          insert.setLong(1, r.getLong(0))
+          bindValues(insert, 2, r)
           try insert.executeUpdate()
           catch {
             case e: java.sql.SQLException if e.getSQLState == "23505" =>
@@ -326,12 +308,8 @@ object JdbcUpsert {
 
     def replay(chunk: Seq[Row]): Unit = {
       chunk.foreach { r =>
-        if (r.getString(2) == "d") {
-          delete.setLong(1, r.getLong(0)); delete.setLong(2, r.getLong(1))
-          delete.executeUpdate()
-        } else if (noMerge) {
-          upsertNoMerge(r)
-        } else {
+        if (noMerge) upsertNoMerge(r)
+        else {
           bindMerge(r)
           try merge.executeUpdate()
           catch {
@@ -380,14 +358,8 @@ object JdbcUpsert {
       // whole-chunk replay, idempotent via the scn guard.
       try {
         if (noMerge) { replay(chunk); return }
-        chunk.foreach { r =>
-          if (r.getString(2) == "d") {
-            delete.setLong(1, r.getLong(0)); delete.setLong(2, r.getLong(1))
-            delete.addBatch()
-          } else { bindMerge(r); merge.addBatch() }
-        }
+        chunk.foreach { r => bindMerge(r); merge.addBatch() }
         merge.executeBatch()
-        delete.executeBatch()
         conn.commit()
       } catch {
         case _: java.sql.SQLException =>
@@ -403,7 +375,7 @@ object JdbcUpsert {
           // a failure that survives the last fresh connection
           // propagates for real.
           if (!usable) { closeAll(); open() }
-          else { merge.clearBatch(); delete.clearBatch() }
+          else merge.clearBatch()
           var attempt = 0
           var done = false
           while (!done) {
@@ -426,11 +398,13 @@ object JdbcUpsert {
   }
 
   /** Read the materialized table back as a DataFrame (via the standard
-    * Spark JDBC reader) with the snapshot column names. */
+    * Spark JDBC reader) with the snapshot column names, tombstones
+    * hidden. */
   def readBack(spark: org.apache.spark.sql.SparkSession, url: String,
                table: String): DataFrame =
     spark.read.format("jdbc")
       .option("url", url).option("dbtable", table).load()
+      .filter(!col("DELETED"))
       .select(col("K").as("key"), col("ID").as("id"), col("CENTS").as("cents"),
         col("TYP").as("type"), col("LAST_SCN").as("last_scn"))
 }

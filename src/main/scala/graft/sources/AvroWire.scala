@@ -8,11 +8,9 @@ import java.io.ByteArrayOutputStream
   * [[graft.cdc.Cdc.changeSchema]]; payload images are optional exactly
   * like the nullable unions on the wire. */
 final case class AvroImage(id: Option[Long], cents: Option[Long], `type`: Option[String])
-final case class AvroChange(
-    scn: Option[Long], tm: Option[Long], xid: Option[String], op: Option[String],
-    key: Option[Long], after: Option[AvroImage], before: Option[AvroImage])
 
-/** The evolved (v2) consumer view: one added field with a default. */
+/** The evolved (v2) consumer view: one added field with a default
+  * (null when the reader schema is v1, which has no such field). */
 final case class AvroChangeV2(
     scn: Option[Long], tm: Option[Long], xid: Option[String], op: Option[String],
     key: Option[Long], after: Option[AvroImage], before: Option[AvroImage],
@@ -224,41 +222,6 @@ object AvroWire {
       }(Encoders.BINARY)
   }
 
-  /** Schema-evolution consumer: decode bytes WRITTEN with the v1 schema
-    * READ through the evolved v2 schema — Avro schema resolution
-    * (`GenericDatumReader(writer, reader)`) maps old wire bytes onto
-    * the new shape, surfacing the added `origin` field as its default.
-    * This is the wire-side half of auto-evolution (cdc_schema_evolve is
-    * the sink-side half): producers upgrade on their own schedule;
-    * consumers on v2 read both generations of bytes. */
-  def decodeEvolved(wire: Dataset[Array[Byte]]): DataFrame = {
-    val (writerJson, readerJson) = (changeAvroSchema, changeAvroSchemaV2)
-    wire.mapPartitions { bs =>
-      import org.apache.avro.Schema
-      import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-      import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
-      val writer = new Schema.Parser().parse(writerJson)
-      val reader = new Schema.Parser().parse(readerJson)
-      val datumReader = new GenericDatumReader[GenericRecord](writer, reader)
-      var dec: BinaryDecoder = null
-      def s(rec: GenericRecord, f: String): Option[String] =
-        Option(rec.get(f)).map(_.toString)
-      def l(rec: GenericRecord, f: String): Option[Long] =
-        Option(rec.get(f)).map(_.asInstanceOf[Long])
-      def image(v: AnyRef): Option[AvroImage] = Option(v).map { o =>
-        val rec = o.asInstanceOf[GenericRecord]
-        AvroImage(l(rec, "id"), l(rec, "cents"), s(rec, "type"))
-      }
-      bs.map { bytes =>
-        dec = DecoderFactory.get().binaryDecoder(bytes, dec)
-        val rec = datumReader.read(null, dec)
-        AvroChangeV2(l(rec, "scn"), l(rec, "tm"), s(rec, "xid"), s(rec, "op"),
-          l(rec, "key"), image(rec.get("after")), image(rec.get("before")),
-          rec.get("origin").toString)
-      }
-    }(Encoders.product[AvroChangeV2]).toDF()
-  }
-
   /** Confluent Schema Registry wire framing: every framed record is
     * `[0x00 magic][4-byte big-endian schema id][Avro binary payload]`
     * — the envelope the reference's AvroConverter writes to Kafka
@@ -292,20 +255,46 @@ object AvroWire {
     * them would be data loss on a transport that guarantees delivery
     * (the dead-letter row is the place for tolerated corruption). */
   def decodeFramed(framed: Dataset[Array[Byte]],
-                   registry: Map[Int, String]): DataFrame = {
-    val readerJson = changeAvroSchemaV2
-    framed.mapPartitions { bs =>
+                   registry: Map[Int, String]): DataFrame =
+    resolve(framed, changeAvroSchemaV2, Some(registry))
+
+  /** Schema-evolution consumer: decode bytes WRITTEN with the v1 schema
+    * READ through the evolved v2 schema — Avro schema resolution
+    * (`GenericDatumReader(writer, reader)`) maps old wire bytes onto
+    * the new shape, surfacing the added `origin` field as its default.
+    * This is the wire-side half of auto-evolution (cdc_schema_evolve is
+    * the sink-side half): producers upgrade on their own schedule;
+    * consumers on v2 read both generations of bytes. */
+  def decodeEvolved(wire: Dataset[Array[Byte]]): DataFrame =
+    resolve(wire, changeAvroSchemaV2, None)
+
+  /** Consumer side: Avro binary values -> typed change columns (same
+    * shape as [[graft.cdc.Cdc.parse]] output). */
+  def decode(wire: Dataset[Array[Byte]]): DataFrame =
+    resolve(wire, changeAvroSchema, None).drop("origin")
+
+  /** The one resolving consumer every decode runs: each value is read
+    * with its WRITER schema resolved onto `readerJson`
+    * (`GenericDatumReader(writer, reader)`) and converted to a row.
+    * Unframed values were written with [[changeAvroSchema]]; with a
+    * `registry`, each value must carry the Confluent framing and its
+    * stamped id names the writer schema (one resolving reader per id,
+    * built on first use). Map-only, per-partition reused decoders. */
+  private def resolve(wire: Dataset[Array[Byte]], readerJson: String,
+                      registry: Option[Map[Int, String]]): DataFrame = {
+    val plainWriter = changeAvroSchema
+    wire.mapPartitions { bs =>
       import org.apache.avro.Schema
       import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
       import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
       val reader = new Schema.Parser().parse(readerJson)
-      // one resolving reader per writer-schema id, built on first use
+      val hasOrigin = reader.getField("origin") != null
       val readers =
         scala.collection.mutable.Map.empty[Int, GenericDatumReader[GenericRecord]]
       def readerFor(id: Int) = readers.getOrElseUpdate(id, {
-        val writerJson = registry.getOrElse(id, sys.error(
+        val writerJson = registry.fold(plainWriter)(_.getOrElse(id, sys.error(
           s"schema id $id is not in the registry " +
-            s"(known ids: ${registry.keys.toSeq.sorted.mkString(", ")})"))
+            s"(known ids: ${registry.get.keys.toSeq.sorted.mkString(", ")})")))
         new GenericDatumReader[GenericRecord](
           new Schema.Parser().parse(writerJson), reader)
       })
@@ -319,46 +308,20 @@ object AvroWire {
         AvroImage(l(rec, "id"), l(rec, "cents"), s(rec, "type"))
       }
       bs.map { bytes =>
-        if (bytes.length < 5 || bytes(0) != wireMagic)
-          sys.error("not a Confluent-framed record: " +
-            (if (bytes.isEmpty) "empty value"
-             else f"magic byte 0x${bytes(0)}%02x, length ${bytes.length}"))
-        val id = ((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
-          ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff)
-        dec = DecoderFactory.get().binaryDecoder(bytes, 5, bytes.length - 5, dec)
+        val (id, offset) = if (registry.isEmpty) (0, 0) else {
+          if (bytes.length < 5 || bytes(0) != wireMagic)
+            sys.error("not a Confluent-framed record: " +
+              (if (bytes.isEmpty) "empty value"
+               else f"magic byte 0x${bytes(0)}%02x, length ${bytes.length}"))
+          (((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
+            ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff), 5)
+        }
+        dec = DecoderFactory.get().binaryDecoder(bytes, offset, bytes.length - offset, dec)
         val rec = readerFor(id).read(null, dec)
         AvroChangeV2(l(rec, "scn"), l(rec, "tm"), s(rec, "xid"), s(rec, "op"),
           l(rec, "key"), image(rec.get("after")), image(rec.get("before")),
-          rec.get("origin").toString)
+          if (hasOrigin) rec.get("origin").toString else null)
       }
     }(Encoders.product[AvroChangeV2]).toDF()
-  }
-
-  /** Consumer side: Avro binary values -> typed change columns (same
-    * shape as [[graft.cdc.Cdc.parse]] output). */
-  def decode(wire: Dataset[Array[Byte]]): DataFrame = {
-    val schemaJson = changeAvroSchema
-    wire.mapPartitions { bs =>
-      import org.apache.avro.Schema
-      import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-      import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
-      val schema = new Schema.Parser().parse(schemaJson)
-      val reader = new GenericDatumReader[GenericRecord](schema)
-      var dec: BinaryDecoder = null
-      def s(rec: GenericRecord, f: String): Option[String] =
-        Option(rec.get(f)).map(_.toString)
-      def l(rec: GenericRecord, f: String): Option[Long] =
-        Option(rec.get(f)).map(_.asInstanceOf[Long])
-      def image(v: AnyRef): Option[AvroImage] = Option(v).map { o =>
-        val rec = o.asInstanceOf[GenericRecord]
-        AvroImage(l(rec, "id"), l(rec, "cents"), s(rec, "type"))
-      }
-      bs.map { bytes =>
-        dec = DecoderFactory.get().binaryDecoder(bytes, dec)
-        val rec = reader.read(null, dec)
-        AvroChange(l(rec, "scn"), l(rec, "tm"), s(rec, "xid"), s(rec, "op"),
-          l(rec, "key"), image(rec.get("after")), image(rec.get("before")))
-      }
-    }(Encoders.product[AvroChange]).toDF()
   }
 }

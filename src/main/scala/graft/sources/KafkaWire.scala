@@ -73,7 +73,7 @@ object KafkaWire {
     }
 
   /** Wrap an OLR JSON feed (columns event_id, json — see
-    * CdcQueries.feedFrom) into Kafka wire records, the way the
+    * Cdc.feedFrom) into Kafka wire records, the way the
     * reference's Kafka writer produces them: key = the row key (OLR
     * keys messages for per-key ordering), value = the JSON payload.
     * Partitioning mirrors Kafka's keyed partitioner deterministically
@@ -83,24 +83,20 @@ object KafkaWire {
   def toWire(feed: DataFrame, topic: String, numPartitions: Int = 3): DataFrame =
     // ONE from_json parse feeding every derived column (repeated
     // get_json_object calls re-parse the string per column)
-    feed.withColumn("e", from_json(col("json"), Cdc.changeSchema))
+    Cdc.parse(feed, col("json"), keep = Seq("json"))
       .select(
-        col("e.key").cast("string").cast("binary").as("key"),
+        col("key").cast("string").cast("binary").as("key"),
         col("json").cast("binary").as("value"),
         lit(topic).as("topic"),
-        pmod(col("e.key"), lit(numPartitions.toLong)).cast("int").as("partition"),
-        col("e.scn").as("offset"),
-        timestamp_micros(col("e.tm")).as("timestamp"),
+        pmod(col("key"), lit(numPartitions.toLong)).cast("int").as("partition"),
+        col("scn").as("offset"),
+        timestamp_micros(col("tm")).as("timestamp"),
         lit(0).as("timestampType"))
 
-  /** Kafka wire records -> typed change rows + lineage. Works
-    * identically on a batch DataFrame and a streaming one. */
+  /** Kafka wire records -> typed change rows + lineage (topic,
+    * partition, offset). Works identically on a batch DataFrame and a
+    * streaming one. */
   def parse(wire: DataFrame): DataFrame =
-    wire
-      .withColumn("e", from_json(col("value").cast("string"), Cdc.changeSchema))
-      .select(
-        col("topic"), col("partition"), col("offset"),
-        col("e.scn").as("scn"), col("e.tm").as("tm"), col("e.xid").as("xid"),
-        col("e.op").as("op"), col("e.key").as("key"),
-        col("e.after").as("after"), col("e.before").as("before"))
+    Cdc.parse(wire, col("value").cast("string"),
+      keep = Seq("topic", "partition", "offset"))
 }

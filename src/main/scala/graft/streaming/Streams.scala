@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Q
-import graft.cdc.{Cdc, CdcQueries}
+import graft.cdc.{Cdc, CdcQueries, ChangelogAgg, Router}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -289,38 +289,53 @@ object Streams {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     // the file source wants a directory of arriving files; expose the
-    // (read-only) test table through a temp dir via symlinks — one per
-    // (session, dir), not per call. The table may be a single file (the
-    // driver's layout) OR a Spark-written DIRECTORY of part files; a
-    // directory must be symlinked file-by-file, because the file stream
-    // source does not recurse into a nested directory and would
-    // silently stream ZERO rows through a dir-shaped symlink.
-    val streamDir = streamDirs.computeIfAbsent((s, dir), { _ =>
-      import scala.jdk.CollectionConverters._
-      val d = java.nio.file.Files.createTempDirectory("graft_events_stream")
-      d.toFile.deleteOnExit()
-      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-      val files =
-        if (java.nio.file.Files.isDirectory(src))
-          graft.sources.Formats.listDir(src)
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-        else Seq(src)
-      require(files.nonEmpty, s"$src contains no parquet files to stream")
-      files.zipWithIndex.foreach { case (p, i) =>
-        val link = d.resolve(f"events_$i%05d.parquet")
-        java.nio.file.Files.createSymbolicLink(link, p)
-        link.toFile.deleteOnExit()
-      }
-      d.toString
-    })
+    // (read-only) test table through a temp dir of symlinks — one per
+    // (session, dir), not per call
+    val streamDir = streamDirs.computeIfAbsent((s, dir),
+      _ => stageEvents(dir, "graft_events_stream", Seq("")))
     graft.sources.Tables.normalizeTs(
       s.readStream.schema(schema).parquet(streamDir))
   }
 
+  /** Symlinks the events table into a fresh temp directory (removed on
+    * JVM exit) once per `copies` prefix, FILE-BY-FILE: the table may be
+    * a single file (the driver's layout) OR a Spark-written DIRECTORY of
+    * part files, and the file stream source does not recurse into a
+    * nested directory — it would silently stream ZERO rows through a
+    * dir-shaped symlink (the 10x/30x scale runs once hit exactly this:
+    * 0.24 s rows-free "passes"). Returns the directory. */
+  private def stageEvents(dir: String, prefix: String, copies: Seq[String]): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    d.toFile.deleteOnExit()
+    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
+    val files =
+      if (java.nio.file.Files.isDirectory(src))
+        graft.sources.Formats.listDir(src)
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+      else Seq(src)
+    require(files.nonEmpty, s"$src contains no parquet files to stream")
+    for (copy <- copies; (p, i) <- files.zipWithIndex) {
+      val link = d.resolve(f"events_$copy$i%05d.parquet")
+      java.nio.file.Files.createSymbolicLink(link, p)
+      link.toFile.deleteOnExit()
+    }
+    d.toString
+  }
+
+  /** The latest-wins rule ([[Cdc.latest]]) as a keyed-state step: the
+    * state event `e` leaves behind, or None when it does not beat `cur`
+    * by (scn, xid). A delete leaves a tombstone state with sentinel
+    * payload. */
+  private def step(cur: Option[KeyState], e: ChangeRow): Option[KeyState] =
+    if (cur.exists(c => e.scn < c.scn || (e.scn == c.scn && e.xid <= c.xid))) None
+    else if (e.op == "d") Some(KeyState(e.scn, e.xid, -1, -1, "", deleted = true))
+    else Some(KeyState(e.scn, e.xid, e.id.getOrElse(-1L),
+      e.cents.getOrElse(-1L), e.typ.getOrElse(""), deleted = false))
+
   /** Incremental changelog materialization: per-key keyed state holds
     * only the latest (scn, xid)-winning event; each batch emits the
-    * keys it changed (update semantics, like the reference's upsert
-    * sink). Deletes clear the key. */
+    * keys it saw (update semantics, like the reference's upsert sink),
+    * a deleted key as a tombstone row. */
   def materializeStream(parsed: Dataset[ChangeRow]): Dataset[SnapshotRow] = {
     import parsed.sparkSession.implicits._
     parsed
@@ -328,26 +343,10 @@ object Streams {
       .flatMapGroupsWithState[KeyState, SnapshotRow](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (key: Long, events: Iterator[ChangeRow], state: GroupState[KeyState]) =>
-          var cur = state.getOption.orNull
-          events.foreach { e =>
-            val newer = cur == null || e.scn > cur.scn ||
-              (e.scn == cur.scn && e.xid > cur.xid)
-            if (newer) {
-              cur =
-                if (e.op == "d") KeyState(e.scn, e.xid, -1, -1, "", deleted = true)
-                else KeyState(e.scn, e.xid, e.id.getOrElse(-1L),
-                  e.cents.getOrElse(-1L), e.typ.getOrElse(""), deleted = false)
-            }
-          }
-          if (cur == null) Iterator.empty
-          else {
-            state.update(cur)
-            if (cur.deleted)
-              Iterator.single(SnapshotRow(key, -1, -1, "", cur.scn, deleted = true))
-            else
-              Iterator.single(SnapshotRow(key, cur.id, cur.cents, cur.typ, cur.scn,
-                deleted = false))
-          }
+          val cur = events.foldLeft(state.getOption)((c, e) => step(c, e).orElse(c))
+          cur.foreach(state.update)
+          cur.iterator.map(c =>
+            SnapshotRow(key, c.id, c.cents, c.typ, c.scn, c.deleted))
       }
   }
 
@@ -384,37 +383,28 @@ object Streams {
       .flatMapGroupsWithState[KeyState, ScdRow](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (key: Long, events: Iterator[ChangeRow], state: GroupState[KeyState]) =>
-          val sorted = events.toSeq.sortBy(e => (e.scn, e.xid))
           var out = List.empty[ScdRow]
-          var cur = state.getOption.orNull
-          sorted.foreach { e =>
-            val newer = cur == null || e.scn > cur.scn ||
-              (e.scn == cur.scn && e.xid > cur.xid)
-            if (newer) {
-              if (cur != null && !cur.deleted)
-                out ::= ScdRow(key, cur.scn, e.scn, cur.id, cur.cents, cur.typ,
-                  is_current = false)
-              cur =
-                if (e.op == "d") KeyState(e.scn, e.xid, -1, -1, "", deleted = true)
-                else KeyState(e.scn, e.xid, e.id.getOrElse(-1L),
-                  e.cents.getOrElse(-1L), e.typ.getOrElse(""), deleted = false)
+          var cur = state.getOption
+          events.toSeq.sortBy(e => (e.scn, e.xid)).foreach { e =>
+            step(cur, e).foreach { next =>
+              cur.filterNot(_.deleted).foreach(c => out ::=
+                ScdRow(key, c.scn, e.scn, c.id, c.cents, c.typ, is_current = false))
+              cur = Some(next)
             }
           }
-          if (cur == null) Iterator.empty
-          else {
-            state.update(cur)
-            if (!cur.deleted)
-              out ::= ScdRow(key, cur.scn, -1L, cur.id, cur.cents, cur.typ,
-                is_current = true)
-            out.reverse.iterator
+          cur.foreach { c =>
+            state.update(c)
+            if (!c.deleted)
+              out ::= ScdRow(key, c.scn, -1L, c.id, c.cents, c.typ, is_current = true)
           }
+          out.reverse.iterator
       }
   }
 
-  /** SCD2 audit history built incrementally (see [[scd2Stream]]); the
-    * memory sink keeps EVERY emission, so the result is collapsed to
-    * the LAST emission per (key, valid_from) — the upsert a real sink
-    * applies. A version closes at most once and a closed row carries
+  /** SCD2 audit history built incrementally (see [[scd2Stream]]);
+    * runBounded's parquet sink keeps EVERY emission, so the result is
+    * collapsed to the LAST emission per (key, valid_from) — the upsert
+    * a real sink applies. A version closes at most once and a closed row carries
     * valid_to > -1 > the open sentinel, so max-by-valid_to IS
     * emission order, making the row independent of how the bounded
     * feed splits into micro-batches. Multi-batch close-then-reopen
@@ -437,26 +427,12 @@ object Streams {
           col("v.id"), col("v.cents"), col("v.type"), col("v.is_current"))
         .orderBy("key", "valid_from")
     },
-    Some(s"""WITH feed AS (${CdcQueries.feedSql}), p AS (${CdcQueries.parsedSql}),
-            |v AS (
-            |  SELECT *, lead(scn) OVER
-            |    (PARTITION BY key ORDER BY scn ASC, xid ASC) AS next_scn
-            |  FROM p)
-            |SELECT key, scn AS valid_from,
-            |  coalesce(next_scn, -1) AS valid_to,
-            |  after_id AS id, after_cents AS cents, after_type AS type,
-            |  next_scn IS NULL AS is_current
-            |FROM v WHERE op <> 'd'
-            |ORDER BY key, valid_from""".stripMargin))
+    CdcQueries.cdcScd2History.oracle)
 
   /** Typed parse of the streaming OLR feed. */
   def parsedStream(s: SparkSession, dir: String): Dataset[ChangeRow] = {
     import s.implicits._
-    Cdc.parse(CdcQueries.feedFrom(eventsStream(s, dir)), col("json"))
-      .select(col("key"), col("scn"), col("xid"), col("op"),
-        when(col("op") === "d", col("before.id")).otherwise(col("after.id")).as("id"),
-        when(col("op") === "d", col("before.cents")).otherwise(col("after.cents")).as("cents"),
-        when(col("op") === "d", col("before.type")).otherwise(col("after.type")).as("typ"))
+    Cdc.changeRows(Cdc.parse(Cdc.feedFrom(eventsStream(s, dir)), col("json")))
       .as[ChangeRow]
   }
 
@@ -466,12 +442,10 @@ object Streams {
     "cdc_stream_ingest",
     (s, dir) => {
       val parsed = CdcQueries.flatten(
-        Cdc.parse(CdcQueries.feedFrom(eventsStream(s, dir)), col("json")))
+        Cdc.parse(Cdc.feedFrom(eventsStream(s, dir)), col("json")))
       runBounded(parsed, "append").orderBy("scn")
     },
-    Some(s"""WITH feed AS (${CdcQueries.feedSql})
-            |${CdcQueries.parsedSql}
-            |ORDER BY scn""".stripMargin))
+    CdcQueries.cdcParse.oracle)
 
   /** incremental materialization via keyed state (see
     * materializeStream); final snapshot equals the batch
@@ -480,22 +454,14 @@ object Streams {
     "cdc_stream_materialize",
     (s, dir) => {
       val out = materializeStream(parsedStream(s, dir)).toDF()
-      // the memory sink appends every batch's updates; collapseSnapshots
+      // runBounded's sink keeps every batch's updates; collapseSnapshots
       // applies the sink-side upsert (last emission per key, tombstones
       // filtered) — delete-safe under any batch split because deletes
       // emit tombstones (StreamingSpec drives insert-then-delete across
       // two forced micro-batches through this exact collapse)
       collapseSnapshots(runBounded(out, "update")).orderBy("key")
     },
-    Some(s"""WITH feed AS (${CdcQueries.feedSql}), p AS (${CdcQueries.parsedSql}),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p)
-            |SELECT key, after_id AS id, after_cents AS cents,
-            |  after_type AS type, scn AS last_scn
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |ORDER BY key""".stripMargin))
+    CdcQueries.cdcMaterialize.oracle)
 
   /** Upsert/delete semantics onto a bucketed parquet table via
     * foreachBatch -> [[graft.sinks.ParquetUpsert]]: each batch merges
@@ -525,15 +491,7 @@ object Streams {
           col("scn").as("last_scn"))
         .orderBy("key")
     },
-    Some(s"""WITH feed AS (${CdcQueries.feedSql}), p AS (${CdcQueries.parsedSql}),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p)
-            |SELECT key, after_id AS id, after_cents AS cents,
-            |  after_type AS type, scn AS last_scn
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |ORDER BY key""".stripMargin))
+    CdcQueries.cdcMaterialize.oracle)
 
   /** The reference's ACTUAL terminal stage, end to end: change stream
     * -> foreachBatch -> JDBC MERGE upserts/deletes into a relational
@@ -557,59 +515,22 @@ object Streams {
       try q.processAllAvailable() finally q.stop()
       JdbcUpsert.readBack(s, url, "snapshot").orderBy("key")
     },
-    Some(s"""WITH feed AS (${CdcQueries.feedSql}), p AS (${CdcQueries.parsedSql}),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p)
-            |SELECT key, after_id AS id, after_cents AS cents,
-            |  after_type AS type, scn AS last_scn
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |ORDER BY key""".stripMargin))
+    CdcQueries.cdcMaterialize.oracle)
 
-  /** Streaming at-least-once -> exactly-once: the WHOLE feed is
-    * redelivered in a later micro-batch (two staged copies,
-    * maxFilesPerTrigger=1 forces them into separate batches) and
-    * stateful dropDuplicates on (key, scn) must drop every replay using
-    * only its state store — the reference consumers' dedup-by-(key,scn)
-    * guarantee, incremental. State here is unbounded to pin exact
-    * semantics on the bounded feed regardless of event-time order;
-    * [[cdcStreamDedupWm]] is the production form that bounds it with
-    * a watermark. */
   /** Stages the whole events table TWICE (the at-least-once
-    * redelivery), FILE-BY-FILE: the source table may be a single file
-    * (the driver's layout) or a Spark-written DIRECTORY of part
-    * files, and the file stream source does not recurse into a
-    * dir-shaped symlink — it would silently stream ZERO rows (the
-    * eventsStream lesson; the 10x/30x scale runs hit exactly this
-    * here: 0.24 s rows-free "passes"). Returns the WIRE change stream
-    * over the staged replay feed: (event_id, ts, json) — the envelope
-    * id and timestamp alongside the undecoded OLR-style JSON, exactly
-    * what a Kafka consumer sees (message key + timestamp + value)
-    * before deserializing. */
+    * redelivery, see [[stageEvents]]) and returns the WIRE change
+    * stream over the staged replay feed: (event_id, ts, json) — the
+    * envelope id and timestamp alongside the undecoded OLR-style JSON,
+    * exactly what a Kafka consumer sees (message key + timestamp +
+    * value) before deserializing. */
   private def wireReplayFeed(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val staged = java.nio.file.Files.createTempDirectory("graft_dedup_stream")
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val srcFiles =
-      if (java.nio.file.Files.isDirectory(src))
-        graft.sources.Formats.listDir(src)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-      else Seq(src)
-    require(srcFiles.nonEmpty, s"$src contains no parquet files to stream")
-    Seq("a", "b").foreach { copy =>
-      srcFiles.zipWithIndex.foreach { case (p, i) =>
-        val link = staged.resolve(f"events_${copy}_$i%05d.parquet")
-        java.nio.file.Files.createSymbolicLink(link, p)
-        link.toFile.deleteOnExit()
-      }
-    }
-    staged.toFile.deleteOnExit()
+    val staged = stageEvents(dir, "graft_dedup_stream", Seq("a_", "b_"))
     val stream = graft.sources.Tables.normalizeTs(
       s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged.toString))
-    CdcQueries.feedFrom(stream, col("ts"))
+        .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged))
+    Cdc.feedFrom(stream, extra = Seq(col("ts")))
   }
 
   /** Round-18 restructure (guide §2.3 / §8: decide with metadata,
@@ -633,9 +554,7 @@ object Streams {
         wireReplayFeed(s, dir).dropDuplicates("event_id"),
         col("json"))), "append")
       .orderBy("scn"),
-    Some(s"""WITH feed AS (${CdcQueries.feedSql})
-            |${CdcQueries.parsedSql}
-            |ORDER BY scn""".stripMargin))
+    CdcQueries.cdcParse.oracle)
 
   /** The production form of cdc_stream_dedup: state bounded by a
     * watermark. `dropDuplicatesWithinWatermark` guarantees a replay
@@ -665,9 +584,7 @@ object Streams {
           .dropDuplicatesWithinWatermark("event_id"),
         col("json"))),
       "append").orderBy("scn"),
-    Some(s"""WITH feed AS (${CdcQueries.feedSql})
-            |${CdcQueries.parsedSql}
-            |ORDER BY scn""".stripMargin))
+    CdcQueries.cdcParse.oracle)
 
   /** auto.evolve sink semantics: a second wave of data arrives with a
     * new column; the target table grows the column, old rows read as
@@ -831,7 +748,7 @@ object Streams {
           col("c_name"), col("c_nationkey"))
       runBounded(enriched, "append").orderBy("scn")
     },
-    Some(s"""WITH feed AS (${CdcQueries.feedSql}), p AS (${CdcQueries.parsedSql})
+    Some(s"""${Cdc.oracleFeed()}
             |SELECT scn, key, after_cents AS cents, after_type AS type,
             |  c_name, c_nationkey
             |FROM p JOIN customer ON key = c_custkey
@@ -855,54 +772,39 @@ object Streams {
   val cdcStreamRoute: Q = Q(
     "cdc_stream_route",
     (s, dir) => {
-      import graft.cdc.Router
       val root = graft.sources.Formats.scratchDir("graft_route_lake")
-      val routed = Router.parseRouted(
-          Router.routedFeedFrom(eventsStream(s, dir)), col("json"))
-        .select(col("tbl"), col("key"), col("scn"), col("xid"), col("op"),
-          when(col("op") === "d", col("before.id")).otherwise(col("after.id")).as("id"),
-          when(col("op") === "d", col("before.cents")).otherwise(col("after.cents")).as("cents"),
-          when(col("op") === "d", col("before.type")).otherwise(col("after.type")).as("typ"))
+      val routed = Cdc.changeRows(Router.parseRouted(
+        Cdc.feedFrom(eventsStream(s, dir), Router.routing), col("json")), "tbl")
       val q = routed.writeStream
         .outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.cdc.Router.applyRoutedBatch(batch, root)
+          Router.applyRoutedBatch(batch, root)
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      // discover tables through the same Hadoop FileSystem the sink
-      // writes with — a java.io.File listing would see nothing on an
-      // object store even though the lake is right there
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val hfs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val fs = hfs.listStatus(rootPath).filter(_.isDirectory)
-        .map(_.getPath.getName).sorted
-      fs.map { t =>
-        s.read.parquet(s"$root/$t")
-          .filter(col("op") =!= "d")
-          .select(lit(t).as("tbl"), col("key"), col("id"), col("cents"),
-            col("typ").as("type"), col("scn").as("last_scn"))
-      }.reduce(_.unionByName(_)).orderBy("tbl", "key")
+      unionTables(s, root)(_.filter(col("op") =!= "d")
+        .select(col("key"), col("id"), col("cents"),
+          col("typ").as("type"), col("scn").as("last_scn")))
+        .orderBy("tbl", "key")
     },
-    Some(s"""WITH feed AS (${graft.cdc.Router.routedFeedSql}), p AS (
-            |  SELECT
-            |    CAST(json_extract(json, '$$.scn') AS BIGINT) AS scn,
-            |    json_extract_string(json, '$$.xid') AS xid,
-            |    json_extract_string(json, '$$.op') AS op,
-            |    json_extract_string(json, '$$.table') AS tbl,
-            |    CAST(json_extract(json, '$$.key') AS BIGINT) AS key,
-            |    CAST(json_extract(json, '$$.after.id') AS BIGINT) AS after_id,
-            |    CAST(json_extract(json, '$$.after.cents') AS BIGINT) AS after_cents,
-            |    json_extract_string(json, '$$.after.type') AS after_type
-            |  FROM feed),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY tbl, key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p)
+    Some(s"""${Cdc.liveSql(Router.routing)}
             |SELECT tbl, key, after_id AS id, after_cents AS cents,
             |  after_type AS type, scn AS last_scn
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |ORDER BY tbl, key""".stripMargin))
+            |FROM live ORDER BY tbl, key""".stripMargin))
+
+  /** Every per-table parquet directory under `root`, projected by `f`
+    * and labeled `tbl`, as one frame. Tables are discovered through the
+    * same Hadoop FileSystem the sinks write with — a java.io.File
+    * listing would see nothing on an object store even though the lake
+    * is right there. */
+  private def unionTables(s: SparkSession, root: String)
+                         (f: DataFrame => DataFrame): DataFrame = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val hfs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    hfs.listStatus(rootPath).filter(_.isDirectory).map(_.getPath.getName).sorted
+      .map(t => f(s.read.parquet(s"$root/$t")).select(lit(t).as("tbl"), col("*")))
+      .reduce(_.unionByName(_))
+  }
 
   /** Incrementally-maintained grouped aggregate over the change stream
     * — the ksqlDB `CREATE TABLE AS SELECT sum(...), count(*) GROUP BY`
@@ -911,8 +813,8 @@ object Streams {
     * ([[graft.cdc.ChangelogAgg.contributions]]); Structured Streaming's
     * stateful aggregation keeps ONE running row per GROUP (not per key
     * — state cardinality is #groups however large the table), and each
-    * micro-batch emits the groups it changed (update mode). The memory
-    * sink keeps every emission, so the result collapses to the latest
+    * micro-batch emits the groups it changed (update mode). runBounded's
+    * parquet sink keeps every emission, so the result collapses to the latest
     * emission per group: `n_contrib` (contributions absorbed so far)
     * strictly increases every time any event touches the group, making
     * it a sound emission ordinal under ANY batch split — which the
@@ -923,7 +825,6 @@ object Streams {
   val cdcStreamChangelogAgg: Q = Q(
     "cdc_stream_changelog_agg",
     (s, dir) => {
-      import graft.cdc.ChangelogAgg
       // the staged feed is the full-image WIRE (both payloads per
       // event, like OLR with supplemental logging) — the stream parses
       // bytes and goes straight to map-side deltas; no window anywhere
@@ -955,6 +856,41 @@ object Streams {
   private val pipelineStreamDirs =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
+  /** Start the composed CDC topology (parse once -> per-table fan-out
+    * -> bucket-scoped lake upserts + maintained aggregate tables) over
+    * the staged feed directory. The caller owns the query lifecycle;
+    * `checkpoint` = a DURABLE location makes the run restartable — the
+    * deployed shape (the reference's pipeline survives connector
+    * restarts on Kafka Connect offset durability; README.md
+    * "Verification"). PipelineSpec proves stop-after-batch-1 /
+    * restart / finish equals the uninterrupted run. */
+  private[graft] def startCdcTopology(
+      s: SparkSession, staged: String, lakeRoot: String, aggRoot: String,
+      checkpoint: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val schema = s.read.parquet(staged).schema
+    val feed = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged)
+    val routed = Cdc.changeRows(Router.parseRouted(feed, col("json")), "tbl")
+    val writer = routed.writeStream.outputMode("append")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        Router.foreachTableSlice(batch, parallelism = 4) { (t, slice) =>
+          val delta = graft.sinks.ParquetUpsert
+            .applyBatchWithDeltas(slice, s"$lakeRoot/$t")
+          ChangelogAgg.mergeDeltaTable(delta, s"$aggRoot/$t")
+        }
+      }
+    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+  }
+
+  /** The topology's queryable output: every maintained aggregate table
+    * under `aggRoot`, labeled and filtered to live groups. */
+  private[graft] def cdcTopologyResult(s: SparkSession, aggRoot: String): DataFrame =
+    unionTables(s, aggRoot)(_.select(col("type"),
+        col("d_cents").as("sum_cents"), col("d_rows").as("live_rows")))
+      .filter(col("live_rows") > 0)
+      .orderBy("tbl", "type")
+
   /** The WHOLE reference topology as ONE live streaming query — the
     * deployed shape end to end (OLR multiplexed JSON feed -> parse ->
     * per-{owner,table} routing -> upsert-materialized tables + the
@@ -980,58 +916,9 @@ object Streams {
     * aggregate the DuckDB oracle computes from scratch. PipelineSpec
     * pins the cross-batch maintenance (group-moving update, delete,
     * mid-stream table discovery) and the single parse. */
-  /** Start the composed CDC topology (parse once -> per-table fan-out
-    * -> bucket-scoped lake upserts + maintained aggregate tables) over
-    * the staged feed directory. The caller owns the query lifecycle;
-    * `checkpoint` = a DURABLE location makes the run restartable — the
-    * deployed shape (the reference's pipeline survives connector
-    * restarts on Kafka Connect offset durability; README.md
-    * "Verification"). PipelineSpec proves stop-after-batch-1 /
-    * restart / finish equals the uninterrupted run. */
-  private[graft] def startCdcTopology(
-      s: SparkSession, staged: String, lakeRoot: String, aggRoot: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.cdc.{ChangelogAgg, Router}
-    val schema = s.read.parquet(staged).schema
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged)
-    val routed = Router.parseRouted(feed, col("json"))
-      .select(col("tbl"), col("key"), col("scn"), col("xid"), col("op"),
-        when(col("op") === "d", col("before.id")).otherwise(col("after.id")).as("id"),
-        when(col("op") === "d", col("before.cents")).otherwise(col("after.cents")).as("cents"),
-        when(col("op") === "d", col("before.type")).otherwise(col("after.type")).as("typ"))
-    val writer = routed.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Router.foreachTableSlice(batch, parallelism = 4) { (t, slice) =>
-          val delta = graft.sinks.ParquetUpsert
-            .applyBatchWithDeltas(slice, s"$lakeRoot/$t")
-          ChangelogAgg.mergeDeltaTable(delta, s"$aggRoot/$t")
-        }
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
-
-  /** The topology's queryable output: every maintained aggregate table
-    * under `aggRoot`, labeled and filtered to live groups. */
-  private[graft] def cdcTopologyResult(s: SparkSession, aggRoot: String): DataFrame = {
-    val rootPath = new org.apache.hadoop.fs.Path(aggRoot)
-    val hfs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tables = hfs.listStatus(rootPath).filter(_.isDirectory)
-      .map(_.getPath.getName).sorted
-    tables.map { t =>
-      s.read.parquet(s"$aggRoot/$t")
-        .select(lit(t).as("tbl"), col("type"),
-          col("d_cents").as("sum_cents"), col("d_rows").as("live_rows"))
-    }.reduce(_.unionByName(_))
-      .filter(col("live_rows") > 0)
-      .orderBy("tbl", "type")
-  }
-
   val pipelineCdcStream: Q = Q(
     "pipeline_cdc_stream",
     (s, dir) => {
-      import graft.cdc.Router
       val staged = pipelineStreamDirs.computeIfAbsent(
         (s.sparkContext.applicationId, dir), { _ =>
           val tmp = java.nio.file.Files.createTempDirectory("graft_pipe_feed")
@@ -1047,25 +934,11 @@ object Streams {
       try q.processAllAvailable() finally q.stop()
       cdcTopologyResult(s, aggRoot)
     },
-    Some(s"""WITH feed AS (${graft.cdc.Router.routedFeedSql}), p AS (
-            |  SELECT
-            |    CAST(json_extract(json, '$$.scn') AS BIGINT) AS scn,
-            |    json_extract_string(json, '$$.xid') AS xid,
-            |    json_extract_string(json, '$$.op') AS op,
-            |    json_extract_string(json, '$$.table') AS tbl,
-            |    CAST(json_extract(json, '$$.key') AS BIGINT) AS key,
-            |    CAST(json_extract(json, '$$.after.cents') AS BIGINT) AS after_cents,
-            |    json_extract_string(json, '$$.after.type') AS after_type
-            |  FROM feed),
-            |ranked AS (
-            |  SELECT *, row_number() OVER
-            |    (PARTITION BY tbl, key ORDER BY scn DESC, xid DESC) AS rn
-            |  FROM p)
+    Some(s"""${Cdc.liveSql(Router.routing)}
             |SELECT tbl, after_type AS type,
             |  CAST(sum(after_cents) AS BIGINT) AS sum_cents,
             |  count(*) AS live_rows
-            |FROM ranked WHERE rn = 1 AND op <> 'd'
-            |GROUP BY 1, 2
+            |FROM live GROUP BY 1, 2
             |ORDER BY tbl, type""".stripMargin))
 
   /** Live top-K leaderboard: the custom graft_topk aggregate
@@ -1074,8 +947,8 @@ object Streams {
     * buffer itself (serialized into the state store via the
     * aggregate's own serialize/deserialize), so a group's state stays
     * O(K) however many events stream through it. Update mode emits a
-    * group's refreshed top-K whenever a batch touches it; the memory
-    * sink keeps every emission, so the result collapses to the latest
+    * group's refreshed top-K whenever a batch touches it; runBounded's
+    * parquet sink keeps every emission, so the result collapses to the latest
     * per group ranked by `n_seen` (events absorbed — strictly
     * increasing per emission, same ordinal argument as
     * cdc_stream_changelog_agg). The bounded feed's final leaderboard

@@ -112,6 +112,24 @@ class JdbcUpsertSpec extends SparkSpec {
       Seq((1L, 150L, 20L), (2L, 222L, 30L), (3L, 300L, 12L), (4L, 400L, 14L)))
   }
 
+  test("a redelivered older event in a later batch cannot resurrect a deleted key (MERGE and MERGE-free paths)") {
+    // batch 1 reduces to the delete at scn 60; the at-least-once
+    // transport then redelivers the scn-50 update on its own. A hard
+    // delete forgets scn 60 and lets the redelivery re-insert key 1 —
+    // the stored tombstone must fence it on both apply paths
+    val urlM = JdbcUpsert.memUrl()
+    val urlN = JdbcUpsert.memUrl()
+    JdbcUpsert.ensureTable(urlM, "snapshot")
+    JdbcUpsert.ensureTable(urlN, "snapshot")
+    Seq(Seq(upd(1, 50, 500), del(1, 60), ins(2, 10, 100)), Seq(upd(1, 50, 500)))
+      .foreach { b =>
+        JdbcUpsert.applyBatch(toBatch(b), urlM, "snapshot")
+        JdbcUpsert.applyBatchNoMerge(toBatch(b), urlN, "snapshot")
+      }
+    assert(snapshot(urlM) == Seq((2L, 100L, 10L)), "MERGE path resurrected key 1")
+    assert(snapshot(urlN) == Seq((2L, 100L, 10L)), "MERGE-free path resurrected key 1")
+  }
+
   test("chunk-severity classification: rollback and connection classes rethrow, statement classes fall back per-row") {
     import java.sql._
     // chunk-severe: the in-flight transaction or connection is gone —

@@ -89,7 +89,8 @@ class RouterSpec extends SparkSpec {
 
   test("ONE stream fans out to N per-table sink directories") {
     val routed = Router.parseRouted(
-      Router.routedFeedFrom(Streams.eventsStream(spark, sfDir)), col("json"))
+      graft.cdc.Cdc.feedFrom(Streams.eventsStream(spark, sfDir), Router.routing),
+      col("json"))
     val root = Files.createTempDirectory("graft_route_stream").toString + "/sink"
     val ckpt = Files.createTempDirectory("graft_route_ckpt").toString
     val q = routed.writeStream.format("parquet")
