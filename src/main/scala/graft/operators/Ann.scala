@@ -1612,16 +1612,9 @@ object Ann {
       // cluster — e.g. one vector value repeated N times — still gets
       // sampled down instead of exploding the join); at the
       // verify/bench SFs every cluster is under it, unchanged.
-      val bounded = la1
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("cid", "lcid")
-            .orderBy(expr(Dedup.embPriority("vec_id")), col("vec_id"))))
-        .filter(col("rn") <= Dedup.MaxEmbBucket).drop("rn")
+      val bounded = Blocking.sample(la1, "vec_id", "cid", "lcid")
       val e = emb(s, dir).select(col("vec_id"), col("v"), col("n2"))
-      val cand = bounded.as("a")
-        .join(bounded.as("b"),
-          col("a.cid") === col("b.cid") && col("a.lcid") === col("b.lcid") &&
-            col("a.vec_id") < col("b.vec_id"))
+      val cand = Blocking.selfJoin(bounded, "vec_id", "cid", "lcid")
         .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
       cand
         .join(e.as("ea"), col("va") === col("ea.vec_id"))
@@ -1634,14 +1627,10 @@ object Ann {
             |  SELECT ${duckIvfK("count(*)")} AS kk FROM embeddings
             |), ${kmeans2OracleCtes("SELECT kk FROM pk")},
             |ab AS (
-            |  SELECT vec_id, cid, lcid FROM la1
-            |  QUALIFY row_number() OVER (PARTITION BY cid, lcid
-            |    ORDER BY ${Dedup.embPriority("vec_id")}, vec_id)
-            |    <= ${Dedup.MaxEmbBucket}),
+            |  ${Blocking.sampleSql("la1", "vec_id", "cid", "lcid")}),
             |pairs AS (
             |  SELECT a.vec_id AS va, b.vec_id AS vb
-            |  FROM ab a JOIN ab b ON a.cid = b.cid AND a.lcid = b.lcid
-            |    AND a.vec_id < b.vec_id),
+            |  FROM ${Blocking.selfJoinSql("ab", "vec_id", "cid", "lcid")}),
             |scored AS (
             |  SELECT va, vb, ${duckCosine("ea.v", "eb.v")} AS cos
             |  FROM pairs
@@ -1751,25 +1740,16 @@ object Ann {
             |  SELECT vec_id, v, unnest(${duckHyperplaneKeysN("v", "pk.bits")}) AS bk
             |  FROM e CROSS JOIN pk
             |), kb AS (
-            |  SELECT vec_id, v, bk FROM keys
-            |  QUALIFY row_number() OVER (PARTITION BY bk
-            |    ORDER BY ${Dedup.embPriority("vec_id")}, vec_id)
-            |    <= ${Dedup.MaxEmbBucket}
+            |  ${Blocking.sampleSql("keys", "vec_id", "bk")}
             |), hp AS (
             |  SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-            |  FROM kb a JOIN kb b ON a.bk = b.bk AND a.vec_id < b.vec_id
+            |  FROM ${Blocking.selfJoinSql("kb", "vec_id", "bk")}
             |  WHERE ${duckCosine("a.v", "b.v")} >= 0.4
+            |), kmb AS (
+            |  ${Blocking.sampleSql("la1", "vec_id", "cid", "lcid")}
             |), km AS (
             |  SELECT a.vec_id AS va, b.vec_id AS vb
-            |  FROM (SELECT vec_id, cid, lcid FROM la1
-            |        QUALIFY row_number() OVER (PARTITION BY cid, lcid
-            |          ORDER BY ${Dedup.embPriority("vec_id")}, vec_id)
-            |          <= ${Dedup.MaxEmbBucket}) a
-            |  JOIN (SELECT vec_id, cid, lcid FROM la1
-            |        QUALIFY row_number() OVER (PARTITION BY cid, lcid
-            |          ORDER BY ${Dedup.embPriority("vec_id")}, vec_id)
-            |          <= ${Dedup.MaxEmbBucket}) b
-            |    ON a.cid = b.cid AND a.lcid = b.lcid AND a.vec_id < b.vec_id
+            |  FROM ${Blocking.selfJoinSql("kmb", "vec_id", "cid", "lcid")}
             |  JOIN e ea ON a.vec_id = ea.vec_id
             |  JOIN e eb ON b.vec_id = eb.vec_id
             |  WHERE ${duckCosine("ea.v", "eb.v")} >= 0.4

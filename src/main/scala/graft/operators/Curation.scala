@@ -25,62 +25,50 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
+  /** Corpus (doc_id % 20 <> 0) and benchmark (every 20th doc) member
+    * tables (doc_id, gid) of the text groups. */
+  private def roles(g: DataFrame): (DataFrame, DataFrame) = {
+    val m = Dedup.groupMembers(g).select(col("doc_id"), col("gid"))
+    (m.filter(col("doc_id") % 20 =!= 0), m.filter(col("doc_id") % 20 === 0))
+  }
+
   /** Rep-level contamination machinery shared by text_contamination
     * and pipeline_curate. Exact-dedup-first (the [[Dedup.textGroups]]
     * precedent): the shingle-overlap join — quadratic in block sizes,
     * inflated by byte-identical copies on BOTH its sides — runs on one
-    * representative per distinct text, with degenerate shingle blocks
-    * capped ([[Dedup.MaxShingleBlock]]) exactly like the pair
-    * generators. Cross-text overlap counts depend only on the texts,
-    * so member pairs inherit the rep pair's count bit-identically;
-    * same-text contamination (a corpus doc whose exact text also
-    * appears in the benchmark set) shares its FULL shingle set, so its
-    * count is the rep's uncapped distinct-shingle count.
+    * representative per distinct text ([[Dedup.repPairStats]], hot
+    * shingle blocks capped like the pair generators). Cross-text
+    * overlap counts depend only on the texts, so member pairs inherit
+    * the rep pair's count bit-identically; same-text contamination (a
+    * corpus doc whose exact text also appears in the benchmark set)
+    * shares its FULL shingle set, so its count is the rep's uncapped
+    * distinct-shingle count.
     *
     * Returns (corpus members (doc_id, gid), bench members (doc_id,
-    * gid), directed rep pairs (cg, bg, inter >= 5) — one explode pass,
-    * no union-of-branches re-evaluation — and self-eligible reps
-    * (sgid, self_n >= 5)). */
+    * gid), directed rep pairs (cg, bg, inter >= 5), and self-eligible
+    * reps (sgid, self_n >= 5)). */
   private def contamParts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val g = Dedup.textGroups(s, dir)
-    val m = Dedup.groupMembers(g).select(col("doc_id"), col("gid"))
-    val cm = m.filter(col("doc_id") % 20 =!= 0)
-    val bm = m.filter(col("doc_id") % 20 === 0)
-    val base = Dedup.shingleArraysOf(Dedup.groupReps(g))
-    // hot-shingle guard rides the self-join's own exchange (see
-    // boundedBlocks); singleton blocks are free pruning
-    val sh = Dedup.boundedBlocks(
-      base.select(col("doc_id"), explode(col("hs")).as("sh")))
-    val rp = sh.as("a")
-      .join(sh.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("ga"), col("b.doc_id").as("gb"))
-      .agg(count(lit(1)).as("inter"))
-      .filter(col("inter") >= 5)
-    // both directions in ONE pass over rp: corpus role on either side
-    val dir2 = rp.select(explode(array(
-        struct(col("ga").as("cg"), col("gb").as("bg"), col("inter")),
-        struct(col("gb").as("cg"), col("ga").as("bg"), col("inter")))).as("p"))
-      .select(col("p.cg").as("cg"), col("p.bg").as("bg"),
-        col("p.inter").as("inter"))
-    val selfC = base
+    val (cm, bm) = roles(g)
+    val reps = Dedup.groupReps(g)
+    val rp = Dedup.repPairStats(reps).filter(col("inter") >= 5)
+    val selfC = Dedup.shingleArraysOf(reps)
       .select(col("doc_id").as("sgid"),
         expr("size(hs)").cast("long").as("self_n"))
       .filter(col("self_n") >= 5)
-    (cm, bm, dir2, selfC)
+    (cm, bm, Blocking.bothWays(rp, "inter"), selfC)
   }
 
   /** The rep-level contamination CTEs for the DuckDB oracles — extends
     * [[Dedup.duckGroupCtes]] (g/m/reps/sh/cnt/shb/rpairs) and mirrors
-    * [[contamParts]] exactly. */
+    * [[roles]] and [[contamParts]]. */
   private def duckContamCtes: String =
     s"""${Dedup.duckGroupCtes},
        |rp5 AS (
        |  SELECT ga, gb, inter FROM rpairs WHERE inter >= 5
        |), dir2 AS (
-       |  SELECT ga AS cg, gb AS bg, inter FROM rp5
-       |  UNION ALL SELECT gb AS cg, ga AS bg, inter FROM rp5
+       |  ${Blocking.bothWaysSql("rp5", "inter")}
        |), cm AS (
        |  SELECT doc_id, gid FROM m WHERE doc_id % 20 <> 0
        |), bm AS (
@@ -102,28 +90,15 @@ object Curation {
     "text_contamination",
     (s, dir) => {
       val (cm, bm, dir2, selfC) = contamParts(s, dir)
-      val cross = dir2
-        .join(cm.as("x"), col("cg") === col("x.gid"))
-        .join(bm.as("y"), col("bg") === col("y.gid"))
-        .select(col("x.doc_id").as("doc_id"),
-          col("y.doc_id").as("bench_id"), col("inter").as("n_shared"))
-      val intra = cm.as("x")
-        .join(bm.as("y"), col("x.gid") === col("y.gid"))
-        .join(selfC, col("x.gid") === col("sgid"))
-        .select(col("x.doc_id").as("doc_id"),
-          col("y.doc_id").as("bench_id"), col("self_n").as("n_shared"))
-      cross.unionByName(intra).orderBy("doc_id", "bench_id")
+      Blocking.expandDirected(dir2, cm, bm, selfC, "doc_id",
+          ("doc_id", "bench_id"), "inter", col("self_n"))
+        .select(col("doc_id"), col("bench_id"), col("inter").as("n_shared"))
+        .orderBy("doc_id", "bench_id")
     },
     Some(s"""WITH $duckContamCtes
-            |SELECT doc_id, bench_id, n_shared FROM (
-            |  SELECT x.doc_id AS doc_id, y.doc_id AS bench_id,
-            |    d.inter AS n_shared
-            |  FROM dir2 d JOIN cm x ON d.cg = x.gid
-            |  JOIN bm y ON d.bg = y.gid
-            |  UNION ALL
-            |  SELECT x.doc_id, y.doc_id, s.self_n
-            |  FROM cm x JOIN bm y ON x.gid = y.gid
-            |  JOIN selfc s ON x.gid = s.sgid
+            |SELECT doc_id, bench_id, inter AS n_shared FROM (
+            |  ${Blocking.expandDirectedSql("dir2", "cm", "bm", "selfc", "sgid",
+                "doc_id", ("doc_id", "bench_id"), "inter", "s.self_n")}
             |) ORDER BY doc_id, bench_id""".stripMargin))
 
   /** Fuzzy benchmark decontamination — the MinHash face of
@@ -144,87 +119,44 @@ object Curation {
   val contamFuzzy: Q = Q(
     "contam_fuzzy",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val g = Dedup.textGroups(s, dir)
-      val m = Dedup.groupMembers(g).select(col("doc_id"), col("gid"))
-      val cm = m.filter(col("doc_id") % 20 =!= 0)
-      val bm = m.filter(col("doc_id") % 20 === 0)
-      val sig = Dedup.groupReps(g)
-        .withColumn("words", expr(words("text")))
-        .filter(expr("size(words) >= 3"))
-        .withColumn("hashes", expr(shingleHashes("words")))
-        .select(col("doc_id").as("sgid"), expr(minhashSig("hashes")).as("sig"))
-      val bands = sig.select(col("sgid"),
-        explode(expr(minhashBands("sig"))).as("bk"))
-      val bounded = bands
-        .withColumn("bn", count(lit(1)).over(Window.partitionBy("bk")))
-        .filter(col("bn").between(2, Dedup.MaxBucket))
-        .drop("bn")
-      val cand = bounded.as("a")
-        .join(bounded.as("b"),
-          col("a.bk") === col("b.bk") && col("a.sgid") < col("b.sgid"))
+      val (cm, bm) = roles(g)
+      val sig = Blocking.minhashSigs(Dedup.groupReps(g), col("doc_id").as("sgid"))
+      val bounded = Blocking.dropHot(
+        sig.select(col("sgid"), explode(expr(minhashBands("sig"))).as("bk")),
+        "bk", Blocking.MaxBucket)
+      val rp = Blocking.selfJoin(bounded, "sgid", "bk")
         .select(col("a.sgid").as("ga"), col("b.sgid").as("gb"))
         .distinct()
-      val rp = cand
         .join(sig.as("sa"), col("ga") === col("sa.sgid"))
         .join(sig.as("sb"), col("gb") === col("sb.sgid"))
         .select(col("ga"), col("gb"),
           expr(minhashEstJaccard("sa.sig", "sb.sig")).as("est"))
         .filter(col("est") >= 0.5)
-      val dir2 = rp.select(explode(array(
-          struct(col("ga").as("cg"), col("gb").as("bg"), col("est")),
-          struct(col("gb").as("cg"), col("ga").as("bg"), col("est")))).as("p"))
-        .select(col("p.cg").as("cg"), col("p.bg").as("bg"),
-          col("p.est").as("est"))
-      val cross = dir2
-        .join(cm.as("x"), col("cg") === col("x.gid"))
-        .join(bm.as("y"), col("bg") === col("y.gid"))
-        .select(col("x.doc_id").as("doc_id"),
-          col("y.doc_id").as("bench_id"),
-          round(col("est"), 6).as("est_jaccard"))
-      val intra = cm.as("x")
-        .join(bm.as("y"), col("x.gid") === col("y.gid"))
-        .join(sig.select(col("sgid")), col("x.gid") === col("sgid"), "left_semi")
-        .select(col("x.doc_id").as("doc_id"),
-          col("y.doc_id").as("bench_id"),
-          lit(1.0).as("est_jaccard"))
-      cross.unionByName(intra).orderBy("doc_id", "bench_id")
+      Blocking.expandDirected(Blocking.bothWays(rp, "est"), cm, bm,
+          sig.select(col("sgid")), "doc_id", ("doc_id", "bench_id"), "est", lit(1.0))
+        .select(col("doc_id"), col("bench_id"), round(col("est"), 6).as("est_jaccard"))
+        .orderBy("doc_id", "bench_id")
     },
-    Some(s"""WITH ${Dedup.duckGroupCtes},
-            |hsig AS (
-            |  SELECT doc_id, ${duckShingleHashes(duckShingles3("words"))} AS hashes
-            |  FROM w WHERE len(words) >= 3
-            |), msig AS (
-            |  SELECT doc_id AS sgid, ${duckMinhashSig("hashes")} AS sig FROM hsig
+    Some(s"""WITH $duckContamCtes,
+            |msig AS (
+            |  ${Blocking.minhashSigSql("w", "doc_id")}
             |), bands AS (
-            |  SELECT sgid, sig, unnest(${duckMinhashBands("sig")}) AS bk FROM msig
-            |), ok AS (
-            |  SELECT bk FROM bands GROUP BY bk
-            |  HAVING count(*) BETWEEN 2 AND ${Dedup.MaxBucket}
+            |  SELECT doc_id, sig, unnest(${duckMinhashBands("sig")}) AS bk FROM msig
             |), bounded AS (
-            |  SELECT bands.* FROM bands JOIN ok USING (bk)
+            |  ${Blocking.dropHotSql("bands", "bk", Blocking.MaxBucket)}
             |), rp AS (
             |  SELECT ga, gb, est FROM (
-            |    SELECT DISTINCT a.sgid AS ga, b.sgid AS gb,
+            |    SELECT DISTINCT a.doc_id AS ga, b.doc_id AS gb,
             |      ${duckMinhashEstJaccard("a.sig", "b.sig")} AS est
-            |    FROM bounded a JOIN bounded b ON a.bk = b.bk AND a.sgid < b.sgid
+            |    FROM ${Blocking.selfJoinSql("bounded", "doc_id", "bk")}
             |  ) WHERE est >= 0.5
             |), fdir2 AS (
-            |  SELECT ga AS cg, gb AS bg, est FROM rp
-            |  UNION ALL SELECT gb AS cg, ga AS bg, est FROM rp
-            |), fcm AS (
-            |  SELECT doc_id, gid FROM m WHERE doc_id % 20 <> 0
-            |), fbm AS (
-            |  SELECT doc_id, gid FROM m WHERE doc_id % 20 = 0
+            |  ${Blocking.bothWaysSql("rp", "est")}
             |)
-            |SELECT doc_id, bench_id, est_jaccard FROM (
-            |  SELECT x.doc_id AS doc_id, y.doc_id AS bench_id,
-            |    round(d.est, 6) AS est_jaccard
-            |  FROM fdir2 d JOIN fcm x ON d.cg = x.gid JOIN fbm y ON d.bg = y.gid
-            |  UNION ALL
-            |  SELECT x.doc_id, y.doc_id, CAST(1.0 AS DOUBLE)
-            |  FROM fcm x JOIN fbm y ON x.gid = y.gid
-            |  JOIN msig s ON x.gid = s.sgid
+            |SELECT doc_id, bench_id, round(est, 6) AS est_jaccard FROM (
+            |  ${Blocking.expandDirectedSql("fdir2", "cm", "bm", "msig", "doc_id",
+                "doc_id", ("doc_id", "bench_id"), "est", "CAST(1.0 AS DOUBLE)")}
             |) ORDER BY doc_id, bench_id""".stripMargin))
 
   /** Deterministic stratified sampling + train/val/test split: keep
@@ -965,12 +897,9 @@ object Curation {
       // the static benchmark side (contam_fuzzy's stand-in eval suite:
       // every 20th doc), built from the SOURCE table — an eval suite is
       // external and NOT quality-gated
-      val benchSig = Tables(s, dir).documents
-        .filter(col("doc_id") % 20 === 0)
-        .withColumn("words", expr(words("text")))
-        .filter(expr("size(words) >= 3"))
-        .withColumn("hashes", expr(shingleHashes("words")))
-        .select(col("doc_id").as("b_id"), expr(minhashSig("hashes")).as("sig"))
+      val benchSig = Blocking.minhashSigs(
+        Tables(s, dir).documents.filter(col("doc_id") % 20 === 0),
+        col("doc_id").as("b_id"))
       val q = startCurateTopology(s, staged, indexRoot, curatedDir,
         benchSig = Some(benchSig))
       try q.processAllAvailable() finally q.stop()

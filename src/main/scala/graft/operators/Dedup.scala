@@ -3,8 +3,7 @@ package graft.operators
 import graft.Q
 import graft.functions.Portable._
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite over the `documents` table — the operators an
@@ -17,53 +16,18 @@ import org.apache.spark.sql.functions._
   * 60-bit fingerprint of it, so the shuffle key is 8 bytes, not the
   * document); near-dup candidates come from bounded blocking keys
   * (shingles, MinHash LSH bands, SimHash hamming bands, hyperplane
-  * buckets) followed by exact verification within blocks only.
-  * Signatures (MinHash/SimHash) are computed per-document with folds
-  * over array columns — codegen'd, zero explode, zero shuffle — so the
-  * only shuffles are the block-key joins themselves.
+  * buckets) followed by exact verification within blocks only — the
+  * caps, copy families, rep-pair self-join and member expansion are
+  * [[Blocking]]'s; each row here supplies its signature, block key,
+  * score and threshold. Signatures (MinHash/SimHash) are computed
+  * per-document with folds over array columns — codegen'd, zero
+  * explode, zero shuffle — so the only shuffles are the block-key joins
+  * themselves.
   */
 object Dedup {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir).documents
-
-  /** max LSH bucket size before the bucket is considered degenerate
-    * and dropped from pair enumeration (see dedup_minhash_lsh). */
-  private[operators] val MaxBucket = 1000
-
-  /** max docs sharing one shingle before that shingle's block is
-    * dropped from pair enumeration. A block of m docs yields m^2/2
-    * candidate pairs, so ONE degenerate shingle (a boilerplate header
-    * repeated across a web corpus) makes the whole join quadratic;
-    * past this size the shingle is so common it carries no dedup
-    * signal — exactly the LSH MaxBucket argument, applied to the
-    * shingle-block join. The guard is a count window partitioned on
-    * the join key itself, so it rides the exchange the self-join
-    * needs anyway: zero extra shuffles (PlanAuditSpec pins this).
-    * Every oracle applies the identical cap. */
-  private[operators] val MaxShingleBlock = 1000
-
-  /** Per-bucket member cap for the embedding-blocking self-joins — at
-    * 30x data an uncapped bucket's candidate set hit ~10^8 pairs and
-    * OOM'd. Bounding KEEPS a deterministic sample of MaxEmbBucket
-    * members (dropping whole hot buckets, the minhash-LSH guard, would
-    * empty the operator when every bucket is hot). Priority is a
-    * portable LCG over vec_id — id-uniform, so the kept members are
-    * an unbiased sample and the measured recall (dedup_blocking_recall)
-    * honestly reflects the capped pipeline.
-    *
-    * Since round 9 the cap is a GUARD, not the workload ceiling: the
-    * blocking keyspaces scale with the corpus ([[embBits]] /
-    * [[Ann.kmeansK]] keep expected occupancy constant at ~64/~128
-    * members), so the cap only truncates adversarial skew (e.g. one
-    * vector value repeated N times) instead of an unbounded fraction
-    * of every bucket.
-    *
-    * Declared ABOVE every oracle string that interpolates it: a val
-    * referenced from an earlier val's initializer is still 0 during
-    * object init, which silently turned the simhash oracle's cap into
-    * `<= 0` (EntrySpec pins the interpolated values). */
-  val MaxEmbBucket = 512
 
   /** ceil(log2(n)) in pure integer arithmetic (mirrors
     * [[graft.functions.Portable.duckCeilLog2]] — no floating log2, so
@@ -86,25 +50,6 @@ object Dedup {
   /** The matching SQL for [[embBits]] over a counted corpus. */
   private[graft] def duckEmbBitsFrom(countExpr: String): String =
     s"greatest(6, ${duckCeilLog2(countExpr)} - 6)"
-
-  /** Shingle rows bounded to blocks of 2..[[MaxShingleBlock]] docs —
-    * the pair-generator input. The lower bound is free pruning, not a
-    * semantic change: a singleton block (a shingle unique to one doc —
-    * MOST shingles in natural text) can never produce a pair, yet
-    * without the filter every such row is sorted and probed by the
-    * self-join. NOT used for the per-doc shingle counts (the Jaccard
-    * denominator), which stay exact over all shingles. */
-  private[operators] def boundedBlocks(sh: DataFrame): DataFrame = sh
-    .withColumn("bn", count(lit(1)).over(
-      org.apache.spark.sql.expressions.Window.partitionBy("sh")))
-    .filter(col("bn").between(2, MaxShingleBlock))
-    .drop("bn")
-
-  /** The capped blocking CTE for the DuckDB oracles — mirrors
-    * [[boundedBlocks]] (cnt stays on the UNCAPPED sh). */
-  private[operators] def duckBoundedBlocks: String =
-    "SELECT * FROM sh QUALIFY count(*) OVER (PARTITION BY sh) " +
-      s"BETWEEN 2 AND $MaxShingleBlock"
 
   /** exact dedup: one representative (min doc_id) per distinct text.
     * The groupBy key at scale should be fp60(text), not the raw text —
@@ -133,43 +78,22 @@ object Dedup {
     Some(s"""SELECT min(doc_id) AS keep_id, count(*) AS n_copies
             |FROM documents GROUP BY ${duckFp60(duckNormText("text"))}""".stripMargin))
 
-  /** word-3-gram Jaccard >= 0.8 duplicate pairs. Candidates are
-    * blocked by shared shingle (the self-join key), so cost is
-    * sum(block^2) over shingle blocks — bounded because natural-text
-    * shingles are rare AND because degenerate blocks (web boilerplate
-    * shared by >MaxShingleBlock docs) are dropped before enumeration;
-    * never an O(n^2) cross join. The join key is
-    * the 60-bit shingle hash, not the shingle string: an 8-byte
-    * shuffle key instead of ~25 bytes of text, and the oracle blocks
-    * on the same hash so any collision affects both sides equally. */
-  /** Per-document DISTINCT shingle-hash arrays: deduplication happens
-    * row-locally with array_distinct (no shuffle), so downstream
-    * consumers get unique (doc_id, sh) pairs from a plain explode and
-    * the per-doc shingle count is just size(hs) — the
-    * distinct-as-aggregation formulation costs an extra exchange of
-    * every (doc, shingle) row. */
-  private[operators] def shingleArrays(s: SparkSession, dir: String): DataFrame =
-    shingleArraysOf(docs(s, dir))
-
-  /** Same, over an arbitrary (doc_id, text) frame — the pair
-    * generators run this on exact-dup-group REPRESENTATIVES only. */
+  /** Per-document DISTINCT shingle-hash arrays over a (doc_id, text)
+    * frame — the pair generators run this on exact-dup-group
+    * REPRESENTATIVES only. Deduplication happens row-locally with
+    * array_distinct (no shuffle), so downstream consumers get unique
+    * (doc_id, sh) pairs from a plain explode and the per-doc shingle
+    * count is just size(hs) — the distinct-as-aggregation formulation
+    * costs an extra exchange of every (doc, shingle) row. */
   private[operators] def shingleArraysOf(d: DataFrame): DataFrame = d
     .withColumn("words", expr(words("text")))
     .filter(expr("size(words) >= 3"))
     .withColumn("hs", expr(s"array_distinct(${shingleHashes60("words")})"))
 
-  /** (doc_id, shingle-hash) rows, unique — the blocking base for the
-    * Jaccard pair generator and the contamination check. */
-  private[operators] def shingleRows(s: SparkSession, dir: String): DataFrame =
-    shingleArrays(s, dir).select(col("doc_id"), explode(col("hs")).as("sh"))
-
-  /** Exact-duplicate text groups: every doc tagged with `gid` (the min
-    * doc_id among byte-identical texts — the group representative) and
-    * `gn` (the group size). ONE exchange, keyed on the text itself
-    * (the dedup_exact precedent; at 100 TB the key would be a 128-bit
-    * content hash — dedup_exact_norm demonstrates the fingerprint
-    * variant). Checkpointed because members and representatives are
-    * both consumed downstream and the window must run once.
+  /** Exact-duplicate text groups ([[Blocking.families]] over the text):
+    * every doc tagged with `gid` (the min doc_id among byte-identical
+    * texts — the group representative) and `gn` (the group size), the
+    * copies' text nulled, checkpointed.
     *
     * This is the standard production pipeline order (exact dedup
     * FIRST, near-dup on distinct texts): pair-generation cost is
@@ -180,32 +104,21 @@ object Dedup {
     * joins, which scale with OUTPUT pairs. At 30x replica data (every
     * text x30) the direct join ran 609 s and OOM'd under ensemble
     * memory pressure; the rep form does the identical-result join on
-    * 1/30th the docs. */
+    * 1/30th the docs.
+    *
+    * The window key is a 120-bit text fingerprint (two independent
+    * 60-bit polynomial hashes), NOT the raw text: this exchange is the
+    * widest shuffle in the repo, and 16 bytes per row vs whole
+    * documents is the difference between shuffling ids and shuffling
+    * the corpus. Collision stance (same as the sig digests): two
+    * DISTINCT texts sharing both fingerprints merge groups with
+    * per-pair odds ~2^-120 — birthday bound ~4e-19 at 10^9 distinct
+    * texts — so grouping is identical to partitioning on the text
+    * itself (the oracles keep PARTITION BY text; a disagreement IS the
+    * collision detector). */
   private[operators] def textGroups(s: SparkSession, dir: String): DataFrame =
-    // The window key is a 120-bit text fingerprint (two independent
-    // 60-bit polynomial hashes), NOT the raw text: this exchange is
-    // the widest shuffle in the repo, and 16 bytes per row vs whole
-    // documents is the difference between shuffling ids and shuffling
-    // the corpus. Collision stance (same as the sig digests): two
-    // DISTINCT texts sharing both fingerprints merge groups with
-    // per-pair odds ~2^-120 — birthday bound ~4e-19 at 10^9 distinct
-    // texts — so grouping is identical to partitioning on the text
-    // itself (the oracles keep PARTITION BY text; a disagreement IS
-    // the collision detector).
-    docs(s, dir).select(col("doc_id"), col("text"))
-      .withColumn("fpa", expr(fp60("text")))
-      .withColumn("fpb", expr(fp60b("text")))
-      .withColumn("gid", min("doc_id").over(Window.partitionBy("fpa", "fpb")))
-      .withColumn("gn", count(lit(1)).over(Window.partitionBy("fpa", "fpb")))
-      .drop("fpa", "fpb")
-      // only representatives are ever read back with text
-      // ([[groupReps]]); nulling the copies' text before the
-      // checkpoint shrinks the pinned storage from O(corpus text) to
-      // O(ids + DISTINCT texts) — under the duplication factors that
-      // motivate dedup, that is the difference between pinning the
-      // corpus and pinning its unique core
-      .withColumn("text", when(col("doc_id") === col("gid"), col("text")))
-      .localCheckpoint(true)
+    Blocking.families(docs(s, dir), "doc_id",
+      Seq(expr(fp60("text")), expr(fp60b("text"))), "text")
 
   /** Members eligible for pair expansion: groups over MaxShingleBlock
     * are dropped wholesale — the direct formulation dropped their
@@ -214,7 +127,7 @@ object Dedup {
     * mega-dup group's pair list is exact-dedup noise, its docs are
     * handled by the one-representative contract. */
   private[operators] def groupMembers(g: DataFrame): DataFrame =
-    g.filter(col("gn") <= MaxShingleBlock)
+    g.filter(col("gn") <= Blocking.MaxShingleBlock)
 
   /** One (doc_id, text) row per group representative. */
   private[operators] def groupReps(g: DataFrame): DataFrame =
@@ -223,18 +136,17 @@ object Dedup {
 
   /** Bounded-shingle-block pair stats over representatives:
     * (ga, gb, inter, na, nb) with ga < gb, inter the shared-shingle
-    * count, na/nb the per-rep distinct-shingle counts. The
-    * denominator counts ride the exploded rows as constants (one
-    * corpus scan, no separate count-attach joins). */
-  private def repPairStats(reps: DataFrame): DataFrame = {
-    val base = shingleArraysOf(reps)
-    // hot-shingle guard: see MaxShingleBlock — degenerate blocks are
-    // dropped BEFORE pair enumeration, the denominator counts are not
-    val sh = boundedBlocks(
-      base.select(col("doc_id"), expr("size(hs)").as("n"),
-        explode(col("hs")).as("sh")))
-    sh.as("a")
-      .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+    * count, na/nb the per-rep distinct-shingle counts. The hot-shingle
+    * cap drops degenerate blocks BEFORE pair enumeration; the
+    * denominator counts stay exact over all shingles and ride the
+    * exploded rows as constants (one corpus scan, no separate
+    * count-attach joins). */
+  private[operators] def repPairStats(reps: DataFrame): DataFrame = {
+    val sh = Blocking.dropHot(
+      shingleArraysOf(reps).select(col("doc_id"), expr("size(hs)").as("n"),
+        explode(col("hs")).as("sh")),
+      "sh", Blocking.MaxShingleBlock)
+    Blocking.selfJoin(sh, "doc_id", "sh")
       .groupBy(col("a.doc_id").as("ga"), col("b.doc_id").as("gb"))
       .agg(count(lit(1)).as("inter"),
         min(col("a.n")).as("na"), min(col("b.n")).as("nb"))
@@ -246,45 +158,15 @@ object Dedup {
   private def eligibleGids(reps: DataFrame): DataFrame =
     shingleArraysOf(reps).select(col("doc_id").as("egid"))
 
-  /** word-3-gram Jaccard >= 0.8 duplicate pairs (da < db, jac),
-    * via [[textGroups]]: the quadratic join runs on representatives,
-    * then pairs expand to members — cross-group pairs inherit the rep
-    * pair's Jaccard (identical texts have identical shingle sets, so
-    * the value is bit-identical to the direct computation), intra-group
-    * pairs are exactly 1.0. */
-  private def ngramPairs(s: SparkSession, dir: String): DataFrame = {
-    val g = textGroups(s, dir)
-    val m = groupMembers(g).select(col("doc_id"), col("gid"))
-    val reps = groupReps(g)
-    val rp = repPairStats(reps)
-      .withColumn("jac", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jac") >= 0.8)
-    val cross = rp
-      .join(m.as("x"), col("ga") === col("x.gid"))
-      .join(m.as("y"), col("gb") === col("y.gid"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("da"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("db"),
-        col("jac"))
-    val intra = m.as("x")
-      .join(m.as("y"),
-        col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
-      .join(eligibleGids(reps), col("x.gid") === col("egid"), "left_semi")
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
-        lit(1.0).as("jac"))
-    cross.unionByName(intra)
-  }
-
-  /** The rep-grouping CTEs shared by the pair-generating oracles —
-    * mirrors [[textGroups]]/[[groupMembers]]/[[groupReps]] exactly. */
+  /** The rep-grouping CTEs shared by the shingle-pair oracles — mirrors
+    * [[textGroups]]/[[groupMembers]]/[[groupReps]]/[[repPairStats]]. */
   private[operators] def duckGroupCtes: String =
     s"""g AS (
-       |  SELECT doc_id, text, min(doc_id) OVER (PARTITION BY text) AS gid,
-       |    count(*) OVER (PARTITION BY text) AS gn
-       |  FROM documents
+       |  ${Blocking.familiesSql("documents", "doc_id", "text", "text")}
        |), m AS (
-       |  SELECT doc_id, gid, gn FROM g WHERE gn <= $MaxShingleBlock
+       |  SELECT doc_id, gid, gn FROM g WHERE gn <= ${Blocking.MaxShingleBlock}
        |), reps AS (
-       |  SELECT doc_id, text FROM g WHERE doc_id = gid AND gn <= $MaxShingleBlock
+       |  SELECT doc_id, text FROM g WHERE doc_id = gid AND gn <= ${Blocking.MaxShingleBlock}
        |), w AS (
        |  SELECT doc_id, ${duckWords("text")} AS words FROM reps
        |), elig AS (
@@ -295,79 +177,67 @@ object Dedup {
        |), cnt AS (
        |  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
        |), shb AS (
-       |  $duckBoundedBlocks
+       |  ${Blocking.dropHotSql("sh", "sh", Blocking.MaxShingleBlock)}
        |), rpairs AS (
        |  SELECT a.doc_id AS ga, b.doc_id AS gb, count(*) AS inter
-       |  FROM shb a JOIN shb b ON a.sh = b.sh AND a.doc_id < b.doc_id
+       |  FROM ${Blocking.selfJoinSql("shb", "doc_id", "sh")}
        |  GROUP BY 1, 2
        |)""".stripMargin
 
-  val dedupNgramJaccard: Q = Q(
-    "dedup_ngram_jaccard",
-    (s, dir) => ngramPairs(s, dir)
-      .select(col("da"), col("db"), round(col("jac"), 6).as("jaccard")),
+  /** Shingle-set near-dup pairs (da < db, `name`) whose `score` over
+    * the rep pair stats (inter, na, nb) is >= `minScore`, via [[textGroups]]:
+    * the quadratic join runs on representatives, then pairs expand to
+    * members — cross-group pairs inherit the rep pair's score
+    * (identical texts have identical shingle sets, so the value is
+    * bit-identical to the direct computation), intra-group pairs are
+    * exactly 1.0. `duckScore` is the same score over (inter, ca.n,
+    * cb.n). Rounded to 6 places. */
+  private def shinglePairs(row: String, name: String, score: Column,
+      duckScore: String, minScore: Double): Q = Q(
+    row,
+    (s, dir) => {
+      val g = textGroups(s, dir)
+      val reps = groupReps(g)
+      val rp = repPairStats(reps).withColumn(name, score)
+        .filter(col(name) >= minScore)
+        .select(col("ga"), col("gb"), round(col(name), 6).as(name))
+      Blocking.expand(rp, groupMembers(g), eligibleGids(reps), "doc_id",
+        ("da", "db"), name -> lit(1.0))
+    },
     Some(s"""WITH $duckGroupCtes,
             |rp AS (
-            |  SELECT ga, gb, inter*1.0 / (ca.n + cb.n - inter) AS jac
+            |  SELECT ga, gb, round($duckScore, 6) AS $name
             |  FROM rpairs
             |  JOIN cnt ca ON ga = ca.doc_id
             |  JOIN cnt cb ON gb = cb.doc_id
-            |  WHERE inter*1.0 / (ca.n + cb.n - inter) >= 0.8
+            |  WHERE $duckScore >= $minScore
             |)
-            |SELECT least(x.doc_id, y.doc_id) AS da,
-            |  greatest(x.doc_id, y.doc_id) AS db, round(jac, 6) AS jaccard
-            |FROM rp JOIN m x ON x.gid = rp.ga JOIN m y ON y.gid = rp.gb
-            |UNION ALL
-            |SELECT x.doc_id AS da, y.doc_id AS db, CAST(1.0 AS DOUBLE) AS jaccard
-            |FROM m x JOIN m y ON x.gid = y.gid AND x.doc_id < y.doc_id
-            |JOIN elig ON x.gid = egid""".stripMargin))
+            |${Blocking.expandSql("rp", "m", "SELECT egid FROM elig", "doc_id",
+              ("da", "db"), name -> "CAST(1.0 AS DOUBLE)")}""".stripMargin))
+
+  /** word-3-gram Jaccard >= 0.8 duplicate pairs. Candidates are
+    * blocked by shared shingle (the self-join key), so cost is
+    * sum(block^2) over shingle blocks — bounded because natural-text
+    * shingles are rare AND because degenerate blocks (web boilerplate
+    * shared by >MaxShingleBlock docs) are dropped before enumeration;
+    * never an O(n^2) cross join. The join key is the 60-bit shingle
+    * hash, not the shingle string: an 8-byte shuffle key instead of ~25
+    * bytes of text, and the oracle blocks on the same hash so any
+    * collision affects both sides equally. */
+  val dedupNgramJaccard: Q = shinglePairs("dedup_ngram_jaccard", "jaccard",
+    col("inter") / (col("na") + col("nb") - col("inter")),
+    "inter*1.0 / (ca.n + cb.n - inter)", 0.8)
 
   /** Asymmetric n-gram CONTAINMENT (inter / min(|A|,|B|) >= 0.9) — the
     * quote/subset detector Jaccard structurally misses: a short doc
     * fully embedded in a long one has tiny Jaccard (union is the long
     * doc) but containment ~1. Near-dedup pipelines run BOTH measures;
-    * this row reuses the identical exact-dedup-first blocked pair
-    * machinery (same blocks, same caps, same member expansion — only
-    * the denominator changes), so it costs the same bounded plan. */
-  val dedupContainment: Q = Q(
-    "dedup_containment",
-    (s, dir) => {
-      val g = textGroups(s, dir)
-      val m = groupMembers(g).select(col("doc_id"), col("gid"))
-      val reps = groupReps(g)
-      val rp = repPairStats(reps)
-        .withColumn("cont", col("inter") / least(col("na"), col("nb")))
-        .filter(col("cont") >= 0.9)
-      val cross = rp
-        .join(m.as("x"), col("ga") === col("x.gid"))
-        .join(m.as("y"), col("gb") === col("y.gid"))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("da"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("db"),
-          col("cont"))
-      val intra = m.as("x")
-        .join(m.as("y"),
-          col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
-        .join(eligibleGids(reps), col("x.gid") === col("egid"), "left_semi")
-        .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
-          lit(1.0).as("cont"))
-      cross.unionByName(intra)
-        .select(col("da"), col("db"), round(col("cont"), 6).as("containment"))
-    },
-    Some(s"""WITH $duckGroupCtes,
-            |rp AS (
-            |  SELECT ga, gb, inter*1.0 / least(ca.n, cb.n) AS cont
-            |  FROM rpairs
-            |  JOIN cnt ca ON ga = ca.doc_id
-            |  JOIN cnt cb ON gb = cb.doc_id
-            |  WHERE inter*1.0 / least(ca.n, cb.n) >= 0.9
-            |)
-            |SELECT least(x.doc_id, y.doc_id) AS da,
-            |  greatest(x.doc_id, y.doc_id) AS db, round(cont, 6) AS containment
-            |FROM rp JOIN m x ON x.gid = rp.ga JOIN m y ON y.gid = rp.gb
-            |UNION ALL
-            |SELECT x.doc_id AS da, y.doc_id AS db, CAST(1.0 AS DOUBLE) AS containment
-            |FROM m x JOIN m y ON x.gid = y.gid AND x.doc_id < y.doc_id
-            |JOIN elig ON x.gid = egid""".stripMargin))
+    * this row is the Jaccard row with the other denominator (same
+    * blocks, same caps, same member expansion), so it costs the same
+    * bounded plan. */
+  val dedupContainment: Q = shinglePairs("dedup_containment", "containment",
+    col("inter") / least(col("na"), col("nb")),
+    "inter*1.0 / least(ca.n, cb.n)", 0.9)
 
   /** span window length for [[dedupSpans]]: 8 words ≈ the shortest
     * span worth cutting (Lee et al. use 50 BPE tokens; 8 words on the
@@ -532,11 +402,7 @@ object Dedup {
     * per element. */
   val dedupMinhash: Q = Q(
     "dedup_minhash",
-    (s, dir) => docs(s, dir)
-      .withColumn("words", expr(words("text")))
-      .filter(expr("size(words) >= 3"))
-      .withColumn("hashes", expr(shingleHashes("words")))
-      .withColumn("sig", expr(minhashSig("hashes")))
+    (s, dir) => Blocking.minhashSigs(docs(s, dir), col("doc_id"))
       .select(col("doc_id"),
         expr(sigDigest("sig")).as("sig_digest"),
         expr(sigDigest("sig", 1000033L, P1)).as("sig_digest2"),
@@ -544,11 +410,8 @@ object Dedup {
         expr("array_max(sig)").as("sig_max")),
     Some(s"""WITH w AS (
             |  SELECT doc_id, ${duckWords("text")} AS words FROM documents
-            |), hs AS (
-            |  SELECT doc_id, ${duckShingleHashes(duckShingles3("words"))} AS hashes
-            |  FROM w WHERE len(words) >= 3
             |), sig AS (
-            |  SELECT doc_id, ${duckMinhashSig("hashes")} AS sig FROM hs
+            |  ${Blocking.minhashSigSql("w", "doc_id")}
             |)
             |SELECT doc_id, ${duckSigDigest("sig")} AS sig_digest,
             |  ${duckSigDigest("sig", 1000033L, P1)} AS sig_digest2,
@@ -559,20 +422,19 @@ object Dedup {
   /** MinHash LSH: 16 bands x 4 rows -> candidate pairs sharing any
     * band bucket, with the signature-estimated Jaccard.
     *
-    * Runs REP-LEVEL (exact-dedup-first, round 15): byte-identical
-    * texts have identical signatures, hence identical band keys, so
-    * enumerating a copy family member-by-member through the band
-    * self-join is pure waste — at 300-copy replica scale it was the
-    * repo's #1 cost (a 300-member family is 44,850 pairs through the
-    * join) and once spilled a 71 GB scratch disk. Instead: group by
-    * text ([[textGroups]]), run the band machinery over ONE
-    * representative per family, and recover member pairs by group
-    * expansion at output — generation cost scales with DISTINCT
-    * texts, the copy fan-out lives in output-sized joins (the
-    * contam_fuzzy pattern).
+    * Runs REP-LEVEL (exact-dedup-first): byte-identical texts have
+    * identical signatures, hence identical band keys, so enumerating a
+    * copy family member-by-member through the band self-join is pure
+    * waste — at 300-copy replica scale it was the repo's #1 cost (a
+    * 300-member family is 44,850 pairs through the join) and once
+    * spilled a 71 GB scratch disk. Instead: group by text
+    * ([[textGroups]]), run the band machinery over ONE representative
+    * per family, and recover member pairs by group expansion at output
+    * — generation cost scales with DISTINCT texts, the copy fan-out
+    * lives in output-sized joins.
     *
     * The output is BIT-IDENTICAL to the direct doc-level form at any
-    * corpus (the oracle below is still the direct form): the bucket
+    * corpus (the oracle below is still the direct form): the hot-bucket
     * census weights each rep by its family size (`sum(gn)` = exactly
     * the doc count the direct census saw), so hot-bucket drops agree;
     * cross-family pairs inherit the rep pair's estimate (signatures
@@ -584,84 +446,39 @@ object Dedup {
     "dedup_minhash_lsh",
     (s, dir) => {
       val g = textGroups(s, dir)
-      val m = g.select(col("doc_id"), col("gid"))
-      // ALL reps, no MaxShingleBlock drop: the weighted census below is
-      // the authority on hot families (a family over MaxBucket saturates
+      // ALL reps, no MaxShingleBlock drop: the weighted census is the
+      // authority on hot families (a family over MaxBucket saturates
       // every bucket it touches, exactly as its members did directly)
-      val reps = g.filter(col("doc_id") === col("gid"))
-        .select(col("doc_id"), col("text"), col("gn"))
-      // `hashes` is materialized as a column BEFORE the signature fold:
-      // inlining it into the per-permutation lambda would re-evaluate
-      // the shingle hashing once per permutation (64x).
-      val sig = reps
-        .withColumn("words", expr(words("text")))
-        .filter(expr("size(words) >= 3"))
-        .withColumn("hashes", expr(shingleHashes("words")))
-        .select(col("doc_id").as("sgid"), col("gn"),
-          expr(minhashSig("hashes")).as("sig"))
-      val bands = sig.select(col("sgid"), col("gn"),
-        explode(expr(minhashBands("sig"))).as("bk"))
-      // hot-bucket guard: a band bucket of size m yields m^2/2 pairs, so
-      // one pathological bucket (boilerplate, empty docs) can dominate
-      // the whole join; buckets over the cap are dropped — their
-      // contents are so common that pair enumeration inside them is
-      // noise, not dedup signal. The oracle applies the same cap. The
-      // census is MEMBER-weighted (sum of family sizes, not rep count):
-      // bit-identical drops to the direct form. A window (not agg+join)
-      // computes it: it hash-partitions on bk, and the self-join below
-      // reuses that exact partitioning, so the guard costs zero extra
-      // shuffles. The >=2 bound is free pruning (a weight-1 bucket is a
-      // singleton doc), not a semantic change.
-      val bounded = bands
-        .withColumn("bn", sum("gn").over(
-          org.apache.spark.sql.expressions.Window.partitionBy("bk")))
-        .filter(col("bn").between(2, MaxBucket))
-        .drop("bn")
-      val cand = bounded.as("a")
-        .join(bounded.as("b"), col("a.bk") === col("b.bk") && col("a.sgid") < col("b.sgid"))
+      val sig = Blocking.minhashSigs(g.filter(col("doc_id") === col("gid")),
+        col("doc_id").as("sgid"), col("gn"))
+      val bounded = Blocking.dropHot(
+        sig.select(col("sgid"), col("gn"), explode(expr(minhashBands("sig"))).as("bk")),
+        "bk", Blocking.MaxBucket, weight = Some("gn"))
+      val repPairs = Blocking.selfJoin(bounded, "sgid", "bk")
         .select(col("a.sgid").as("ga"), col("b.sgid").as("gb"))
         .distinct()
-      val repPairs = cand
         .join(sig.as("sa"), col("ga") === col("sa.sgid"))
         .join(sig.as("sb"), col("gb") === col("sb.sgid"))
         .select(col("ga"), col("gb"),
           round(expr(minhashEstJaccard("sa.sig", "sb.sig")), 6).as("est_jaccard"))
-      val cross = repPairs
-        .join(m.as("x"), col("ga") === col("x.gid"))
-        .join(m.as("y"), col("gb") === col("y.gid"))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("da"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("db"),
-          col("est_jaccard"))
       // families with >= 2 members and >= 1 surviving bucket: every
-      // member pair is a pair the direct join emitted, est exactly 1.0
-      val intraGids = bounded.filter(col("gn") >= 2)
-        .select(col("sgid")).distinct()
-      val intra = m.as("x")
-        .join(m.as("y"),
-          col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
-        .join(intraGids, col("x.gid") === col("sgid"), "left_semi")
-        .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
-          lit(1.0).as("est_jaccard"))
-      cross.unionByName(intra)
+      // member pair is a pair the direct join emitted
+      val intraGids = bounded.filter(col("gn") >= 2).select(col("sgid")).distinct()
+      Blocking.expand(repPairs, g, intraGids, "doc_id", ("da", "db"),
+        "est_jaccard" -> lit(1.0))
     },
     Some(s"""WITH w AS (
             |  SELECT doc_id, ${duckWords("text")} AS words FROM documents
-            |), hs AS (
-            |  SELECT doc_id, ${duckShingleHashes(duckShingles3("words"))} AS hashes
-            |  FROM w WHERE len(words) >= 3
             |), sig AS (
-            |  SELECT doc_id, ${duckMinhashSig("hashes")} AS sig FROM hs
+            |  ${Blocking.minhashSigSql("w", "doc_id")}
             |), bands AS (
             |  SELECT doc_id, sig, unnest(${duckMinhashBands("sig")}) AS bk FROM sig
-            |), ok AS (
-            |  SELECT bk FROM bands GROUP BY bk
-            |  HAVING count(*) BETWEEN 2 AND $MaxBucket
             |), bounded AS (
-            |  SELECT bands.* FROM bands JOIN ok USING (bk)
+            |  ${Blocking.dropHotSql("bands", "bk", Blocking.MaxBucket)}
             |)
             |SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
             |  round(${duckMinhashEstJaccard("a.sig", "b.sig")}, 6) AS est_jaccard
-            |FROM bounded a JOIN bounded b ON a.bk = b.bk AND a.doc_id < b.doc_id""".stripMargin))
+            |FROM ${Blocking.selfJoinSql("bounded", "doc_id", "bk")}""".stripMargin))
 
   /** 60-bit SimHash fingerprints + hamming<=8 near-dup pairs from
     * 15-bit hamming band buckets (a pair within hamming 3 of the 60
@@ -674,72 +491,44 @@ object Dedup {
     * ~n/2^15 per band. That ratio is still linear in n — the band
     * keyspace is FIXED (4 bands x 2^15 values), so past ~32M docs the
     * AVERAGE bucket exceeds any drop-cap and dropping hot buckets
-    * (the minhash-LSH guard) would empty the operator. Same bound as
-    * the embedding buckets instead: keep a deterministic LCG-uniform
-    * sample of [[MaxEmbBucket]] DISTINCT FINGERPRINTS per bucket
-    * (rep-level since round 15), so candidates are <= 4 * 2^15 *
-    * cap^2 / 2 rep pairs at any corpus size and recall degrades
-    * gracefully rather than the plan exploding. The window partitions
-    * on the join key and runs as a WindowGroupLimit, riding the
-    * self-join's own exchange; at oracle SFs every bucket is under
-    * the cap (no-op). */
+    * would empty the operator. The buckets are SAMPLED instead
+    * ([[Blocking.sample]], rep-level: the cap counts DISTINCT
+    * fingerprints): candidates are <= 4 * 2^15 * cap^2 / 2 rep pairs
+    * at any corpus size and recall degrades gracefully rather than the
+    * plan exploding; at oracle SFs every bucket is under the cap
+    * (no-op).
+    *
+    * REP-LEVEL by FINGERPRINT VALUE: identical texts have identical
+    * fps, so a copy family enters the band machinery as ONE
+    * representative — and so do distinct texts that happen to share an
+    * fp (hamming 0 to each other, so expansion is exact for them too).
+    * Member pairs come back by group expansion: intra = all same-fp
+    * pairs at hamming 0 (emitted iff the rep is retained in >= 1
+    * bucket), cross = the rep pair's hamming, fp-constant. Unlike
+    * mm_phash_pairs (byte-distinct variants, no collapse — measured
+    * and reverted), replica copies here are byte-identical, so the
+    * collapse is real: at 300-copy scale the band self-join input
+    * shrinks 300x. */
   val dedupSimhash: Q = Q(
     "dedup_simhash",
     (s, dir) => {
-      // REP-LEVEL by FINGERPRINT VALUE (round 15): identical texts have
-      // identical fps, so a copy family enters the band machinery as
-      // ONE representative — and so do distinct texts that happen to
-      // share an fp (hamming 0 to each other, so expansion is exact for
-      // them too). The per-bucket cap counts DISTINCT fps, ordered by
-      // the same LCG priority over the rep id; the oracle applies the
-      // identical rep-level cap. Member pairs come back by group
-      // expansion: intra = all same-fp pairs at hamming 0 (emitted iff
-      // the rep is retained in >= 1 bucket), cross = the rep pair's
-      // hamming, fp-constant. Unlike mm_phash_pairs (byte-distinct
-      // variants, no collapse — measured and reverted), replica copies
-      // here are byte-identical, so the collapse is real: at 300-copy
-      // scale the band self-join input shrinks 300x and intra pairs
-      // come from a gid equi-join instead of the self-join + distinct.
       val fp = docs(s, dir)
         .withColumn("words", expr(words("text")))
         .filter(expr("size(words) >= 3"))
         .withColumn("hashes", expr(shingleHashes60("words")))
         .select(col("doc_id"), expr(simhash60("hashes")).as("fp"))
-      // checkpointed like textGroups: members and reps are both
-      // consumed downstream (m four times across the expansion
-      // branches), and the fp window must run once, not per branch
-      val fam = fp.withColumn("gid",
-        min("doc_id").over(Window.partitionBy("fp")))
-        .localCheckpoint(true)
-      val m = fam.select(col("doc_id"), col("gid"))
-      val reps = fam.filter(col("doc_id") === col("gid"))
-        .select(col("gid"), col("fp"))
-      val bands = reps.select(col("gid"), col("fp"),
-        explode(expr(simhashBands("fp"))).as("bk"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("bk")
-            .orderBy(expr(embPriority("gid")), col("gid"))))
-        .filter(col("rn") <= MaxEmbBucket).drop("rn")
-      val cand = bands.as("a")
-        .join(bands.as("b"), col("a.bk") === col("b.bk") && col("a.gid") < col("b.gid"))
+      val fam = Blocking.families(fp, "doc_id", Seq(col("fp")), "fp")
+      val bands = Blocking.sample(
+        fam.filter(col("doc_id") === col("gid")).select(col("gid"), col("fp"),
+          explode(expr(simhashBands("fp"))).as("bk")),
+        "gid", "bk")
+      val cand = Blocking.selfJoin(bands, "gid", "bk")
         .select(col("a.gid").as("ga"), col("b.gid").as("gb"),
           expr("bit_count(a.fp ^ b.fp)").as("hamming"))
         .filter(col("hamming") <= 8)
         .distinct()
-      val cross = cand
-        .join(m.as("x"), col("ga") === col("x.gid"))
-        .join(m.as("y"), col("gb") === col("y.gid"))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("da"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("db"),
-          col("hamming"))
-      val intraGids = bands.select(col("gid").as("igid")).distinct()
-      val intra = m.as("x")
-        .join(m.as("y"),
-          col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
-        .join(intraGids, col("x.gid") === col("igid"), "left_semi")
-        .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
-          lit(0).cast("integer").as("hamming"))
-      cross.unionByName(intra)
+      Blocking.expand(cand, fam, bands.select(col("gid").as("igid")).distinct(),
+        "doc_id", ("da", "db"), "hamming" -> lit(0).cast("integer"))
     },
     Some(s"""WITH w AS (
             |  SELECT doc_id, ${duckWords("text")} AS words FROM documents
@@ -749,36 +538,20 @@ object Dedup {
             |), fp AS (
             |  SELECT doc_id, ${duckSimhash60("hashes")} AS fp FROM hs
             |), fam AS (
-            |  SELECT doc_id, fp, min(doc_id) OVER (PARTITION BY fp) AS gid
-            |  FROM fp
-            |), reps AS (
-            |  SELECT gid, fp FROM fam WHERE doc_id = gid
+            |  ${Blocking.familiesSql("fp", "doc_id", "fp", "fp")}
             |), bands0 AS (
-            |  SELECT gid, fp, unnest(${duckSimhashBands("fp")}) AS bk FROM reps
+            |  SELECT gid, fp, unnest(${duckSimhashBands("fp")}) AS bk
+            |  FROM fam WHERE doc_id = gid
             |), bands AS (
-            |  SELECT gid, fp, bk FROM bands0
-            |  QUALIFY row_number() OVER (PARTITION BY bk
-            |    ORDER BY ${embPriority("gid")}, gid) <= $MaxEmbBucket
+            |  ${Blocking.sampleSql("bands0", "gid", "bk")}
             |), cand AS (
             |  SELECT DISTINCT a.gid AS ga, b.gid AS gb,
             |    bit_count(xor(a.fp, b.fp)) AS hamming
-            |  FROM bands a JOIN bands b ON a.bk = b.bk AND a.gid < b.gid
+            |  FROM ${Blocking.selfJoinSql("bands", "gid", "bk")}
             |  WHERE bit_count(xor(a.fp, b.fp)) <= 8
             |)
-            |SELECT least(x.doc_id, y.doc_id) AS da,
-            |  greatest(x.doc_id, y.doc_id) AS db, c.hamming AS hamming
-            |FROM cand c JOIN fam x ON c.ga = x.gid JOIN fam y ON c.gb = y.gid
-            |UNION ALL
-            |SELECT x.doc_id AS da, y.doc_id AS db,
-            |  CAST(0 AS INTEGER) AS hamming
-            |FROM fam x JOIN fam y ON x.gid = y.gid AND x.doc_id < y.doc_id
-            |WHERE x.gid IN (SELECT gid FROM bands)""".stripMargin))
-
-  /** Portable deterministic bucket priority: same arithmetic in Spark
-    * and DuckDB, mod-first so BIGINT multiplication cannot overflow
-    * DuckDB's checked 64-bit range for any id. */
-  private[operators] def embPriority(id: String): String =
-    s"(($id % 2147483648) * 1103515245 + 12345) % 2147483648"
+            |${Blocking.expandSql("cand", "fam", "SELECT gid FROM bands", "doc_id",
+              ("da", "db"), "hamming" -> "CAST(0 AS INTEGER)")}""".stripMargin))
 
   /** embedding near-dup: random-hyperplane LSH buckets (4 tables x
     * corpus-scaled bits — [[embBits]] holds expected occupancy at ~64
@@ -809,59 +582,40 @@ object Dedup {
   private[graft] def embeddingFoundPairs(
       s: org.apache.spark.sql.SparkSession, dir: String,
       anchorMod: Option[Long]): DataFrame = {
-      // REP-LEVEL by VECTOR VALUE (round 15): byte-identical vectors
-      // (a crawl's replica copies, and exactly what replica scaling
-      // produces) have identical hyperplane keys and pairwise cosine
-      // 1.0, so a copy family enters the bucket machinery as ONE
-      // representative and member pairs come back by group expansion —
-      // intra pairs at cos 1.0 (iff the rep is retained in >= 1
-      // bucket), cross pairs inheriting the rep pair's exact cosine
-      // (a pure function of the two vectors). The grouping key in
-      // Spark is a 128-bit pair (the fp60/fp60b collision stance —
-      // 16-byte shuffle key, never the vector): xxhash64 of the array
-      // plus SALTED xxhash64 of the REVERSED array — two different
-      // input byte streams, an independent family rather than a seed
-      // tweak of the same stream; the salt keeps the streams distinct
-      // even for reversal-symmetric vectors, where reverse(v) == v
-      // would otherwise collapse the 128-bit key to a single 64-bit
-      // hash. The oracle partitions by the
-      // vector itself, so a collision would surface as a hash
-      // mismatch at tested SFs. The per-bucket cap
-      // counts DISTINCT vectors, LCG-ordered by rep id; the oracle
-      // applies the identical rep-level cap. Bucket join still moves
-      // (id, bk) only; cosines are computed once per rep pair.
+      // REP-LEVEL by VECTOR VALUE: byte-identical vectors (a crawl's
+      // replica copies, and exactly what replica scaling produces) have
+      // identical hyperplane keys and pairwise cosine 1.0, so a copy
+      // family enters the bucket machinery as ONE representative and
+      // member pairs come back by group expansion — intra pairs at cos
+      // 1.0 (iff the rep is retained in >= 1 bucket), cross pairs
+      // inheriting the rep pair's exact cosine (a pure function of the
+      // two vectors). The family key in Spark is a 128-bit pair (the
+      // fp60/fp60b collision stance — 16-byte shuffle key, never the
+      // vector): xxhash64 of the array plus SALTED xxhash64 of the
+      // REVERSED array — two different input byte streams, an
+      // independent family rather than a seed tweak of the same stream;
+      // the salt keeps the streams distinct even for reversal-symmetric
+      // vectors, where reverse(v) == v would otherwise collapse the
+      // 128-bit key to a single 64-bit hash. The oracle partitions by
+      // the vector itself, so a collision would surface as a hash
+      // mismatch at tested SFs. The per-bucket cap counts DISTINCT
+      // vectors; the bucket join moves (id, bk) only; cosines are
+      // computed once per rep pair.
       val tbl = Tables(s, dir)
-      val raw = tbl.embeddings
       val bits = embBits(tbl.embeddingsCount)
-      // checkpointed like textGroups (the window must run once, not
-      // once per expansion branch); non-rep vectors are nulled before
-      // the checkpoint so pinned storage is O(ids + DISTINCT vectors)
-      val fam = raw
-        .withColumn("ha", xxhash64(col("embedding")))
-        .withColumn("hb", xxhash64(reverse(col("embedding")), lit(1L)))
-        .withColumn("gid", min("vec_id").over(Window.partitionBy("ha", "hb")))
-        .withColumn("embedding",
-          when(col("vec_id") === col("gid"), col("embedding")))
-        .select(col("vec_id"), col("gid"), col("embedding"))
-        .localCheckpoint(true)
+      val fam = Blocking.families(tbl.embeddings, "vec_id",
+        Seq(xxhash64(col("embedding")), xxhash64(reverse(col("embedding")), lit(1L))),
+        "embedding")
       val m = fam.select(col("vec_id"), col("gid"))
       val reps = fam.filter(col("vec_id") === col("gid"))
         .select(col("gid"), expr(toDouble("embedding")).as("v"))
         .withColumn("n2", expr(dot("v", "v")))
-      val keys = reps.select(col("gid"),
-        explode(expr(hyperplaneKeysN("v", bits.toString))).as("bk"))
-      // per-bucket truncation window partitions on the join key, so it
-      // rides the join's own exchange — zero extra shuffles
-      val bounded = keys
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("bk")
-            .orderBy(expr(embPriority("gid")), col("gid"))))
-        .filter(col("rn") <= MaxEmbBucket).drop("rn")
-      val cand = bounded.as("a")
-        .join(bounded.as("b"), col("a.bk") === col("b.bk") && col("a.gid") < col("b.gid"))
+      val bounded = Blocking.sample(
+        reps.select(col("gid"), explode(expr(hyperplaneKeysN("v", bits.toString))).as("bk")),
+        "gid", "bk")
+      val repPairs = Blocking.selfJoin(bounded, "gid", "bk")
         .select(col("a.gid").as("ga"), col("b.gid").as("gb"))
         .distinct()
-      val repPairs = cand
         .join(reps.select(col("gid").as("ga"), col("v").as("av"), col("n2").as("an2")), "ga")
         .join(reps.select(col("gid").as("gb"), col("v").as("bv"), col("n2").as("bn2")), "gb")
         .withColumn("cos", expr(s"${dot("av", "bv")} / sqrt(an2 * bn2)"))
@@ -870,53 +624,28 @@ object Dedup {
       val intraGids = bounded.select(col("gid").as("igid")).distinct()
       anchorMod match {
         case None =>
-          val cross = repPairs
-            .join(m.as("x"), col("ga") === col("x.gid"))
-            .join(m.as("y"), col("gb") === col("y.gid"))
-            .select(least(col("x.vec_id"), col("y.vec_id")).as("va"),
-              greatest(col("x.vec_id"), col("y.vec_id")).as("vb"),
-              col("cos_sim"))
-          val intra = m.as("x")
-            .join(m.as("y"),
-              col("x.gid") === col("y.gid") && col("x.vec_id") < col("y.vec_id"))
-            .join(intraGids, col("x.gid") === col("igid"), "left_semi")
-            .select(col("x.vec_id").as("va"), col("y.vec_id").as("vb"),
-              lit(1.0).as("cos_sim"))
-          cross.unionByName(intra)
+          Blocking.expand(repPairs, m, intraGids, "vec_id", ("va", "vb"),
+            "cos_sim" -> lit(1.0))
         case Some(sMod) =>
           // Eval-only anchored expansion: a pair survives the recall
-          // harness's `va % S == 0` iff its MIN member is an anchor,
-          // so enumerate only (anchor member) × (member) with
-          // anchor < member. The anchor member table is ~AnchorCap
-          // rows corpus-wide (ids are uniform mod S), so the
-          // expansion is bounded by anchors × family size instead of
-          // the full member-pair product. The bounded rep-pair set is
-          // materialized first (localCheckpoint — the same discipline
-          // as the IVF-PQ recall harnesses' approx-output
-          // checkpoint): it is consumed in BOTH orientations (the min
-          // can live on either side of a cross pair), and the
-          // checkpoint runs the band machinery once instead of
-          // embedding it per orientation branch.
-          val mA = m.filter(col("vec_id") % sMod === 0L)
-          val rp = repPairs.localCheckpoint(true)
-          val rp2 = rp.unionByName(rp.select(col("gb").as("ga"),
-            col("ga").as("gb"), col("cos_sim")))
-          // retained-gid list checkpointed too: id-sized, and it keeps
-          // the band-machinery subtree out of the expansion plan
-          val rg = intraGids.localCheckpoint(true)
-          val crossA = rp2
-            .join(mA.as("x"), col("ga") === col("x.gid"))
-            .join(m.as("y"), col("gb") === col("y.gid"))
-            .filter(col("x.vec_id") < col("y.vec_id"))
-            .select(col("x.vec_id").as("va"), col("y.vec_id").as("vb"),
-              col("cos_sim"))
-          val intraA = mA.as("x")
-            .join(m.as("y"),
-              col("x.gid") === col("y.gid") && col("x.vec_id") < col("y.vec_id"))
-            .join(rg, col("x.gid") === col("igid"), "left_semi")
-            .select(col("x.vec_id").as("va"), col("y.vec_id").as("vb"),
-              lit(1.0).as("cos_sim"))
-          crossA.unionByName(intraA)
+          // harness's `va % S == 0` iff its MIN member is an anchor, so
+          // enumerate only (anchor member) × (member) with anchor <
+          // member — the directed expansion with anchors on the left.
+          // The anchor member table is ~AnchorCap rows corpus-wide (ids
+          // are uniform mod S), so the expansion is bounded by anchors
+          // × family size instead of the full member-pair product. The
+          // rep pairs and the retained-gid list are materialized first
+          // (localCheckpoint — the IVF-PQ recall harnesses' discipline):
+          // the pairs are consumed in BOTH orientations (the min can
+          // live on either side of a cross pair), and the checkpoints
+          // run the band machinery once and keep it out of the
+          // expansion plan.
+          Blocking.expandDirected(
+            Blocking.bothWays(repPairs.localCheckpoint(true), "cos_sim"),
+            m.filter(col("vec_id") % sMod === 0L), m,
+            intraGids.localCheckpoint(true), "vec_id", ("va", "vb"),
+            "cos_sim", lit(1.0))
+            .filter(col("va") < col("vb"))
       }
   }
 
@@ -927,32 +656,21 @@ object Dedup {
             |), e AS (
             |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
             |), fam AS (
-            |  SELECT vec_id, v, min(vec_id) OVER (PARTITION BY v) AS gid
-            |  FROM e
-            |), reps AS (
-            |  SELECT gid, v FROM fam WHERE vec_id = gid
+            |  ${Blocking.familiesSql("e", "vec_id", "v", "v")}
             |), keys AS (
             |  SELECT gid, v, unnest(${duckHyperplaneKeysN("v", "p.bits")}) AS bk
-            |  FROM reps CROSS JOIN p
+            |  FROM fam CROSS JOIN p WHERE vec_id = gid
             |), bounded AS (
-            |  SELECT gid, v, bk FROM keys
-            |  QUALIFY row_number() OVER (PARTITION BY bk
-            |    ORDER BY ${embPriority("gid")}, gid) <= $MaxEmbBucket
+            |  ${Blocking.sampleSql("keys", "gid", "bk")}
             |), rp AS (
-            |  SELECT ga, gb, cos FROM (
+            |  SELECT ga, gb, round(cos, 6) AS cos_sim FROM (
             |    SELECT DISTINCT a.gid AS ga, b.gid AS gb,
             |      ${duckCosine("a.v", "b.v")} AS cos
-            |    FROM bounded a JOIN bounded b ON a.bk = b.bk AND a.gid < b.gid
+            |    FROM ${Blocking.selfJoinSql("bounded", "gid", "bk")}
             |  ) WHERE cos >= 0.4
             |)
-            |SELECT least(x.vec_id, y.vec_id) AS va,
-            |  greatest(x.vec_id, y.vec_id) AS vb,
-            |  round(r.cos, 6) AS cos_sim
-            |FROM rp r JOIN fam x ON r.ga = x.gid JOIN fam y ON r.gb = y.gid
-            |UNION ALL
-            |SELECT x.vec_id AS va, y.vec_id AS vb, CAST(1.0 AS DOUBLE) AS cos_sim
-            |FROM fam x JOIN fam y ON x.gid = y.gid AND x.vec_id < y.vec_id
-            |WHERE x.gid IN (SELECT gid FROM bounded)""".stripMargin)
+            |${Blocking.expandSql("rp", "fam", "SELECT gid FROM bounded", "vec_id",
+              ("va", "vb"), "cos_sim" -> "CAST(1.0 AS DOUBLE)")}""".stripMargin)
 
   /** Iterative min-label connected components over an edge list
     * (columns a, b). Each round does TWO label moves:
@@ -1090,31 +808,19 @@ object Dedup {
   val dedupMinhashQuality: Q = Q(
     "dedup_minhash_quality",
     (s, dir) => {
-      // rep form (see ngramPairs): identical texts have identical
+      // rep form (see shinglePairs): identical texts have identical
       // shingle sets AND identical signatures, so every member pair's
       // (true_pct, est_pct, err_pct) equals its rep pair's — and an
       // intra-group pair is (100, 100, 0) by definition. Signatures
       // are computed on DISTINCT texts only, which is also how a
       // production pipeline materializes them.
       val g = textGroups(s, dir)
-      val m = groupMembers(g).select(col("doc_id"), col("gid"))
       val reps = groupReps(g)
-      val base = shingleArraysOf(reps)
-      val sh = boundedBlocks(
-        base.select(col("doc_id"), expr("size(hs)").as("n"),
-          explode(col("hs")).as("sh")))
-      val pairs = sh.as("a")
-        .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("ga"), col("b.doc_id").as("gb"))
-        .agg(count(lit(1)).as("inter"),
-          min(col("a.n")).as("na"), min(col("b.n")).as("nb"))
-        .withColumn("true_pct",
-          expr("inter * 100 div (na + nb - inter)"))
+      val pairs = repPairStats(reps)
+        .withColumn("true_pct", expr("inter * 100 div (na + nb - inter)"))
         .filter(col("true_pct") >= 80)
         .select("ga", "gb", "true_pct")
-      val sig = base
-        .withColumn("hashes", expr(shingleHashes("words")))
-        .select(col("doc_id"), expr(minhashSig("hashes")).as("sig"))
+      val sig = Blocking.minhashSigs(reps, col("doc_id"))
       val repRows = pairs
         .join(sig.select(col("doc_id"), col("sig").as("siga")), col("ga") === col("doc_id"))
         .drop("doc_id")
@@ -1124,20 +830,10 @@ object Dedup {
         .select(col("ga"), col("gb"), col("true_pct"),
           expr("agree_lanes * 100 div 64").as("est_pct"),
           expr("abs(agree_lanes * 100 div 64 - true_pct)").as("err_pct"))
-      val cross = repRows
-        .join(m.as("x"), col("ga") === col("x.gid"))
-        .join(m.as("y"), col("gb") === col("y.gid"))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("da"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("db"),
-          col("true_pct"), col("est_pct"), col("err_pct"))
-      val intra = m.as("x")
-        .join(m.as("y"),
-          col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
-        .join(eligibleGids(reps), col("x.gid") === col("egid"), "left_semi")
-        .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
-          lit(100L).as("true_pct"), lit(100L).as("est_pct"),
-          lit(0L).as("err_pct"))
-      cross.unionByName(intra).orderBy("da", "db")
+      Blocking.expand(repRows, groupMembers(g), eligibleGids(reps), "doc_id",
+        ("da", "db"), "true_pct" -> lit(100L), "est_pct" -> lit(100L),
+        "err_pct" -> lit(0L))
+        .orderBy("da", "db")
     },
     Some(s"""WITH $duckGroupCtes,
             |tp AS (
@@ -1146,11 +842,8 @@ object Dedup {
             |  JOIN cnt ca ON ga = ca.doc_id
             |  JOIN cnt cb ON gb = cb.doc_id
             |  WHERE inter * 100 // (ca.n + cb.n - inter) >= 80
-            |), hsx AS (
-            |  SELECT doc_id, ${duckShingleHashes(duckShingles3("words"))} AS hashes
-            |  FROM w WHERE len(words) >= 3
             |), sig AS (
-            |  SELECT doc_id, ${duckMinhashSig("hashes")} AS sig FROM hsx
+            |  ${Blocking.minhashSigSql("w", "doc_id")}
             |), est AS (
             |  SELECT ga, gb, true_pct,
             |    CAST(list_sum(list_transform(range(1, 65),
@@ -1164,14 +857,9 @@ object Dedup {
             |    abs(agree_lanes * 100 // 64 - true_pct) AS err_pct
             |  FROM est
             |)
-            |SELECT least(x.doc_id, y.doc_id) AS da,
-            |  greatest(x.doc_id, y.doc_id) AS db, true_pct, est_pct, err_pct
-            |FROM reprows JOIN m x ON x.gid = ga JOIN m y ON y.gid = gb
-            |UNION ALL
-            |SELECT x.doc_id AS da, y.doc_id AS db, CAST(100 AS BIGINT),
-            |  CAST(100 AS BIGINT), CAST(0 AS BIGINT)
-            |FROM m x JOIN m y ON x.gid = y.gid AND x.doc_id < y.doc_id
-            |JOIN elig ON x.gid = egid
+            |${Blocking.expandSql("reprows", "m", "SELECT egid FROM elig", "doc_id",
+              ("da", "db"), "true_pct" -> "CAST(100 AS BIGINT)",
+              "est_pct" -> "CAST(100 AS BIGINT)", "err_pct" -> "CAST(0 AS BIGINT)")}
             |ORDER BY da, db""".stripMargin))
 
   val all: Seq[Q] = Seq(dedupExact, dedupExactNorm, dedupNgramJaccard,

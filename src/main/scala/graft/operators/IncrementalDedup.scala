@@ -84,11 +84,7 @@ object IncrementalDedup {
     * have no shingles, hence no signature — never near-dup anything. */
   def sigOf(batch: DataFrame): DataFrame = {
     graft.functions.Native.install(batch.sparkSession) // idempotent
-    batch
-      .withColumn("words", expr(words("text")))
-      .filter(expr("size(words) >= 3"))
-      .withColumn("hashes", expr(shingleHashes("words")))
-      .select(col("doc_id"), expr(minhashSig("hashes")).as("sig"))
+    Blocking.minhashSigs(batch, col("doc_id"))
   }
 
   /** The batch tagged with its family key and batch-local family min:
@@ -143,11 +139,7 @@ object IncrementalDedup {
     val r0 = fam.filter(col("doc_id") === col("bmin"))
     val withSig = precomputedSig match {
       case Some(ps) => r0.join(ps, Seq("doc_id"))
-      case None => r0
-        .withColumn("words", expr(words("text")))
-        .filter(expr("size(words) >= 3"))
-        .withColumn("hashes", expr(shingleHashes("words")))
-        .withColumn("sig", expr(minhashSig("hashes")))
+      case None => Blocking.minhashSigs(r0, col("fpa"), col("fpb"), col("bmin"))
     }
     applyBatchGrouped(fam.select("doc_id", "fpa", "fpb", "bmin"),
       withSig.select(col("fpa"), col("fpb"), col("bmin"), col("sig")),

@@ -491,7 +491,7 @@ object Multimodal {
     * all 4 bands) and partial for 4–6, the standard trade. Scale
     * shape is dedup_simhash's: band buckets carry (id, 8-byte hash),
     * the per-bucket truncation window rides the self-join's own
-    * exchange ([[Dedup.MaxEmbBucket]] cap), the pair stream is
+    * exchange ([[Blocking.sample]] cap), the pair stream is
     * band-local, and the verify is one integer XOR+popcount — no
     * stage touches pixels after the map-side decode.
     *
@@ -508,7 +508,6 @@ object Multimodal {
     "mm_phash_pairs",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val batchSize = 64
       val nFam = pairFamilies(Tables(s, dir).documentsCount)
       val ph = docs(s, dir)
@@ -520,16 +519,12 @@ object Multimodal {
           }
         }
         .toDF()
-      val bands = ph.select(col("doc_id"), col("phash"),
-        explode(expr("transform(sequence(0, 3), b -> b*16384 + " +
-          "((phash div shiftleft(CAST(1 AS BIGINT), 14*b)) % 16384))")).as("bk"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("bk")
-            .orderBy(expr(Dedup.embPriority("doc_id")), col("doc_id"))))
-        .filter(col("rn") <= Dedup.MaxEmbBucket).drop("rn")
-      bands.as("a")
-        .join(bands.as("b"),
-          col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
+      val bands = Blocking.sample(
+        ph.select(col("doc_id"), col("phash"),
+          explode(expr("transform(sequence(0, 3), b -> b*16384 + " +
+            "((phash div shiftleft(CAST(1 AS BIGINT), 14*b)) % 16384))")).as("bk")),
+        "doc_id", "bk")
+      Blocking.selfJoin(bands, "doc_id", "bk")
         .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
           expr("bit_count(a.phash ^ b.phash)").as("hamming"))
         .filter(col("hamming") <= 6)
@@ -567,13 +562,11 @@ object Multimodal {
             |      FOR b IN range(0, 4)]) AS bk
             |  FROM ph
             |), bands AS (
-            |  SELECT doc_id, phash, bk FROM bands0
-            |  QUALIFY row_number() OVER (PARTITION BY bk
-            |    ORDER BY ${Dedup.embPriority("doc_id")}, doc_id) <= ${Dedup.MaxEmbBucket}
+            |  ${Blocking.sampleSql("bands0", "doc_id", "bk")}
             |)
             |SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
             |  bit_count(xor(a.phash, b.phash)) AS hamming
-            |FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id
+            |FROM ${Blocking.selfJoinSql("bands", "doc_id", "bk")}
             |WHERE bit_count(xor(a.phash, b.phash)) <= 6""".stripMargin))
 
   /** content-addressed dedup of binary media: group by sha-256 of the

@@ -334,20 +334,47 @@ object Relational {
            |  count(*) AS n_orders, round(sum(o_totalprice), 2) AS total
            |FROM orders GROUP BY 1 ORDER BY month""".stripMargin))
 
-  /** Exact interpolated percentiles per group (median + p90). */
+  /** Exact interpolated percentiles per group (median + p90), in
+    * integer cents: quantile q = q10/10 sits between the rows at
+    * 1-based ranks lo = (n-1)·q10 div 10 + 1 and lo + 1, a fraction
+    * frac = (n-1)·q10 mod 10 tenths of the way, so the value in cents
+    * is (10·lo + frac·(hi - lo) + 5) div 10 — the exact interpolation
+    * rounded half-up, then /100. The float form
+    * (hi-pos)·lo + (pos-lo)·hi loses an ulp at half-cent boundaries,
+    * and the engines then round the same exact value to different
+    * cents. Rank lookups ride [[centsAtRanks]]'s histogram. */
   val qPercentiles: Q = Q(
     "q_percentiles",
-    (s, dir) =>
-      t(s, dir).orders
-        .groupBy("o_orderpriority")
-        .agg(
-          round(expr("percentile(o_totalprice, 0.5)"), 2).as("p50"),
-          round(expr("percentile(o_totalprice, 0.9)"), 2).as("p90"))
-        .orderBy("o_orderpriority"),
-    Some("""SELECT o_orderpriority,
-           |  round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
-           |  round(quantile_cont(o_totalprice, 0.9), 2) AS p90
-           |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))
+    (s, dir) => {
+      def interp(q10: Int, lo: String, hi: String): Column =
+        expr(s"($lo * 10 + ((n - 1) * $q10) % 10 * ($hi - $lo) + 5) div 10")
+          .cast("double") / 100
+      centsAtRanks(t(s, dir).orders.select(col("o_orderpriority"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents")),
+          "o_orderpriority",
+          "lo50" -> "(n - 1) * 5 div 10 + 1", "hi50" -> "least((n - 1) * 5 div 10 + 2, n)",
+          "lo90" -> "(n - 1) * 9 div 10 + 1", "hi90" -> "least((n - 1) * 9 div 10 + 2, n)")
+        .select(col("o_orderpriority"), interp(5, "lo50", "hi50").as("p50"),
+          interp(9, "lo90", "hi90").as("p90"))
+        .orderBy("o_orderpriority")
+    },
+    Some("""WITH r AS (
+           |  SELECT o_orderpriority, CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+           |    row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice) AS rk,
+           |    count(*) OVER (PARTITION BY o_orderpriority) AS n
+           |  FROM orders
+           |), q AS (
+           |  SELECT o_orderpriority, max(n) AS n,
+           |    max(CASE WHEN rk = (n - 1) * 5 // 10 + 1 THEN cents END) AS lo50,
+           |    max(CASE WHEN rk = least((n - 1) * 5 // 10 + 2, n) THEN cents END) AS hi50,
+           |    max(CASE WHEN rk = (n - 1) * 9 // 10 + 1 THEN cents END) AS lo90,
+           |    max(CASE WHEN rk = least((n - 1) * 9 // 10 + 2, n) THEN cents END) AS hi90
+           |  FROM r GROUP BY o_orderpriority
+           |)
+           |SELECT o_orderpriority,
+           |  CAST((lo50 * 10 + ((n - 1) * 5) % 10 * (hi50 - lo50) + 5) // 10 AS DOUBLE) / 100 AS p50,
+           |  CAST((lo90 * 10 + ((n - 1) * 9) % 10 * (hi90 - lo90) + 5) // 10 AS DOUBLE) / 100 AS p90
+           |FROM q ORDER BY o_orderpriority""".stripMargin))
 
   /** Argmax pattern: latest order per customer — the same latest-per-key
     * primitive the CDC materializer uses ([[graft.cdc.Cdc.latest]]). */
@@ -918,6 +945,28 @@ object Relational {
            |GROUP BY ROLLUP (n_name, year(o_orderdate))
            |ORDER BY nation, yr""".stripMargin))
 
+  /** Exact discrete quantiles of integer `cents` per `key`, each rank
+    * a SQL expression over the group size `n`: (key, n, one column per
+    * rank holding the value at that 1-based rank). The naive form (a
+    * row_number window over the raw rows) sorts the WHOLE group in one
+    * task — at 3 distinct flags that is 3 single-threaded sorts of N/3
+    * rows each, measured ~100–144 s at sf10. Instead the rows first
+    * partial-agg into a (key, cents) HISTOGRAM — integer cents have a
+    * bounded value domain, so the histogram is capped by |domain|, not
+    * N (sf10: 60M rows → 594k histogram rows), and the cap TIGHTENS as
+    * N grows past the domain size. The running-sum window then orders
+    * only distinct cents (no ties, so the frame is unambiguous), and
+    * the value at rank r is the smallest cents whose cumulative count
+    * reaches r — the oracles' row_number pick. */
+  private def centsAtRanks(df: DataFrame, key: String,
+      ranks: (String, String)*): DataFrame =
+    df.groupBy(key, "cents").agg(count(lit(1)).as("cnt"))
+      .withColumn("cum", sum("cnt").over(Window.partitionBy(key).orderBy("cents")))
+      .withColumn("n", sum("cnt").over(Window.partitionBy(key)))
+      .groupBy(key)
+      .agg(max("n").as("n"), ranks.map { case (name, r) =>
+        min(when(col("cum") >= expr(r), col("cents"))).as(name) }: _*)
+
   /** approximate per-group quantiles (mergeable sketch): the scale
     * counterpart of q_percentiles. The sketch value is engine-specific,
     * so the query ALSO computes exact DISCRETE quantiles (the integer-
@@ -926,23 +975,10 @@ object Relational {
     * ulp and flip rounding boundaries) and emits a deterministic
     * `within_bounds` verdict (sketch within 2% of exact at accuracy
     * 10000) — the oracle hash-matches (group, exact quantile cents, n,
-    * within_bounds=true) exactly.
-    *
-    * Scale shape of the exact side: the naive form (row_number window
-    * over the raw rows) sorts the WHOLE group in one task — at 3
-    * distinct flags that is 3 single-threaded sorts of N/3 rows each,
-    * measured ~100–144 s at sf10. Instead the rows first partial-agg
-    * into a (flag, cents) HISTOGRAM — integer cents have a bounded
-    * value domain, so the histogram is capped by |domain|, not N (sf10:
-    * 60M rows → 594k histogram rows), and the cap TIGHTENS as N grows
-    * past the domain size, exactly the 100 TB regime. The running-sum
-    * window then orders only distinct cents, and the value at rank r is
-    * the smallest cents whose cumulative count reaches r — identical
-    * discrete-quantile semantics, same oracle SQL. */
+    * within_bounds=true) exactly. The exact side is [[centsAtRanks]]. */
   val qApproxPercentile: Q = Q(
     "q_approx_percentile",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val li = t(s, dir).lineitem
         .select(col("l_returnflag"),
           expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"))
@@ -950,23 +986,9 @@ object Relational {
       // with other aggs forces the sort-based fallback, ~40x slower)
       val approx = li.groupBy("l_returnflag")
         .agg(expr("approx_percentile(cents, array(0.5, 0.95), 10000)").as("ap"))
-      // discrete exact quantiles via the (flag, cents) histogram: the
-      // heavy input partial-aggregates map-side, the window orders only
-      // distinct cents (domain-bounded, no ties → running sum is
-      // frame-unambiguous), and rank-r value = smallest cents whose
-      // cumulative count reaches r.
-      val hist = li.groupBy("l_returnflag", "cents")
-        .agg(count(lit(1)).as("cnt"))
-      val cum = hist
-        .withColumn("cum", sum("cnt").over(
-          Window.partitionBy("l_returnflag").orderBy("cents")))
-        .withColumn("n", sum("cnt").over(Window.partitionBy("l_returnflag")))
-      val exact = cum.groupBy("l_returnflag")
-        .agg(min(when(col("cum") >= expr("(n + 1) div 2"), col("cents")))
-            .as("exact_p50_cents"),
-          min(when(col("cum") >= expr("(95 * n + 99) div 100"), col("cents")))
-            .as("exact_p95_cents"),
-          max("n").as("n"))
+      val exact = centsAtRanks(li, "l_returnflag",
+        "exact_p50_cents" -> "(n + 1) div 2",
+        "exact_p95_cents" -> "(95 * n + 99) div 100")
       exact.join(broadcast(approx), "l_returnflag")
         .select(col("l_returnflag"),
           col("exact_p50_cents"), col("exact_p95_cents"), col("n"),

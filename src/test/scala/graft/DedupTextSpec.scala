@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, TextOps}
+import graft.operators.{Blocking, Dedup, TextOps}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariant checks for the dedup + text suites at sf0.001 (the DuckDB
@@ -52,78 +52,130 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     rows.foreach(r => assert(r.getDouble(2) >= 0.4 && r.getDouble(2) <= 1.0))
   }
 
-  // Round 16: dedup_simhash / dedup_embedding moved to rep-level
-  // candidate generation in round 15, and their DuckDB oracles moved
-  // in lockstep (the cap counts DISTINCT fingerprints/vectors) — so
-  // the oracle now verifies "same rep-level algorithm on both
-  // engines", a weaker independence guarantee than the minhash rows'
-  // untouched doc-level oracles. These two specs restore the lost
-  // strength: at sf0.001 every bucket is under the cap, where the
-  // rep-level and the ORIGINAL direct doc-level definitions provably
-  // coincide — computed here independently (per-DOC band keys, plain
-  // self-join, no family machinery) and asserted set-equal to the
-  // shipped rows' output.
+  // The pair rows run rep-level (exact-dedup-first via Blocking: one
+  // representative per copy family through the blocking join, members
+  // restored by expansion), and the simhash/embedding oracles moved to
+  // the same rep-level algorithm — a weaker independence guarantee than
+  // a doc-level oracle. The driver's test corpora hold 500 distinct
+  // texts, so no oracle run ever builds a family of more than one
+  // member. This spec restores the strength: on a corpus of copy
+  // families of 1, 2 and 5 byte-identical members (texts and vectors),
+  // with every cap a no-op, each row must equal its ORIGINAL direct
+  // doc-level definition, computed here independently (per-DOC block
+  // keys, plain self-joins, no family machinery).
 
-  test("dedup_simhash rep-level ≡ direct doc-level at a cap-free SF") {
+  /** sf0.001's documents and embeddings replicated into copy families
+    * of 1, 2 and 5 members (by id mod 3), ids id * 8 + copy — so
+    * families straddle the contamination split (doc_id % 20). */
+  private lazy val famDir: String = {
     import org.apache.spark.sql.functions._
-    import graft.functions.{Portable => P}
-    graft.functions.Native.install(spark)
-    val bands = spark.read.parquet(s"$dir/documents.parquet")
-      .withColumn("words", expr(P.words("text")))
-      .filter(expr("size(words) >= 3"))
-      .select(col("doc_id"),
-        expr(P.simhash60(P.shingleHashes60("words"))).as("fp"))
-      .select(col("doc_id"), col("fp"),
-        explode(expr(P.simhashBands("fp"))).as("bk"))
-    // precondition: the cap is a no-op here (counting DOC members)
-    val maxBucket = bands.groupBy("bk").count()
-      .agg(max("count")).head.getLong(0)
-    assert(maxBucket <= Dedup.MaxEmbBucket,
-      s"sf0.001 bucket occupancy $maxBucket exceeds the cap — the " +
-        "equivalence premise no longer holds at this SF")
-    val direct = bands.as("a")
-      .join(bands.as("b"),
-        col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-        expr("bit_count(a.fp ^ b.fp)").as("hamming"))
-      .filter(col("hamming") <= 8)
-      .distinct()
-    val shipped = Dedup.dedupSimhash.run(spark, dir)
-    assert(direct.exceptAll(shipped).isEmpty &&
-      shipped.exceptAll(direct).isEmpty,
-      "rep-level output differs from the direct doc-level definition")
-    assert(shipped.count() > 0)
+    val out = java.nio.file.Files.createTempDirectory("copy_families").toString
+    for ((t, id) <- Seq("documents" -> "doc_id", "embeddings" -> "vec_id"))
+      spark.read.parquet(s"$dir/$t.parquet")
+        .withColumn("copy", explode(expr(
+          s"sequence(0, CASE $id % 3 WHEN 0 THEN 0 WHEN 1 THEN 1 ELSE 4 END)")))
+        .withColumn(id, col(id) * 8 + col("copy")).drop("copy")
+        .write.parquet(s"$out/$t.parquet")
+    out
   }
 
-  test("dedup_embedding rep-level ≡ direct doc-level at a cap-free SF") {
+  test("rep-level pair rows ≡ direct doc-level definitions on copy families") {
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.functions._
     import graft.functions.{Portable => P}
     graft.functions.Native.install(spark)
-    val tbl = graft.sources.Tables(spark, dir)
-    val bits = Dedup.embBits(tbl.embeddingsCount)
+    def maxBlock(df: DataFrame, key: String): Long =
+      df.groupBy(key).count().agg(max("count")).head.getLong(0)
+    val docs = spark.read.parquet(s"$famDir/documents.parquet")
+      .withColumn("words", expr(P.words("text")))
+      .filter(expr("size(words) >= 3"))
+    // shingle sets, their sizes and shared-shingle counts per doc pair
+    val sh = docs.select(col("doc_id"),
+      explode(expr(s"array_distinct(${P.shingleHashes60("words")})")).as("sh"))
+    assert(maxBlock(sh, "sh") <= Blocking.MaxShingleBlock,
+      "a shingle block exceeds its cap — the equivalence premise fails")
+    val n = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val inter = sh.as("a")
+      .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+      .agg(count(lit(1)).as("inter"))
+      .join(n.select(col("doc_id").as("da"), col("n").as("na")), "da")
+      .join(n.select(col("doc_id").as("db"), col("n").as("nb")), "db")
+    def scored(score: Column, atLeast: Double): DataFrame = inter
+      .filter(score >= atLeast).select(col("da"), col("db"), round(score, 6))
+    // MinHash signatures and LSH bands
+    val sig = docs.select(col("doc_id"),
+      expr(P.minhashSig(P.shingleHashes("words"))).as("sig"))
+    val mhBands = sig.select(col("doc_id"), col("sig"),
+      explode(expr(P.minhashBands("sig"))).as("bk"))
+    assert(maxBlock(mhBands, "bk") <= Blocking.MaxBucket,
+      "a MinHash bucket exceeds its cap — the equivalence premise fails")
+    def bandPairs(cond: Column, atLeast: Double): DataFrame = mhBands.as("a")
+      .join(mhBands.as("b"), col("a.bk") === col("b.bk") && cond)
+      .select(col("a.doc_id").as("x"), col("b.doc_id").as("y"),
+        expr(P.minhashEstJaccard("a.sig", "b.sig")).as("est"))
+      .distinct()
+      .filter(col("est") >= atLeast)
+      .select(col("x"), col("y"), round(col("est"), 6))
+    // SimHash fingerprints and bands
+    val shBands = docs.select(col("doc_id"),
+        expr(P.simhash60(P.shingleHashes60("words"))).as("fp"))
+      .select(col("doc_id"), col("fp"), explode(expr(P.simhashBands("fp"))).as("bk"))
+    assert(maxBlock(shBands, "bk") <= Blocking.MaxEmbBucket,
+      "a SimHash bucket exceeds the cap — the equivalence premise fails")
+    // hyperplane keys
+    val tbl = graft.sources.Tables(spark, famDir)
     val keys = tbl.embeddings
       .select(col("vec_id"), expr(P.toDouble("embedding")).as("v"))
       .withColumn("n2", expr(P.dot("v", "v")))
       .select(col("vec_id"), col("v"), col("n2"),
-        explode(expr(P.hyperplaneKeysN("v", bits.toString))).as("bk"))
-    val maxBucket = keys.groupBy("bk").count()
-      .agg(max("count")).head.getLong(0)
-    assert(maxBucket <= Dedup.MaxEmbBucket,
-      s"sf0.001 bucket occupancy $maxBucket exceeds the cap — the " +
-        "equivalence premise no longer holds at this SF")
-    val direct = keys.as("a")
-      .join(keys.as("b"),
-        col("a.bk") === col("b.bk") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-        expr(s"${P.dot("a.v", "b.v")} / sqrt(a.n2 * b.n2)").as("cos"))
-      .distinct()
-      .filter(col("cos") >= 0.4)
-      .select(col("va"), col("vb"), round(col("cos"), 6).as("cos_sim"))
-    val shipped = Dedup.dedupEmbedding.run(spark, dir)
-    assert(direct.exceptAll(shipped).isEmpty &&
-      shipped.exceptAll(direct).isEmpty,
-      "rep-level output differs from the direct doc-level definition")
-    assert(shipped.count() > 0)
+        explode(expr(P.hyperplaneKeysN("v", Dedup.embBits(tbl.embeddingsCount).toString)))
+          .as("bk"))
+    assert(maxBlock(keys, "bk") <= Blocking.MaxEmbBucket,
+      "a hyperplane bucket exceeds the cap — the equivalence premise fails")
+    val (corpus, bench) = (col("a.doc_id") % 20 =!= 0, col("b.doc_id") % 20 === 0)
+
+    val direct: Seq[(String, DataFrame)] = Seq(
+      "dedup_ngram_jaccard" ->
+        scored(col("inter") / (col("na") + col("nb") - col("inter")), 0.8),
+      "dedup_containment" ->
+        scored(col("inter") / least(col("na"), col("nb")), 0.9),
+      "dedup_minhash_lsh" -> bandPairs(col("a.doc_id") < col("b.doc_id"), 0.0),
+      "dedup_minhash_quality" -> inter
+        .withColumn("true_pct", expr("inter * 100 div (na + nb - inter)"))
+        .filter(col("true_pct") >= 80)
+        .join(sig.select(col("doc_id").as("da"), col("sig").as("sa")), "da")
+        .join(sig.select(col("doc_id").as("db"), col("sig").as("sb")), "db")
+        .withColumn("agree", expr("size(filter(zip_with(sa, sb, (x, y) -> x = y), e -> e))"))
+        .select(col("da"), col("db"), col("true_pct"),
+          expr("agree * 100 div 64"), expr("abs(agree * 100 div 64 - true_pct)")),
+      "dedup_simhash" -> shBands.as("a")
+        .join(shBands.as("b"), col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id"), col("b.doc_id"), expr("bit_count(a.fp ^ b.fp)").as("h"))
+        .filter(col("h") <= 8)
+        .distinct(),
+      "dedup_embedding" -> keys.as("a")
+        .join(keys.as("b"), col("a.bk") === col("b.bk") && col("a.vec_id") < col("b.vec_id"))
+        .select(col("a.vec_id"), col("b.vec_id"),
+          expr(s"${P.dot("a.v", "b.v")} / sqrt(a.n2 * b.n2)").as("cos"))
+        .distinct()
+        .filter(col("cos") >= 0.4)
+        .select(col("a.vec_id"), col("b.vec_id"), round(col("cos"), 6)),
+      "text_contamination" -> sh.as("a")
+        .join(sh.as("b"), col("a.sh") === col("b.sh") && corpus && bench)
+        .groupBy(col("a.doc_id"), col("b.doc_id"))
+        .agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= 5),
+      "contam_fuzzy" -> bandPairs(corpus && bench, 0.5))
+
+    for ((row, want) <- direct) {
+      val got = SparkEntry.queries(row)(spark, famDir)
+      assert(want.exceptAll(got).isEmpty && got.exceptAll(want).isEmpty,
+        s"$row: rep-level output differs from the direct doc-level definition")
+      // the corpus must exercise the expansion: a pair inside a family
+      val sameFamily = got.filter(expr(s"${got.columns(0)} div 8 = ${got.columns(1)} div 8"))
+      assert(sameFamily.count() > 0, s"$row: no intra-family pair — the test is vacuous")
+    }
   }
 
   test("anchored expansion (S>1) ≡ full expansion filtered on anchors") {

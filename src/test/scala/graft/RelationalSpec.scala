@@ -54,6 +54,36 @@ class RelationalSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), "expected broadcast joins in q5")
   }
 
+  test("q_percentiles interpolates in integer cents and rounds half-cent ties up") {
+    // Each group's exact interpolated quantile lands on a half cent
+    // (e.g. p50 of 108122.87 and 113387.42 is 110755.145); float
+    // interpolation lands an ulp below it and rounds to the cent under.
+    import spark.implicits._
+    val prices = Map(
+      "1-URGENT" -> Seq(108122.87, 113387.42),
+      "2-HIGH" -> Seq(51454.84, 336793.61),
+      "3-MEDIUM" -> Seq(301321.80, 445942.63, 12.5),
+      "4-LOW" -> Seq(4242.42))
+    val dir = java.nio.file.Files.createTempDirectory("q_percentiles").toString
+    prices.toSeq.flatMap { case (k, ps) => ps.map(k -> _) }
+      .toDF("o_orderpriority", "o_totalprice")
+      .write.parquet(s"$dir/orders.parquet")
+    def exact(ps: Seq[Double], q: BigDecimal): Double = {
+      val v = ps.map(BigDecimal(_)).sorted
+      val pos = (v.size - 1) * q
+      val lo = pos.toInt
+      val hi = math.min(lo + 1, v.size - 1)
+      (v(lo) + (v(hi) - v(lo)) * (pos - lo)).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    val expected = prices.toSeq.sortBy(_._1).map { case (k, ps) =>
+      (k, exact(ps, BigDecimal("0.5")), exact(ps, BigDecimal("0.9")))
+    }
+    val got = Relational.qPercentiles.run(spark, dir).collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(got == expected)
+    assert(expected.head == (("1-URGENT", 110755.15, 112860.97)))
+  }
+
   test("filter pushdown reaches parquet scan in q6") {
     val plan = Relational.q6FilterAgg.run(spark, sfDir)
       .queryExecution.executedPlan.toString
