@@ -77,19 +77,12 @@ object ChangelogAgg {
     * shared by the batch and streaming registry rows; written as TWO
     * parquet files so `maxFilesPerTrigger=1` genuinely splits the
     * bounded feed into two micro-batches. */
-  private val fullFeedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private[graft] def stagedFullFeed(s: SparkSession, dir: String): String =
-    fullFeedDirs.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), { _ =>
-        val tmp = java.nio.file.Files.createTempDirectory("graft_full_feed")
-        graft.sources.Formats.deleteRecursivelyOnExit(tmp)
-        val p = tmp.toString + "/feed"
-        fullImageFeedFrom(graft.sources.Tables(s, dir).events)
-          .repartition(2).write.mode("overwrite").parquet(p)
-        p
-      })
+    graft.sources.Formats.stageOnce(s, "full_feed", dir) { root =>
+      fullImageFeedFrom(graft.sources.Tables(s, dir).events)
+        .repartition(2).write.mode("overwrite").parquet(root + "/feed")
+      root + "/feed"
+    }
 
   /** Map-only projection of a parsed full-image event ([[Cdc.parse]]
     * output — the wire carries both images, so no window, no state,

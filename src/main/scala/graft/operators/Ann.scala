@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Par, Q}
 import graft.functions.Portable._
 import graft.sources.Tables
+import graft.streaming.Streams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1771,12 +1772,6 @@ object Ann {
 
   // ---- incremental index ------------------------------------------------
 
-  /** One staged embeddings directory per (session, source dir) — TWO
-    * parquet files so `maxFilesPerTrigger=1` forces two genuine
-    * ingest batches through the index. */
-  private val annStreamDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** Incremental IVF index ingest — the maintenance half of a living
     * vector-search system (ann_ivf is the one-shot batch build; a real
     * corpus GROWS): embedding batches stream in, each vector is
@@ -1796,42 +1791,34 @@ object Ann {
     "ann_incremental",
     (s, dir) => {
       val indexRoot = graft.sources.Formats.scratchDir("graft_ann_index")
-      val staged = annStreamDirs.computeIfAbsent(
-        (s.sparkContext.applicationId, dir), { _ =>
-          val tmp = java.nio.file.Files.createTempDirectory("graft_ann_feed")
-          graft.sources.Formats.deleteRecursivelyOnExit(tmp)
-          val p = tmp.toString + "/emb"
-          Tables(s, dir).embeddings.select("vec_id", "embedding")
-            .repartition(2).write.mode("overwrite").parquet(p)
-          p
-        })
+      // the embeddings staged once per source dir as TWO parquet files,
+      // so `maxFilesPerTrigger=1` forces two ingest batches
+      val staged = graft.sources.Formats.stageOnce(s, "ann_feed", dir) { root =>
+        Tables(s, dir).embeddings.select("vec_id", "embedding")
+          .repartition(2).write.mode("overwrite").parquet(root + "/emb")
+        root + "/emb"
+      }
       val cents = emb(s, dir).filter(col("vec_id") < 16)
         .select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2"))
         .localCheckpoint(true)
-      val schema = s.read.parquet(staged).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", graft.streaming.Streams.filesPerTrigger).parquet(staged)
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val e = batch
-            .select(col("vec_id"), expr(toDouble("embedding")).as("v"))
-            .withColumn("n2", expr(dot("v", "v")))
-            .localCheckpoint()
-          // slim pair stream (vec_id, c_id, c_cos) into a codegen
-          // HashAggregate argmax; v/n2 re-attached by a vec_id join
-          // rather than dragged through the aggregate as first()
-          e.crossJoin(broadcast(cents))
-            .select(col("vec_id"), col("c_id"),
-              cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-            .groupBy("vec_id")
-            .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
-            .join(e, "vec_id")
-            .select(col("vec_id"), col("cell"), col("v"), col("n2"))
-            .write.mode("append").partitionBy("cell")
-            .parquet(s"$indexRoot/vectors")
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      Streams.drainEach(Streams.fileFeed(s, staged)) { (batch, _) =>
+        val e = batch
+          .select(col("vec_id"), expr(toDouble("embedding")).as("v"))
+          .withColumn("n2", expr(dot("v", "v")))
+          .localCheckpoint()
+        // slim pair stream (vec_id, c_id, c_cos) into a codegen
+        // HashAggregate argmax; v/n2 re-attached by a vec_id join
+        // rather than dragged through the aggregate as first()
+        e.crossJoin(broadcast(cents))
+          .select(col("vec_id"), col("c_id"),
+            cosWith("v", "n2", "cv", "cn2").as("c_cos"))
+          .groupBy("vec_id")
+          .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
+          .join(e, "vec_id")
+          .select(col("vec_id"), col("cell"), col("v"), col("n2"))
+          .write.mode("append").partitionBy("cell")
+          .parquet(s"$indexRoot/vectors")
+      }
       // maintenance pass the append-only ingest needs to survive years
       // of batches: coalesce each fragmented cell back to target file
       // count (here: the two ingest batches' files per cell -> 1)

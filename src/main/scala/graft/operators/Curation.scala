@@ -3,6 +3,7 @@ package graft.operators
 import graft.Q
 import graft.functions.Portable._
 import graft.sources.Tables
+import graft.streaming.Streams
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -715,27 +716,6 @@ object Curation {
               |ORDER BY lang, rn""".stripMargin))
   }
 
-  /** One staged documents directory (doc_id, text, lang) per (session,
-    * source dir) — TWO parquet files so `maxFilesPerTrigger=1` forces
-    * two genuine arrival batches. */
-  private val curateStreamDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** The curation topology as ONE live streaming query — the
-    * training-data twin of pipeline_cdc_stream: document batches
-    * stream in, each batch is quality-gated map-side (the same three
-    * Gopher-style gates as pipeline_curate), DECONTAMINATED against a
-    * static broadcast benchmark band index (contam_fuzzy's machinery
-    * in the live path — est-Jaccard >= 0.5 vs any eval item drops the
-    * doc, round 12), the survivors pass through the PERSISTENT
-    * incremental near-dup index ([[IncrementalDedup.applyBatch]] —
-    * O(batch + touched index buckets) per batch, arrival-order
-    * independent), and the gated rows land in a curated staging area.
-    * The final corpus report — per-language doc and token counts of
-    * everything that survived all three gates — must hash-match an
-    * oracle that recomputes the whole thing from scratch in one pass:
-    * proof the streamed curation equals the batch curation under an
-    * arbitrary split. */
   /** Start the streamed curation topology (map-side quality gates ->
     * fuzzy DECONTAMINATION gate -> persistent incremental near-dup
     * index -> curated staging) over a staged documents directory.
@@ -769,16 +749,13 @@ object Curation {
         explode(expr(minhashBands("sig"))).as("bk")).localCheckpoint()
       (sig, bands)
     }
-    val schema = s.read.parquet(staged).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", graft.streaming.Streams.filesPerTrigger).parquet(staged)
-    val writer = stream.writeStream.outputMode("append")
+    val writer = Streams.fileFeed(s, staged).writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
        // batch-sized shuffle partitions for the whole per-batch
        // topology (gate, fp-window, decon join, index) — guide §2.2;
        // same tiny-task pathology as dedup_incremental, measured by
        // the r17 driver as a 10.0–17.3 s swing on identical code
-       graft.streaming.Streams.withBatchSizedShuffle(batch) {
+       Streams.withBatchSizedShuffle(batch) {
         val gated = batch
           .withColumn("words", expr(words("text")))
           .withColumn("n_words", expr("size(words)"))
@@ -880,18 +857,31 @@ object Curation {
       .orderBy("lang")
   }
 
+  /** The curation topology as ONE live streaming query — the
+    * training-data twin of pipeline_cdc_stream: document batches
+    * stream in, each batch is quality-gated map-side (the same three
+    * Gopher-style gates as pipeline_curate), DECONTAMINATED against a
+    * static broadcast benchmark band index (contam_fuzzy's machinery
+    * in the live path — est-Jaccard >= 0.5 vs any eval item drops the
+    * doc, round 12), the survivors pass through the PERSISTENT
+    * incremental near-dup index ([[IncrementalDedup.applyBatch]] —
+    * O(batch + touched index buckets) per batch, arrival-order
+    * independent), and the gated rows land in a curated staging area.
+    * The final corpus report — per-language doc and token counts of
+    * everything that survived all three gates — must hash-match an
+    * oracle that recomputes the whole thing from scratch in one pass:
+    * proof the streamed curation equals the batch curation under an
+    * arbitrary split. */
   val pipelineCurateStream: Q = Q(
     "pipeline_curate_stream",
     (s, dir) => {
-      val staged = curateStreamDirs.computeIfAbsent(
-        (s.sparkContext.applicationId, dir), { _ =>
-          val tmp = java.nio.file.Files.createTempDirectory("graft_curate_feed")
-          graft.sources.Formats.deleteRecursivelyOnExit(tmp)
-          val p = tmp.toString + "/docs"
-          Tables(s, dir).documents.select("doc_id", "text", "lang")
-            .repartition(2).write.mode("overwrite").parquet(p)
-          p
-        })
+      // (doc_id, text, lang) staged once per source dir as TWO parquet
+      // files, so `maxFilesPerTrigger=1` forces two arrival batches
+      val staged = graft.sources.Formats.stageOnce(s, "curate_feed", dir) { root =>
+        Tables(s, dir).documents.select("doc_id", "text", "lang")
+          .repartition(2).write.mode("overwrite").parquet(root + "/docs")
+        root + "/docs"
+      }
       val indexRoot = graft.sources.Formats.scratchDir("graft_curate_index")
       val curatedDir = graft.sources.Formats.scratchDir("graft_curated") + "/rows"
       // the static benchmark side (contam_fuzzy's stand-in eval suite:
@@ -900,9 +890,8 @@ object Curation {
       val benchSig = Blocking.minhashSigs(
         Tables(s, dir).documents.filter(col("doc_id") % 20 === 0),
         col("doc_id").as("b_id"))
-      val q = startCurateTopology(s, staged, indexRoot, curatedDir,
-        benchSig = Some(benchSig))
-      try q.processAllAvailable() finally q.stop()
+      Streams.drain(startCurateTopology(s, staged, indexRoot, curatedDir,
+        benchSig = Some(benchSig)))
       curateTopologyResult(s, indexRoot, curatedDir)
     },
     Some(s"""WITH w0 AS (

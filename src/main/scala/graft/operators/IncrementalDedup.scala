@@ -3,6 +3,7 @@ package graft.operators
 import graft.Q
 import graft.functions.Portable._
 import graft.sources.Tables
+import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -304,19 +305,12 @@ object IncrementalDedup {
   /** One staged documents directory per (session, source dir) — TWO
     * parquet files so `maxFilesPerTrigger=1` forces two genuine
     * arrival batches through the index. */
-  private val stagedDocsDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def stagedDocs(s: SparkSession, dir: String): String =
-    stagedDocsDirs.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), { _ =>
-        val tmp = java.nio.file.Files.createTempDirectory("graft_inc_docs")
-        graft.sources.Formats.deleteRecursivelyOnExit(tmp)
-        val p = tmp.toString + "/docs"
-        Tables(s, dir).documents.select("doc_id", "text")
-          .repartition(2).write.mode("overwrite").parquet(p)
-        p
-      })
+    graft.sources.Formats.stageOnce(s, "inc_docs", dir) { root =>
+      Tables(s, dir).documents.select("doc_id", "text")
+        .repartition(2).write.mode("overwrite").parquet(root + "/docs")
+      root + "/docs"
+    }
 
   /** The registry row: the documents table streamed through the
     * incremental pipeline in two forced micro-batches; the oracle
@@ -328,23 +322,14 @@ object IncrementalDedup {
     "dedup_incremental",
     (s, dir) => {
       val indexRoot = graft.sources.Formats.scratchDir("graft_inc_index")
-      val staged = stagedDocs(s, dir)
-      val schema = s.read.parquet(staged).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", graft.streaming.Streams.filesPerTrigger).parquet(staged)
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // shuffle partitions sized to the batch, not the session
-          // (guide §2.2) — see withBatchSizedShuffle's rationale; the
-          // r17 driver measured this operator ANTI-scaling at
-          // local[32] (18.0 s vs ~7.0 s at 8 cores) purely from
-          // tiny-task churn across the ~10 per-batch jobs below
-          graft.streaming.Streams.withBatchSizedShuffle(b) {
-            applyBatch(b, indexRoot)
-          }
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      Streams.drainEach(Streams.fileFeed(s, stagedDocs(s, dir))) { (b, _) =>
+        // shuffle partitions sized to the batch, not the session
+        // (guide §2.2) — see withBatchSizedShuffle's rationale; the
+        // r17 driver measured this operator ANTI-scaling at
+        // local[32] (18.0 s vs ~7.0 s at 8 cores) purely from
+        // tiny-task churn across the ~10 per-batch jobs below
+        Streams.withBatchSizedShuffle(b)(applyBatch(b, indexRoot))
+      }
       accepted(s, Tables(s, dir).documents, indexRoot).orderBy("doc_id")
     },
     Some(s"""WITH w AS (

@@ -452,13 +452,6 @@ object Relational {
            |  SELECT s_nationkey AS nationkey FROM supplier WHERE s_acctbal > 9000)
            |ORDER BY nationkey""".stripMargin))
 
-  /** Sessionization: 30-min-gap sessions per user then per-session
-    * aggregates. Classic lag+cumsum — both windows share ONE shuffle on
-    * user_id (same partition key). Timestamps handled as epoch micros
-    * end-to-end to dodge ns/us representation differences; the session
-    * value is summed as integer cents (partition-order-proof) and the
-    * oracle's integer window/group sums are cast to BIGINT (DuckDB
-    * widens them to HUGEINT -> pandas float64 otherwise). */
   /** Input shape shared by both sessionize variants. */
   private def sessionizeInput(s: SparkSession, dir: String): DataFrame =
     t(s, dir).events
@@ -467,10 +460,11 @@ object Relational {
       .select("user_id", "event_id", "us", "cents")
 
   /** One oracle serves both sessionize variants — they must produce
-    * identical output. */
-  private val sessionizeOracle =
-    """WITH e AS (
-      |  SELECT user_id, event_id, CAST(round(value * 100) AS BIGINT) AS cents,
+    * identical output — and, with `userId` remapping the user column,
+    * the skewed variant. */
+  private def sessionizeOracle(userId: String = "user_id"): String =
+    s"""WITH e AS (
+      |  SELECT $userId, event_id, CAST(round(value * 100) AS BIGINT) AS cents,
       |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
       |  FROM events),
       |g AS (
@@ -489,11 +483,18 @@ object Relational {
       |FROM sess GROUP BY user_id, session_id
       |ORDER BY user_id, session_id""".stripMargin
 
+  /** Sessionization: 30-min-gap sessions per user then per-session
+    * aggregates. Classic lag+cumsum — both windows share ONE shuffle on
+    * user_id (same partition key). Timestamps handled as epoch micros
+    * end-to-end to dodge ns/us representation differences; the session
+    * value is summed as integer cents (partition-order-proof) and the
+    * oracle's integer window/group sums are cast to BIGINT (DuckDB
+    * widens them to HUGEINT -> pandas float64 otherwise). */
   val qSessionize: Q = Q(
     "q_sessionize",
     (s, dir) => Skew.sessionize1Phase(sessionizeInput(s, dir))
       .orderBy("user_id", "session_id"),
-    Some(sessionizeOracle))
+    Some(sessionizeOracle()))
 
   /** The hot-key-safe sessionize (see [[Skew.sessionize2Phase]]):
     * same output, same oracle, but no reducer ever sees more than one
@@ -502,7 +503,7 @@ object Relational {
     "q_sessionize_2phase",
     (s, dir) => Skew.sessionize2Phase(sessionizeInput(s, dir))
       .orderBy("user_id", "session_id"),
-    Some(sessionizeOracle))
+    Some(sessionizeOracle()))
 
   /** The skew CLAIM, bench-visible: sessionize under a synthetic
     * hot-key distribution (~10% of users remapped onto one sentinel
@@ -518,30 +519,8 @@ object Relational {
       sessionizeInput(s, dir).withColumn("user_id",
         expr(s"CASE WHEN ${graft.functions.Portable.charHash("concat('h', CAST(user_id AS STRING))")} % 10 = 0 THEN -7 ELSE user_id END")))
       .orderBy("user_id", "session_id"),
-    Some {
-      import graft.functions.Portable.duckCharHash
-      s"""WITH e AS (
-         |  SELECT CASE WHEN ${duckCharHash("concat('h', CAST(user_id AS VARCHAR))")} % 10 = 0
-         |      THEN -7 ELSE user_id END AS user_id,
-         |    event_id, CAST(round(value * 100) AS BIGINT) AS cents,
-         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
-         |  FROM events),
-         |g AS (
-         |  SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-         |      THEN 1 ELSE 0 END AS new_sess
-         |  FROM (SELECT *, lag(us) OVER (PARTITION BY user_id
-         |    ORDER BY us ASC, event_id ASC) AS prev_us FROM e)),
-         |sess AS (
-         |  SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-         |    ORDER BY us ASC, event_id ASC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-         |  FROM g)
-         |SELECT user_id, session_id, count(*) AS n_events,
-         |  CAST(sum(cents) AS BIGINT) AS session_cents,
-         |  min(us) AS start_us, max(us) AS end_us
-         |FROM sess GROUP BY user_id, session_id
-         |ORDER BY user_id, session_id""".stripMargin
-    })
+    Some(sessionizeOracle(s"CASE WHEN ${graft.functions.Portable.duckCharHash(
+      "concat('h', CAST(user_id AS VARCHAR))")} % 10 = 0 THEN -7 ELSE user_id END AS user_id")))
 
   /** Decile assignment per market segment (ntile): the analytic a
     * pipeline uses to band customers/documents by a score. Rank-based
@@ -587,8 +566,9 @@ object Relational {
            |FROM x GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin))
 
   /** Tumbling hourly window aggregate over the event stream (batch
-    * form; streaming twin lives in streaming/StreamOps.scala). Bucket
-    * is integer hour-since-epoch — shuffle on the bucket only. */
+    * form; the streaming twin is
+    * [[graft.streaming.Streams.qStreamTumbling]]). Bucket is integer
+    * hour-since-epoch — shuffle on the bucket only. */
   val qTumblingWindow: Q = Q(
     "q_tumbling_window",
     (s, dir) =>

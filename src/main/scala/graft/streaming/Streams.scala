@@ -2,9 +2,9 @@ package graft.streaming
 
 import graft.Q
 import graft.cdc.{Cdc, CdcQueries, ChangelogAgg, Router}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** A parsed change event as carried through keyed streaming state. */
 final case class ChangeRow(
@@ -83,43 +83,43 @@ object Streams {
     v
   }
 
-  /** State-store provider for the bounded runs — `hdfs` (Spark's
-    * default heap-backed provider) or `rocksdb`
-    * (RocksDBStateStoreProvider + changelog checkpointing). The heap
-    * provider keeps EVERY key of every state partition in executor
-    * heap — measured state-VOLUME-bound on the unbounded-dedup rows
-    * (cdc_stream_dedup ~600 s at sf30) and the first thing to fall
-    * over at 100 TB; RocksDB spills state off-heap to local SSD and
-    * checkpoints per-batch CHANGELOGS instead of full snapshots,
-    * which is what a 24/7 deployment of the reference's Kafka →
-    * exactly-once-sink shape runs. Default stays `hdfs` so the tiny
-    * bounded test feeds don't pay RocksDB's per-partition open cost;
-    * scale runs set `SPARK_GRAFT_STATE_PROVIDER=rocksdb` (A/B'd in
-    * BENCH_DETAIL — see SURVEY §14). */
-  private[graft] def stateProviderConfs: Seq[(String, String)] =
-    sys.props.get("graft.state.provider") // spec override (env is fixed per JVM)
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PROVIDER"))
-      .getOrElse("hdfs") match {
-      case "rocksdb" => Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "true")
-      case "hdfs" => Seq.empty
-      case other => throw new IllegalArgumentException(
-        "graft.state.provider / SPARK_GRAFT_STATE_PROVIDER must be hdfs " +
-          s"or rocksdb, got: $other")
-    }
+  /** Bounded file-source feed over a staged directory: the schema is
+    * read from the staged files, and each micro-batch admits
+    * [[filesPerTrigger]] of them. */
+  private[graft] def fileFeed(s: SparkSession, staged: String): DataFrame =
+    s.readStream.schema(s.read.parquet(staged).schema)
+      .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged)
+
+  /** Runs a started bounded query until its feed is exhausted, then
+    * stops it. */
+  private[graft] def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
+  /** Streams `sdf` through `body` (one call per micro-batch) to
+    * completion. */
+  private[graft] def drainEach(sdf: DataFrame, mode: String = "append")
+                              (body: (DataFrame, Long) => Unit): Unit =
+    drain(sdf.writeStream.outputMode(mode).foreachBatch(body).start())
 
   /** Runs a bounded streaming DataFrame to completion into a
-    * file-backed sink and returns the sink contents. Synchronized on
-    * the session: the shuffle-partition override below mutates shared
-    * session conf, so concurrent callers must not interleave.
+    * file-backed sink and returns the sink contents.
+    *
+    * The query starts on a CLONE of the caller's session carrying
+    * `spark.sql.shuffle.partitions = statePartitions`: stateful
+    * operators pay a per-partition-per-batch state-store cost, so the
+    * bounded feeds run on a handful of state partitions (on a cluster
+    * this is sized to executor count, and is a fixed property of the
+    * checkpoint). The caller's conf is never written, so queries
+    * planned concurrently in the caller's session keep their own
+    * settings; the clone inherits everything else, including the
+    * state-store provider (`spark.sql.streaming.stateStore.providerClass`)
+    * and QueryExecutionListeners. The query is therefore not listed in
+    * the caller's `spark.streams`; it is stopped before this returns.
     *
     * File-backed, NOT the memory sink: the memory sink holds every
     * emitted row in DRIVER memory — at 100× the ingest feed alone
     * blew `spark.driver.maxResultSize` (measured: 28 tasks,
-    * 1.05 GiB serialized). Each micro-batch instead lands in a temp
+    * 1.05 GiB serialized). Each micro-batch instead lands in a scratch
     * parquet directory straight from the executors via foreachBatch —
     * append/update modes accumulate per-batch emissions exactly as
     * the memory sink did, complete mode replaces (the memory-sink
@@ -129,54 +129,25 @@ object Streams {
     * driver. */
   def runBounded(sdf: DataFrame, mode: String): DataFrame = {
     val spark = sdf.sparkSession
-    val d = java.nio.file.Files.createTempDirectory("graft_bounded_sink")
-    registerSinkCleanup(d)
-    val dir = d.toString
-    spark.synchronized {
-      // stateful operators pay a per-partition-per-batch state-store
-      // cost; for the bounded test feeds a handful of state partitions
-      // beats the batch-tuned setting (on a real cluster this is sized
-      // to executor count, and is a fixed property of the checkpoint)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-      // provider is a fixed property of a checkpoint; the bounded runs
-      // use fresh checkpoints per call, so it is safe to swap per run
-      val prevProv = stateProviderConfs.map { case (k, _) =>
-        k -> spark.conf.getOption(k) }
-      stateProviderConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val q = sdf.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // one OVERWRITTEN subdirectory per batchId: if Spark retries
-            // a micro-batch after a partial write, the re-run replaces
-            // the subdir instead of appending duplicates (the memory
-            // sink deduped re-adds by batchId; plain parquet append
-            // would not). Subdir names avoid k=v so no partition
-            // discovery kicks in.
-            batch.write.mode("overwrite").parquet(s"$dir/b$id")
-          }
-          .outputMode(mode).start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        prevProv.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-      }
+    val dir = graft.sources.Formats.scratchDir("graft_bounded_sink")
+    val clone = GraftSqlShim.cloneSession(spark)
+    clone.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    drainEach(GraftSqlShim.ofRows(clone, sdf.queryExecution.logical), mode) {
+      (batch, id) =>
+        // one OVERWRITTEN subdirectory per batchId: if Spark retries
+        // a micro-batch after a partial write, the re-run replaces
+        // the subdir instead of appending duplicates (the memory
+        // sink deduped re-adds by batchId; plain parquet append
+        // would not). Subdir names avoid k=v so no partition
+        // discovery kicks in.
+        batch.write.mode("overwrite").parquet(s"$dir/b$id")
     }
     // an all-empty feed writes no files at all; preserve the
     // memory-sink behavior of returning an empty, correctly-typed DF.
     // append/update accumulate every batch's emissions (read all
     // subdirs); complete REPLACES per batch (read only the last one).
-    val subdirs = {
-      val s = java.nio.file.Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(p =>
-          p.getFileName.toString.startsWith("b")).toVector
-      } finally s.close()
-    }
+    val subdirs = graft.sources.Formats.listDir(java.nio.file.Paths.get(dir))
+      .filter(_.getFileName.toString.startsWith("b"))
     val toRead =
       if (mode == "complete" && subdirs.nonEmpty)
         Seq(subdirs.maxBy(p => p.getFileName.toString.drop(1).toLong))
@@ -208,11 +179,14 @@ object Streams {
     * the configured parallelism — the clamp only ever SHRINKS toward
     * the data, so this is scale-adaptive, not a local[32] tune.
     *
-    * The override mutates the conf of `batch.sparkSession` — the
-    * micro-batch clone, which every DataFrame derived from `batch`
-    * plans under — and restores it in `finally`. The streams that use
-    * this are stateless (file source -> foreachBatch), so no state-
-    * store partitioning can depend on the overridden value. */
+    * The override mutates the conf of `batch.sparkSession` and
+    * restores it in `finally`. That session is never the one the
+    * query was started from: Structured Streaming runs every
+    * micro-batch on its own clone of it (StreamingSpec pins this), and
+    * every DataFrame derived from `batch` plans under that clone. The
+    * streams that use this are stateless (file source -> foreachBatch),
+    * so no state-store partitioning can depend on the overridden
+    * value. */
   private[graft] def withBatchSizedShuffle[T](
       batch: DataFrame)(body: => T): T = {
     val sp = batch.sparkSession
@@ -250,34 +224,6 @@ object Streams {
     }
   }
 
-  /** Bounded-sink temp dirs pending deletion; one JVM shutdown hook
-    * removes them RECURSIVELY (File.deleteOnExit silently never deletes
-    * a non-empty directory, so every runBounded call used to leak its
-    * parquet dir for the machine's lifetime). */
-  private val sinkDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val sinkCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      sinkDirs.forEach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(p)
-          val all = try walk.iterator().asScala.toVector finally walk.close()
-          all.sortBy(-_.getNameCount)
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: java.io.IOException => () } // best-effort at exit
-      }
-    }))
-  private def registerSinkCleanup(p: java.nio.file.Path): Unit = {
-    sinkCleanupHook
-    sinkDirs.add(p)
-  }
-
-  /** One staged stream directory per (session, source dir), reused
-    * across calls and cleaned up on JVM exit. */
-  private val streamDirs =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** File-source stream over the events table (the bounded feed is one
     * parquet file -> one micro-batch; in production this is a directory
     * of arriving files or a Kafka source — the transform chain is
@@ -289,24 +235,21 @@ object Streams {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     // the file source wants a directory of arriving files; expose the
-    // (read-only) test table through a temp dir of symlinks — one per
-    // (session, dir), not per call
-    val streamDir = streamDirs.computeIfAbsent((s, dir),
-      _ => stageEvents(dir, "graft_events_stream", Seq("")))
+    // (read-only) test table through a staged directory of symlinks
+    val streamDir = graft.sources.Formats.stageOnce(s, "events_stream", dir)(
+      stageEvents(dir, _, Seq("")))
     graft.sources.Tables.normalizeTs(
       s.readStream.schema(schema).parquet(streamDir))
   }
 
-  /** Symlinks the events table into a fresh temp directory (removed on
-    * JVM exit) once per `copies` prefix, FILE-BY-FILE: the table may be
-    * a single file (the driver's layout) OR a Spark-written DIRECTORY of
-    * part files, and the file stream source does not recurse into a
-    * nested directory — it would silently stream ZERO rows through a
+  /** Symlinks the events table into the staging directory `root` once
+    * per `copies` prefix, FILE-BY-FILE: the table may be a single file
+    * (the driver's layout) OR a Spark-written DIRECTORY of part files,
+    * and the file stream source does not recurse into a nested
+    * directory — it would silently stream ZERO rows through a
     * dir-shaped symlink (the 10x/30x scale runs once hit exactly this:
-    * 0.24 s rows-free "passes"). Returns the directory. */
-  private def stageEvents(dir: String, prefix: String, copies: Seq[String]): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
+    * 0.24 s rows-free "passes"). Returns `root`. */
+  private def stageEvents(dir: String, root: String, copies: Seq[String]): String = {
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
     val files =
       if (java.nio.file.Files.isDirectory(src))
@@ -314,12 +257,10 @@ object Streams {
           .filter(_.getFileName.toString.endsWith(".parquet"))
       else Seq(src)
     require(files.nonEmpty, s"$src contains no parquet files to stream")
-    for (copy <- copies; (p, i) <- files.zipWithIndex) {
-      val link = d.resolve(f"events_$copy$i%05d.parquet")
-      java.nio.file.Files.createSymbolicLink(link, p)
-      link.toFile.deleteOnExit()
-    }
-    d.toString
+    for (copy <- copies; (p, i) <- files.zipWithIndex)
+      java.nio.file.Files.createSymbolicLink(
+        java.nio.file.Paths.get(root, f"events_$copy$i%05d.parquet"), p)
+    root
   }
 
   /** The latest-wins rule ([[Cdc.latest]]) as a keyed-state step: the
@@ -475,16 +416,10 @@ object Streams {
   val cdcUpsertSink: Q = Q(
     "cdc_upsert_sink",
     (s, dir) => {
-      val target = java.nio.file.Files
-        .createTempDirectory("graft_upsert").toString + "/tbl"
-      val events = parsedStream(s, dir).toDF()
-      val q = events.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.sinks.ParquetUpsert.applyBatch(batch, target)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      val target = graft.sources.Formats.scratchDir("graft_upsert") + "/tbl"
+      drainEach(parsedStream(s, dir).toDF()) { (batch, _) =>
+        graft.sinks.ParquetUpsert.applyBatch(batch, target)
+      }
       s.read.parquet(target)
         .filter(col("op") =!= "d")
         .select(col("key"), col("id"), col("cents"), col("typ").as("type"),
@@ -506,31 +441,26 @@ object Streams {
       import graft.sinks.JdbcUpsert
       val url = JdbcUpsert.memUrl()
       JdbcUpsert.ensureTable(url, "snapshot")
-      val q = parsedStream(s, dir).toDF().writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          JdbcUpsert.applyBatch(batch, url, "snapshot")
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      drainEach(parsedStream(s, dir).toDF()) { (batch, _) =>
+        JdbcUpsert.applyBatch(batch, url, "snapshot")
+      }
       JdbcUpsert.readBack(s, url, "snapshot").orderBy("key")
     },
     CdcQueries.cdcMaterialize.oracle)
 
   /** Stages the whole events table TWICE (the at-least-once
-    * redelivery, see [[stageEvents]]) and returns the WIRE change
-    * stream over the staged replay feed: (event_id, ts, json) — the
+    * redelivery, see [[stageEvents]]) once per source dir and returns
+    * the WIRE change stream over the staged replay feed, one staged
+    * file per micro-batch by default: (event_id, ts, json) — the
     * envelope id and timestamp alongside the undecoded OLR-style JSON,
     * exactly what a Kafka consumer sees (message key + timestamp +
     * value) before deserializing. */
   private def wireReplayFeed(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val staged = stageEvents(dir, "graft_dedup_stream", Seq("a_", "b_"))
-    val stream = graft.sources.Tables.normalizeTs(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged))
-    Cdc.feedFrom(stream, extra = Seq(col("ts")))
+    val staged = graft.sources.Formats.stageOnce(s, "replay_feed", dir)(
+      stageEvents(dir, _, Seq("a_", "b_")))
+    Cdc.feedFrom(graft.sources.Tables.normalizeTs(fileFeed(s, staged)),
+      extra = Seq(col("ts")))
   }
 
   /** Round-18 restructure (guide §2.3 / §8: decide with metadata,
@@ -592,8 +522,7 @@ object Streams {
   val cdcSchemaEvolve: Q = Q(
     "cdc_schema_evolve",
     (s, dir) => {
-      val target = java.nio.file.Files
-        .createTempDirectory("graft_evolve").toString + "/tbl"
+      val target = graft.sources.Formats.scratchDir("graft_evolve") + "/tbl"
       val e = graft.sources.Tables(s, dir).events
         .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
       e.filter(col("event_id") % 2 === 0)
@@ -655,16 +584,7 @@ object Streams {
           col("event_type"), col("n"), col("sum_value"))
       runBounded(agg, "complete").orderBy("window_start_us", "event_type")
     },
-    Some("""WITH e AS (
-           |  SELECT event_type, value, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-           |  FROM events),
-           |x AS (
-           |  SELECT event_type, value,
-           |    ((us // 1800000000) - k) * 1800000000 AS window_start_us
-           |  FROM e, unnest([0, 1]) AS t(k))
-           |SELECT window_start_us, event_type, count(*) AS n,
-           |  round(sum(value), 2) AS sum_value
-           |FROM x GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin))
+    graft.operators.Relational.qHoppingWindow.oracle)
 
   /** streaming session windows (30-minute gap) per user. */
   val qStreamSession: Q = Q(
@@ -775,13 +695,7 @@ object Streams {
       val root = graft.sources.Formats.scratchDir("graft_route_lake")
       val routed = Cdc.changeRows(Router.parseRouted(
         Cdc.feedFrom(eventsStream(s, dir), Router.routing), col("json")), "tbl")
-      val q = routed.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Router.applyRoutedBatch(batch, root)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      drainEach(routed)((batch, _) => Router.applyRoutedBatch(batch, root))
       unionTables(s, root)(_.filter(col("op") =!= "d")
         .select(col("key"), col("id"), col("cents"),
           col("typ").as("type"), col("scn").as("last_scn")))
@@ -828,12 +742,8 @@ object Streams {
       // the staged feed is the full-image WIRE (both payloads per
       // event, like OLR with supplemental logging) — the stream parses
       // bytes and goes straight to map-side deltas; no window anywhere
-      val staged = ChangelogAgg.stagedFullFeed(s, dir)
-      val schema = s.read.parquet(staged).schema
       val stream = ChangelogAgg.fullImageColumns(Cdc.parse(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged),
-        col("json")))
+        fileFeed(s, ChangelogAgg.stagedFullFeed(s, dir)), col("json")))
       val agg = ChangelogAgg.contributions(stream)
         .groupBy("type")
         .agg(sum("d_cents").as("sum_cents"),
@@ -850,12 +760,6 @@ object Streams {
     },
     Some(graft.cdc.ChangelogAgg.snapshotAggSql))
 
-  /** One staged routed-feed directory per (session, source dir) — TWO
-    * parquet files so `maxFilesPerTrigger=1` forces the pipeline row
-    * through two genuine micro-batches. */
-  private val pipelineStreamDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** Start the composed CDC topology (parse once -> per-table fan-out
     * -> bucket-scoped lake upserts + maintained aggregate tables) over
     * the staged feed directory. The caller owns the query lifecycle;
@@ -868,10 +772,8 @@ object Streams {
       s: SparkSession, staged: String, lakeRoot: String, aggRoot: String,
       checkpoint: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = s.read.parquet(staged).schema
-    val feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged)
-    val routed = Cdc.changeRows(Router.parseRouted(feed, col("json")), "tbl")
+    val routed = Cdc.changeRows(
+      Router.parseRouted(fileFeed(s, staged), col("json")), "tbl")
     val writer = routed.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Router.foreachTableSlice(batch, parallelism = 4) { (t, slice) =>
@@ -919,19 +821,16 @@ object Streams {
   val pipelineCdcStream: Q = Q(
     "pipeline_cdc_stream",
     (s, dir) => {
-      val staged = pipelineStreamDirs.computeIfAbsent(
-        (s.sparkContext.applicationId, dir), { _ =>
-          val tmp = java.nio.file.Files.createTempDirectory("graft_pipe_feed")
-          graft.sources.Formats.deleteRecursivelyOnExit(tmp)
-          val p = tmp.toString + "/feed"
-          Router.routedFeed(s, dir).repartition(2)
-            .write.mode("overwrite").parquet(p)
-          p
-        })
+      // the routed feed staged once per source dir as TWO parquet
+      // files, so `maxFilesPerTrigger=1` forces two micro-batches
+      val staged = graft.sources.Formats.stageOnce(s, "pipe_feed", dir) { root =>
+        Router.routedFeed(s, dir).repartition(2)
+          .write.mode("overwrite").parquet(root + "/feed")
+        root + "/feed"
+      }
       val lakeRoot = graft.sources.Formats.scratchDir("graft_pipe_lake")
       val aggRoot = graft.sources.Formats.scratchDir("graft_pipe_agg")
-      val q = startCdcTopology(s, staged, lakeRoot, aggRoot)
-      try q.processAllAvailable() finally q.stop()
+      drain(startCdcTopology(s, staged, lakeRoot, aggRoot))
       cdcTopologyResult(s, aggRoot)
     },
     Some(s"""${Cdc.liveSql(Router.routing)}

@@ -3,14 +3,20 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSparkSession}
 
-/** Minimal bridge into the `private[sql]` Dataset factory, so a custom
-  * logical plan (graft.plans.AsOfJoin) can surface as an ordinary
-  * DataFrame. This is the standard extension-point shim a Spark
-  * library with its own LogicalPlan ships; it touches nothing but the
-  * one factory method. */
+/** Minimal bridge into `private[sql]` session and Dataset factories, so
+  * a custom logical plan (graft.plans.AsOfJoin) can surface as an
+  * ordinary DataFrame and a bounded stream can run on a session clone
+  * (graft.streaming.Streams.runBounded). This is the standard
+  * extension-point shim a Spark library with its own LogicalPlan
+  * ships. */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
+
+  /** A session sharing `spark`'s context and catalog, with its own copy
+    * of the SQL conf, functions and listeners (`private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[ClassicSparkSession].cloneSession()
 
   /** Column -> Catalyst Expression (the 4.x ColumnNode bridge). */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =

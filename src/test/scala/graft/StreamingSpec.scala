@@ -303,20 +303,24 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("stateful registry rows produce identical results on the RocksDB provider") {
     // beyond the materializeStream pin above: run full REGISTRY rows —
     // SCD2 keyed state and the TypedImperativeAggregate top-k buffers —
-    // under RocksDB and require bit-identical output vs the default
-    // HDFS-backed provider. This is the provider a 1000-executor
-    // deployment runs, so the rows' state must round-trip its
-    // serialization, not just the in-memory map's.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
+    // under RocksDB (with changelog checkpointing, the 24/7 shape) and
+    // require bit-identical output vs the default HDFS-backed provider.
+    // This is the provider a 1000-executor deployment runs, so the
+    // rows' state must round-trip its serialization, not just the
+    // in-memory map's. runBounded's session clone inherits both confs.
+    val rocks = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true")
+    val prev = rocks.map { case (k, _) => k -> spark.conf.getOption(k) }
     val rows = Seq("cdc_stream_scd2", "q_stream_topk", "q_stream_approx_topk")
     // the state-VOLUME-bound rows (the registry's #1/#2 wall costs at
-    // scale) plus the session merge — these are the rows the
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb scale knob exists for, so
-    // their provider-equivalence is pinned here at spec SF. Compared
-    // as multisets: their sinks are parquet-read back, so row order
-    // within equal sort keys is not contractual (the DuckDB oracle
-    // pins the ordered contract).
+    // scale) plus the session merge — these are the rows a scale run
+    // moves onto RocksDB, so their provider-equivalence is pinned here
+    // at spec SF. Compared as multisets: their sinks are parquet-read
+    // back, so row order within equal sort keys is not contractual (the
+    // DuckDB oracle pins the ordered contract).
     val volumeRows = Seq("cdc_stream_dedup", "cdc_stream_dedup_wm",
       "q_stream_session")
     def run(name: String): Seq[String] =
@@ -324,41 +328,50 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     val expected = (rows ++ volumeRows).map(n => n -> run(n)).toMap
     assert(expected.values.forall(_.nonEmpty))
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    rocks.foreach { case (k, v) => spark.conf.set(k, v) }
     try (rows ++ volumeRows).foreach { n =>
       assert(run(n) == expected(n), s"$n diverged on RocksDB")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
-  test("SPARK_GRAFT_STATE_PROVIDER knob: rocksdb wires provider + changelog confs, bad value fails loud") {
-    // the scale-run entry point for the provider swap (Bench chains
-    // set the env; specs drive the sys.prop override)
-    assert(Streams.stateProviderConfs.isEmpty) // default: hdfs, no-op
-    sys.props("graft.state.provider") = "rocksdb"
+  test("runBounded runs on a session clone: the caller's conf is never written") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val callerParts = (Streams.statePartitions.toInt + 3).toString
+    spark.conf.set(key, callerParts)
     try {
-      val confs = Streams.stateProviderConfs.toMap
-      assert(confs("spark.sql.streaming.stateStore.providerClass")
-        .endsWith("RocksDBStateStoreProvider"))
-      assert(confs(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-        == "true")
-      // and a bounded stateful row actually RUNS end-to-end with the
-      // knob engaged (runBounded sets + restores the session confs)
-      val out = Streams.cdcStreamDedupWm.run(spark, sfDir)
-      assert(out.count() > 0)
-      // getOption surfaces the built-in default, so "restored" means
-      // back to the HDFS provider, not RocksDB
-      assert(spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-        .forall(_.endsWith("HDFSBackedStateStoreProvider")),
-        "runBounded must restore the provider conf")
-      sys.props("graft.state.provider") = "bogus"
-      intercept[IllegalArgumentException](Streams.stateProviderConfs)
-    } finally sys.props.remove("graft.state.provider")
+      StreamingSpec.caller = spark
+      // each event reports (a) the caller session's setting, read
+      // through a JVM-global holder (local mode: tasks share the JVM),
+      // and (b) the setting its own task plans under
+      val seen = Streams.eventsStream(spark, sfDir).select(col("event_id")).as[Long]
+        .map(_ => (StreamingSpec.caller.conf.get(key),
+          org.apache.spark.sql.internal.SQLConf.get.numShufflePartitions.toString))
+        .toDF("caller_parts", "task_parts")
+        .groupBy("caller_parts", "task_parts").count()
+      val before = spark.conf.getAll
+      val got = Streams.runBounded(seen, "complete").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      assert(got == Set((callerParts, Streams.statePartitions)),
+        s"(caller, task) shuffle partitions while the stream ran: $got")
+      assert(spark.conf.getAll == before,
+        "runBounded must write no conf of the session it is given")
+      // withBatchSizedShuffle writes batch.sparkSession's conf: safe
+      // only because a micro-batch never plans under the caller's
+      // session
+      val sessions = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+      Streams.drainEach(Streams.eventsStream(spark, sfDir)) { (b, _) =>
+        sessions.add(b.sparkSession); ()
+      }
+      assert(!sessions.isEmpty && sessions.stream().allMatch(_ ne spark))
+    } finally {
+      StreamingSpec.caller = null
+      spark.conf.set(key, prev)
+    }
   }
 
   test("bounded streaming queries agree with their batch equivalents") {
@@ -418,4 +431,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(customers == Seq((7L, 700L)))
     } finally q.stop()
   }
+}
+
+object StreamingSpec {
+  /** The session a running stream's tasks read back (local mode). */
+  @volatile var caller: org.apache.spark.sql.SparkSession = _
 }
