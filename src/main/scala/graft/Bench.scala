@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -37,9 +38,13 @@ object Bench {
     // 7x one-off on an untouched query). The min is the least-noisy
     // estimator of the plan's true cost.
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
+    // classes Janino compiled per row, over all its iterations (a
+    // codegen-cache thrash shows as a row that recompiles every time)
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val times = (1 to iters).map { _ =>
         val t0 = System.nanoTime()
         // toRdd.count() forces every output column to be evaluated;
@@ -52,6 +57,7 @@ object Bench {
             false }
         if (ok) Some((System.nanoTime() - t0) / 1e9) else None
       }
+      compiles(name) = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       // a failed iteration must NOT yield a normal-looking elapsed time
       // — time-to-failure is indistinguishable from a fast success in
       // the emitted JSON. Any failure marks the row with sentinel -1.0
@@ -93,8 +99,9 @@ object Bench {
     val detail = results.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val compilesJson = compiles.map { case (k, n) => s"\"$k\":$n" }.mkString("{", ",", "}")
     val detailJson =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$detail,"failed":$failedJson,"iters":$iters,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$detail,"failed":$failedJson,"iters":$iters,"sf":"$sfDir","compiles":$compilesJson}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL", "BENCH_DETAIL.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detailJson + "\n")
     catch { case _: Throwable => () }

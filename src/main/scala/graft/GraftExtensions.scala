@@ -13,14 +13,20 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   *
   * Injects the graft_* native functions (see graft.functions.Native)
   * and the AsOfJoin planner strategy (graft.plans.AsOfJoinStrategy)
-  * at session build time. Sessions that are not built with the
-  * extension still get both lazily — the functions the first time
-  * they touch graft.sources.Tables, the strategy on the first
-  * AsOf.join call.
+  * at session build time, and sizes Spark's codegen cache
+  * (Native.sizeCodegenCache) when the session first plans a query.
+  * Sessions that are not built with the extension still get all three
+  * lazily — the functions and the cache size the first time they touch
+  * graft.sources.Tables, the strategy on the first AsOf.join call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     functions.Native.injectInto(ext)
-    ext.injectPlannerStrategy(_ => plans.AsOfJoinStrategy)
+    // Spark calls the strategy builder on every physical planning step;
+    // the first call sizes the cache, later ones only read a flag
+    ext.injectPlannerStrategy { session =>
+      functions.Native.sizeCodegenCache(session)
+      plans.AsOfJoinStrategy
+    }
   }
 }

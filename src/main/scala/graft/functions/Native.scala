@@ -586,10 +586,40 @@ object Native {
       " (codegen HashAggregate form of max_by(id, struct(score, -id)))",
       es => ArgMaxBy(es(0), es(1))))
 
-  /** Idempotently registers the graft_* functions in a session. Called
-    * from Tables() so every query works on any SparkSession, including
-    * the driver's. */
+  /** Entries of Spark's JVM-wide codegen cache (Spark's
+    * `spark.sql.codegen.cache.maxEntries`, default 100) when the session
+    * leaves it unset. graft runs many small plans, and at 100 entries
+    * their generated classes evict each other before reuse: the nine
+    * light perfbench `analytics_mix` rows need 229 distinct classes and
+    * recompiled ~18 per execution; a `graft.Verify` run of all 168
+    * registry rows at sf0.01 compiled 6,065 classes at 100 entries and
+    * 2,671 at 4,096, for ~20 MB more metaspace and ~68 MB more old gen.
+    * Spark builds the cache once per JVM, at the first code generation,
+    * so the size takes effect only when [[sizeCodegenCache]] runs
+    * before that; a JVM that generated code before graft first touched
+    * it keeps the cache it already has. That includes a session built
+    * with [[graft.GraftExtensions]] whose first action builds a
+    * DataFrame from a local `Seq`: the encoder's projection is
+    * generated before the session plans anything. */
+  val CodegenCacheEntries = 4096
+
+  @volatile private var codegenCacheSized = false
+
+  /** Sizes Spark's codegen cache to [[CodegenCacheEntries]] unless the
+    * session's SQL conf sets its own size; once per JVM. */
+  def sizeCodegenCache(spark: SparkSession): Unit =
+    if (!codegenCacheSized) synchronized {
+      if (!codegenCacheSized) {
+        org.apache.spark.sql.GraftSqlShim.sizeCodegenCache(spark, CodegenCacheEntries)
+        codegenCacheSized = true
+      }
+    }
+
+  /** Idempotently registers the graft_* functions in a session, after
+    * [[sizeCodegenCache]]. Called from Tables() so every query works on
+    * any SparkSession, including the driver's. */
   def install(spark: SparkSession): Unit = synchronized {
+    sizeCodegenCache(spark)
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, usage, builder) =>
       val id = FunctionIdentifier(name)

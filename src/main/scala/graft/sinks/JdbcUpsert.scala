@@ -89,7 +89,7 @@ object JdbcUpsert {
   def memUrl(): String = {
     if (System.getProperty("derby.system.home") == null)
       System.setProperty("derby.system.home",
-        java.nio.file.Files.createTempDirectory("graft_derby").toString)
+        graft.sources.Formats.scratchDir("graft_derby"))
     s"jdbc:derby:memory:graft${ctr.incrementAndGet()};create=true"
   }
 

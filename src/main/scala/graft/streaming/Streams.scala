@@ -205,12 +205,14 @@ object Streams {
       case Some(n) =>
         sp.conf.set("spark.sql.shuffle.partitions", n.toString)
         // For a genuinely tiny batch (< 4 MiB), whole-stage codegen is
-        // pure overhead: every micro-batch's plans embed fresh paths
-        // and pruning literals, so NOTHING hits the codegen cache and
-        // each of the ~10 per-batch actions pays Janino compilation
-        // that exceeds interpreted execution over a few hundred rows
-        // (measured at sf0.1: dedup_incremental 9.1 -> 8.3 s,
-        // pipeline_curate_stream 12.4 -> 10.3 s). Guide §1.2: fix
+        // pure overhead: the per-batch plans generate code that differs
+        // from batch to batch, so even with the codegen cache sized
+        // (Native.CodegenCacheEntries) a repeat run of dedup_incremental
+        // recompiles ~100 of its ~126 classes, and the whole-stage
+        // classes cost more to compile than interpreting a few hundred
+        // rows (measured at sf0.1, 4 cores, cache sized, 3 pairs with
+        // and without this: pipeline_curate_stream 9.6 vs 11.9 s,
+        // dedup_incremental 7.5 vs 7.9 s). Guide §1.2: fix
         // per-task work only after the job shape — this is the
         // per-task work, sized by the data; cluster-scale batches
         // never trip the threshold and keep codegen.

@@ -202,9 +202,7 @@ class AnnMultimodalSpec extends AnyFunSuite with SparkSpec {
 
   test("index compaction: fragmented cells coalesce to one file, results bit-match, second pass no-ops") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact")
-    graft.sources.Formats.deleteRecursivelyOnExit(tmp)
-    val root = tmp.toString + "/vectors"
+    val root = tempDir("graft_compact") + "/vectors"
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))

@@ -262,7 +262,7 @@ class AvroWireSpec extends SparkSpec {
     // the "avro" shortname registration ships in the external connector
     // module; the file format itself is bundled — address it by class
     val fmt = "org.apache.spark.sql.avro.AvroFileFormat"
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_fmt").toString
+    val dir = tempDir("graft_avro_fmt")
     parsed.write.format(fmt)
       .option("avroSchema", AvroWire.changeAvroSchema)
       .mode("overwrite").save(dir)

@@ -69,7 +69,7 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     * families straddle the contamination split (doc_id % 20). */
   private lazy val famDir: String = {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("copy_families").toString
+    val out = tempDir("copy_families")
     for ((t, id) <- Seq("documents" -> "doc_id", "embeddings" -> "vec_id"))
       spark.read.parquet(s"$dir/$t.parquet")
         .withColumn("copy", explode(expr(

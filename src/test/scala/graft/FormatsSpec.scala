@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class FormatsSpec extends AnyFunSuite with SparkSpec {
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+    tempDir(prefix) + "/t"
 
   private def explain(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))

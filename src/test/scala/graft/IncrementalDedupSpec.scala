@@ -28,7 +28,7 @@ class IncrementalDedupSpec extends SparkSpec {
     catch { case _: Throwable => Set.empty }
 
   test("a smaller-id near-dup arriving late retroactively rejects the indexed doc") {
-    val root = Files.createTempDirectory("graft_inc_spec1").toString
+    val root = tempDir("graft_inc_spec1")
     // batch 1: docs 10 and 11 are identical (11 rejected against 10);
     // doc 20 unrelated
     IncrementalDedup.applyBatch(
@@ -50,9 +50,9 @@ class IncrementalDedupSpec extends SparkSpec {
     val all = Seq(10L -> base, 11L -> base, 5L -> base, 20L -> other,
       30L -> (base + " extra trailing words appended here"),
       31L -> (base + " extra trailing words appended here"))
-    val oneShot = Files.createTempDirectory("graft_inc_spec2a").toString
+    val oneShot = tempDir("graft_inc_spec2a")
     IncrementalDedup.applyBatch(docsDf(all: _*), oneShot)
-    val threeWay = Files.createTempDirectory("graft_inc_spec2b").toString
+    val threeWay = tempDir("graft_inc_spec2b")
     // adversarial split: near-dup partners land in different batches,
     // arrival order disagrees with id order
     IncrementalDedup.applyBatch(docsDf(all(0), all(4)), threeWay)
@@ -64,7 +64,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("index layout: band index is ibkt-partitioned and append-only across batches") {
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft_inc_spec3").toString
+    val root = tempDir("graft_inc_spec3")
     IncrementalDedup.applyBatch(docsDf(1L -> base), root)
     val dirs = graft.sources.Formats.listDir(
         java.nio.file.Paths.get(s"$root/bands"))
@@ -89,7 +89,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // acceptance from scratch in one batch on a fresh index
     val viaStream = SparkEntry.queries("dedup_incremental")(spark, sfDir)
       .collect().map(_.getLong(0)).toSeq
-    val root = Files.createTempDirectory("graft_inc_spec4").toString
+    val root = tempDir("graft_inc_spec4")
     val docs = graft.sources.Tables(spark, sfDir).documents.select("doc_id", "text")
     IncrementalDedup.applyBatch(docs, root)
     val oneShot = IncrementalDedup.accepted(spark, docs, root)
@@ -105,7 +105,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // The follow-up batch delivers a NEW text (a band-join EVENT —
     // since the rep-level rewrite, a non-event batch legitimately
     // never opens the band index), so the damaged files are read.
-    val root = Files.createTempDirectory("graft_inc_spec5").toString
+    val root = tempDir("graft_inc_spec5")
     IncrementalDedup.applyBatch(docsDf(1L -> base), root)
     // clobber every band-index data file with non-parquet bytes
     graft.sources.Formats.walkDir(java.nio.file.Paths.get(s"$root/bands"))
@@ -127,8 +127,8 @@ class IncrementalDedupSpec extends SparkSpec {
       docsDf(11L -> base, 5L -> base),
       docsDf(30L -> (base + " extra trailing words appended here"),
         21L -> other))
-    val selfRoot = Files.createTempDirectory("graft_inc_self").toString
-    val preRoot = Files.createTempDirectory("graft_inc_pre").toString
+    val selfRoot = tempDir("graft_inc_self")
+    val preRoot = tempDir("graft_inc_pre")
     batches.foreach { b =>
       IncrementalDedup.applyBatch(b, selfRoot)
       IncrementalDedup.applyBatch(b, preRoot,
@@ -150,7 +150,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // text (no min ever improved here) — the structural contract that
     // keeps the band join's input and the index's size proportional
     // to DISTINCT texts at any copy factor
-    val root = Files.createTempDirectory("graft_inc_spec_rep").toString
+    val root = tempDir("graft_inc_spec_rep")
     IncrementalDedup.applyBatch(
       docsDf(10L -> base, 11L -> base, 20L -> other), root)
     IncrementalDedup.applyBatch(docsDf(12L -> base, 13L -> base), root)

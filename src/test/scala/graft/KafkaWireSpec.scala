@@ -63,10 +63,10 @@ class KafkaWireSpec extends AnyFunSuite with SparkSpec {
   test("stream() staged branch emits exactly the Kafka source schema") {
     // the flag-gated builder's contract: both branches produce the
     // same wire shape, so the downstream parse chain is source-agnostic
-    val dir = java.nio.file.Files.createTempDirectory("graft_wire_staged")
+    val dir = tempDir("graft_wire_staged")
     KafkaWire.toWire(CdcQueries.feed(spark, sfDir), "olr.cdc")
-      .limit(50).write.mode("overwrite").parquet(dir.toString)
-    val staged = KafkaWire.stream(spark, "olr.cdc", dir.toString,
+      .limit(50).write.mode("overwrite").parquet(dir)
+    val staged = KafkaWire.stream(spark, "olr.cdc", dir,
       bootstrap = None)
     assert(staged.isStreaming)
     assert(staged.schema == KafkaWire.wireSchema)

@@ -69,7 +69,7 @@ class MaterializerAgreementSpec extends SparkSpec {
     finally q.stop()
     val stream = snapshot(Streams.collapseSnapshots(spark.table(sink)))
 
-    val lake = java.nio.file.Files.createTempDirectory("graft_agree").toString + "/tbl"
+    val lake = tempDir("graft_agree") + "/tbl"
     val url = JdbcUpsert.memUrl()
     JdbcUpsert.ensureTable(url, "snapshot")
     batches.foreach { b =>

@@ -25,7 +25,7 @@ class ParquetUpsertSpec extends SparkSpec {
   }
 
   private def newTarget(): String =
-    Files.createTempDirectory("graft_pq_upsert").toString + "/tbl"
+    tempDir("graft_pq_upsert") + "/tbl"
 
   /** (file name -> last-modified) for every data file, keyed by bucket dir. */
   private def fileState(target: String): Map[String, Map[String, Long]] = {

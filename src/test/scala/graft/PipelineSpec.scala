@@ -34,8 +34,8 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     val in = MemoryStream[String]
     val routed = slice(Router.parseRouted(in.toDF(), col("value")))
-    val lakeRoot = Files.createTempDirectory("graft_pipe_spec_lake").toString
-    val aggRoot = Files.createTempDirectory("graft_pipe_spec_agg").toString
+    val lakeRoot = tempDir("graft_pipe_spec_lake")
+    val aggRoot = tempDir("graft_pipe_spec_agg")
     val q = routed.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Router.foreachTableSlice(batch, parallelism = 4) { (t, s) =>
@@ -108,7 +108,7 @@ class PipelineSpec extends SparkSpec {
       .filter(expr(minhashEstJaccard("sig", "bsig")) >= 0.5)
       .select("doc_id").distinct()
     val gated2 = gated.join(cont, Seq("doc_id"), "left_anti")
-    val root = Files.createTempDirectory("graft_curate_oneshot").toString
+    val root = tempDir("graft_curate_oneshot")
     graft.operators.IncrementalDedup.applyBatch(gated2.select("doc_id", "text"), root)
     val oneShot = graft.operators.IncrementalDedup.accepted(spark, gated2, root)
       .join(gated2, "doc_id")
@@ -148,7 +148,7 @@ class PipelineSpec extends SparkSpec {
     val b2 = mk(Seq((1L, 4L, "u", 60L, "B"), (2L, 5L, "d", 40L, "A"),
       (4L, 6L, "c", 9L, "B")))
 
-    val split = Files.createTempDirectory("graft_tel_split").toString
+    val split = tempDir("graft_tel_split")
     val d1 = ParquetUpsert.applyBatchWithDeltas(b1, split)
     val d2 = ParquetUpsert.applyBatchWithDeltas(b2, split)
     val summed = d1.unionByName(d2).groupBy("type")
@@ -156,7 +156,7 @@ class PipelineSpec extends SparkSpec {
       .filter(col("n") > 0)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
-    val whole = Files.createTempDirectory("graft_tel_whole").toString
+    val whole = tempDir("graft_tel_whole")
     val dAll = ParquetUpsert.applyBatchWithDeltas(b1.unionByName(b2), whole)
     val once = dAll.groupBy("type")
       .agg(sum("d_cents").as("c"), sum("d_rows").as("n"))
@@ -176,7 +176,7 @@ class PipelineSpec extends SparkSpec {
   /** Stage the sf feed as two parquet files and return their paths —
     * the raw material for controlled stop/restart runs. */
   private def stageTwoFiles(df: DataFrame, prefix: String): (String, Seq[java.nio.file.Path]) = {
-    val all = Files.createTempDirectory(prefix).toString + "/all"
+    val all = tempDir(prefix) + "/all"
     df.repartition(2).write.mode("overwrite").parquet(all)
     val parts = graft.sources.Formats
       .listDir(java.nio.file.Paths.get(all))
@@ -196,10 +196,10 @@ class PipelineSpec extends SparkSpec {
     // and the restarted query must NOT reprocess batch 1's file
     val (_, parts) = stageTwoFiles(
       Router.routedFeed(spark, sfDir).select("json"), "graft_restart_feed")
-    val feedDir = Files.createTempDirectory("graft_restart_in").toString
-    val lake = Files.createTempDirectory("graft_restart_lake").toString
-    val agg = Files.createTempDirectory("graft_restart_agg").toString
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
+    val feedDir = tempDir("graft_restart_in")
+    val lake = tempDir("graft_restart_lake")
+    val agg = tempDir("graft_restart_agg")
+    val ckpt = tempDir("graft_restart_ckpt")
 
     copyIn(feedDir, parts(0), "f0.parquet")
     val q1 = graft.streaming.Streams
@@ -219,8 +219,8 @@ class PipelineSpec extends SparkSpec {
       s"restart must resume after batch 1: reprocessed $replayed rows, " +
         s"batch 2 alone is $batch2Rows")
 
-    val lakeU = Files.createTempDirectory("graft_restart_lake_u").toString
-    val aggU = Files.createTempDirectory("graft_restart_agg_u").toString
+    val lakeU = tempDir("graft_restart_lake_u")
+    val aggU = tempDir("graft_restart_agg_u")
     val qU = graft.streaming.Streams
       .startCdcTopology(spark, feedDir, lakeU, aggU)
     try qU.processAllAvailable() finally qU.stop()
@@ -233,10 +233,10 @@ class PipelineSpec extends SparkSpec {
     val (_, parts) = stageTwoFiles(
       graft.sources.Tables(spark, sfDir).documents
         .select("doc_id", "text", "lang"), "graft_restart_docs")
-    val feedDir = Files.createTempDirectory("graft_restart_din").toString
-    val index = Files.createTempDirectory("graft_restart_idx").toString
-    val curated = Files.createTempDirectory("graft_restart_cur").toString + "/rows"
-    val ckpt = Files.createTempDirectory("graft_restart_cckpt").toString
+    val feedDir = tempDir("graft_restart_din")
+    val index = tempDir("graft_restart_idx")
+    val curated = tempDir("graft_restart_cur") + "/rows"
+    val ckpt = tempDir("graft_restart_cckpt")
 
     copyIn(feedDir, parts(0), "d0.parquet")
     val q1 = graft.operators.Curation
@@ -255,8 +255,8 @@ class PipelineSpec extends SparkSpec {
     assert(replayed == batch2Rows,
       s"restart must resume after batch 1: reprocessed $replayed rows")
 
-    val indexU = Files.createTempDirectory("graft_restart_idx_u").toString
-    val curatedU = Files.createTempDirectory("graft_restart_cur_u").toString + "/rows"
+    val indexU = tempDir("graft_restart_idx_u")
+    val curatedU = tempDir("graft_restart_cur_u") + "/rows"
     val qU = graft.operators.Curation
       .startCurateTopology(spark, feedDir, indexU, curatedU)
     try qU.processAllAvailable() finally qU.stop()

@@ -64,7 +64,7 @@ class RelationalSpec extends SparkSpec {
       "2-HIGH" -> Seq(51454.84, 336793.61),
       "3-MEDIUM" -> Seq(301321.80, 445942.63, 12.5),
       "4-LOW" -> Seq(4242.42))
-    val dir = java.nio.file.Files.createTempDirectory("q_percentiles").toString
+    val dir = tempDir("q_percentiles")
     prices.toSeq.flatMap { case (k, ps) => ps.map(k -> _) }
       .toDF("o_orderpriority", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")

@@ -43,7 +43,7 @@ class RouterSpec extends SparkSpec {
   }
 
   test("writeRouted lays each table into its own directory; per-table reads prune to it") {
-    val root = Files.createTempDirectory("graft_route").toString + "/lake"
+    val root = tempDir("graft_route") + "/lake"
     val snap = Router.materializeRouted(
       Router.parseRouted(Router.routedFeed(spark, sfDir), col("json")))
     Router.writeRouted(snap, root)
@@ -67,8 +67,8 @@ class RouterSpec extends SparkSpec {
         when(col("op") === "d", col("before.id")).otherwise(col("after.id")).as("id"),
         when(col("op") === "d", col("before.cents")).otherwise(col("after.cents")).as("cents"),
         when(col("op") === "d", col("before.type")).otherwise(col("after.type")).as("typ"))
-    val serialRoot = Files.createTempDirectory("graft_route_ser").toString
-    val parRoot = Files.createTempDirectory("graft_route_par").toString
+    val serialRoot = tempDir("graft_route_ser")
+    val parRoot = tempDir("graft_route_par")
     Router.applyRoutedBatch(batch, serialRoot, parallelism = 1)
     Router.applyRoutedBatch(batch, parRoot, parallelism = 4)
 
@@ -91,8 +91,8 @@ class RouterSpec extends SparkSpec {
     val routed = Router.parseRouted(
       graft.cdc.Cdc.feedFrom(Streams.eventsStream(spark, sfDir), Router.routing),
       col("json"))
-    val root = Files.createTempDirectory("graft_route_stream").toString + "/sink"
-    val ckpt = Files.createTempDirectory("graft_route_ckpt").toString
+    val root = tempDir("graft_route_stream") + "/sink"
+    val ckpt = tempDir("graft_route_ckpt")
     val q = routed.writeStream.format("parquet")
       .option("path", root).option("checkpointLocation", ckpt)
       .partitionBy("tbl").outputMode("append").start()

@@ -8,6 +8,9 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fresh temp directory, deleted with its contents at JVM exit. */
+  def tempDir(prefix: String): String = graft.sources.Formats.scratchDir(prefix)
 }
 
 object SparkSpec {

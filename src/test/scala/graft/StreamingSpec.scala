@@ -95,7 +95,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // no stale event can win against state established before the stop.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = tempDir("graft_ckpt")
     val emitted = new scala.collection.concurrent.TrieMap[Long, Seq[(Long, Long, Long)]]()
     val in = MemoryStream[ChangeRow]
 
@@ -394,7 +394,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
-    val root = java.nio.file.Files.createTempDirectory("graft_route_mb").toString
+    val root = tempDir("graft_route_mb")
     // routed-change rows: (tbl, key, scn, xid, op, id, cents, typ)
     val in = MemoryStream[(String, Long, Long, String, String, Long, Long, String)]
     val routed = in.toDF().toDF(
