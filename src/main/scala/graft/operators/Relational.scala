@@ -1,10 +1,12 @@
 package graft.operators
 
 import graft.Q
+import graft.plans.{AsOf, AsOfMode}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
 
 /** The batch query layer a ksqlDB user of the reference pipeline has
   * (filters, projections, aggregations, windowed aggregations, joins —
@@ -548,27 +550,43 @@ object Relational {
     * expansion with integer window arithmetic. */
   val qHoppingWindow: Q = Q(
     "q_hopping_window",
-    (s, dir) => t(s, dir).events
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
+    (s, dir) => windowAgg(t(s, dir).events, 1.hour, 30.minutes)
+      .orderBy("window_start_us", "event_type"),
+    Some(windowSql(1.hour, 30.minutes)))
+
+  /** The window aggregate of q_hopping_window and of the streamed
+    * tumbling and hopping rows: per (`size` window every `slide`,
+    * event_type), the event count and rounded value sum. */
+  private[graft] def windowAgg(events: DataFrame, size: FiniteDuration,
+      slide: FiniteDuration): DataFrame =
+    events
+      .groupBy(window(col("ts"), s"${size.toMicros} microseconds",
+        s"${slide.toMicros} microseconds"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .select(unix_micros(col("window.start")).as("window_start_us"),
         col("event_type"), col("n"), col("sum_value"))
-      .orderBy("window_start_us", "event_type"),
-    Some("""WITH e AS (
-           |  SELECT event_type, value, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-           |  FROM events),
-           |x AS (
-           |  SELECT event_type, value,
-           |    ((us // 1800000000) - k) * 1800000000 AS window_start_us
-           |  FROM e, unnest([0, 1]) AS t(k))
-           |SELECT window_start_us, event_type, count(*) AS n,
-           |  round(sum(value), 2) AS sum_value
-           |FROM x GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin))
 
-  /** Tumbling hourly window aggregate over the event stream (batch
-    * form; the streaming twin is
-    * [[graft.streaming.Streams.qStreamTumbling]]). Bucket is integer
-    * hour-since-epoch — shuffle on the bucket only. */
+  /** DuckDB oracle of [[windowAgg]]: each event expands to its
+    * size/slide windows with integer arithmetic on epoch µs. */
+  private[graft] def windowSql(size: FiniteDuration, slide: FiniteDuration): String = {
+    val (us, step) = (size.toMicros, slide.toMicros)
+    require(us % step == 0, s"window $size is not a multiple of its slide $slide")
+    s"""WITH e AS (
+       |  SELECT event_type, value, epoch_us(CAST(ts AS TIMESTAMP)) AS us
+       |  FROM events),
+       |x AS (
+       |  SELECT event_type, value,
+       |    ((us // $step) - k) * $step AS window_start_us
+       |  FROM e, unnest([${(0L until us / step).mkString(", ")}]) AS t(k))
+       |SELECT window_start_us, event_type, count(*) AS n,
+       |  round(sum(value), 2) AS sum_value
+       |FROM x GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin
+  }
+
+  /** Tumbling hourly window aggregate over the event stream. Bucket is
+    * integer hour-since-epoch — shuffle on the bucket only. (The
+    * streamed [[graft.streaming.Streams.qStreamTumbling]] emits window
+    * starts instead, through [[windowAgg]].) */
   val qTumblingWindow: Q = Q(
     "q_tumbling_window",
     (s, dir) =>
@@ -595,34 +613,135 @@ object Relational {
            |  count(*) AS n, round(avg(value), 4) AS avg_value
            |FROM events GROUP BY 1 ORDER BY k_mod""".stripMargin))
 
-  /** as-of join — each event picks the latest order of the same
-    * customer with o_orderdate <= ts. Spark has no ASOF JOIN operator;
-    * the scalable composition is the union-window trick: tag both
-    * relations, union, ONE shuffle on the key, and carry the most
-    * recent right-side row forward with last(_, ignoreNulls) over the
-    * (time, tag) ordering. This moves each row exactly once — the
-    * equivalent range-condition join would be a near-cartesian blowup
-    * per key. Orders are first deduped to one per (custkey, date) so
-    * the as-of winner is unique; the DuckDB oracle uses its native
-    * ASOF LEFT JOIN over the same deduped input. */
+  /** The as-of rows' shared input, times in epoch microseconds: the
+    * events `(event_id, user_id, tu)` and the orders deduped to one per
+    * (custkey, date) so every as-of winner is unique, `(rk, rtu,
+    * order_key)`. */
+  private[graft] def asOfInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val tb = t(s, dir)
+    val ord = tb.orders
+      .groupBy(col("o_custkey"), col("o_orderdate"))
+      .agg(max("o_orderkey").as("order_key"))
+      .select(col("o_custkey").as("rk"),
+        unix_micros(col("o_orderdate").cast("timestamp")).as("rtu"),
+        col("order_key"))
+    val ev = tb.events
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("tu"))
+    (ev, ord)
+  }
+
+  /** One native as-of row: for every event, the customer's order that
+    * `mode` picks, optionally discarded beyond `tolerance` µs, emitted
+    * as `keyOut` (order key) and `usOut` (order time), -1 when none. */
+  final case class AsOfSpec(name: String, mode: AsOfMode,
+      keyOut: String, usOut: String, tolerance: Option[Long] = None)
+
+  /** The DuckDB oracle of an [[AsOfSpec]], built from fragments: the
+    * `ord`/`e` CTEs over the same deduped input; DuckDB's own
+    * `ASOF LEFT JOIN` for backward (`>=`) and forward (`<=`); for
+    * nearest, which DuckDB lacks, a ranking of each event's orders by
+    * (|Δt|, time) — quadratic per key, eval-scale only — that pins both
+    * the distance choice and the backward-wins tie rule; and, with a
+    * tolerance, a CASE nulling a pick farther than the bound. "Pick,
+    * then discard if stale" equals the operator's "pick within the
+    * bound" in every mode: the pick is the closest candidate on its
+    * side(s), so if it is stale every candidate is. */
+  private def asOfOracle(spec: AsOfSpec): String = {
+    val ctes =
+      """WITH ord AS (
+        |  SELECT o_custkey AS rk, epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS rtu,
+        |    max(o_orderkey) AS order_key
+        |  FROM orders GROUP BY 1, 2
+        |), e AS (
+        |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
+        |  FROM events
+        |)""".stripMargin
+    def asof(op: String) =
+      s"e ASOF LEFT JOIN ord o ON e.user_id = o.rk AND e.us $op o.rtu"
+    val (ranked, from) = spec.mode match {
+      case AsOfMode.Backward => ("", asof(">="))
+      case AsOfMode.Forward => ("", asof("<="))
+      case AsOfMode.Nearest =>
+        (""", m AS (
+           |  SELECT m_event_id, order_key, rtu FROM (
+           |    SELECT e.event_id AS m_event_id, o.order_key, o.rtu,
+           |      row_number() OVER (PARTITION BY e.event_id
+           |        ORDER BY abs(e.us - o.rtu), o.rtu) AS rn
+           |    FROM e JOIN ord o ON e.user_id = o.rk
+           |  ) WHERE rn = 1
+           |)""".stripMargin, "e LEFT JOIN m o ON e.event_id = o.m_event_id")
+    }
+    def pick(v: String) = spec.tolerance.fold(s"coalesce($v, -1)")(tol =>
+      s"CASE WHEN o.order_key IS NOT NULL AND abs(e.us - o.rtu) <= $tol " +
+        s"THEN $v ELSE -1 END")
+    s"""$ctes$ranked
+       |SELECT e.event_id, e.user_id,
+       |  ${pick("o.order_key")} AS ${spec.keyOut},
+       |  ${pick("o.rtu")} AS ${spec.usOut}
+       |FROM $from
+       |ORDER BY event_id""".stripMargin
+  }
+
+  /** An [[AsOfSpec]] through the NATIVE whole-operator extension
+    * (graft.plans.AsOfJoin: logical node + strategy + merge-scan exec).
+    * Plan shape in every mode: two key exchanges + two sorts (inserted
+    * by EnsureRequirements from the exec's declared requirements), then
+    * one O(|L|+|R|) merge scan with at most one buffered right row — no
+    * Window, nothing materialized. */
+  private def asOfQ(spec: AsOfSpec): Q = Q(
+    spec.name,
+    (s, dir) => {
+      val (ev, ord) = asOfInputs(s, dir)
+      AsOf.join(ev, ord, ev("user_id"), ev("tu"), ord("rk"), ord("rtu"),
+          spec.mode, spec.tolerance)
+        .select(col("event_id"), col("user_id"),
+          coalesce(col("order_key"), lit(-1L)).as(spec.keyOut),
+          coalesce(col("rtu"), lit(-1L)).as(spec.usOut))
+        .orderBy("event_id")
+    },
+    Some(asOfOracle(spec)))
+
+  /** The native as-of family:
+    *  - q_asof_native: backward, "state as of the event";
+    *  - q_asof_forward: the customer's FIRST order at or after the
+    *    event ("next action after the touchpoint" — lead-time
+    *    analysis); the forward scan needs no buffered candidate, the
+    *    un-consumed right head is the match;
+    *  - q_asof_nearest: the order CLOSEST in absolute time, backward
+    *    winning exact ties (kdb's closest-reading join);
+    *  - q_asof_tolerance: backward, unless the order is older than 30
+    *    days (pandas merge_asof(tolerance=…)) — the staleness guard
+    *    every state-join deployment eventually needs. */
+  private val asOfFamily: Seq[AsOfSpec] = Seq(
+    AsOfSpec("q_asof_native", AsOfMode.Backward, "as_of_key", "as_of_us"),
+    AsOfSpec("q_asof_forward", AsOfMode.Forward, "next_key", "next_us"),
+    AsOfSpec("q_asof_nearest", AsOfMode.Nearest, "near_key", "near_us"),
+    AsOfSpec("q_asof_tolerance", AsOfMode.Backward, "fresh_key", "fresh_us",
+      Some(30L * 24 * 3600 * 1000000)))
+  val Seq(qAsofNative, qAsofForward, qAsofNearest, qAsofTolerance) =
+    asOfFamily.map(asOfQ)
+
+  /** as-of join — q_asof_native's semantics as a COMPOSITION, the
+    * reference the native rows are checked against. Spark has no ASOF
+    * JOIN operator; the scalable composition is the union-window
+    * trick: tag both relations, union, ONE shuffle on the key, and
+    * carry the most recent right-side row forward with
+    * last(_, ignoreNulls) over the (time, tag) ordering. This moves
+    * each row exactly once — the equivalent range-condition join would
+    * be a near-cartesian blowup per key. Same input and same oracle as
+    * q_asof_native. */
   val qAsofJoin: Q = Q(
     "q_asof_join",
     (s, dir) => {
-      val tb = t(s, dir)
-      val ord = tb.orders
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(max("o_orderkey").as("order_key"))
-        .select(col("o_custkey").as("k"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("tu"),
-          col("order_key"), lit(1).as("is_r"))
-        .withColumn("event_id", lit(null).cast("long"))
-      val ev = tb.events
-        .select(col("user_id").as("k"), unix_micros(col("ts")).as("tu"),
-          lit(null).cast("long").as("order_key"), lit(0).as("is_r"),
-          col("event_id"))
+      val (ev, ord) = asOfInputs(s, dir)
       val w = Window.partitionBy("k").orderBy(col("tu").asc, col("is_r").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ord.unionByName(ev)
+      ord.select(col("rk").as("k"), col("rtu").as("tu"), col("order_key"),
+          lit(1).as("is_r"))
+        .withColumn("event_id", lit(null).cast("long"))
+        .unionByName(ev.select(col("user_id").as("k"), col("tu"),
+          lit(null).cast("long").as("order_key"), lit(0).as("is_r"),
+          col("event_id")))
         .withColumn("as_of_key", last("order_key", ignoreNulls = true).over(w))
         .withColumn("as_of_us",
           last(when(col("is_r") === 1, col("tu")), ignoreNulls = true).over(w))
@@ -632,212 +751,7 @@ object Relational {
           coalesce(col("as_of_us"), lit(-1L)).as("as_of_us"))
         .orderBy("event_id")
     },
-    Some("""WITH ord AS (
-           |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS order_key
-           |  FROM orders GROUP BY 1, 2
-           |), e AS (
-           |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-           |  FROM events
-           |)
-           |SELECT e.event_id, e.user_id,
-           |  coalesce(o.order_key, -1) AS as_of_key,
-           |  coalesce(epoch_us(CAST(o.o_orderdate AS TIMESTAMP)), -1) AS as_of_us
-           |FROM e ASOF LEFT JOIN ord o
-           |  ON e.user_id = o.o_custkey
-           |  AND e.us >= epoch_us(CAST(o.o_orderdate AS TIMESTAMP))
-           |ORDER BY event_id""".stripMargin))
-
-  /** The same as-of semantics through the NATIVE whole-operator
-    * extension (graft.plans.AsOfJoin: logical node + strategy +
-    * merge-scan exec) instead of the union+window composition above —
-    * both rows are kept deliberately: q_asof_join proves the semantics
-    * are expressible declaratively, this row proves the custom
-    * operator ladder end to end against the identical DuckDB ASOF
-    * oracle. Plan shape: two key exchanges + two sorts (inserted by
-    * EnsureRequirements from the exec's declared requirements), then a
-    * single O(|L|+|R|) merge scan with one buffered right row — no
-    * Window, nothing materialized. */
-  val qAsofNative: Q = Q(
-    "q_asof_native",
-    (s, dir) => {
-      val tb = t(s, dir)
-      val ord = tb.orders
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(max("o_orderkey").as("order_key"))
-        .select(col("o_custkey").as("rk"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("rtu"),
-          col("order_key"))
-      val ev = tb.events
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("tu"))
-      graft.plans.AsOf.join(ev, ord,
-          ev("user_id"), ev("tu"), ord("rk"), ord("rtu"))
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("order_key"), lit(-1L)).as("as_of_key"),
-          coalesce(col("rtu"), lit(-1L)).as("as_of_us"))
-        .orderBy("event_id")
-    },
-    Some("""WITH ord AS (
-           |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS order_key
-           |  FROM orders GROUP BY 1, 2
-           |), e AS (
-           |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-           |  FROM events
-           |)
-           |SELECT e.event_id, e.user_id,
-           |  coalesce(o.order_key, -1) AS as_of_key,
-           |  coalesce(epoch_us(CAST(o.o_orderdate AS TIMESTAMP)), -1) AS as_of_us
-           |FROM e ASOF LEFT JOIN ord o
-           |  ON e.user_id = o.o_custkey
-           |  AND e.us >= epoch_us(CAST(o.o_orderdate AS TIMESTAMP))
-           |ORDER BY event_id""".stripMargin))
-
-  /** FORWARD as-of through the same native operator: for every event,
-    * the customer's FIRST order at or after the event time ("next
-    * action after the touchpoint" — lead-time analysis, the mirror of
-    * q_asof_native's "state as of the event"). Identical plan shape —
-    * two key exchanges + sorts + one merge scan — and the forward scan
-    * needs NO buffered candidate at all: the un-consumed right head is
-    * the match for every left row it satisfies. Oracle is DuckDB's own
-    * ASOF LEFT JOIN with the inequality flipped (`e.us <= r.time`). */
-  val qAsofForward: Q = Q(
-    "q_asof_forward",
-    (s, dir) => {
-      val tb = t(s, dir)
-      val ord = tb.orders
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(max("o_orderkey").as("order_key"))
-        .select(col("o_custkey").as("rk"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("rtu"),
-          col("order_key"))
-      val ev = tb.events
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("tu"))
-      graft.plans.AsOf.joinForward(ev, ord,
-          ev("user_id"), ev("tu"), ord("rk"), ord("rtu"))
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("order_key"), lit(-1L)).as("next_key"),
-          coalesce(col("rtu"), lit(-1L)).as("next_us"))
-        .orderBy("event_id")
-    },
-    Some("""WITH ord AS (
-           |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS order_key
-           |  FROM orders GROUP BY 1, 2
-           |), e AS (
-           |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-           |  FROM events
-           |)
-           |SELECT e.event_id, e.user_id,
-           |  coalesce(o.order_key, -1) AS next_key,
-           |  coalesce(epoch_us(CAST(o.o_orderdate AS TIMESTAMP)), -1) AS next_us
-           |FROM e ASOF LEFT JOIN ord o
-           |  ON e.user_id = o.o_custkey
-           |  AND e.us <= epoch_us(CAST(o.o_orderdate AS TIMESTAMP))
-           |ORDER BY event_id""".stripMargin))
-
-  /** NEAREST as-of through the same native operator — the third
-    * direction completing the family (kdb's closest-reading join):
-    * for every event, the customer's order CLOSEST in absolute time,
-    * backward winning exact ties. Same plan as the other two rows —
-    * two key exchanges + sorts + ONE merge scan with one buffered
-    * row; the forward candidate is the un-consumed right head, so
-    * nearest costs nothing extra. DuckDB has no nearest ASOF, so the
-    * oracle ranks each event's candidate orders by (|Δt|, time) —
-    * quadratic per key, eval-scale only — which independently pins
-    * both the distance choice and the tie rule. */
-  val qAsofNearest: Q = Q(
-    "q_asof_nearest",
-    (s, dir) => {
-      val tb = t(s, dir)
-      val ord = tb.orders
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(max("o_orderkey").as("order_key"))
-        .select(col("o_custkey").as("rk"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("rtu"),
-          col("order_key"))
-      val ev = tb.events
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("tu"))
-      graft.plans.AsOf.joinNearest(ev, ord,
-          ev("user_id"), ev("tu"), ord("rk"), ord("rtu"))
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("order_key"), lit(-1L)).as("near_key"),
-          coalesce(col("rtu"), lit(-1L)).as("near_us"))
-        .orderBy("event_id")
-    },
-    Some("""WITH ord AS (
-           |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS order_key
-           |  FROM orders GROUP BY 1, 2
-           |), r AS (
-           |  SELECT o_custkey AS rk,
-           |    epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS rtu, order_key
-           |  FROM ord
-           |), e AS (
-           |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-           |  FROM events
-           |), m AS (
-           |  SELECT m_event_id, order_key, rtu FROM (
-           |    SELECT e.event_id AS m_event_id, r.order_key, r.rtu,
-           |      row_number() OVER (PARTITION BY e.event_id
-           |        ORDER BY abs(e.us - r.rtu), r.rtu) AS rn
-           |    FROM e JOIN r ON e.user_id = r.rk
-           |  ) WHERE rn = 1
-           |)
-           |SELECT e.event_id, e.user_id,
-           |  coalesce(m.order_key, -1) AS near_key,
-           |  coalesce(m.rtu, -1) AS near_us
-           |FROM e LEFT JOIN m ON e.event_id = m.m_event_id
-           |ORDER BY event_id""".stripMargin))
-
-  /** 30 days in microseconds — the staleness bound for
-    * q_asof_tolerance. */
-  private val AsOfTolUs = 30L * 24 * 3600 * 1000000
-
-  /** Tolerance-bounded backward as-of (pandas merge_asof(tolerance=…)):
-    * "state as of the event, unless it is older than 30 days" — a
-    * match farther than the bound is discarded and the event
-    * null-extends, the staleness guard every state-join deployment
-    * eventually needs. Same native merge scan; the bound costs one
-    * subtraction against the already-found candidate. The oracle is
-    * DuckDB's own ASOF LEFT JOIN with the match nulled out beyond the
-    * bound — equivalent because backward-as-of picks the LATEST
-    * right ≤ t, so "latest, then discard if stale" ≡ "latest within
-    * the window". */
-  val qAsofTolerance: Q = Q(
-    "q_asof_tolerance",
-    (s, dir) => {
-      val tb = t(s, dir)
-      val ord = tb.orders
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(max("o_orderkey").as("order_key"))
-        .select(col("o_custkey").as("rk"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("rtu"),
-          col("order_key"))
-      val ev = tb.events
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("tu"))
-      graft.plans.AsOf.joinWithin(ev, ord,
-          ev("user_id"), ev("tu"), ord("rk"), ord("rtu"),
-          AsOfTolUs, graft.plans.AsOfMode.Backward)
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("order_key"), lit(-1L)).as("fresh_key"),
-          coalesce(col("rtu"), lit(-1L)).as("fresh_us"))
-        .orderBy("event_id")
-    },
-    Some(s"""WITH ord AS (
-           |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS order_key
-           |  FROM orders GROUP BY 1, 2
-           |), e AS (
-           |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-           |  FROM events
-           |)
-           |SELECT e.event_id, e.user_id,
-           |  CASE WHEN o.order_key IS NOT NULL
-           |    AND e.us - epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) <= $AsOfTolUs
-           |    THEN o.order_key ELSE -1 END AS fresh_key,
-           |  CASE WHEN o.order_key IS NOT NULL
-           |    AND e.us - epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) <= $AsOfTolUs
-           |    THEN epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) ELSE -1 END AS fresh_us
-           |FROM e ASOF LEFT JOIN ord o
-           |  ON e.user_id = o.o_custkey
-           |  AND e.us >= epoch_us(CAST(o.o_orderdate AS TIMESTAMP))
-           |ORDER BY event_id""".stripMargin))
+    qAsofNative.oracle)
 
   /** banded range join: facts land in value bands via a range
     * condition against a tiny band dimension. The band table is
@@ -1227,30 +1141,39 @@ object Relational {
     * pre-aggregation argument as cdc_materialize's max_by, generalized
     * from K=1 to arbitrary K. Oracle ranks with the equivalent
     * row_number window — a hash match proves the heap semantics. */
-  val qTopkAgg: Q = Q(
-    "q_topk_agg",
-    (s, dir) => {
-      val o = t(s, dir).orders.select(
-        (col("o_custkey") % 50).as("grp"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
-        col("o_orderkey"))
-      o.groupBy("grp")
-        .agg(expr("graft_topk(cents, o_orderkey, 3)").as("top"))
-        .select(col("grp"), posexplode(col("top")))
-        .select(col("grp"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.v").as("cents"), col("col.id").as("o_orderkey"))
-        .orderBy("grp", "rank")
-    },
-    Some("""WITH o AS (
-           |  SELECT o_custkey % 50 AS grp,
-           |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents, o_orderkey
-           |  FROM orders),
-           |r AS (
-           |  SELECT *, row_number() OVER
-           |    (PARTITION BY grp ORDER BY cents DESC, o_orderkey DESC) AS rank
-           |  FROM o)
-           |SELECT grp, rank, cents, o_orderkey FROM r WHERE rank <= 3
-           |ORDER BY grp, rank""".stripMargin))
+  val qTopkAgg: Q = {
+    val (grp, cents) = ("o_custkey % 50", "CAST(round(o_totalprice * 100) AS BIGINT)")
+    Q("q_topk_agg",
+      (s, dir) => topkRanks(t(s, dir).orders
+          .select(expr(grp).as("grp"), expr(cents).as("cents"), col("o_orderkey"))
+          .groupBy("grp")
+          .agg(expr("graft_topk(cents, o_orderkey, 3)").as("top")), "o_orderkey"),
+      Some(topkSql("orders", grp, cents, "o_orderkey", 3)))
+  }
+
+  /** The top-K rows' shared tail: each group's `top` heap (graft_topk's
+    * `(v, id)` array) → one `(grp, rank, cents, <id>)` row per entry. */
+  private[graft] def topkRanks(heaps: DataFrame, id: String): DataFrame =
+    heaps.select(col("grp"), posexplode(col("top")))
+      .select(col("grp"), (col("pos") + 1).cast("long").as("rank"),
+        col("col.v").as("cents"), col("col.id").as(id))
+      .orderBy("grp", "rank")
+
+  /** DuckDB oracle of the top-K rows: the equivalent row_number window
+    * over `table`, `grp` and `cents` as SQL expressions, ties broken by
+    * the larger `id` like the heap. */
+  private[graft] def topkSql(table: String, grp: String, cents: String,
+      id: String, k: Int): String =
+    s"""WITH o AS (
+       |  SELECT $grp AS grp,
+       |    $cents AS cents, $id
+       |  FROM $table),
+       |r AS (
+       |  SELECT *, row_number() OVER
+       |    (PARTITION BY grp ORDER BY cents DESC, $id DESC) AS rank
+       |  FROM o)
+       |SELECT grp, rank, cents, $id FROM r WHERE rank <= $k
+       |ORDER BY grp, rank""".stripMargin
 
   /** Count-min-sketch heavy hitters — the constant-memory frequency
     * sketch a 100 TB stream aggregates where exact per-key counts are
@@ -1259,51 +1182,19 @@ object Relational {
     * always ≥ the true count, over by at most ~εN with ε ≈ 2/w except
     * with probability ~(collision rate)^d).
     *
-    * Scale shape: the sketch build explodes d cells per event but
-    * PARTIAL-AGGREGATES map-side onto ≤ d·w cells per partition, so
-    * the shuffle moves ≤ d·w rows per partition regardless of stream
-    * size, and the finished sketch (≤262k cells, ~5 MB) broadcasts to
-    * the estimate join. Like q_approx_distinct, the sketch itself is
-    * hash-seeded engine detail, so the row emits the DETERMINISTIC
-    * verdict instead: exact top-10 keys with `est_ge_exact` (CMS
-    * one-sided error — structurally always true) and `within_eps`
-    * (est ≤ exact + [[Cms.EpsMul]]·N/w — see Cms for why the
-    * multiplier carries margin and what a failure means), both
-    * hash-matched as true against the oracle's constants. Geometry
-    * (d, w, cell hashing) lives in [[Cms]], shared with the streaming
-    * twin so the two rows cannot drift. */
-  val qApproxTopkCms: Q = {
-    Q(
-      "q_approx_topk",
-      (s, dir) => {
-        val li = t(s, dir).lineitem.select(col("l_suppkey"))
-        val buckets = Cms.buckets("l_suppkey") // geometry shared with the stream twin
-        val cells = li.select(explode(expr(buckets)).as("c"))
-          .groupBy(col("c.r").as("r"), col("c.b").as("b"))
-          .agg(count(lit(1)).as("cell_n"))
-        val totals = li.agg(count(lit(1)).as("total_n"))
-        val top = li.groupBy("l_suppkey").agg(count(lit(1)).as("exact_n"))
-          .orderBy(col("exact_n").desc, col("l_suppkey")).limit(10)
-        top.select(col("l_suppkey"), col("exact_n"),
-            explode(expr(buckets)).as("c"))
-          .select(col("l_suppkey"), col("exact_n"),
-            col("c.r").as("r"), col("c.b").as("b"))
-          .join(broadcast(cells), Seq("r", "b"))
-          .groupBy("l_suppkey", "exact_n")
-          .agg(min("cell_n").as("est_n"))
-          .crossJoin(broadcast(totals))
-          .select(col("l_suppkey"), col("exact_n"),
-            (col("est_n") >= col("exact_n")).as("est_ge_exact"),
-            (col("est_n") <= col("exact_n")
-              + lit(Cms.EpsMul) * col("total_n") / lit(Cms.W.toLong))
-              .as("within_eps"))
-          .orderBy(col("exact_n").desc, col("l_suppkey"))
-      },
-      Some("""SELECT l_suppkey, count(*) AS exact_n,
-             |  true AS est_ge_exact, true AS within_eps
-             |FROM lineitem GROUP BY l_suppkey
-             |ORDER BY exact_n DESC, l_suppkey LIMIT 10""".stripMargin))
-  }
+    * Like q_approx_distinct, the sketch itself is hash-seeded engine
+    * detail, so the row emits the DETERMINISTIC verdict instead
+    * ([[Cms.verdict]]: exact top-10 keys with two booleans that
+    * hash-match as true against the oracle's constants). Sketch and
+    * verdict are shared with the streaming twin, so the two rows cannot
+    * drift. */
+  val qApproxTopkCms: Q = Q(
+    "q_approx_topk",
+    (s, dir) => {
+      val li = t(s, dir).lineitem.select(col("l_suppkey"))
+      Cms.verdict(li, "l_suppkey", Cms.cells(li, "l_suppkey"))
+    },
+    Some(Cms.verdictSql("lineitem", "l_suppkey")))
 
   val all: Seq[Q] = Seq(
     q1Agg, q3TopkJoin, q5MultiJoin, q6FilterAgg, qSemiJoin, qAntiJoin,

@@ -12,36 +12,6 @@ import org.apache.spark.sql.catalyst.plans.physical.{
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
-/** Native backward as-of join — the whole-operator Catalyst extension
-  * (logical node + planner strategy + physical merge scan), for the
-  * one join type Spark's planner has no operator for.
-  *
-  * Semantics: LEFT OUTER as-of — for every left row, the single right
-  * row with `rightKey = leftKey` and the LARGEST `rightTime <=
-  * leftTime`; right columns are null when no such row exists. (The
-  * ksqlDB/kdb "most recent state at event time" join; DuckDB spells it
-  * `ASOF LEFT JOIN`, which is exactly what the oracle runs.)
-  *
-  * Physical shape — declared, not hand-built: the exec node REQUIRES
-  * `ClusteredDistribution(key)` on both children and (key, time)
-  * ascending intra-partition order, and Spark's own EnsureRequirements
-  * inserts the hash exchanges and sorts — the same machinery that
-  * plans SortMergeJoin. Execution is then a single forward merge scan
-  * per partition: O(|L| + |R|), O(1) state (ONE buffered right row),
-  * no window, no state blow-up on hot keys, never a cross product.
-  * Compare the composed formulation (q_asof_join: union + last-over
-  * running window): same two exchanges, but the window materializes
-  * and sorts the union and carries every right column through it; the
-  * merge scan streams both inputs once. At 100 TB both sides shuffle
-  * exactly once on the key, and skew behaves like sort-merge-join
-  * skew (a hot key sorts locally; nothing is replicated).
-  *
-  * Keys and times must be non-null (null left keys emit null-extended
-  * rows; null right keys match nothing). Right rows should be unique
-  * per (key, time) — with duplicates, which duplicate wins follows
-  * sort tie order, so dedup first (the registry row pre-aggregates,
-  * like any sane as-of input).
-  */
 /** The three as-of directions, shared by the logical node and exec:
   * Backward = latest right time <= left time (state AS OF the event);
   * Forward = earliest right time >= left time (next state AFTER it);
@@ -55,6 +25,39 @@ object AsOfMode {
   case object Nearest extends AsOfMode
 }
 
+/** Native as-of join — the whole-operator Catalyst extension (logical
+  * node + planner strategy + physical merge scan), for the one join
+  * type Spark's planner has no operator for.
+  *
+  * Semantics: LEFT OUTER as-of — for every left row, the single right
+  * row with `rightKey = leftKey` that `mode` picks (see [[AsOfMode]]);
+  * with a `tolerance`, a pick farther than that many time units from
+  * the left row is discarded. Right columns are null when nothing
+  * matches. (The ksqlDB/kdb "state at event time" join; DuckDB spells
+  * the backward and forward modes `ASOF LEFT JOIN`, which is what the
+  * oracles run.)
+  *
+  * Physical shape — declared, not hand-built: the exec node REQUIRES
+  * `ClusteredDistribution(key)` on both children and (key, time)
+  * ascending intra-partition order, and Spark's own EnsureRequirements
+  * inserts the hash exchanges and sorts — the same machinery that
+  * plans SortMergeJoin. Execution is then a single forward merge scan
+  * per partition: O(|L| + |R|), O(1) state (at most ONE buffered right
+  * row), no window, no state blow-up on hot keys, never a cross
+  * product. Compare the composed formulation (q_asof_join: union +
+  * last-over running window): same two exchanges, but the window
+  * materializes and sorts the union and carries every right column
+  * through it; the merge scan streams both inputs once. At 100 TB both
+  * sides shuffle exactly once on the key, and skew behaves like
+  * sort-merge-join skew (a hot key sorts locally; nothing is
+  * replicated).
+  *
+  * Keys and times must be non-null (null left keys emit null-extended
+  * rows; null right keys match nothing). Right rows should be unique
+  * per (key, time) — with duplicates, which duplicate wins follows
+  * sort tie order, so dedup first (the registry rows pre-aggregate,
+  * like any sane as-of input).
+  */
 case class AsOfJoin(
     left: LogicalPlan,
     right: LogicalPlan,
@@ -275,74 +278,25 @@ case class AsOfJoinExec(
 
 /** Public API: `AsOf.join(events, states, "k", "tu")`. */
 object AsOf {
-  /** Registers the strategy in the session (idempotently) and builds
-    * the joined DataFrame. Key and time columns are named the same on
-    * both sides here (rename beforehand if not); right columns appear
-    * suffixed only through normal Spark resolution, so project/alias
-    * the sides before joining if names collide. */
+  /** Backward as-of on key and time columns named the same on both
+    * sides (rename beforehand if not). */
   def join(leftDf: DataFrame, rightDf: DataFrame,
       keyCol: String, timeCol: String): DataFrame =
     join(leftDf, rightDf, leftDf(keyCol), leftDf(timeCol),
       rightDf(keyCol), rightDf(timeCol))
 
-  /** Column-expression variant for pre-resolved keys. */
+  /** Registers the strategy in the session (idempotently) and builds
+    * the joined DataFrame. `mode` picks the direction ([[AsOfMode]]);
+    * `tolerance` bounds the match's distance in time units (pandas
+    * `merge_asof(tolerance=...)`: a stale match null-extends the row,
+    * at one subtraction per row). Nearest and tolerance need integral
+    * or instant time columns. Right columns appear suffixed only
+    * through normal Spark resolution, so project/alias the sides
+    * before joining if names collide. */
   def join(leftDf: DataFrame, rightDf: DataFrame,
       leftKey: Column, leftTime: Column,
-      rightKey: Column, rightTime: Column): DataFrame =
-    build(leftDf, rightDf, leftKey, leftTime, rightKey, rightTime,
-      AsOfMode.Backward)
-
-  /** FORWARD as-of: for every left row, the single right row with the
-    * SMALLEST `rightTime >= leftTime` on the same key (the next state
-    * after the event). Same exchanges, same one-pass merge scan. */
-  def joinForward(leftDf: DataFrame, rightDf: DataFrame,
-      keyCol: String, timeCol: String): DataFrame =
-    build(leftDf, rightDf, leftDf(keyCol), leftDf(timeCol),
-      rightDf(keyCol), rightDf(timeCol), AsOfMode.Forward)
-
-  def joinForward(leftDf: DataFrame, rightDf: DataFrame,
-      leftKey: Column, leftTime: Column,
-      rightKey: Column, rightTime: Column): DataFrame =
-    build(leftDf, rightDf, leftKey, leftTime, rightKey, rightTime,
-      AsOfMode.Forward)
-
-  /** NEAREST as-of: the right row minimizing |rightTime - leftTime| on
-    * the same key, backward winning exact ties (sensor alignment /
-    * closest-reading joins). Integral or instant time columns only.
-    * Same exchanges, same one-pass merge scan, one buffered row. */
-  def joinNearest(leftDf: DataFrame, rightDf: DataFrame,
-      keyCol: String, timeCol: String): DataFrame =
-    build(leftDf, rightDf, leftDf(keyCol), leftDf(timeCol),
-      rightDf(keyCol), rightDf(timeCol), AsOfMode.Nearest)
-
-  def joinNearest(leftDf: DataFrame, rightDf: DataFrame,
-      leftKey: Column, leftTime: Column,
-      rightKey: Column, rightTime: Column): DataFrame =
-    build(leftDf, rightDf, leftKey, leftTime, rightKey, rightTime,
-      AsOfMode.Nearest)
-
-  /** Tolerance-bounded as-of (pandas `merge_asof(tolerance=...)` /
-    * kdb window-join semantics): any mode, but a match farther than
-    * `tolerance` time units from the left row is discarded and the row
-    * null-extends — "state as of the event, unless it's stale". Same
-    * plan, same scan; the bound is checked on the already-found
-    * candidate, costing one subtraction per row. */
-  def joinWithin(leftDf: DataFrame, rightDf: DataFrame,
-      keyCol: String, timeCol: String, tolerance: Long,
-      mode: AsOfMode = AsOfMode.Backward): DataFrame =
-    build(leftDf, rightDf, leftDf(keyCol), leftDf(timeCol),
-      rightDf(keyCol), rightDf(timeCol), mode, Some(tolerance))
-
-  def joinWithin(leftDf: DataFrame, rightDf: DataFrame,
-      leftKey: Column, leftTime: Column,
-      rightKey: Column, rightTime: Column, tolerance: Long,
-      mode: AsOfMode): DataFrame =
-    build(leftDf, rightDf, leftKey, leftTime, rightKey, rightTime,
-      mode, Some(tolerance))
-
-  private def build(leftDf: DataFrame, rightDf: DataFrame,
-      leftKey: Column, leftTime: Column,
-      rightKey: Column, rightTime: Column, mode: AsOfMode,
+      rightKey: Column, rightTime: Column,
+      mode: AsOfMode = AsOfMode.Backward,
       tolerance: Option[Long] = None): DataFrame = {
     val spark = leftDf.sparkSession
     install(spark)
@@ -351,7 +305,7 @@ object AsOf {
       GraftSqlShim.expression(leftKey), GraftSqlShim.expression(leftTime),
       GraftSqlShim.expression(rightKey), GraftSqlShim.expression(rightTime),
       mode, tolerance)
-    org.apache.spark.sql.GraftSqlShim.ofRows(spark, plan)
+    GraftSqlShim.ofRows(spark, plan)
   }
 
   /** Idempotent runtime registration, for sessions not built with

@@ -2,9 +2,11 @@ package graft.streaming
 
 import graft.Q
 import graft.cdc.{Cdc, CdcQueries, ChangelogAgg, Router}
+import graft.operators.{Cms, Relational}
 import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
 
 /** A parsed change event as carried through keyed streaming state. */
 final case class ChangeRow(
@@ -558,35 +560,22 @@ object Streams {
     * StreamingSpec ("append mode + watermark"), where a
     * watermark-advancing sentinel closes the windows and state shrinks
     * to the open window only. */
-  val qStreamTumbling: Q = Q(
-    "q_stream_tumbling",
-    (s, dir) => {
-      val agg = eventsStream(s, dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-        .select(unix_micros(col("window.start")).as("window_start_us"),
-          col("event_type"), col("n"), col("sum_value"))
-      runBounded(agg, "complete").orderBy("window_start_us", "event_type")
-    },
-    Some("""SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS BIGINT) * 3600000000 AS window_start_us,
-           |  event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-           |FROM events GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin))
+  val qStreamTumbling: Q = windowStreamQ("q_stream_tumbling", 1.hour, 1.hour)
 
   /** hopping (sliding) window aggregation, incremental with watermark —
     * the ksqlDB HOPPING window; each event updates two window states. */
-  val qStreamHopping: Q = Q(
-    "q_stream_hopping",
-    (s, dir) => {
-      val agg = eventsStream(s, dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-        .select(unix_micros(col("window.start")).as("window_start_us"),
-          col("event_type"), col("n"), col("sum_value"))
-      runBounded(agg, "complete").orderBy("window_start_us", "event_type")
-    },
-    graft.operators.Relational.qHoppingWindow.oracle)
+  val qStreamHopping: Q = windowStreamQ("q_stream_hopping", 1.hour, 30.minutes)
+
+  /** The batch window aggregate ([[Relational.windowAgg]]) run
+    * incrementally: the stream adds only a watermark and the bounded
+    * run. */
+  private def windowStreamQ(name: String, size: FiniteDuration,
+      slide: FiniteDuration): Q = Q(
+    name,
+    (s, dir) => runBounded(
+      Relational.windowAgg(eventsStream(s, dir).withWatermark("ts", "1 hour"), size, slide),
+      "complete").orderBy("window_start_us", "event_type"),
+    Some(Relational.windowSql(size, slide)))
 
   /** streaming session windows (30-minute gap) per user. */
   val qStreamSession: Q = Q(
@@ -854,34 +843,21 @@ object Streams {
     * increasing per emission, same ordinal argument as
     * cdc_stream_changelog_agg). The bounded feed's final leaderboard
     * must equal the batch window-rank oracle. */
-  val qStreamTopk: Q = Q(
-    "q_stream_topk",
-    (s, dir) => {
-      val ev = eventsStream(s, dir)
-        .select((col("user_id") % 10).as("grp"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-          col("event_id"))
-      val agg = ev.groupBy("grp")
-        .agg(expr("graft_topk(cents, event_id, 3)").as("top"),
-          count(lit(1)).as("n_seen"))
-      runBounded(agg, "update")
-        .groupBy("grp")
-        .agg(max_by(col("top"), col("n_seen")).as("top"))
-        .select(col("grp"), posexplode(col("top")))
-        .select(col("grp"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.v").as("cents"), col("col.id").as("event_id"))
-        .orderBy("grp", "rank")
-    },
-    Some("""WITH e AS (
-           |  SELECT user_id % 10 AS grp,
-           |    CAST(round(value * 100) AS BIGINT) AS cents, event_id
-           |  FROM events),
-           |r AS (
-           |  SELECT *, row_number() OVER
-           |    (PARTITION BY grp ORDER BY cents DESC, event_id DESC) AS rank
-           |  FROM e)
-           |SELECT grp, rank, cents, event_id FROM r WHERE rank <= 3
-           |ORDER BY grp, rank""".stripMargin))
+  val qStreamTopk: Q = {
+    val (grp, cents) = ("user_id % 10", "CAST(round(value * 100) AS BIGINT)")
+    Q("q_stream_topk",
+      (s, dir) => {
+        val agg = eventsStream(s, dir)
+          .select(expr(grp).as("grp"), expr(cents).as("cents"), col("event_id"))
+          .groupBy("grp")
+          .agg(expr("graft_topk(cents, event_id, 3)").as("top"),
+            count(lit(1)).as("n_seen"))
+        Relational.topkRanks(runBounded(agg, "update")
+          .groupBy("grp")
+          .agg(max_by(col("top"), col("n_seen")).as("top")), "event_id")
+      },
+      Some(Relational.topkSql("events", grp, cents, "event_id", 3)))
+  }
 
   /** Streaming count-min sketch — q_approx_topk's sketch maintained
     * INCREMENTALLY over the event stream: the d×w cell counts are an
@@ -894,43 +870,14 @@ object Streams {
     * exact top-10 keys (from the completed table — the oracle side's
     * ground truth) with the CMS one-sided-error and εN-bound booleans,
     * which hash-match as constants. */
-  val qStreamApproxTopk: Q = {
-    import graft.operators.Cms
-    Q(
-      "q_stream_approx_topk",
-      (s, dir) => {
-        // geometry shared with the batch twin by construction (Cms)
-        val buckets = Cms.buckets("user_id")
-        val cellsAgg = eventsStream(s, dir)
-          .select(explode(expr(buckets)).as("c"))
-          .groupBy(col("c.r").as("r"), col("c.b").as("b"))
-          .agg(count(lit(1)).as("cell_n"))
-        val cells = runBounded(cellsAgg, "update")
-          .groupBy("r", "b").agg(max("cell_n").as("cell_n"))
-        val ev = graft.sources.Tables(s, dir).events.select(col("user_id"))
-        val totals = ev.agg(count(lit(1)).as("total_n"))
-        val top = ev.groupBy("user_id").agg(count(lit(1)).as("exact_n"))
-          .orderBy(col("exact_n").desc, col("user_id")).limit(10)
-        top.select(col("user_id"), col("exact_n"),
-            explode(expr(buckets)).as("c"))
-          .select(col("user_id"), col("exact_n"),
-            col("c.r").as("r"), col("c.b").as("b"))
-          .join(broadcast(cells), Seq("r", "b"))
-          .groupBy("user_id", "exact_n")
-          .agg(min("cell_n").as("est_n"))
-          .crossJoin(broadcast(totals))
-          .select(col("user_id"), col("exact_n"),
-            (col("est_n") >= col("exact_n")).as("est_ge_exact"),
-            (col("est_n") <= col("exact_n")
-              + lit(Cms.EpsMul) * col("total_n") / lit(Cms.W.toLong))
-              .as("within_eps"))
-          .orderBy(col("exact_n").desc, col("user_id"))
-      },
-      Some("""SELECT user_id, count(*) AS exact_n,
-             |  true AS est_ge_exact, true AS within_eps
-             |FROM events GROUP BY user_id
-             |ORDER BY exact_n DESC, user_id LIMIT 10""".stripMargin))
-  }
+  val qStreamApproxTopk: Q = Q(
+    "q_stream_approx_topk",
+    (s, dir) => {
+      val cells = runBounded(Cms.cells(eventsStream(s, dir), "user_id"), "update")
+        .groupBy("r", "b").agg(max("cell_n").as("cell_n"))
+      Cms.verdict(graft.sources.Tables(s, dir).events.select(col("user_id")), "user_id", cells)
+    },
+    Some(Cms.verdictSql("events", "user_id")))
 
   val all: Seq[Q] = Seq(cdcStreamIngest, cdcStreamMaterialize, cdcUpsertSink,
     cdcJdbcUpsert, cdcStreamDedup, cdcStreamDedupWm, cdcSchemaEvolve, qStreamTumbling,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.AsOf
+import graft.plans.{AsOf, AsOfMode}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -58,8 +58,8 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     val right = Seq((1L, 8L, 900L), (1L, 15L, 901L), (1L, 25L, 902L),
         (2L, 3L, 903L))
       .toDF("rk", "rt", "state")
-    val out = AsOf.joinForward(left, right, left("k"), left("t"),
-        right("rk"), right("rt"))
+    val out = AsOf.join(left, right, left("k"), left("t"),
+        right("rk"), right("rt"), AsOfMode.Forward)
       .select(col("ev"), coalesce(col("state"), lit(-1L)).as("state"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     // ev 100 (t=10): earliest rt >= 10 is 15 (901) — rt=8 must NOT match;
@@ -80,8 +80,8 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     val right = Seq((1L, 8L, 900L), (1L, 16L, 901L), (1L, 40L, 902L),
         (2L, 50L, 903L))
       .toDF("rk", "rt", "state")
-    val out = AsOf.joinNearest(left, right, left("k"), left("t"),
-        right("rk"), right("rt"))
+    val out = AsOf.join(left, right, left("k"), left("t"),
+        right("rk"), right("rt"), AsOfMode.Nearest)
       .select(col("ev"), coalesce(col("state"), lit(-1L)).as("state"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     // ev 100 (t=10): |10-8|=2 vs |16-10|=6 -> backward 900;
@@ -99,8 +99,8 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val left = Seq((1L, 10L, 100L)).toDF("k", "t", "ev")
     val right = Seq((1L, 7L, 900L), (1L, 13L, 901L)).toDF("rk", "rt", "state")
-    val out = AsOf.joinNearest(left, right, left("k"), left("t"),
-        right("rk"), right("rt"))
+    val out = AsOf.join(left, right, left("k"), left("t"),
+        right("rk"), right("rt"), AsOfMode.Nearest)
       .select(col("state")).collect().map(_.getLong(0)).toSeq
     assert(out == Seq(900L), "|10-7| == |13-10| must pick the earlier row")
   }
@@ -110,8 +110,8 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     val left = Seq((1L, "a", 1L)).toDF("k", "t", "ev")
     val right = Seq((1L, "b", 2L)).toDF("rk", "rt", "state")
     val ex = intercept[Exception] {
-      AsOf.joinNearest(left, right, left("k"), left("t"),
-        right("rk"), right("rt")).collect()
+      AsOf.join(left, right, left("k"), left("t"),
+        right("rk"), right("rt"), AsOfMode.Nearest).collect()
     }
     def msgs(t: Throwable): String =
       Option(t.getMessage).getOrElse("") +
@@ -124,25 +124,25 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     val left = Seq((1L, 100L, 100L), (1L, 200L, 101L), (1L, 310L, 102L))
       .toDF("k", "t", "ev")
     val right = Seq((1L, 95L, 900L), (1L, 205L, 901L)).toDF("rk", "rt", "state")
-    def run(mode: graft.plans.AsOfMode, tol: Long): Seq[(Long, Long)] =
-      AsOf.joinWithin(left, right, left("k"), left("t"),
-          right("rk"), right("rt"), tol, mode)
+    def run(mode: AsOfMode, tol: Long): Seq[(Long, Long)] =
+      AsOf.join(left, right, left("k"), left("t"),
+          right("rk"), right("rt"), mode, Some(tol))
         .select(col("ev"), coalesce(col("state"), lit(-1L)).as("state"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     // backward, tol=10: ev100 matches rt=95 (gap 5); ev200's latest is
     // 95 (gap 105 > 10) -> null; ev310's latest is 205 (gap 105) -> null
-    assert(run(graft.plans.AsOfMode.Backward, 10L) ==
+    assert(run(AsOfMode.Backward, 10L) ==
       Seq((100L, 900L), (101L, -1L), (102L, -1L)))
     // forward, tol=10: ev200's next is 205 (gap 5); ev100's next is 205
     // (gap 105) -> null; ev310 has nothing after -> null
-    assert(run(graft.plans.AsOfMode.Forward, 10L) ==
+    assert(run(AsOfMode.Forward, 10L) ==
       Seq((100L, -1L), (101L, 901L), (102L, -1L)))
     // nearest, tol=10: ev100 -> 95, ev200 -> 205, ev310 nearest is 205
     // at gap 105 -> null
-    assert(run(graft.plans.AsOfMode.Nearest, 10L) ==
+    assert(run(AsOfMode.Nearest, 10L) ==
       Seq((100L, 900L), (101L, 901L), (102L, -1L)))
     // a huge tolerance degenerates to the unbounded join
-    assert(run(graft.plans.AsOfMode.Backward, 1000000L) ==
+    assert(run(AsOfMode.Backward, 1000000L) ==
       Seq((100L, 900L), (101L, 900L), (102L, 901L)))
   }
 
@@ -150,15 +150,7 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     val native = SparkEntry.queries("q_asof_forward")(spark, sfDir)
     // independent composition: min-by (rtu, order_key) over all
     // at-or-after orders per event, via a plain join + aggregation
-    import graft.sources.Tables
-    val tb = Tables(spark, sfDir)
-    val ord = tb.orders.groupBy(col("o_custkey"), col("o_orderdate"))
-      .agg(max("o_orderkey").as("order_key"))
-      .select(col("o_custkey").as("rk"),
-        unix_micros(col("o_orderdate").cast("timestamp")).as("rtu"),
-        col("order_key"))
-    val ev = tb.events.select(col("event_id"), col("user_id"),
-      unix_micros(col("ts")).as("tu"))
+    val (ev, ord) = graft.operators.Relational.asOfInputs(spark, sfDir)
     val composed = ev.join(ord,
         ev("user_id") === ord("rk") && ev("tu") <= ord("rtu"), "left")
       .groupBy("event_id", "user_id")

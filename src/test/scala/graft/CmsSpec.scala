@@ -35,9 +35,10 @@ class CmsSpec extends SparkSpec {
   }
 
   test("batch and stream rows share one geometry by construction") {
-    // both rows call Cms.buckets / Cms.W / Cms.EpsMul — drift between
-    // the twins is now impossible; this pins the constants are the
-    // documented ones and the deterministic bound keeps its margin
+    // both rows build their sketch and verdict through Cms.cells /
+    // Cms.verdict — drift between the twins is impossible; this pins
+    // the constants are the documented ones and the deterministic
+    // bound keeps its margin
     assert(Cms.D == 4 && Cms.W == 65536)
     assert(Cms.EpsMul >= 2L,
       "the pinned within_eps bound must keep margin over the expected overcount")
