@@ -65,6 +65,12 @@ object Ann {
     * generated CTE rounds — [[resCbTrainCtes]]). */
   private val ResTrainRounds = 2
 
+  /** The two k-means levels [[Lloyd.iterate]] runs: flat over one
+    * global k-row centroid set, and local inside each coarse cell
+    * `cid`. */
+  private[graft] val FlatLevel = Lloyd.Level(None, "c_id", "cd", "cn2", "c_cos", "")
+  private val LocalLevel = Lloyd.Level(Some("cid"), "lcid", "ld", "ln2", "lcos", "l")
+
   // ---- the index specification ------------------------------------
 
   /** Coarse quantizer: which vectors a probe is compared with. */
@@ -299,7 +305,7 @@ object Ann {
       probes.select((col("vec_id").as("probe_id") +:
         lab.map(c => col(c).as("p_label"))) ++ cell: _*)
     def ivf(scores: DataFrame, nprobe: Int) = (
-      scores.groupBy(ids: _*).agg(expr("graft_argmax(c_id, c_cos)").as("cell")),
+      Lloyd.nearest(scores, "vec_id" +: lab, "c_id", "c_cos", "cell").drop("score"),
       probeRows(scores.filter(expr(ProbeFilter))
         .withColumn("crn", row_number().over(
           Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))))
@@ -316,11 +322,8 @@ object Ann {
           cosWith("v", "n2", "cv", "cn2").as("c_cos")): _*), spec.nprobe)
       case TrainedIvf =>
         val k = ivfK(Tables(s, dir).embeddingsCount)
-        val (codes, _, c1) = kmeansStage(s, dir, k)
-        ivf(codes.crossJoin(broadcast(c1.select("c_id", "cd", "cn2")))
-          .select(col("vec_id"), col("c_id"),
-            expr(s"${dot("qd", "cd")} / sqrt(qn2 * cn2)").as("c_cos")),
-          math.max(spec.nprobe, k / 8))
+        val (codes, _, c1, _) = kmeansIterate(s, dir, 1, k, inertia = false)
+        ivf(Lloyd.pairs(codes, c1, FlatLevel), math.max(spec.nprobe, k / 8))
     }
   }
 
@@ -354,11 +357,7 @@ object Ann {
   private def pqIndex(sub0: DataFrame): (DataFrame, DataFrame) = {
     val sub = sub0.localCheckpoint()
     val cb = pqCodebook(sub)
-    val enc = sub.join(broadcast(cb), "m")
-      .select(col("vec_id"), col("m"), col("c_id"),
-        sqDist("sn2", "cn2", "sv", "cd").as("d"))
-      .groupBy("vec_id", "m")
-      .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
+    val enc = encode(sub, cb, Seq("vec_id", "m"), "sv", "sn2")
     val lut = sub.filter(expr(ProbeFilter))
       .select(col("vec_id").as("probe_id"), col("m").as("pm"),
         col("sv").as("psv"), col("sn2").as("psn2"))
@@ -377,19 +376,13 @@ object Ann {
     * probes — so it is |probes| × nprobe × M × K rows, and one
     * broadcast join on (cell, m, c_id) does both the cell prune and
     * the table lookup. Everything stays integer-exact (floor-of-
-    * double-div integer means, kmeansUpdate's arithmetic). Returns
+    * double-div integer means, [[Lloyd.centroids]]). Returns
     * (enc: vec_id, cell, m, c_id; lut: probe_id, cell, m, c_id, d). */
   private def residualIndex(sub0: DataFrame, assigned: DataFrame,
       probeCells: DataFrame): (DataFrame, DataFrame) = {
     val sub = sub0.join(assigned.select("vec_id", "cell"), "vec_id").localCheckpoint()
     // per-(cell, subspace) integer centroid of the member subvectors
-    val cellCent = sub.select(col("cell"), col("m"), posexplode(col("sv")))
-      .groupBy("cell", "m", "pos")
-      .agg(sum(col("col").cast("long")).as("sm"), count(lit(1)).as("n"))
-      .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("double"))
-      .groupBy("cell", "m")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), x -> x.cm)")
-        .as("ccd"))
+    val cellCent = Lloyd.centroids(sub, Seq("cell", "m"), "sv", "ccd")
     // residual subvectors: rv = sv − centroid(cell, m), exact ints
     val res = sub.join(broadcast(cellCent), Seq("cell", "m"))
       .select(col("vec_id"), col("cell"), col("m"),
@@ -397,11 +390,7 @@ object Ann {
       .withColumn("rn2", expr(dot("rv", "rv")))
       .localCheckpoint()
     val rcb = trainResCodebook(res)
-    val enc = res.join(broadcast(rcb), "m")
-      .select(col("vec_id"), col("cell"), col("m"), col("c_id"),
-        sqDist("rn2", "cn2", "rv", "cd").as("d"))
-      .groupBy("vec_id", "cell", "m")
-      .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
+    val enc = encode(res, rcb, Seq("vec_id", "cell", "m"), "rv", "rn2")
     val lut = sub.filter(expr(ProbeFilter))
       .select(col("vec_id").as("probe_id"), col("m"), col("sv"))
       .join(broadcast(probeCells.select("probe_id", "cell")), "probe_id")
@@ -419,7 +408,7 @@ object Ann {
     * vectors' own residuals, then run [[ResTrainRounds]] deterministic
     * Lloyd rounds over the FULL residual distribution (argmin-sqdist
     * assignment, per-(subspace, codeword, dim) INTEGER sums,
-    * floor-of-double-div means — kmeansUpdate's exact arithmetic; a
+    * floor-of-double-div means — [[Lloyd.centroids]]; a
     * codeword that attracts no members keeps its previous value via
     * left-join-coalesce, so the round is total and deterministic in
     * both engines). Training is what FAISS does for IVFADC codebooks,
@@ -434,7 +423,7 @@ object Ann {
     * (m, c_id, cd, cn2) frame, localCheckpoint-ed so every consumer —
     * encode, LUT, and the plan audit — sees a tiny leaf, not the
     * training lineage. */
-  private def trainResCodebook(res: DataFrame): DataFrame = {
+  private[graft] def trainResCodebook(res: DataFrame): DataFrame = {
     var cb = res.filter(col("vec_id") < 16)
       .select(col("m"), col("vec_id").as("c_id"), col("rv").as("cd"),
         col("rn2").as("cn2"))
@@ -443,19 +432,9 @@ object Ann {
       // slim pair stream into the codegen HashAggregate argmin; rv is
       // re-attached by a (vec_id, m) join against the checkpointed
       // residual frame instead of riding every pair row as first()
-      val assign = res.join(broadcast(cb), "m")
-        .select(col("vec_id"), col("m"), col("c_id"),
-          sqDist("rn2", "cn2", "rv", "cd").as("d"))
-        .groupBy("vec_id", "m")
-        .agg(expr("graft_argmax(c_id, -d)").as("c_id"))
+      val assign = encode(res, cb, Seq("vec_id", "m"), "rv", "rn2")
         .join(res.select(col("vec_id"), col("m"), col("rv")), Seq("vec_id", "m"))
-      val upd = assign.select(col("m"), col("c_id"), posexplode(col("rv")))
-        .groupBy("m", "c_id", "pos")
-        .agg(sum(col("col").cast("long")).as("sm"), count(lit(1)).as("n"))
-        .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("double"))
-        .groupBy("m", "c_id")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), x -> x.cm)")
-          .as("ucd"))
+      val upd = Lloyd.centroids(assign, Seq("m", "c_id"), "rv", "ucd")
       cb = cb.join(upd, Seq("m", "c_id"), "left")
         .select(col("m"), col("c_id"), coalesce(col("ucd"), col("cd")).as("cd"))
         .withColumn("cn2", expr(dot("cd", "cd")))
@@ -683,19 +662,10 @@ object Ann {
        |  SELECT e.vec_id, c_id, ${duckCosine("e.v", "cv")} AS c_cos
        |  FROM e CROSS JOIN c
        |), assigned AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT vec_id, c_id,
-       |      row_number() OVER (PARTITION BY vec_id
-       |        ORDER BY c_cos DESC, c_id) AS rn
-       |    FROM cs
-       |  ) WHERE rn = 1
+       |${Lloyd.nearestSql("vec_id, c_id AS cell", "cs", "vec_id", "c_cos DESC", "c_id")}
        |), pc AS (
-       |  SELECT vec_id AS probe_id, c_id AS cell FROM (
-       |    SELECT vec_id, c_id,
-       |      row_number() OVER (PARTITION BY vec_id
-       |        ORDER BY c_cos DESC, c_id) AS crn
-       |    FROM cs WHERE $ProbeFilter
-       |  ) WHERE crn <= $nprobe
+       |${Lloyd.nearestSql("vec_id AS probe_id, c_id AS cell", s"cs WHERE $ProbeFilter",
+          "vec_id", "c_cos DESC", "c_id", nprobe.toString)}
        |)""".stripMargin
 
   /** Trained cells: [[kmeansOracleCtes]] (which also loads `e` and `q`)
@@ -706,14 +676,12 @@ object Ann {
     s"""pk AS (
        |  SELECT ${duckIvfK("count(*)")} AS kk FROM embeddings
        |), ${kmeansOracleCtes("SELECT kk FROM pk")}, assigned AS (
-       |  SELECT vec_id, cid AS cell FROM a1
+       |  SELECT vec_id, c_id AS cell FROM a1
        |), pc AS (
-       |  SELECT vec_id AS probe_id, c_id AS cell FROM (
-       |    SELECT qn.vec_id, c_id,
-       |      row_number() OVER (PARTITION BY qn.vec_id
-       |        ORDER BY ${duckDot("qd", "cd")} / sqrt(qn2 * cn2) DESC, c_id) AS crn
-       |    FROM qn CROSS JOIN c1n WHERE qn.$ProbeFilter
-       |  ) WHERE crn <= (SELECT greatest($nprobe, kk // 8) FROM pk)
+       |${Lloyd.nearestSql("qn.vec_id AS probe_id, c_id AS cell",
+          s"qn CROSS JOIN c1 WHERE qn.$ProbeFilter", "qn.vec_id",
+          s"${duckDot("qd", "cd")} / sqrt(qn2 * cn2) DESC", "c_id",
+          s"(SELECT greatest($nprobe, kk // 8) FROM pk)")}
        |)""".stripMargin
 
   /** The subspace-split CTE (`sub`) over any (vec_id, qd) source. */
@@ -749,16 +717,13 @@ object Ann {
     * (mirrors the Spark decimal(38,0)), the same round-robin dealing. */
   private def rvCensusCtes: String =
     s"""rexp AS (
-       |  SELECT cell, t.x['pos'] AS pos, CAST(t.x['v'] AS BIGINT) AS x
-       |  FROM (SELECT a.cell, q.qd FROM q JOIN assigned a ON q.vec_id = a.vec_id) j,
-       |    unnest([{'pos': i, 'v': qd[i]} FOR i IN range(1, len(qd) + 1)]) AS t(x)
+       |${Lloyd.dimsSql("(SELECT a.cell, q.qd FROM q JOIN assigned a ON q.vec_id = a.vec_id) j",
+          Seq("cell"), "qd")}
        |), rcent AS (
-       |  SELECT cell, pos,
-       |    CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT) AS cm
-       |  FROM rexp GROUP BY 1, 2
+       |${Lloyd.dimMeansSql("rexp", Seq("cell", "pos"), "x")}
        |), rvstats AS (
        |  SELECT pos - 1 AS d, count(*) * sum(r * r) - sum(r) * sum(r) AS varn
-       |  FROM (SELECT rexp.pos, rexp.x - rc.cm AS r
+       |  FROM (SELECT rexp.pos, rexp.x - CAST(rc.cm AS BIGINT) AS r
        |        FROM rexp JOIN rcent rc
        |          ON rexp.cell = rc.cell AND rexp.pos = rc.pos)
        |  GROUP BY 1
@@ -776,6 +741,14 @@ object Ann {
   private def duckSqDist(a: String, b: String, an2: String, bn2: String) =
     s"$an2 + $bn2 - 2 * ${duckDot(a, b)}"
 
+  /** [[encode]]: the `cols` of `src` (as `r`) joined to each row's
+    * nearest `cb` codeword (as `p`) by squared L2 of subvector `sv`
+    * (squared norm `sn2`). */
+  private def encodeSql(cols: String, src: String, cb: String, sv: String,
+      sn2: String): String =
+    Lloyd.nearestSql(cols, s"$src r JOIN $cb p ON r.m = p.m", "r.vec_id, r.m",
+      duckSqDist(sv, "cd", sn2, "cn2"), "p.c_id")
+
   /** The PQ index/LUT chain over `sub`: subvector norms `sn`, seed
     * codebook `cb`, argmin encode `enc` (vec_id, m, code), probe table
     * `lut` (probe_id, m, c_id, dist). */
@@ -786,12 +759,7 @@ object Ann {
        |), cb AS (
        |  SELECT m, vec_id AS c_id, sv AS cd, sn2 AS cn2 FROM sn WHERE vec_id < 16
        |), enc AS (
-       |  SELECT vec_id, m, c_id AS code FROM (
-       |    SELECT sn.vec_id, sn.m, cb.c_id,
-       |      row_number() OVER (PARTITION BY sn.vec_id, sn.m
-       |        ORDER BY ${d("sv", "cd", "sn2", "cn2")}, cb.c_id) AS rn
-       |    FROM sn JOIN cb ON sn.m = cb.m
-       |  ) WHERE rn = 1
+       |${encodeSql("r.vec_id, r.m, p.c_id AS code", "sn", "cb", "sv", "sn2")}
        |), lut AS (
        |  SELECT p.vec_id AS probe_id, cb.m, cb.c_id,
        |    ${d("p.sv", "cd", "p.sn2", "cn2")} AS dist
@@ -801,33 +769,18 @@ object Ann {
 
   /** The residual-codebook training CTE rounds, generated to match
     * [[trainResCodebook]] CTE-for-CTE: `rcb0` = the 16 seed vectors'
-    * residuals; each round t = argmin assignment (`rasn$t`, ties to
-    * the smaller codeword id exactly like the Spark max_by), per-dim
-    * BIGINT sums (`rsum$t`), floor-of-double-div means (`rupd$t`),
-    * and the left-join-coalesce update (`rcb$t` — empty codewords
-    * keep their previous value). The final round is aliased `rcb`,
-    * the name the encode/LUT CTEs consume. Expects `resn` in scope. */
+    * residuals; each round t = argmin assignment (`rasn$t`), integer
+    * means (`rupd$t`), and the left-join-coalesce update (`rcb$t` —
+    * empty codewords keep their previous value). The final round is
+    * aliased `rcb`, the name the encode/LUT CTEs consume. Expects
+    * `resn` in scope. */
   private def resCbTrainCtes: String = {
-    val d = duckSqDist _
     val rounds = (1 to ResTrainRounds).map { t =>
       val prev = s"rcb${t - 1}"
       s"""rasn$t AS (
-         |  SELECT m, c_id, rv FROM (
-         |    SELECT r.vec_id, r.m, r.rv, p.c_id,
-         |      row_number() OVER (PARTITION BY r.vec_id, r.m
-         |        ORDER BY ${d("rv", "cd", "rn2", "cn2")}, p.c_id) AS rn
-         |    FROM resn r JOIN $prev p ON r.m = p.m
-         |  ) WHERE rn = 1
-         |), rsum$t AS (
-         |  SELECT m, c_id, t.x['pos'] AS pos,
-         |    CAST(sum(t.x['v']) AS BIGINT) AS sm, count(*) AS n
-         |  FROM rasn$t, unnest([{'pos': i, 'v': CAST(rv[i] AS BIGINT)}
-         |    FOR i IN range(1, len(rv) + 1)]) AS t(x)
-         |  GROUP BY 1, 2, 3
+         |${encodeSql("r.m, p.c_id, r.rv", "resn", prev, "rv", "rn2")}
          |), rupd$t AS (
-         |  SELECT m, c_id,
-         |    list(floor(CAST(sm AS DOUBLE) / n) ORDER BY pos) AS ucd
-         |  FROM rsum$t GROUP BY 1, 2
+         |${Lloyd.centroidsSql(s"rasn$t", Seq("m", "c_id"), "rv", "ucd")}
          |), rcb$t AS (
          |  SELECT m, c_id, cd, ${duckDot("cd", "cd")} AS cn2 FROM (
          |    SELECT p.m, p.c_id, coalesce(u.ucd, p.cd) AS cd
@@ -853,28 +806,15 @@ object Ann {
     s"""suba AS (
        |  SELECT sub.vec_id, sub.m, sub.sv, a.cell
        |  FROM sub JOIN assigned a ON sub.vec_id = a.vec_id
-       |), csums AS (
-       |  SELECT cell, m, t.x['pos'] AS pos,
-       |    CAST(sum(t.x['v']) AS BIGINT) AS sm, count(*) AS n
-       |  FROM suba, unnest([{'pos': i, 'v': CAST(sv[i] AS BIGINT)}
-       |    FOR i IN range(1, len(sv) + 1)]) AS t(x)
-       |  GROUP BY 1, 2, 3
        |), ccent AS (
-       |  SELECT cell, m,
-       |    list(floor(CAST(sm AS DOUBLE) / n) ORDER BY pos) AS ccd
-       |  FROM csums GROUP BY 1, 2
+       |${Lloyd.centroidsSql("suba", Seq("cell", "m"), "sv", "ccd")}
        |), resn AS (
        |  SELECT vec_id, cell, m, rv, ${duckDot("rv", "rv")} AS rn2 FROM (
        |    SELECT s.vec_id, s.cell, s.m,
        |      [s.sv[i] - ct.ccd[i] FOR i IN range(1, len(s.sv) + 1)] AS rv
        |    FROM suba s JOIN ccent ct ON s.cell = ct.cell AND s.m = ct.m)
        |), $resCbTrainCtes, enc AS (
-       |  SELECT vec_id, cell, m, c_id AS code FROM (
-       |    SELECT r.vec_id, r.cell, r.m, rcb.c_id,
-       |      row_number() OVER (PARTITION BY r.vec_id, r.m
-       |        ORDER BY ${d("rv", "cd", "rn2", "cn2")}, rcb.c_id) AS rn
-       |    FROM resn r JOIN rcb ON r.m = rcb.m
-       |  ) WHERE rn = 1
+       |${encodeSql("r.vec_id, r.cell, r.m, p.c_id AS code", "resn", "rcb", "rv", "rn2")}
        |), presn AS (
        |  SELECT probe_id, cell, m, prv, ${duckDot("prv", "prv")} AS prn2 FROM (
        |    SELECT pc.probe_id, pc.cell, s.m,
@@ -959,6 +899,15 @@ object Ann {
   private def sqDist(an2: String, bn2: String, a: String, b: String) =
     expr(s"$an2 + $bn2 - 2 * ${dot(a, b)}")
 
+  /** Argmin-sqdist encode of each `keys` row's subvector `sv` (squared
+    * norm `sn2`) against the broadcast codebook `cb` (m, c_id, cd,
+    * cn2): (keys, c_id, score) — ann_ivf's one-exchange partial-agg
+    * assignment shape over a slim pair stream. */
+  private def encode(sub: DataFrame, cb: DataFrame, keys: Seq[String],
+      sv: String, sn2: String): DataFrame =
+    Lloyd.nearest(sub.join(broadcast(cb), "m").select(keys.map(col) ++ Seq(col("c_id"),
+      sqDist(sn2, "cn2", sv, "cd").as("d")): _*), keys, "c_id", "-d", "c_id")
+
   /** position → original dim under the RESIDUAL-variance census: the
     * permutation [[opqPermutation]] computes from RAW-code variance,
     * recomputed over r = code − floor-mean(assigned cell) instead —
@@ -971,7 +920,7 @@ object Ann {
     * codebook actually has to describe. Assignment must come first
     * (the census depends on cells), so the build order is
     * assign → census → permute → split → residual tail. Exactness:
-    * per-(cell, dim) centroids are the kmeansUpdate floor-of-double-
+    * per-(cell, dim) centroids are the [[Lloyd.dimMeans]] floor-of-double-
     * div integer means; residuals are exact integers; the variance
     * numerator N·Σr² − (Σr)² is computed in decimal(38,0) (Spark) /
     * HUGEINT (DuckDB) so the RANKING cannot diverge by overflow at
@@ -983,9 +932,7 @@ object Ann {
       .select(col("cell"), posexplode(expr(
         "transform(qd, x -> CAST(x AS BIGINT))")))
       .select(col("cell"), col("pos").as("d"), col("col").as("x"))
-    val cent = rexp.groupBy("cell", "d")
-      .agg(sum("x").as("sm"), count(lit(1)).as("n"))
-      .withColumn("cm", floor(col("sm").cast("double") / col("n")).cast("long"))
+    val cent = Lloyd.dimMeans(rexp, Seq("cell", "d"), "x")
       .select(col("cell"), col("d"), col("cm"))
     val stats = rexp.join(cent, Seq("cell", "d"))
       .withColumn("r", col("x") - col("cm"))
@@ -1051,42 +998,14 @@ object Ann {
         col("q.code_digest").as("code_digest"),
         round(col("q.max_err"), 6).as("max_err"))
       .orderBy("vec_id"),
-    Some(s"""WITH e AS (
-            |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            |), m AS (
-            |  SELECT vec_id, v,
-            |    list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
-            |      list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
-            |  FROM e
-            |), q AS (
-            |  SELECT vec_id, v, maxabs,
-            |    list_transform(v, x -> CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)) AS codes
-            |  FROM m
-            |)
+    Some(s"""WITH $eCte, $duckQuantizeCte
             |SELECT vec_id, round(maxabs, 6) AS max_abs,
-            |  ${duckSigDigest("list_transform(codes, c -> c + 127)")} AS code_digest,
+            |  ${duckSigDigest("list_transform(qd, c -> CAST(c AS BIGINT) + 127)")} AS code_digest,
             |  round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-            |    list_transform(range(1, len(v) + 1), i -> abs(v[i] - codes[i] * maxabs / 127.0))),
+            |    list_transform(range(1, len(v) + 1), i -> abs(v[i] - qd[i] * maxabs / 127.0))),
             |    (a, y) -> greatest(a, y)), 6) AS max_err
-            |FROM q ORDER BY vec_id""".stripMargin))
+            |FROM q JOIN e USING (vec_id) ORDER BY vec_id""".stripMargin))
 
-  /** Johnson–Lindenstrauss random projection (Achlioptas ±1 variant):
-    * 64-dim embeddings down to 16 dims through a DETERMINISTIC sign
-    * matrix — sign(j,k) from an LCG on the flattened index, so the
-    * "random" matrix needs no stored state, no broadcast, and is
-    * identical in both engines. Input is the int8 code vector (the
-    * same quantization vec_quantize pins), so every projected
-    * coordinate is an exact BIGINT sum (|y_k| ≤ 64·127) — no float
-    * accumulation order to disagree on.
-    *
-    * Scale shape: map-only — a pure per-row fold that fuses into the
-    * parquet scan with ZERO shuffles at any corpus size; the array
-    * cells are surfaced as a scalar digest + L1/first-coordinate
-    * scalars (the driver comparator cannot hash array cells). This is
-    * the standard cheap front-end before pair-heavy stages: a 4×
-    * narrower vector makes every downstream distance pass (LSH
-    * bucketing, candidate verify) proportionally cheaper while JL
-    * preserves pairwise geometry to O(1/√16) distortion. */
   /** The interpreted-HOF formulation of the projection fold over a
     * BIGINT `codes` column — NativeVsSqlSpec pins graft_jl_project
     * bit-identical to it; the hot path runs the native loop (the HOF
@@ -1106,6 +1025,23 @@ object Ann {
       s"CAST(0 AS BIGINT), (acc, j) -> acc + codes[j] * $sign))"
   }
 
+  /** Johnson–Lindenstrauss random projection (Achlioptas ±1 variant):
+    * 64-dim embeddings down to 16 dims through a DETERMINISTIC sign
+    * matrix — sign(j,k) from an LCG on the flattened index, so the
+    * "random" matrix needs no stored state, no broadcast, and is
+    * identical in both engines. Input is the int8 code vector (the
+    * same quantization vec_quantize pins), so every projected
+    * coordinate is an exact BIGINT sum (|y_k| ≤ 64·127) — no float
+    * accumulation order to disagree on.
+    *
+    * Scale shape: map-only — a pure per-row fold that fuses into the
+    * parquet scan with ZERO shuffles at any corpus size; the array
+    * cells are surfaced as a scalar digest + L1/first-coordinate
+    * scalars (the driver comparator cannot hash array cells). This is
+    * the standard cheap front-end before pair-heavy stages: a 4×
+    * narrower vector makes every downstream distance pass (LSH
+    * bucketing, candidate verify) proportionally cheaper while JL
+    * preserves pairwise geometry to O(1/√16) distortion. */
   val vecProject: Q = {
     // DuckDB mirror of JlProject16's two-round high-bit LCG sign
     // (// = int div)
@@ -1127,22 +1063,11 @@ object Ann {
             .as("proj_l1"),
           expr("y[0]").as("proj_first"))
         .orderBy("vec_id"),
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-              |), m AS (
-              |  SELECT vec_id, v,
-              |    list_reduce(list_prepend(CAST(1e-12 AS DOUBLE),
-              |      list_transform(v, x -> abs(x))), (a, x) -> greatest(a, x)) AS maxabs
-              |  FROM e
-              |), q AS (
-              |  SELECT vec_id,
-              |    list_transform(v, x -> CAST(floor(x * 127.0 / maxabs + 0.5) AS BIGINT)) AS codes
-              |  FROM m
-              |), p AS (
+      Some(s"""WITH $eCte, $duckQuantizeCte, p AS (
               |  SELECT vec_id,
               |    list_transform(range(0, 16), k ->
               |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-              |        list_transform(range(0, 64), j -> codes[j + 1] * $sign)),
+              |        list_transform(range(0, 64), j -> CAST(qd[j + 1] AS BIGINT) * $sign)),
               |        (acc, t) -> acc + t)) AS y
               |  FROM q)
               |SELECT vec_id,
@@ -1155,91 +1080,15 @@ object Ann {
 
   // ---- k-means, semantic dedup -----------------------------------------
 
-  /** Deterministic k-means over the int8-quantized vectors — the
-    * clustering stage of cluster-balanced curation (group the corpus
-    * by embedding neighborhood, then sample/dedup per cluster instead
-    * of globally). One full Lloyd iteration per level: seed centroids
-    * = codes of the k lowest vec_ids (globally for the coarse level,
-    * per cell for the local level), assign (argmax cosine), recompute
-    * centroids, reassign; cluster_kmeans outputs per-final-cluster
-    * membership before/after plus a centroid digest.
-    *
-    * Every arithmetic step is ORDER-INDEPENDENT, which is what makes a
-    * clustering loop oracle-comparable at all: coordinates are int8
-    * codes (graft_int8_codes), centroid updates are INTEGER sums with
-    * floor-div means (no float accumulation to diverge with partition
-    * order — explicitly floor(double-div), since BIGINT `div`
-    * truncation differs between engines on negatives), and cosines are
-    * the usual shared-fold doubles. Assignment ties break to the
-    * smaller centroid id, mirroring the oracle's ORDER BY.
-    *
-    * Scale: centroids broadcast both times; assignment is the same
-    * partial-aggregated argmax as ann_ivf (the exchange moves one row
-    * per vector); centroid update shuffles (cluster, dim) partial sums
-    * — k x dims groups regardless of corpus size. More Lloyd rounds =
-    * repeat the two broadcast stages; at real scale you run them on a
-    * sample (mini-batch k-means), which changes nothing structurally. */
-  /** int8 code vectors (see [[clusterKmeans]]). */
+  /** int8 code vectors (vec_id, qd, qn2): the k-means points
+    * (graft_int8_codes; qn2 clamped at 1e-12 so a zero code vector
+    * cannot divide by zero). */
   private[graft] def kmeansCodes(s: SparkSession, dir: String): DataFrame =
     emb(s, dir)
       .withColumn("qz", expr("graft_int8_codes(v)"))
       .select(col("vec_id"), col("qz.codes").as("qd"))
       .withColumn("qn2", expr(s"greatest(${dot("qd", "qd")}, 1e-12)"))
 
-  /** argmax-cosine assignment of every vector to its nearest centroid
-    * (broadcast cross join + partial-agg argmax, ann_ivf's shape).
-    *
-    * The N×k pair stream carries ONLY (vec_id, c_id, c_cos) — ~30
-    * bytes/pair; the 64-double qd array is re-attached afterwards by a
-    * vec_id join (N rows, riding the argmax's own hash partitioning on
-    * the winner side). The previous shape aggregated first(qd) over the
-    * pair stream, so every one of the N×k rows dragged the ~550-byte
-    * array through the hash-agg input — measured 57× slower per pair
-    * at N=200k/k=1563 (68.5 s for the fat 2-pass training pipeline vs
-    * 0.6 s for a slim one-pass reassign, ASSIGN_TIMING.json).
-    * At the 100 TB N×k this delta IS the operator. Results are
-    * bit-identical: qd is constant per vec_id and max(c_cos) is the
-    * winning cosine either way. */
-  private def kmeansAssign(codes: DataFrame, cents: DataFrame): DataFrame =
-    codes.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("c_id"),
-        expr(s"${dot("qd", "cd")} / sqrt(qn2 * cn2)").as("c_cos"))
-      .groupBy("vec_id")
-      .agg(expr("graft_argmax(c_id, c_cos)").as("cid"),
-        max(col("c_cos")).as("cos")) // the winning cosine, for inertia
-      .join(codes.select(col("vec_id"), col("qd")), "vec_id")
-      .select(col("vec_id"), col("cid"), col("qd"), col("cos"))
-
-  /** Integer-mean centroid update from an assignment: per (cluster,
-    * dim) INTEGER sums (order-independent), floor-of-double-div means
-    * (not BIGINT div, whose negative truncation differs between
-    * engines), reassembled into array<double> centroids for graft_dot. */
-  private def kmeansUpdate(a: DataFrame): DataFrame =
-    a.select(col("cid"), posexplode(col("qd")))
-      .groupBy("cid", "pos")
-      .agg(sum(col("col").cast("long")).as("s"), count(lit(1)).as("n"))
-      .withColumn("m", floor(col("s").cast("double") / col("n")).cast("double"))
-      .groupBy("cid")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)")
-        .as("cd"),
-        // n is the cluster's membership count replicated per dim —
-        // carrying it here makes the n_before join disappear
-        max("n").as("n_before"))
-      .select(col("cid").as("c_id"), col("cd"), col("n_before"),
-        expr(s"greatest(${dot("cd", "cd")}, 1e-12)").as("cn2"))
-
-  /** R deterministic Lloyd rounds: seed (vec_id < 16) -> repeat
-    * [assign, integer-mean update] R times. Every round is the same
-    * order-independent arithmetic, so ANY round count stays
-    * oracle-comparable; the registry row runs R=1 (one demonstrated
-    * stage), and the convergence spec runs R>1 and watches the
-    * per-round inertia (sum of 1 − winning cosine, captured on the
-    * assignment each round BEFORE its update) fall. Returns (codes,
-    * last assignment, last centroids, inertia per round). Stages are
-    * localCheckpoint-ed: each is consumed several ways with different
-    * column pruning, so lineage replay would recompute it per consumer
-    * (the same truncation dedup_clusters applies) — and the loop would
-    * otherwise replay all prior rounds per action. */
   /** The occupancy-bound cluster count: k = max(16, ceil(N / 128))
     * holds expected cluster occupancy at ~128 members. Since round 12
     * this is no longer any row's FLAT cluster count — a k ∝ N flat
@@ -1285,53 +1134,35 @@ object Ann {
     s"least(${duckKmeansK(countExpr)}, " +
       s"greatest(16, CAST(floor(4.0 * sqrt(CAST(($countExpr) AS DOUBLE))) AS BIGINT)))"
 
+  /** Deterministic flat k-means over the int8-quantized vectors — the
+    * clustering stage of cluster-balanced curation (group the corpus
+    * by embedding neighborhood, then sample/dedup per cluster instead
+    * of globally): [[Lloyd.iterate]] seeded with the codes of the k
+    * lowest vec_ids. The registry runs R=1 (one Lloyd stage: the
+    * coarse half of the two-level scheme and ann_ivfadc's trained
+    * cells); the convergence spec runs R>1 and watches the per-round
+    * inertia fall. At real scale more rounds run on a sample
+    * (mini-batch k-means), which changes nothing structurally.
+    * Returns (codes, final assignment (vec_id, c_id), last centroids
+    * (c_id, cd, n_before, cn2), inertia per round); the codes are
+    * localCheckpoint-ed, since every round and every consumer reads
+    * them. */
   private[graft] def kmeansIterate(s: SparkSession, dir: String, rounds: Int,
       k: Int = 16, inertia: Boolean = true)
       : (DataFrame, DataFrame, DataFrame, Seq[Double]) = {
-    require(rounds >= 1, "kmeansIterate needs at least one Lloyd round")
     val codes = kmeansCodes(s, dir).localCheckpoint()
-    var cents = codes.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("qd").as("cd"),
-        col("qn2").as("cn2"))
-    var assign: DataFrame = null
-    val inertias = Seq.newBuilder[Double]
-    (1 to rounds).foreach { _ =>
-      // With inertia OFF (every registry caller — both kmeansStage
-      // consumers discard the assignment), the per-round assignment is
-      // consumed exactly once (by the update), so neither its
-      // localCheckpoint job nor the inertia aggregation job runs: a
-      // one-Lloyd-stage trains in 2 actions (codes, cents) instead of
-      // 4. Arithmetic is untouched — same plan, evaluated lazily
-      // inside the update's job. Inertia ON (the convergence spec)
-      // keeps the original shape: checkpoint each round's assignment,
-      // then aggregate 1 − winning cosine on it before the update.
-      assign = kmeansAssign(codes, cents)
-      if (inertia) {
-        assign = assign.localCheckpoint()
-        inertias += assign.agg(sum(lit(1.0) - col("cos"))).head().getDouble(0)
-      }
-      cents = kmeansUpdate(assign).localCheckpoint()
-    }
-    (codes, assign, cents, inertias.result())
-  }
-
-  /** One Lloyd stage — [[kmeansIterate]] at R=1 (the oracle-verified
-    * registry configuration). */
-  private def kmeansStage(s: SparkSession, dir: String, k: Int = 16)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (codes, a0, c1, _) =
-      kmeansIterate(s, dir, rounds = 1, k = k, inertia = false)
-    (codes, a0, c1)
+    val (cents, assign, inertias) =
+      Lloyd.iterate(codes, col("vec_id") < k, col("vec_id"), FlatLevel, rounds, inertia)
+    (codes, assign, cents, inertias)
   }
 
   /** The LOCAL half of the two-level (hierarchical) k-means: takes a
     * coarse assignment `a1` (vec_id, cid, qd) and runs an
     * occupancy-128 one-Lloyd-stage k-means INSIDE each coarse cell —
     * per cell of n members, kloc = ceil(n/128) sub-clusters, seeds =
-    * the cell's kloc lowest vec_ids, assign (argmax cosine, ties to
-    * the smaller local id), integer-mean update, reassign. Returns
-    * (lc1: per-(cid, lcid) updated local centroids + n_before,
-    *  la1: the final (vec_id, cid, lcid) assignment).
+    * the cell's kloc lowest vec_ids. Returns (lc1: per-(cid, lcid)
+    * updated local centroids + n_before, la1: the final (vec_id, cid,
+    * lcid) assignment).
     *
     * This is the subquadratic replacement for the flat k ∝ N assign
     * (the registry's last scale-killer through round 11): with coarse
@@ -1342,47 +1173,24 @@ object Ann {
     * downstream within-cluster pair pass, the same contract the flat
     * scheme bought at O(N²/128). Below the crossover occ ≈ 128 already,
     * kloc = 1 everywhere, and the local stage degenerates to one
-    * mean-recentering per cell.
-    *
-    * Scale shape: the local-centroid frame is ~N/128 rows — far past
-    * broadcast at corpus scale (the flat scheme's ~2 GB broadcast at
-    * N = 1e9 was its second killer) — so BOTH local assigns are
-    * SHUFFLE equi-joins on cid: each cell meets only its own ≤
-    * ceil(occ/128) centroids, and the join key is the coarse cell id,
-    * the same key the membership window already partitioned by (a
-    * degenerate hot cell is AQE-skew-splittable; the downstream
-    * MaxEmbBucket cap still bounds the pair side regardless). All
-    * arithmetic is the global stage's order-independent integer
-    * arithmetic (int8 codes, integer sums, floor-of-double-div means,
-    * shared-fold cosines), so the whole two-level pipeline stays
-    * oracle-hash-deterministic; mirrored CTE-for-stage by
-    * [[kmeans2OracleCtes]]. `mem` and `lc1` are localCheckpoint-ed
-    * (each is consumed by several downstream stages); `la1` is NOT —
-    * consumers see the argmax HashAggregate in their own plans (the
-    * PlanAudit argmax pin), and a self-joining consumer reuses the
-    * aggregate's exchange. */
+    * mean-recentering per cell. The local centroids are ~N/128 rows
+    * (the flat scheme's ~2 GB broadcast at N = 1e9 was its second
+    * killer), so both local assigns shuffle on cid — the key the
+    * membership window already partitioned by. `mem` is
+    * localCheckpoint-ed (several stages consume it); mirrored
+    * CTE-for-stage by [[kmeans2OracleCtes]]. */
   private[graft] def kmeans2Local(a1: DataFrame): (DataFrame, DataFrame) = {
     val (lc1, la1, _) = kmeans2LocalIterate(a1, rounds = 1, inertia = false)
     (lc1, la1)
   }
 
-  /** R-round form of the local stage: seed -> repeat [assign,
-    * integer-mean update] R times -> final reassign. R = 1 with
-    * inertia off IS [[kmeans2Local]] (the registry configuration) —
-    * plan-identical, since the per-round lcos max is pruned when
-    * unused. Every round is the same order-independent arithmetic as
-    * the flat scheme's [[kmeansIterate]], so ANY round count stays
-    * oracle-comparable — the contract the flat convergence spec pins
-    * globally, pinned for the LOCAL stage by the kmeans2 convergence
-    * spec (inertia = sum over members of 1 − winning local cosine,
-    * captured on each round's assignment BEFORE its update, exactly
-    * the flat spec's measure restricted to within-cell geometry).
-    * With inertia on, each round's assignment is localCheckpoint-ed
-    * (consumed by the inertia action AND the update); off, the
-    * assignment stays pure lineage and no extra action runs. */
+  /** R-round form of the local stage ([[Lloyd.iterate]] at the local
+    * level). R = 1 with inertia off IS [[kmeans2Local]] (the registry
+    * configuration); the kmeans2 convergence spec pins R > 1 with
+    * inertia on — the flat spec's measure restricted to within-cell
+    * geometry. */
   private[graft] def kmeans2LocalIterate(a1: DataFrame, rounds: Int,
       inertia: Boolean): (DataFrame, DataFrame, Seq[Double]) = {
-    require(rounds >= 1, "kmeans2LocalIterate needs at least one local round")
     val wCell = Window.partitionBy("cid")
     val mem = a1
       .withColumn("qn2", expr(s"greatest(${dot("qd", "qd")}, 1e-12)"))
@@ -1391,50 +1199,8 @@ object Ann {
       .withColumn("kloc", expr("(nc + 127) div 128"))
       .drop("nc")
       .localCheckpoint()
-    val seeds = mem.filter(col("rn") <= col("kloc"))
-      .select(col("cid"), col("rn").cast("long").as("lcid"),
-        col("qd").as("ld"), col("qn2").as("ln2"))
-    // argmax-cosine assignment to the cell's own local centroids: a
-    // shuffle equi-join on cid (never a broadcast — the centroid side
-    // is corpus-sized/128), then the same slim partial-agg argmax as
-    // every coarse assign (the N×kloc pair stream carries ~30 B/pair).
-    // The winning cosine rides along for inertia; Catalyst prunes the
-    // max when no consumer reads it (the registry path).
-    def assignLocal(cents: DataFrame): DataFrame =
-      mem.select(col("vec_id"), col("cid"), col("qd"), col("qn2"))
-        .join(cents, "cid")
-        .select(col("vec_id"), col("cid"), col("lcid"),
-          expr(s"${dot("qd", "ld")} / sqrt(qn2 * ln2)").as("lcos"))
-        .groupBy(col("vec_id"), col("cid"))
-        .agg(expr("graft_argmax(lcid, lcos)").as("lcid"),
-          max(col("lcos")).as("lcos"))
-    // integer-mean update per (cell, local cluster): kmeansUpdate's
-    // exact arithmetic with the composite key
-    def updateLocal(la: DataFrame): DataFrame =
-      la.join(mem.select(col("vec_id"), col("qd")), "vec_id")
-        .select(col("cid"), col("lcid"), posexplode(col("qd")))
-        .groupBy("cid", "lcid", "pos")
-        .agg(sum(col("col").cast("long")).as("s"), count(lit(1)).as("n"))
-        .withColumn("m", floor(col("s").cast("double") / col("n")).cast("double"))
-        .groupBy("cid", "lcid")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)")
-          .as("ld"),
-          max("n").as("n_before"))
-        .withColumn("ln2", expr(s"greatest(${dot("ld", "ld")}, 1e-12)"))
-        .localCheckpoint()
-    var cents = seeds
-    var lc: DataFrame = null
-    val inertias = Seq.newBuilder[Double]
-    (1 to rounds).foreach { _ =>
-      var la = assignLocal(cents)
-      if (inertia) {
-        la = la.localCheckpoint()
-        inertias += la.agg(sum(lit(1.0) - col("lcos"))).head().getDouble(0)
-      }
-      lc = updateLocal(la)
-      cents = lc.select(col("cid"), col("lcid"), col("ld"), col("ln2"))
-    }
-    (lc, assignLocal(cents).drop("lcos"), inertias.result())
+    Lloyd.iterate(mem, col("rn") <= col("kloc"), col("rn").cast("long"), LocalLevel,
+      rounds, inertia)
   }
 
   /** The full two-level k-means over the embeddings corpus: coarse
@@ -1447,101 +1213,36 @@ object Ann {
     kmeans2Local(kmeans2CoarseAssign(s, dir))
 
   /** The coarse half alone — the (vec_id, cid, qd) assignment the
-    * local stage partitions on (exposed so the convergence spec can
-    * drive [[kmeans2LocalIterate]] at R > 1 on the real coarse
-    * geometry). */
-  private def kmeans2CoarseAssign(s: SparkSession, dir: String)
-      : DataFrame = {
+    * local stage partitions on: the flat loop's final reassignment,
+    * codes re-attached. */
+  private def kmeans2CoarseAssign(s: SparkSession, dir: String): DataFrame = {
     val kc = ivfK(Tables(s, dir).embeddingsCount)
-    val (codes, _, c1) = kmeansStage(s, dir, kc)
-    kmeansAssign(codes, c1).select(col("vec_id"), col("cid"), col("qd"))
+    val (codes, a1, _, _) = kmeansIterate(s, dir, 1, kc, inertia = false)
+    a1.join(codes.select("vec_id", "qd"), "vec_id")
+      .select(col("vec_id"), col("c_id").as("cid"), col("qd"))
   }
 
-  /** Shared oracle CTE chain for the one-Lloyd-stage k-means
-    * (codes -> seed centroids -> assignment -> integer-mean update ->
-    * reassignment a1) — used by cluster_kmeans (fixed k=16) and
-    * dedup_semantic / dedup_blocking_recall (corpus-scaled k via a
-    * scalar-subquery kExpr). */
-  private def kmeansOracleCtes(kExpr: String = "16"): String =
+  /** Shared oracle CTE chain for the one-Lloyd-stage flat k-means
+    * (codes `qn`, then [[Lloyd.iterateSql]]: seeds `c0`, assignment
+    * `a0`, update `c1`, reassignment `a1`) at k = `kExpr` (a scalar
+    * subquery over the counted corpus). */
+  private def kmeansOracleCtes(kExpr: String): String =
     s"""$eCte, $duckQuantizeCte, qn AS (
-            |  SELECT vec_id, qd, greatest(${duckDot("qd", "qd")}, 1e-12) AS qn2 FROM q
-            |), c0 AS (
-            |  SELECT vec_id AS c_id, qd AS cd, qn2 AS cn2 FROM qn WHERE vec_id < ($kExpr)
-            |), a0 AS (
-            |  SELECT vec_id, qd, c_id AS cid FROM (
-            |    SELECT qn.vec_id, qn.qd, c_id,
-            |      row_number() OVER (PARTITION BY qn.vec_id
-            |        ORDER BY ${duckDot("qd", "cd")} / sqrt(qn2 * cn2) DESC, c_id) AS rn
-            |    FROM qn CROSS JOIN c0
-            |  ) WHERE rn = 1
-            |), sums AS (
-            |  SELECT cid, t.x['pos'] AS pos,
-            |    CAST(sum(t.x['code']) AS BIGINT) AS s, count(*) AS n
-            |  FROM a0, unnest([{'pos': i, 'code': CAST(qd[i] AS BIGINT)}
-            |    FOR i IN range(1, len(qd) + 1)]) AS t(x)
-            |  GROUP BY 1, 2
-            |), c1 AS (
-            |  SELECT cid AS c_id,
-            |    list(floor(CAST(s AS DOUBLE) / n) ORDER BY pos) AS cd
-            |  FROM sums GROUP BY 1
-            |), c1n AS (
-            |  SELECT c_id, cd, greatest(${duckDot("cd", "cd")}, 1e-12) AS cn2 FROM c1
-            |), a1 AS (
-            |  SELECT vec_id, c_id AS cid FROM (
-            |    SELECT qn.vec_id, c_id,
-            |      row_number() OVER (PARTITION BY qn.vec_id
-            |        ORDER BY ${duckDot("qd", "cd")} / sqrt(qn2 * cn2) DESC, c_id) AS rn
-            |    FROM qn CROSS JOIN c1n
-            |  ) WHERE rn = 1
-            |)""".stripMargin
+       |  SELECT vec_id, qd, greatest(${duckDot("qd", "qd")}, 1e-12) AS qn2 FROM q
+       |), ${Lloyd.iterateSql(FlatLevel, "qn", s"vec_id < ($kExpr)", "vec_id")}""".stripMargin
 
   /** [[kmeansOracleCtes]] extended stage-for-stage with the LOCAL half
-    * of the two-level k-means ([[kmeans2Local]]): per-cell membership
-    * ranks and kloc = ceil(n/128) (`mem`), the kloc lowest-id seeds
-    * (`ls0`), local argmax assignment with ties to the smaller local
-    * id (`la0`), integer-mean update (`lsums`/`lc1`/`lc1n`), and the
-    * final reassignment (`la1`, keyed (cid, lcid)). */
+    * ([[kmeans2Local]]): per-cell membership ranks and kloc =
+    * ceil(n/128) (`mem`), then the local loop — seeds `lc0`, `la0`,
+    * `lc1`, and the final reassignment `la1` (keyed (cid, lcid)). */
   private def kmeans2OracleCtes(kExpr: String): String =
     s"""${kmeansOracleCtes(kExpr)},
        |mem AS (
-       |  SELECT a1.vec_id, a1.cid, qn.qd, qn.qn2,
-       |    row_number() OVER (PARTITION BY a1.cid ORDER BY a1.vec_id) AS rn,
-       |    (count(*) OVER (PARTITION BY a1.cid) + 127) // 128 AS kloc
+       |  SELECT a1.vec_id, a1.c_id AS cid, a1.qd, qn.qn2,
+       |    row_number() OVER (PARTITION BY a1.c_id ORDER BY a1.vec_id) AS rn,
+       |    (count(*) OVER (PARTITION BY a1.c_id) + 127) // 128 AS kloc
        |  FROM a1 JOIN qn ON a1.vec_id = qn.vec_id
-       |), ls0 AS (
-       |  SELECT cid, rn AS lcid, qd AS ld, qn2 AS ln2 FROM mem
-       |  WHERE rn <= kloc
-       |), la0 AS (
-       |  SELECT vec_id, cid, lcid, qd FROM (
-       |    SELECT m.vec_id, m.cid, s.lcid, m.qd,
-       |      row_number() OVER (PARTITION BY m.vec_id
-       |        ORDER BY ${duckDot("m.qd", "s.ld")} / sqrt(m.qn2 * s.ln2) DESC,
-       |          s.lcid) AS r
-       |    FROM mem m JOIN ls0 s ON m.cid = s.cid
-       |  ) WHERE r = 1
-       |), lsums AS (
-       |  SELECT cid, lcid, t.x['pos'] AS pos,
-       |    CAST(sum(t.x['code']) AS BIGINT) AS s, count(*) AS n
-       |  FROM la0, unnest([{'pos': i, 'code': CAST(qd[i] AS BIGINT)}
-       |    FOR i IN range(1, len(qd) + 1)]) AS t(x)
-       |  GROUP BY 1, 2, 3
-       |), lc1 AS (
-       |  SELECT cid, lcid,
-       |    list(floor(CAST(s AS DOUBLE) / n) ORDER BY pos) AS ld,
-       |    max(n) AS n_before
-       |  FROM lsums GROUP BY 1, 2
-       |), lc1n AS (
-       |  SELECT cid, lcid, ld, n_before,
-       |    greatest(${duckDot("ld", "ld")}, 1e-12) AS ln2 FROM lc1
-       |), la1 AS (
-       |  SELECT vec_id, cid, lcid FROM (
-       |    SELECT m.vec_id, m.cid, c.lcid,
-       |      row_number() OVER (PARTITION BY m.vec_id
-       |        ORDER BY ${duckDot("m.qd", "c.ld")} / sqrt(m.qn2 * c.ln2) DESC,
-       |          c.lcid) AS r
-       |    FROM mem m JOIN lc1n c ON m.cid = c.cid
-       |  ) WHERE r = 1
-       |)""".stripMargin
+       |), ${Lloyd.iterateSql(LocalLevel, "mem", "rn <= kloc", "rn")}""".stripMargin
 
   /** Corpus clustering as the TWO-LEVEL scheme (round 12; the flat
     * one-stage form survives inside it as the coarse half and in the
@@ -1579,7 +1280,7 @@ object Ann {
             |  coalesce(n1.n_after, 0) AS n_after,
             |  ${duckSigDigest("list_transform(ld, x -> CAST(x AS BIGINT) + 127)")}
             |    AS centroid_digest
-            |FROM lc1n c
+            |FROM lc1 c
             |LEFT JOIN n1 ON c.cid = n1.cid AND c.lcid = n1.lcid
             |ORDER BY cc_id, lc_id""".stripMargin))
 
@@ -1809,11 +1510,8 @@ object Ann {
         // slim pair stream (vec_id, c_id, c_cos) into a codegen
         // HashAggregate argmax; v/n2 re-attached by a vec_id join
         // rather than dragged through the aggregate as first()
-        e.crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("c_id"),
-            cosWith("v", "n2", "cv", "cn2").as("c_cos"))
-          .groupBy("vec_id")
-          .agg(expr("graft_argmax(c_id, c_cos)").as("cell"))
+        Lloyd.nearest(e.crossJoin(broadcast(cents)).select(col("vec_id"), col("c_id"),
+            cosWith("v", "n2", "cv", "cn2").as("c_cos")), Seq("vec_id"), "c_id", "c_cos", "cell")
           .join(e, "vec_id")
           .select(col("vec_id"), col("cell"), col("v"), col("n2"))
           .write.mode("append").partitionBy("cell")

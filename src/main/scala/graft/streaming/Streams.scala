@@ -207,10 +207,12 @@ object Streams {
       case Some(n) =>
         sp.conf.set("spark.sql.shuffle.partitions", n.toString)
         // For a genuinely tiny batch (< 4 MiB), whole-stage codegen is
-        // pure overhead: the per-batch plans generate code that differs
-        // from batch to batch, so even with the codegen cache sized
-        // (Native.CodegenCacheEntries) a repeat run of dedup_incremental
-        // recompiles ~100 of its ~126 classes, and the whole-stage
+        // pure overhead: Spark keys its codegen cache by the class
+        // loader as well as the source, and every streaming run gets
+        // a fresh session clone with its own class loader, so even with
+        // the cache sized (Native.CodegenCacheEntries) a repeat run of
+        // dedup_incremental recompiles ~100 of its ~126 classes from
+        // byte-identical source, and the whole-stage
         // classes cost more to compile than interpreting a few hundred
         // rows (measured at sf0.1, 4 cores, cache sized, 3 pairs with
         // and without this: pipeline_curate_stream 9.6 vs 11.9 s,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, Multimodal}
+import graft.operators.{Ann, Lloyd, Multimodal}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants of the ANN tiers and the multimodal plumbing
@@ -661,5 +661,39 @@ class AnnMultimodalSpec extends AnyFunSuite with SparkSpec {
     rows.filter(_.getInt(2) == 1).foreach { r =>
       assert(r.getDouble(3) <= brute(r.getLong(0)) + 1e-12)
     }
+  }
+
+  test("empty codewords: a k-means centroid that wins no member drops out; a residual codeword keeps its value") {
+    graft.functions.Native.install(spark)
+    import spark.implicits._
+    // k-means: the seeds are vec_ids 0..2. Vecs 1 and 3 tie seeds 0
+    // and 1 at cosine 1.0 and go to the smaller id, as does seed 1's
+    // own vector, so seed 1 wins no member and has no row after the
+    // update
+    val points = Seq(0L -> Seq(1.0, 0.0), 1L -> Seq(2.0, 0.0), 2L -> Seq(0.0, 1.0),
+        3L -> Seq(3.0, 0.0), 4L -> Seq(0.0, 3.0))
+      .toDF("vec_id", "qd").selectExpr("vec_id", "qd", "graft_dot(qd, qd) AS qn2")
+    val seeds = points.filter("vec_id < 3")
+      .selectExpr("vec_id AS c_id", "qd AS cd", "qn2 AS cn2")
+    val cents = Lloyd.update(points, Lloyd.assign(points, seeds, Ann.FlatLevel), Ann.FlatLevel)
+      .select("c_id", "cd", "n_before").orderBy("c_id").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getLong(2))).toSeq
+    assert(cents == Seq((0L, Seq(2.0, 0.0), 3L), (2L, Seq(0.0, 2.0), 2L)))
+    // residual training: per subspace m the seed codewords are
+    // vec_ids 0..15. In m = 0 vec 15 duplicates vec 14, so the tie
+    // sends both to codeword 14 and codeword 15 wins no member in any
+    // round; vec 16 pulls codeword 0 to the floor mean [0, 2]
+    val res = ((for (m <- 0 until 4; v <- 0 until 16)
+        yield (v.toLong, m, Seq(if (m == 0 && v == 15) 140.0 else 10.0 * v + m, 0.0))) :+
+        ((16L, 0, Seq(0.0, 4.0))))
+      .toDF("vec_id", "m", "rv").selectExpr("vec_id", "m", "rv", "graft_dot(rv, rv) AS rn2")
+    val rows = Ann.trainResCodebook(res).collect()
+    val cb = rows.map(r => (r.getAs[Int]("m"), r.getAs[Long]("c_id")) ->
+      r.getSeq[Double](r.fieldIndex("cd"))).toMap
+    val (n, distinct) = (rows.length, cb.size)
+    assert(n == 64 && distinct == 64, "every (m, c_id) codeword keeps its one row")
+    assert(cb((0, 15L)) == Seq(140.0, 0.0), "a codeword with no members keeps its value")
+    assert(cb((0, 0L)) == Seq(0.0, 2.0), "a codeword with members moves to their integer mean")
+    assert(cb((1, 15L)) == Seq(151.0, 0.0))
   }
 }
