@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,11 +26,14 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up the JVM/codegen and the file-system cache so the first
-    // timed query doesn't absorb session startup
+    // timed query doesn't absorb session startup; loading through
+    // Tables also infers each schema under the confs the rows read with
     graft.functions.Native.install(spark)
-    Seq("lineitem", "orders", "documents", "embeddings", "events").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+    val tables = graft.sources.Tables(spark, sfDir)
+    Seq[graft.sources.Tables => DataFrame](
+        _.lineitem, _.orders, _.documents, _.embeddings, _.events).foreach { t =>
+      try t(tables).count()
+      catch { case NonFatal(_) => () }
     }
     // SPARK_GRAFT_ONLY=q1_agg,q6_filter_agg restricts the run (local iteration).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

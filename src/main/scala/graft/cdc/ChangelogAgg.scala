@@ -150,7 +150,7 @@ object ChangelogAgg {
     * -> flat images. Nothing but map-side work before the delta agg. */
   private def fullImage(s: SparkSession, dir: String): DataFrame =
     fullImageColumns(Cdc.parse(
-      s.read.parquet(stagedFullFeed(s, dir)), col("json")))
+      graft.sources.Formats.readParquet(s, stagedFullFeed(s, dir)), col("json")))
 
   /** The oracle computes the SAME aggregate the other way — materialize
     * the latest row per key, then group — so a hash match proves the

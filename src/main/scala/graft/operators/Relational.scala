@@ -722,13 +722,15 @@ object Relational {
     asOfFamily.map(asOfQ)
 
   /** as-of join — q_asof_native's semantics as a COMPOSITION, the
-    * reference the native rows are checked against. Spark has no ASOF
-    * JOIN operator; the scalable composition is the union-window
+    * reference the native rows are checked against. Spark 4.1's
+    * `Dataset.joinAsOf` has no physical operator of its own: the
+    * optimizer's `RewriteAsOfJoin` turns it into a correlated `min_by`
+    * subquery, i.e. a range-condition join per key, a near-cartesian
+    * blowup on hot keys. The scalable composition is the union-window
     * trick: tag both relations, union, ONE shuffle on the key, and
     * carry the most recent right-side row forward with
     * last(_, ignoreNulls) over the (time, tag) ordering. This moves
-    * each row exactly once — the equivalent range-condition join would
-    * be a near-cartesian blowup per key. Same input and same oracle as
+    * each row exactly once. Same input and same oracle as
     * q_asof_native. */
   val qAsofJoin: Q = Q(
     "q_asof_join",

@@ -27,7 +27,11 @@ object AsOfMode {
 
 /** Native as-of join — the whole-operator Catalyst extension (logical
   * node + planner strategy + physical merge scan), for the one join
-  * type Spark's planner has no operator for.
+  * type Spark's planner has no operator for. Spark 4.1's
+  * `Dataset.joinAsOf` is rewritten by `RewriteAsOfJoin` into a
+  * correlated `min_by` subquery: a range-condition join per key, whose
+  * work grows with the right rows per key for every left row. The
+  * merge scan below reads each side once instead.
   *
   * Semantics: LEFT OUTER as-of — for every left row, the single right
   * row with `rightKey = leftKey` that `mode` picks (see [[AsOfMode]]);

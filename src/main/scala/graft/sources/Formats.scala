@@ -3,35 +3,68 @@ package graft.sources
 import graft.Q
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface of the engine (SURVEY.md §G): schema'd readers
   * for parquet/csv/json/orc and writers with the layouts that matter at
   * 100 TB — hive-style partitioning (partition pruning at read) and
   * bucketing (shuffle-free joins on the bucket key).
   *
-  * All readers take an explicit schema: schema inference is a full
+  * Every reader reads with an explicit schema: schema inference is an
   * extra pass over the data at scale, and a production feed's schema is
-  * a contract, not a guess.
+  * a contract, not a guess. The text/orc readers take it from the
+  * caller; [[readParquet]] infers it from the files once per
+  * application and then reads with that memoized schema.
   */
 object Formats {
 
-  private def reader(spark: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrameReader =
+  private def reader(spark: SparkSession, schema: StructType): DataFrameReader =
     spark.read.schema(schema)
 
   def readCsv(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: StructType): DataFrame =
     reader(spark, schema).option("header", "true").csv(path)
 
   def readJson(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: StructType): DataFrame =
     reader(spark, schema).json(path)
 
   def readOrc(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: StructType): DataFrame =
     reader(spark, schema).orc(path)
 
+  /** The session confs that steer parquet schema inference: the
+    * footer-to-Spark type mapping, and which footers are merged. */
+  private val ParquetInferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  private val parquetSchemas = scala.collection.concurrent.TrieMap
+    .empty[(String, String, Seq[Option[String]]), StructType]
+
+  /** The inferred schema of the parquet files at `path`, memoized per
+    * (application, path, [[ParquetInferenceConfs]] values). Inference
+    * runs a Spark job (footers are read in parallel on the executors),
+    * and registry rows build their inputs on every call, so inferring
+    * each time put one job in front of almost every row. Only for
+    * inputs whose files never change while the application runs: the
+    * registry's per-SF tables and the [[stageOnce]] dirs. Paths graft
+    * rewrites as it runs (lake sinks, indexes) read without the memo.
+    * A session reading under other inference confs (e.g. nanosAsLong,
+    * which turns `ts` into a long) gets its own entry, never a stale
+    * type. */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType =
+    parquetSchemas.getOrElseUpdate(
+      (spark.sparkContext.applicationId, path, ParquetInferenceConfs.map(spark.conf.getOption)),
+      spark.read.parquet(path).schema)
+
+  /** The one reader for parquet inputs that never change while the
+    * application runs: reads with the [[parquetSchema]] memo. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    reader(spark, parquetSchema(spark, path)).parquet(path)
 
   /** hive-style partitioned parquet: one directory per partition value;
     * a filter on the partition column prunes whole directories at plan

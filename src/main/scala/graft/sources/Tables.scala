@@ -3,17 +3,19 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Schema'd loaders for the driver-generated TPC-H-ish tables
-  * (see TESTDATA.md). One place to hang partitioning/bucketing hints;
-  * everything downstream takes these DataFrames, so a production
-  * deployment swaps this for its own catalog without touching
-  * operators.
+/** Loaders for the driver-generated TPC-H-ish tables (see
+  * TESTDATA.md). Each table's schema is inferred once per application
+  * ([[Formats.readParquet]]) and every later load reads with it, so
+  * building a row's inputs runs no job. One place to hang
+  * partitioning/bucketing hints; everything downstream takes these
+  * DataFrames, so a production deployment swaps this for its own
+  * catalog without touching operators.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   graft.functions.Native.install(spark)
 
   private def load(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Formats.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = load("region")
   def nation: DataFrame     = load("nation")
@@ -57,7 +59,7 @@ object Tables {
 
   private[sources] def cachedCount(spark: SparkSession, path: String): Long =
     countMemo.getOrElseUpdate((spark.sparkContext.applicationId, path),
-      spark.read.parquet(path).count())
+      Formats.readParquet(spark, path).count())
   import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
   /** Normalize an events frame's `ts` to TIMESTAMP across the physical

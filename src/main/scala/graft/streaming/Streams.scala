@@ -86,10 +86,11 @@ object Streams {
   }
 
   /** Bounded file-source feed over a staged directory: the schema is
-    * read from the staged files, and each micro-batch admits
-    * [[filesPerTrigger]] of them. */
+    * inferred from the staged files once per application
+    * ([[graft.sources.Formats.parquetSchema]]), and each micro-batch
+    * admits [[filesPerTrigger]] of them. */
   private[graft] def fileFeed(s: SparkSession, staged: String): DataFrame =
-    s.readStream.schema(s.read.parquet(staged).schema)
+    s.readStream.schema(graft.sources.Formats.parquetSchema(s, staged))
       .option("maxFilesPerTrigger", filesPerTrigger).parquet(staged)
 
   /** Runs a started bounded query until its feed is exhausted, then
@@ -239,7 +240,7 @@ object Streams {
     // functions here too (idempotent)
     graft.functions.Native.install(s)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.sources.Formats.parquetSchema(s, s"$dir/events.parquet")
     // the file source wants a directory of arriving files; expose the
     // (read-only) test table through a staged directory of symlinks
     val streamDir = graft.sources.Formats.stageOnce(s, "events_stream", dir)(

@@ -17,6 +17,103 @@ class FormatsSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val li = Tables(spark, sfDir).lineitem
 
+  private val tableNames = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  private def load(t: Tables, name: String): org.apache.spark.sql.DataFrame = name match {
+    case "region" => t.region
+    case "nation" => t.nation
+    case "customer" => t.customer
+    case "supplier" => t.supplier
+    case "part" => t.part
+    case "orders" => t.orders
+    case "lineitem" => t.lineitem
+    case "events" => t.events
+    case "documents" => t.documents
+    case "embeddings" => t.embeddings
+  }
+
+  /** Spark jobs that this thread starts while `body` runs. Suites share
+    * one SparkContext and run in parallel, so only jobs carrying this
+    * call's local-property tag count. A tagged marker job closes the
+    * window: one listener queue delivers events in order, so once the
+    * marker's onJobEnd arrives, no earlier job start is still queued. */
+  private def jobsRunBy(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val markerEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case `tag` => jobs.incrementAndGet()
+          case t if t == tag + "/marker" => markers.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markers.contains(e.jobId)) markerEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      body
+      sc.setLocalProperty(key, tag + "/marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerEnded.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job's end never reached the listener")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a second Tables build of each input table runs no Spark job") {
+    // the counter sees an inference job, so a 0 below is not vacuous
+    assert(jobsRunBy(spark.read.parquet(s"$sfDir/orders.parquet").schema) >= 1)
+    for (name <- tableNames) {
+      load(Tables(spark, sfDir), name)
+      assert(jobsRunBy(load(Tables(spark, sfDir), name)) == 0,
+        s"$name: building the table again must not re-infer its schema")
+    }
+  }
+
+  test("the memoized schema equals a fresh inference for every input table") {
+    val t = Tables(spark, sfDir)
+    for (name <- tableNames) {
+      val memo = load(t, name).schema
+      val fresh = spark.read.parquet(s"$sfDir/$name.parquet")
+      val expected = if (name == "events") Tables.normalizeTs(fresh).schema else fresh.schema
+      assert(memo == expected, s"$name: memoized schema differs from inference")
+    }
+    assert(t.events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+  }
+
+  test("the schema memo infers afresh under other inference confs") {
+    // a path no other test reads, so no other conf values are memoized
+    val path = tmp("graft_schema_memo") + "/orders.parquet"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path).getParent)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/orders.parquet"),
+      java.nio.file.Paths.get(path))
+    val seeded = Formats.parquetSchema(spark, path)
+    // a session of the same application with other inference confs
+    val s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong",
+      (!spark.conf.get("spark.sql.legacy.parquet.nanosAsLong").toBoolean).toString)
+    assert(jobsRunBy(Formats.parquetSchema(s, path)) >= 1,
+      "another nanosAsLong value must not reuse the memoized schema")
+    assert(jobsRunBy(Formats.parquetSchema(s, path)) == 0)
+    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val ltz = Formats.parquetSchema(s, path)
+    assert(ltz == s.read.parquet(path).schema)
+    assert(ltz("o_orderdate").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(seeded("o_orderdate").dataType == org.apache.spark.sql.types.TimestampNTZType,
+      "the shared session keeps its own entry")
+  }
+
   test("csv/json/orc round-trip with explicit schema") {
     val src = li.select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag")
     val n = src.count()
