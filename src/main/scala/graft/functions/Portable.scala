@@ -71,6 +71,9 @@ object Portable {
   def normText(e: String): String =
     s"trim(regexp_replace(lower($e), '\\\\s+', ' '))"
 
+  /** the words of the normalized text (see [[duckNormWords]]). */
+  def normWords(e: String): String = words(normText(e))
+
   /** word-3-gram shingle hashes from a WORDS-array expression (native;
     * equivalent to `transform(shingles3(words), g -> charHash(g))`
     * without materializing the shingle strings). */
@@ -163,6 +166,8 @@ object Portable {
 
   def duckNormText(e: String): String =
     s"trim(regexp_replace(lower($e), '\\s+', ' ', 'g'))"
+
+  def duckNormWords(e: String): String = duckWords(duckNormText(e))
 
   /** w-word window strings of a words-array expression — mirror of the
     * spans [[windowHashes60]] hashes (feed through

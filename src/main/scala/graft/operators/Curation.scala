@@ -198,19 +198,17 @@ object Curation {
   private val ClfF = 1024
   private val ClfScale = 1000000L
 
-  /** The normalized words array the classifier features build on —
-    * materialized as its OWN column (`cws`) at every call site, never
-    * spliced into a lambda. The first cut inlined this snippet into a
+  /** Hashed word-unigram + word-bigram feature stream (fastText's
+    * default feature set) over a prepared `cws` words column: the
+    * normalized words ([[normWords]]), materialized as their OWN column
+    * at every call site, never spliced into a lambda. The first cut
+    * inlined the words snippet into a
     * `transform(sequence(...), i -> element_at(<snippet>, i))` bigram
     * lambda; higher-order functions are CodegenFallback, their lambda
     * bodies evaluate interpreted PER ELEMENT with no subexpression
     * reuse, so the whole regexp+split+filter chain re-ran ~2x per
     * word — O(words x text_length) per document. text_clf_score read
-    * 216 s at sf10; the rewrite below reads the chain in linear time. */
-  private def clfWordsExpr: String = words(normText("text"))
-
-  /** Hashed word-unigram + word-bigram feature stream (fastText's
-    * default feature set) over a prepared `cws` words column. Bigrams
+    * 216 s at sf10; the column reads the chain in linear time. Bigrams
     * via `zip_with(slice, slice)`: HOF children evaluate once per ROW
     * (not per element), and the lambda touches only its own variables
     * — every per-element step is O(1). The CASE guards size < 2
@@ -249,7 +247,7 @@ object Curation {
   private[operators] def clfWeights(s: SparkSession, dir: String): (IndexedSeq[Long], Long) = {
     val wrows = Tables(s, dir).documents
       .select(expr(s"CAST($clfLabelCond AS INT)").as("label"),
-        expr(clfWordsExpr).as("cws"))
+        expr(normWords("text")).as("cws"))
       .select(col("label"), expr(clfFeatsExpr).as("fs"))
       .select(col("label"), explode(col("fs")).as("f"))
       .select(col("label"), (expr(charHash("f", 53)) % ClfF).as("b"))
@@ -276,7 +274,7 @@ object Curation {
     * re-materialized PER FOLD STEP; a Literal evaluates to the same
     * backing ArrayData every step. (This was the SECONDARY cost in the
     * first cut; the primary one was the quadratic feature build — see
-    * [[clfWordsExpr]].) */
+    * [[clfFeatsExpr]].) */
   private def clfRawCol(w: IndexedSeq[Long]): Column = {
     val wl = typedlit(w.toIndexedSeq)
     aggregate(col("fs"), lit(0L), (acc, f) =>
@@ -290,7 +288,7 @@ object Curation {
     * counts, same integer div, bit-identical scores. */
   private def duckClfCtes: String =
     s"""cw0 AS (
-       |  SELECT doc_id, text, ${duckWords(duckNormText("text"))} AS cws
+       |  SELECT doc_id, text, ${duckNormWords("text")} AS cws
        |  FROM documents
        |), cfeat AS (
        |  SELECT doc_id,
@@ -348,7 +346,7 @@ object Curation {
     (s, dir) => {
       val (wv, prior) = clfWeights(s, dir)
       Tables(s, dir).documents
-        .withColumn("cws", expr(clfWordsExpr))
+        .withColumn("cws", expr(normWords("text")))
         .withColumn("fs", expr(clfFeatsExpr))
         .withColumn("craw", clfRawCol(wv))
         .select(col("doc_id"),
@@ -396,7 +394,7 @@ object Curation {
         // 0 >= prior — prior is a plan-time Scala value, so that
         // branch resolves here, keeping the predicate division-free.
         val emptyKeeps = if (prior <= 0L) "size(fs) = 0 OR " else ""
-        gated0.withColumn("cws", expr(clfWordsExpr))
+        gated0.withColumn("cws", expr(normWords("text")))
           .withColumn("fs", expr(clfFeatsExpr))
           .withColumn("craw", clfRawCol(wv))
           .filter(expr(

@@ -54,8 +54,7 @@ object TextOps {
     "text_langid",
     (s, dir) => {
       val scored = Lexicons.foldLeft(
-        docs(s, dir).withColumn("w", expr(s"${normText("text")}"))
-          .withColumn("words", expr(words("w")))) {
+        docs(s, dir).withColumn("words", expr(normWords("text")))) {
         case (df, (lang, lex)) =>
           df.withColumn(s"s_$lang",
             expr(s"size(filter(words, x -> array_contains(${lexArr(lex)}, x)))"))
@@ -74,7 +73,7 @@ object TextOps {
         s"len(list_filter(words, x -> list_contains(${duckLexArr(lex)}, x))) AS s_$lang"
       }.mkString(",\n  ")
       s"""WITH w AS (
-         |  SELECT doc_id, ${duckWords(duckNormText("text"))} AS words FROM documents
+         |  SELECT doc_id, ${duckNormWords("text")} AS words FROM documents
          |), sc AS (
          |  SELECT doc_id, $scores FROM w
          |)
@@ -316,11 +315,11 @@ object TextOps {
 
   /** Top adjacent-symbol pairs — the counting core of a BPE tokenizer-
     * training round (learn-merges step 0 at the character level): every
-    * in-word adjacent character pair over the normalized corpus,
-    * globally counted, top [[BpeTopPairs]] by (count desc, pair asc).
-    * The highest-ranked pair IS the first merge a BPE trainer would
-    * learn; re-running after applying it is the same plan over the
-    * rewritten symbol stream, so one row pins the whole loop's shape.
+    * in-word adjacent character pair over [[Bpe.wordStream]], globally
+    * counted, top [[BpeTopPairs]] by (count desc, pair asc). The
+    * highest-ranked pair IS the first merge [[Bpe.train]] learns;
+    * re-running after applying it is the same plan over the rewritten
+    * symbol stream, so one row pins the whole loop's shape.
     *
     * Scale: the pair explode is map-side (rows = total characters, no
     * join), the count partial-aggregates onto a key domain BOUNDED by
@@ -333,24 +332,17 @@ object TextOps {
 
   val bpePairCounts: Q = Q(
     "bpe_pair_counts",
-    (s, dir) => {
-      val w = docs(s, dir)
-        .select(explode(expr(words(normText("text")))).as("w"))
-        .filter(length(col("w")) >= 2)
-      val pairs = w.select(explode(expr(
+    (s, dir) => Bpe.wordStream(s, dir, keyed = false)
+      .select(explode(expr(
         "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
         .as("pair"))
-      pairs.groupBy("pair").agg(count(lit(1)).as("cnt"))
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("cnt").desc, col("pair"))))
-        .filter(col("rank") <= BpeTopPairs)
-        .select(col("rank"), col("pair"), col("cnt"))
-    },
+      .groupBy("pair").agg(count(lit(1)).as("cnt"))
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col("cnt").desc, col("pair"))))
+      .filter(col("rank") <= BpeTopPairs)
+      .select(col("rank"), col("pair"), col("cnt")),
     Some(s"""WITH w AS (
-            |  SELECT w FROM (
-            |    SELECT unnest(${duckWords(duckNormText("text"))}) AS w
-            |    FROM documents
-            |  ) WHERE length(w) >= 2
+            |  ${Bpe.wordStreamSql(keyed = false)}
             |), p AS (
             |  SELECT substring(w, CAST(t.i AS INT), 2) AS pair
             |  FROM w, unnest(range(1, length(w))) AS t(i)
@@ -363,308 +355,61 @@ object TextOps {
             |  FROM c
             |) WHERE rank <= $BpeTopPairs""".stripMargin))
 
-  /** BPE merge-table TRAINING — the loop [[bpePairCounts]] opens, run
-    * for [[BpeMergeRounds]] sequential rounds: each round counts every
-    * adjacent-symbol pair over the current symbol stream (starting at
-    * characters), learns the top pair as that round's merge, and
-    * applies it map-side before the next round. Emits the learned
-    * merge table (rank, merge_pair, count-at-learn-time) — the
-    * artifact a tokenizer trainer ships.
-    *
-    * Symbol streams are SEPARATOR-ENCODED strings (U+001F between and
-    * around symbols, a char the whitespace-split word stream can never
-    * contain), so a merge application is one literal
-    * `replace(sep·a·sep·b·sep → sep·ab·sep)` — leftmost
-    * non-overlapping, identical semantics in Spark's UTF8String.replace
-    * and DuckDB's replace, and boundary-safe by construction (the
-    * pattern's flanking separators can only align to whole symbols).
-    * A replaced occurrence consumes its TRAILING separator, which is
-    * the next occurrence's LEADING separator — so the occurrence
-    * immediately after a merge never matches in the same round,
-    * whether it repeats the same symbols ([a,a,a,a,a] → [aa,a,aa],
-    * not canonical greedy's [aa,aa,a]) or is an adjacent distinct
-    * repeat ([e,r,e,r] → [er,e,r], not [er,er]). Both engines share
-    * the semantics by construction (same replace contract), the
-    * oracle computes the same rewrite, and DedupTextSpec's scalar
-    * replay models the consumed separator explicitly; the procedure
-    * here IS the contract.
-    *
-    * Scale: each round = a map-side pair explode, a partial-agg count
-    * over a key domain bounded by the CURRENT symbol vocabulary
-    * squared (constant in corpus size), a top-1 TakeOrdered, and a
-    * map-only rewrite — a driver loop of R word-count-shaped jobs. The
-    * driver holds only the R-row merge table (the one collect is the
-    * output artifact itself). At 100 TB each round re-derives the
-    * stream through r−1 stacked codegen'd replaces fused into the
-    * scan; a production trainer would persist the rewritten stream
-    * every few rounds — same plan per round either way. */
-  private val BpeMergeRounds = 8
-  private val BpeSep = "\u001f"
-
-  /** The R-round training loop itself: returns (rank, SEP-encoded
-    * merge pair, count-at-learn-time) in learn order. The one collect
-    * per round is the 1-row learned merge — the training artifact, not
-    * data. Shared by [[bpeTrainMerges]] (which ships the table) and
-    * [[bpeEncode]] (which applies it), so the two rows cannot drift. */
-  private def bpeTrainLoop(s: SparkSession, dir: String): Seq[(Long, String, Long)] = {
-    val sep = BpeSep
-    // Round 17 (optimization): train over DISTINCT words carrying their
-    // occurrence counts instead of over every word INSTANCE. A merge
-    // application is a deterministic function of the symbol stream, so
-    // every occurrence of the same word evolves identically through
-    // every round; a round's per-instance pair count is therefore
-    // exactly sum over distinct words of (pairs in that word) x
-    // multiplicity — same counts, same (cnt DESC, pair) top-1, same
-    // learned table, bit for bit. The vocabulary table is built in ONE
-    // corpus pass (map-side partial-agg count) and persisted for the
-    // loop, so each of the R rounds is a vocabulary-sized job instead
-    // of a corpus re-scan through r-1 stacked replaces (guide §1.2:
-    // algorithm first — rounds now scale with |vocab|, not |corpus|).
-    val vocab = docs(s, dir)
-      .select(explode(expr(words(normText("text")))).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(concat(lit(sep),
-        regexp_replace(col("w"), "(.)", "$1" + sep)).as("e"), col("cnt"))
-      .persist()
-    try {
-      var enc = vocab
-      val learned = Seq.newBuilder[(Long, String, Long)]
-      for (r <- 1 to BpeMergeRounds) {
-        // one row per round: the learned merge (driver-sized by
-        // construction — this IS the training output)
-        val top = enc
-          .select(expr("filter(split(e, chr(31)), x -> x <> '')").as("syms"),
-            col("cnt"))
-          .select(col("cnt"), explode(expr(
-            """CASE WHEN size(syms) < 2 THEN array()
-              |ELSE transform(sequence(1, size(syms) - 1),
-              |  i -> concat(element_at(syms, i), chr(31),
-              |              element_at(syms, i + 1)))
-              |END""".stripMargin)).as("pair"))
-          .groupBy("pair").agg(sum(col("cnt")).as("cnt"))
-          .orderBy(col("cnt").desc, col("pair")).limit(1)
-          .collect()(0)
-        val pair = top.getString(0)
-        learned += ((r.toLong, pair, top.getLong(1)))
-        enc = enc.select(replace(col("e"),
-          lit(sep + pair + sep),
-          lit(sep + pair.replace(sep, "") + sep)).as("e"), col("cnt"))
-      }
-      learned.result()
-    } finally { vocab.unpersist(); () }
-  }
-
-  val bpeTrainMerges: Q = {
-    val S = "chr(31)"
-    val roundCtes = (1 to BpeMergeRounds).map { r =>
-      val prev = s"w${r - 1}"
-      // MATERIALIZED: each w_r is referenced by both p_{r+1} and
-      // w_{r+1}; letting the optimizer inline the chain re-derives
-      // round r from scratch 2^(R-r) times (measured minutes vs 1 s)
-      s"""p$r AS MATERIALIZED (
-         |  SELECT pair, count(*) AS cnt FROM (
-         |    SELECT unnest(list_transform(range(1, len(syms)),
-         |      i -> syms[i] || $S || syms[i + 1])) AS pair
-         |    FROM (SELECT list_filter(string_split(e, $S), x -> x <> '') AS syms
-         |          FROM $prev)
-         |  ) GROUP BY 1),
-         |m$r AS MATERIALIZED (SELECT CAST($r AS BIGINT) AS rank, pair, cnt
-         |        FROM p$r ORDER BY cnt DESC, pair LIMIT 1),
-         |w$r AS MATERIALIZED (SELECT replace(e, $S || (SELECT pair FROM m$r) || $S,
-         |    $S || (SELECT replace(pair, $S, '') FROM m$r) || $S) AS e
-         |  FROM $prev)""".stripMargin
-    }.mkString(",\n")
-    Q(
-      "bpe_train_merges",
-      (s, dir) => {
-        import s.implicits._
-        bpeTrainLoop(s, dir)
-          .map { case (r, p, c) => (r, p.replace(BpeSep, " "), c) }
-          .toDF("rank", "merge_pair", "cnt").orderBy("rank")
-      },
-      Some(s"""WITH wrd AS MATERIALIZED (
-              |  SELECT w FROM (
-              |    SELECT unnest(${duckWords(duckNormText("text"))}) AS w
-              |    FROM documents) WHERE length(w) >= 2
-              |), w0 AS MATERIALIZED (
-              |  SELECT $S || regexp_replace(w, '(.)', '\\1' || $S, 'g') AS e FROM wrd
-              |),
-              |$roundCtes
-              |SELECT rank, replace(pair, $S, ' ') AS merge_pair, cnt
-              |FROM (${(1 to BpeMergeRounds).map(r => s"SELECT * FROM m$r").mkString(" UNION ALL ")})
-              |ORDER BY rank""".stripMargin))
-  }
+  /** BPE merge-table TRAINING — the loop [[bpePairCounts]] opens
+    * ([[Bpe.train]]): emits the learned merge table (rank, merge_pair,
+    * count-at-learn-time), the artifact a tokenizer trainer ships. A
+    * driver loop of at most [[Bpe.Rounds]] word-count-shaped jobs; the
+    * driver holds only the merge table. */
+  val bpeTrainMerges: Q = Q(
+    "bpe_train_merges",
+    (s, dir) => {
+      import s.implicits._
+      Bpe.train(s, dir)
+        .map { case (r, p, c) => (r, p.replace(Bpe.Sep, " "), c) }
+        .toDF("rank", "merge_pair", "cnt").orderBy("rank")
+    },
+    Some(s"""WITH ${Bpe.trainSql}
+            |SELECT rank, replace(pair, chr(31), ' ') AS merge_pair, cnt
+            |FROM (${Bpe.learnedSql})
+            |ORDER BY rank""".stripMargin))
 
   /** BPE ENCODING — the serve half of the tokenizer loop
-    * [[bpeTrainMerges]] trains: apply the R learned merges, in rank
-    * order, to every document's word stream and emit per-doc token
-    * statistics (n_words, n_tokens, n_chars — n_tokens/n_chars is the
-    * compression the learned vocabulary buys). Tokenization is what a
-    * training-data pipeline runs over the WHOLE corpus on every
-    * recipe change, so its scale shape matters more than training's.
-    *
-    * Scale: training reuses [[bpeTrainLoop]] (R word-count-shaped jobs,
-    * driver holds only the R-row merge table); encoding is then
-    * MAP-ONLY — the R merges are string literals folded into R stacked
-    * codegen'd `replace`s fused into one scan pass (the merge table is
-    * plan metadata, like a broadcast of R rows) — followed by one
-    * partial-aggregated groupBy(doc_id) and a doc-side left join.
-    * Nothing in the serve path shuffles more than the per-doc count
-    * rows; at 100 TB the encode is embarrassingly parallel. The same
-    * leftmost-non-overlapping replace contract as training, pinned by
-    * the oracle unrolling the identical R-round chain per doc. */
-  val bpeEncode: Q = {
-    val S = "chr(31)"
-    // the training chain with doc_id carried through every w_r: pair
-    // counts (p_r) ignore it, the rewrite (w_r) preserves it — same
-    // merges as bpe_train_merges by construction
-    val encRoundCtes = (1 to BpeMergeRounds).map { r =>
-      val prev = s"w${r - 1}"
-      s"""p$r AS MATERIALIZED (
-         |  SELECT pair, count(*) AS cnt FROM (
-         |    SELECT unnest(list_transform(range(1, len(syms)),
-         |      i -> syms[i] || $S || syms[i + 1])) AS pair
-         |    FROM (SELECT list_filter(string_split(e, $S), x -> x <> '') AS syms
-         |          FROM $prev)
-         |  ) GROUP BY 1),
-         |m$r AS MATERIALIZED (SELECT pair FROM p$r ORDER BY cnt DESC, pair LIMIT 1),
-         |w$r AS MATERIALIZED (SELECT doc_id, replace(e, $S || (SELECT pair FROM m$r) || $S,
-         |    $S || (SELECT replace(pair, $S, '') FROM m$r) || $S) AS e
-         |  FROM $prev)""".stripMargin
-    }.mkString(",\n")
-    Q(
-      "bpe_encode",
-      (s, dir) => {
-        val sep = BpeSep
-        val merges = bpeTrainLoop(s, dir).map(_._2)
-        val enc0 = docs(s, dir)
-          .select(col("doc_id"), explode(expr(words(normText("text")))).as("w"))
-          .filter(length(col("w")) >= 2)
-          .select(col("doc_id"), concat(lit(sep),
-            regexp_replace(col("w"), "(.)", "$1" + sep)).as("e"))
-        val encoded = merges.foldLeft(enc0) { case (d, pair) =>
-          d.withColumn("e", replace(col("e"), lit(sep + pair + sep),
-            lit(sep + pair.replace(sep, "") + sep)))
-        }
-        val per = encoded.select(col("doc_id"),
-            expr("size(filter(split(e, chr(31)), x -> x <> ''))")
-              .cast("long").as("toks"),
-            expr("length(replace(e, chr(31), ''))").cast("long").as("chars"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_words"), sum(col("toks")).as("n_tokens"),
-            sum(col("chars")).as("n_chars"))
-        docs(s, dir).select(col("doc_id"))
-          .join(per, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_words"), lit(0L)).as("n_words"),
-            coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-            coalesce(col("n_chars"), lit(0L)).as("n_chars"))
-          .orderBy("doc_id")
-      },
-      Some(s"""WITH wrd AS MATERIALIZED (
-              |  SELECT doc_id, w FROM (
-              |    SELECT doc_id, unnest(${duckWords(duckNormText("text"))}) AS w
-              |    FROM documents) WHERE length(w) >= 2
-              |), w0 AS MATERIALIZED (
-              |  SELECT doc_id, $S || regexp_replace(w, '(.)', '\\1' || $S, 'g') AS e
-              |  FROM wrd
-              |),
-              |$encRoundCtes
-              |SELECT d.doc_id,
-              |  coalesce(t.n_words, 0) AS n_words,
-              |  coalesce(t.n_tokens, 0) AS n_tokens,
-              |  coalesce(t.n_chars, 0) AS n_chars
-              |FROM (SELECT doc_id FROM documents) d
-              |LEFT JOIN (
-              |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-              |    CAST(sum(len(list_filter(string_split(e, $S), x -> x <> ''))) AS BIGINT) AS n_tokens,
-              |    CAST(sum(length(replace(e, $S, ''))) AS BIGINT) AS n_chars
-              |  FROM w$BpeMergeRounds GROUP BY 1) t ON d.doc_id = t.doc_id
-              |ORDER BY d.doc_id""".stripMargin))
-  }
+    * [[bpeTrainMerges]] trains: [[Bpe.train]], then [[Bpe.encode]] with
+    * the learned merges. Tokenization is what a training-data pipeline
+    * runs over the WHOLE corpus on every recipe change, so its scale
+    * shape matters more than training's: the encode is map-only up to
+    * the per-doc aggregation, embarrassingly parallel at 100 TB. The
+    * oracle re-learns the merges with the same training chain as
+    * bpe_train_merges' and folds them over every document's words. */
+  val bpeEncode: Q = Q(
+    "bpe_encode",
+    (s, dir) => Bpe.encode(s, dir, Bpe.train(s, dir).map(_._2)),
+    Some(Bpe.encodeSql(Bpe.learnedPairsSql, Seq(Bpe.trainSql))))
 
   /** The COMMITTED merge table — the [[bpeTrainMerges]] artifact of
     * the sf0.01 training corpus (reproducible: run bpe_train_merges
-    * there and read the 8 rows), shipped the way a production
-    * tokenizer ships: as a fixed file a serve job loads, never
-    * retrains. Symbol pairs in rank order; merge 6 consumes merge 1's
-    * output symbol ("m"+"er"), so rank order is semantic. */
+    * there and read the 8 rows; DedupTextSpec checks it), shipped the
+    * way a production tokenizer ships: as a fixed file a serve job
+    * loads, never retrains. Symbol pairs in rank order; merge 6
+    * consumes merge 1's output symbol ("m"+"er"), so rank order is
+    * semantic. */
   private[graft] val BpeStoredMerges: Seq[(String, String)] = Seq(
     "e" -> "r", "i" -> "n", "o" -> "w", "o" -> "r",
     "s" -> "t", "m" -> "er", "a" -> "t", "l" -> "u")
 
   /** BPE encoding with a STORED merge table — the production serve
-    * path [[bpeEncode]]'s doc promises: bpe_encode proves train+serve
-    * compose (it retrains in-run, so its oracle can re-learn the same
-    * merges), while THIS row runs what a tokenizer deployment actually
-    * runs on every recipe change — load the committed merge table
-    * ([[BpeStoredMerges]]) and encode the corpus with it. No training
-    * jobs at all: the plan is the R stacked codegen'd replaces fused
-    * into ONE scan pass (plan-pinned like bpe_encode), one
-    * partial-aggregated groupBy(doc_id), one doc-side left join — the
-    * bench row therefore prices the MARGINAL encode cost that
-    * bpe_encode's 8 training passes sit on top of. The oracle inlines
-    * the same table as literals, so the two engines agree on the
-    * stored vocabulary by construction. */
-  val bpeEncodeStored: Q = {
-    val S = "chr(31)"
-    // the stored table folded into the oracle as nested replace
-    // literals, innermost = rank 1 (same leftmost-non-overlapping
-    // replace contract as training)
-    val duckEncoded = BpeStoredMerges.foldLeft("e") { case (acc, (a, b)) =>
-      s"replace($acc, $S || '$a' || $S || '$b' || $S, $S || '$a$b' || $S)"
-    }
-    Q(
-      "bpe_encode_stored",
-      (s, dir) => {
-        val sep = BpeSep
-        val enc0 = docs(s, dir)
-          .select(col("doc_id"), explode(expr(words(normText("text")))).as("w"))
-          .filter(length(col("w")) >= 2)
-          .select(col("doc_id"), concat(lit(sep),
-            regexp_replace(col("w"), "(.)", "$1" + sep)).as("e"))
-        val encoded = BpeStoredMerges.foldLeft(enc0) { case (d, (a, b)) =>
-          d.withColumn("e", replace(col("e"), lit(sep + a + sep + b + sep),
-            lit(sep + a + b + sep)))
-        }
-        val per = encoded.select(col("doc_id"),
-            expr("size(filter(split(e, chr(31)), x -> x <> ''))")
-              .cast("long").as("toks"),
-            expr("length(replace(e, chr(31), ''))").cast("long").as("chars"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_words"), sum(col("toks")).as("n_tokens"),
-            sum(col("chars")).as("n_chars"))
-        docs(s, dir).select(col("doc_id"))
-          .join(per, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_words"), lit(0L)).as("n_words"),
-            coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-            coalesce(col("n_chars"), lit(0L)).as("n_chars"))
-          .orderBy("doc_id")
-      },
-      Some(s"""WITH wrd AS (
-              |  SELECT doc_id, w FROM (
-              |    SELECT doc_id, unnest(${duckWords(duckNormText("text"))}) AS w
-              |    FROM documents) WHERE length(w) >= 2
-              |), w0 AS (
-              |  SELECT doc_id, $S || regexp_replace(w, '(.)', '\\1' || $S, 'g') AS e
-              |  FROM wrd
-              |), wenc AS (
-              |  SELECT doc_id, $duckEncoded AS e FROM w0
-              |)
-              |SELECT d.doc_id,
-              |  coalesce(t.n_words, 0) AS n_words,
-              |  coalesce(t.n_tokens, 0) AS n_tokens,
-              |  coalesce(t.n_chars, 0) AS n_chars
-              |FROM (SELECT doc_id FROM documents) d
-              |LEFT JOIN (
-              |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-              |    CAST(sum(len(list_filter(string_split(e, $S), x -> x <> ''))) AS BIGINT) AS n_tokens,
-              |    CAST(sum(length(replace(e, $S, ''))) AS BIGINT) AS n_chars
-              |  FROM wenc GROUP BY 1) t ON d.doc_id = t.doc_id
-              |ORDER BY d.doc_id""".stripMargin))
-  }
+    * path: bpe_encode proves train+serve compose (it retrains in-run),
+    * while THIS row runs what a tokenizer deployment actually runs on
+    * every recipe change — [[Bpe.encode]] with the committed table
+    * ([[BpeStoredMerges]]). No training jobs at all, so the bench row
+    * prices the MARGINAL encode cost that bpe_encode's training passes
+    * sit on top of. The oracle inlines the same table as a literal
+    * list. */
+  val bpeEncodeStored: Q = Q(
+    "bpe_encode_stored",
+    (s, dir) => Bpe.encode(s, dir, BpeStoredMerges.map { case (a, b) => a + Bpe.Sep + b }),
+    Some(Bpe.encodeSql(BpeStoredMerges
+      .map { case (a, b) => s"'$a' || chr(31) || '$b'" }.mkString("[", ", ", "]"))))
 
   /** Bounded LM model sizes: top-V bigrams / top-U unigrams kept by
     * corpus frequency (deterministic tie-break by key). The model a
@@ -696,7 +441,7 @@ object TextOps {
     "text_lm_score",
     (s, dir) => {
       val ws = docs(s, dir)
-        .select(col("doc_id"), expr(words(normText("text"))).as("ws"))
+        .select(col("doc_id"), expr(normWords("text")).as("ws"))
       val pairs = ws.select(col("doc_id"), explode(expr(
         """CASE WHEN size(ws) < 2 THEN array()
           |ELSE transform(sequence(1, size(ws) - 1),
@@ -731,7 +476,7 @@ object TextOps {
           coalesce(col("lm_score"), lit(0L)).as("lm_score"))
     },
     Some(s"""WITH d AS (
-            |  SELECT doc_id, ${duckWords(duckNormText("text"))} AS ws
+            |  SELECT doc_id, ${duckNormWords("text")} AS ws
             |  FROM documents
             |), uni AS (
             |  SELECT w, count(*) AS c1
@@ -788,6 +533,8 @@ object TextOps {
     "text_tfidf",
     (s, dir) => {
       val d = docs(s, dir)
+      // the normalized text as its own column: with normWords inlined,
+      // the explode absorbs the Project under it and the plan changes
       val tf = d.withColumn("w", expr(normText("text")))
         .select(col("doc_id"), explode(expr(words("w"))).as("word"))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
@@ -805,7 +552,7 @@ object TextOps {
         .orderBy("doc_id", "rank")
     },
     Some(s"""WITH w AS (
-            |  SELECT doc_id, unnest(${duckWords(duckNormText("text"))}) AS word
+            |  SELECT doc_id, unnest(${duckNormWords("text")}) AS word
             |  FROM documents
             |), tf AS (
             |  SELECT doc_id, word, count(*) AS tf FROM w GROUP BY 1, 2

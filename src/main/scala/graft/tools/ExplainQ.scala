@@ -4,12 +4,15 @@ import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Debug helper: print the formatted physical plan of one registry row
-  * and its static hash-exchange count (the PlanAuditSpec metric). */
+/** Debug helper: print the formatted physical plan of registry rows
+  * and each one's static hash-exchange count (the PlanAuditSpec
+  * metric). Rows are comma-separated and share one session; each
+  * prints as a block headed `== Row: <name> ==` (the unit
+  * tools/plan_diff.py compares). */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ExplainQ <queryName> <sfDir> [show[:N]]")
-    val (name, sfDir) = (args(0), args(1))
+    require(args.length >= 2, "usage: ExplainQ <row>[,<row>...] <sfDir> [show[:N]]")
+    val (names, sfDir) = (args(0).split(",").toSeq, args(1))
     // optional 3rd arg `show[:N]`: ALSO print the first N (default 20)
     // result rows — spot-checking a row's VALUES at an arbitrary SF
     // (e.g. do q_approx_topk's verdict booleans hold at sf10, where the
@@ -25,11 +28,14 @@ object ExplainQ {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    println(p)
-    println("HASHPART_COUNT=" + "hashpartitioning\\(".r.findAllIn(p).size)
-    showRows.foreach(n => df.show(n, truncate = false))
+    for (name <- names) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      println(s"== Row: $name ==")
+      println(p)
+      println("HASHPART_COUNT=" + "hashpartitioning\\(".r.findAllIn(p).size)
+      showRows.foreach(n => df.show(n, truncate = false))
+    }
     spark.stop()
   }
 }

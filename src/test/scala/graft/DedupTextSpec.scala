@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Blocking, Dedup, TextOps}
+import graft.operators.{Blocking, Bpe, Dedup, TextOps}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariant checks for the dedup + text suites at sf0.001 (the DuckDB
@@ -393,9 +393,75 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("bpe_train_merges: full-loop scalar recompute; vocab grows by at most 1 symbol per round") {
+  // The BPE scalar replay: the engines' procedure written the obvious
+  // sequential way (same word stream, same consumed-separator merge,
+  // same tie-break), shared by the bpe row checks below.
+
+  /** (doc_id, symbols) of every normalized word of >= 2 chars in `dir`. */
+  private def replayWords(dir: String): Seq[(Long, Vector[String])] = {
     import org.apache.spark.sql.functions._
-    val got = graft.operators.TextOps.bpeTrainMerges.run(spark, sfDir)
+    spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), explode(expr(
+        "filter(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' '), w -> w <> '')")).as("w"))
+      .filter(length(col("w")) >= 2)
+      .collect().map(r => r.getLong(0) ->
+        r.getString(1).codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp))))
+      .toSeq
+  }
+
+  /** Every adjacent symbol pair's count over the words `ws`. */
+  private def replayCounts(ws: Seq[Vector[String]]): Map[(String, String), Long] =
+    ws.flatMap(_.sliding(2).filter(_.size == 2).map(p => (p(0), p(1))))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+
+  /** The top pair: count desc, then the sep-joined pair string (the
+    * engines tie-break on it). */
+  private def replayTop(counts: Map[(String, String), Long]): (String, String) =
+    counts.keys.minBy { case (a, b) => (-counts((a, b)), a + Bpe.Sep + b) }
+
+  /** `w` with the pair (pa, pb) merged. The engines' rewrite is a
+    * SEPARATOR-STRING replace: a match consumes its trailing U+001F,
+    * which is the next occurrence's leading U+001F — so after a merge
+    * the immediately following pair cannot match, whether it repeats
+    * the same symbols ([a,a,a,a,a] -> [aa,a,aa]) or is an adjacent
+    * distinct repeat ([e,r,e,r] -> [er,e,r]). The sepOk flag replays
+    * exactly that. */
+  private def replayMerge(w: Vector[String], pa: String, pb: String): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var i = 0
+    var sepOk = true
+    while (i < w.length) {
+      if (sepOk && i + 1 < w.length && w(i) == pa && w(i + 1) == pb) {
+        out += (pa + pb); i += 2; sepOk = false
+      } else { out += w(i); i += 1; sepOk = true }
+    }
+    out.result()
+  }
+
+  /** An encode row's per-doc (n_words, n_tokens, n_chars). */
+  private def docStats(q: Q, dir: String): Map[Long, (Long, Long, Long)] =
+    q.run(spark, dir).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+
+  /** `got` has one row per document of `dir`, each equal to the stats
+    * of its encoded words in `ws` (0s for a document with none). */
+  private def assertDocStats(got: Map[Long, (Long, Long, Long)],
+      ws: Seq[(Long, Vector[String])], dir: String): Unit = {
+    val expected = ws.groupBy(_._1).map { case (d, xs) =>
+      d -> ((xs.size.toLong,
+        xs.map(_._2.size.toLong).sum,
+        xs.map(_._2.map(_.length).sum.toLong).sum))
+    }
+    val allDocs = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id").collect().map(_.getLong(0))
+    assert(got.keySet == allDocs.toSet, "exactly one output row per document")
+    allDocs.foreach { d =>
+      assert(got(d) == expected.getOrElse(d, (0L, 0L, 0L)), s"doc $d stats mismatch")
+    }
+  }
+
+  test("bpe_train_merges: full-loop scalar recompute; vocab grows by at most 1 symbol per round") {
+    val got = TextOps.bpeTrainMerges.run(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     assert(got.map(_._1) == (1L to 8L), "one merge per round, ranked 1..R")
     assert(got.forall(_._3 > 0))
@@ -403,48 +469,20 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     // born of round r's merge occurs at most cnt_r times
     assert(got.map(_._3).sliding(2).forall { case Seq(x, y) => y <= x })
 
-    // replicate the whole training loop in plain Scala (same word
-    // stream, same leftmost-non-overlapping merge, same tie-break)
-    val sep = "\u001f" // the engines tie-break on the sep-joined pair string
-    var ws: Seq[Vector[String]] = spark.read
-      .parquet(s"$sfDir/documents.parquet")
-      .select(explode(expr(
-        "filter(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' '), w -> w <> '')")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .collect().map(_.getString(0))
-      .map(w => w.codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp))))
-      .toSeq
+    // replicate the whole training loop in plain Scala
+    var ws = replayWords(sfDir).map(_._2)
     val expected = Seq.newBuilder[(Long, String, Long)]
     var vocab = ws.flatten.toSet
     for (r <- 1 to 8) {
-      val counts = ws.flatMap(_.sliding(2).filter(_.size == 2).map(p => (p(0), p(1))))
-        .groupBy(identity).view.mapValues(_.size.toLong).toMap
+      val counts = replayCounts(ws)
       // pair domain is bounded by the CURRENT vocab squared, and the
       // vocab grows by at most one merged symbol per round
       assert(counts.size <= vocab.size.toLong * vocab.size,
         s"round $r pair domain ${counts.size} exceeds |vocab|^2")
-      val (pa, pb) = counts.keys.minBy { case (a, b) =>
-        (-counts((a, b)), a + sep + b)
-      }
+      val (pa, pb) = replayTop(counts)
       expected += ((r.toLong, s"$pa $pb", counts((pa, pb))))
       vocab = vocab + (pa + pb)
-      // the engines' rewrite is a SEPARATOR-STRING replace: a match
-      // consumes its trailing U+001F, which is the next occurrence's
-      // leading U+001F — so after a merge the immediately following
-      // pair cannot match, whether it repeats the same symbols
-      // ([a,a,a,a,a] -> [aa,a,aa]) or is an adjacent distinct repeat
-      // ([e,r,e,r] -> [er,e,r]). The sepOk flag replays exactly that.
-      ws = ws.map { w =>
-        val out = Vector.newBuilder[String]
-        var i = 0
-        var sepOk = true
-        while (i < w.length) {
-          if (sepOk && i + 1 < w.length && w(i) == pa && w(i + 1) == pb) {
-            out += (pa + pb); i += 2; sepOk = false
-          } else { out += w(i); i += 1; sepOk = true }
-        }
-        out.result()
-      }
+      ws = ws.map(replayMerge(_, pa, pb))
       assert(ws.flatten.toSet.subsetOf(vocab),
         s"round $r produced a symbol outside alphabet+learned merges")
     }
@@ -453,69 +491,48 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bpe_encode: per-doc token stats match a scalar replay of train-then-apply") {
-    import org.apache.spark.sql.functions._
-    val got = graft.operators.TextOps.bpeEncode.run(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val sep = "\u001f"
+    val got = docStats(TextOps.bpeEncode, sfDir)
     // the same scalar loop as the training spec, with doc_id carried
-    var ws: Seq[(Long, Vector[String])] = spark.read
-      .parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), explode(expr(
-        "filter(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' '), w -> w <> '')")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .collect().map(r => r.getLong(0) ->
-        r.getString(1).codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp))))
-      .toSeq
+    var ws = replayWords(sfDir)
     for (_ <- 1 to 8) {
-      val counts = ws.flatMap(_._2.sliding(2).filter(_.size == 2).map(p => (p(0), p(1))))
-        .groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val (pa, pb) = counts.keys.minBy { case (a, b) =>
-        (-counts((a, b)), a + sep + b)
-      }
-      // sep-string replace semantics (see the training replay above):
-      // a merge consumes the next occurrence's leading separator
-      ws = ws.map { case (d, w) =>
-        val out = Vector.newBuilder[String]
-        var i = 0
-        var sepOk = true
-        while (i < w.length) {
-          if (sepOk && i + 1 < w.length && w(i) == pa && w(i + 1) == pb) {
-            out += (pa + pb); i += 2; sepOk = false
-          } else { out += w(i); i += 1; sepOk = true }
-        }
-        d -> out.result()
-      }
+      val (pa, pb) = replayTop(replayCounts(ws.map(_._2)))
+      ws = ws.map { case (d, w) => d -> replayMerge(w, pa, pb) }
     }
-    val expected = ws.groupBy(_._1).map { case (d, xs) =>
-      d -> ((xs.size.toLong,
-        xs.map(_._2.size.toLong).sum,
-        xs.map(_._2.map(_.length).sum.toLong).sum))
-    }
-    val allDocs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id").collect().map(_.getLong(0))
-    assert(got.keySet == allDocs.toSet, "exactly one output row per document")
-    allDocs.foreach { d =>
-      assert(got(d) == expected.getOrElse(d, (0L, 0L, 0L)), s"doc $d stats mismatch")
-    }
+    assertDocStats(got, ws, sfDir)
     // the learned merges actually compress: corpus-wide tokens < chars
     assert(got.values.map(_._2).sum < got.values.map(_._3).sum,
       "8 merges must leave strictly fewer tokens than characters")
   }
 
+  test("bpe training stops at the first round with no pair; encode applies only the learned merges") {
+    // 'ab ab cd' runs out of pairs after 2 merges; 'x' has no word of
+    // >= 2 chars, so its document encodes to zeros
+    import spark.implicits._
+    val tiny = tempDir("bpe-short")
+    Seq((1L, "ab ab cd"), (2L, "x")).toDF("doc_id", "text")
+      .write.parquet(s"$tiny/documents.parquet")
+    val merges = TextOps.bpeTrainMerges.run(spark, tiny).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    assert(merges == Seq((1L, "a b", 2L), (2L, "c d", 1L)))
+    assert(docStats(TextOps.bpeEncode, tiny) == Map(1L -> ((3L, 3L, 6L)), 2L -> ((0L, 0L, 0L))))
+  }
+
+  test("BpeStoredMerges is the table bpe_train_merges learns at sf0.01") {
+    val got = TextOps.bpeTrainMerges.run(spark, "/root/testdata/sf0.01")
+      .collect().map(_.getString(1)).toSeq
+    assert(got == TextOps.BpeStoredMerges.map { case (a, b) => s"$a $b" })
+  }
+
   test("bpe merge replace: an adjacent distinct repeat merges once (consumed-separator semantics)") {
     // 'erer' with merge (e,r) must tokenize [er, e, r] — the replaced
     // occurrence's trailing U+001F was the next occurrence's leading
-    // U+001F — proven against the LIVE engine replace chain (and the
-    // DuckDB side below), not just documented. Guards the latent
+    // U+001F — proven against the LIVE engine pieces (Bpe.symbols,
+    // Bpe.merge), not just documented. Guards the latent
     // data-dependent divergence a corpus regeneration could expose.
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val sep = "\u001f"
     val toks = Seq("erer").toDF("w")
-      .select(concat(lit(sep),
-        regexp_replace(col("w"), "(.)", "$1" + sep)).as("e"))
-      .select(org.apache.spark.sql.functions.replace(col("e"),
-        lit(sep + "e" + sep + "r" + sep), lit(sep + "er" + sep)).as("e"))
+      .select(Bpe.merge(Bpe.symbols(col("w")), "e" + Bpe.Sep + "r").as("e"))
       .selectExpr("filter(split(e, chr(31)), x -> x <> '') AS toks")
       .collect()(0).getSeq[String](0)
     assert(toks == Seq("er", "e", "r"),
@@ -523,43 +540,13 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bpe_encode_stored: per-doc stats equal a scalar replay of the committed table") {
-    import org.apache.spark.sql.functions._
-    val got = graft.operators.TextOps.bpeEncodeStored.run(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    var ws: Seq[(Long, Vector[String])] = spark.read
-      .parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), explode(expr(
-        "filter(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' '), w -> w <> '')")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .collect().map(r => r.getLong(0) ->
-        r.getString(1).codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp))))
-      .toSeq
+    val got = docStats(TextOps.bpeEncodeStored, sfDir)
     // the committed table applied in rank order, consumed-separator
     // replay (no training rounds anywhere — that is the row's point)
-    for ((pa, pb) <- graft.operators.TextOps.BpeStoredMerges) {
-      ws = ws.map { case (d, w) =>
-        val out = Vector.newBuilder[String]
-        var i = 0
-        var sepOk = true
-        while (i < w.length) {
-          if (sepOk && i + 1 < w.length && w(i) == pa && w(i + 1) == pb) {
-            out += (pa + pb); i += 2; sepOk = false
-          } else { out += w(i); i += 1; sepOk = true }
-        }
-        d -> out.result()
-      }
+    val ws = TextOps.BpeStoredMerges.foldLeft(replayWords(sfDir)) { case (ws, (pa, pb)) =>
+      ws.map { case (d, w) => d -> replayMerge(w, pa, pb) }
     }
-    val expected = ws.groupBy(_._1).map { case (d, xs) =>
-      d -> ((xs.size.toLong,
-        xs.map(_._2.size.toLong).sum,
-        xs.map(_._2.map(_.length).sum.toLong).sum))
-    }
-    val allDocs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id").collect().map(_.getLong(0))
-    assert(got.keySet == allDocs.toSet, "exactly one output row per document")
-    allDocs.foreach { d =>
-      assert(got(d) == expected.getOrElse(d, (0L, 0L, 0L)), s"doc $d stats mismatch")
-    }
+    assertDocStats(got, ws, sfDir)
     // the stored vocabulary still compresses this corpus
     assert(got.values.map(_._2).sum < got.values.map(_._3).sum,
       "stored merges must leave strictly fewer tokens than characters")
